@@ -212,58 +212,65 @@ def load_models(
     must not pay load time + driver/executor memory materializing every
     frame-backed model ever saved for sf0.1 (ADVICE r12).  Model keys
     are ``(kind, sf_dir)`` tuples, so the filter is exact; ``None``
-    keeps the load-everything behavior for single-dataset stores."""
-    import numpy as np
+    keeps the load-everything behavior for single-dataset stores.
 
-    from s3_manifest_spark.registry import session_model_cache
+    A model the session already holds is kept, not overwritten (an
+    overwrite would orphan the live entry's blocks)."""
+    from s3_manifest_spark.registry import cached
 
     with open(os.path.join(store_dir, _MANIFEST)) as f:
         manifest = json.load(f)
-    mc = session_model_cache(spark)
     loaded = []
     for slug, meta in sorted(manifest.items()):
         key = tuple(meta["key"])
         if sf_dir is not None and len(key) >= 2 and key[1] != sf_dir:
             continue
-        kind = meta["kind"]
-        base = os.path.join(store_dir, slug)
-        if kind == "npy":
-            value: Any = np.load(base + ".npy")
-        elif kind == "bytes":
-            with open(base + ".bin", "rb") as f:
-                value = f.read()
-        elif kind == "json":
-            with open(base + ".json") as f:
-                raw = json.load(f)
-            # JSON round-trips tuples as lists; trainers cache tuples
-            value = [tuple(item) for item in raw]
-        elif kind == "broadcast_json":
-            with open(base + ".json") as f:
-                value = spark.sparkContext.broadcast(json.load(f))
-        elif kind in ("frames", "frames+scalars"):
-            # the saved frame count is the source of truth: a missing
-            # frame directory is store corruption (or a non-local
-            # store_dir the save path wrote through Hadoop), never
-            # "fewer frames" — spark.read raises AnalysisException.
-            if "n_frames" not in meta:
-                raise ValueError(
-                    f"{slug}: manifest entry has no 'n_frames' — this "
-                    "store was written by an older save_models (pre "
-                    "frame-count manifests); re-save the models with "
-                    "the current version"
-                )
-            n_frames = meta["n_frames"]
-            frames = [
-                spark.read.parquet(f"{base}__f{i}.parquet").persist()
-                for i in range(n_frames)
-            ]
-            value = tuple(frames)
-            if kind == "frames+scalars":
-                with open(base + ".json") as f:
-                    scalars = json.load(f)
-                value = value + tuple(scalars)
-        else:  # pragma: no cover - manifest written by save_models
-            raise ValueError(f"unknown model kind {kind!r} for {slug}")
-        mc[key] = value
+        cached(
+            spark,
+            key,
+            lambda: _load_value(spark, os.path.join(store_dir, slug), meta),
+        )
         loaded.append(slug)
     return loaded
+
+
+def _load_value(spark: SparkSession, base: str, meta: dict) -> Any:
+    """Reconstruct one stored model in the shape its trainer caches."""
+    import numpy as np
+
+    slug = os.path.basename(base)
+    kind = meta["kind"]
+    if kind == "npy":
+        return np.load(base + ".npy")
+    if kind == "bytes":
+        with open(base + ".bin", "rb") as f:
+            return f.read()
+    if kind == "json":
+        with open(base + ".json") as f:
+            raw = json.load(f)
+        # JSON round-trips tuples as lists; trainers cache tuples
+        return [tuple(item) for item in raw]
+    if kind == "broadcast_json":
+        with open(base + ".json") as f:
+            return spark.sparkContext.broadcast(json.load(f))
+    if kind in ("frames", "frames+scalars"):
+        # the saved frame count is the source of truth: a missing
+        # frame directory is store corruption (or a non-local
+        # store_dir the save path wrote through Hadoop), never
+        # "fewer frames" — spark.read raises AnalysisException.
+        if "n_frames" not in meta:
+            raise ValueError(
+                f"{slug}: manifest entry has no 'n_frames' — this "
+                "store was written by an older save_models (pre "
+                "frame-count manifests); re-save the models with "
+                "the current version"
+            )
+        value = tuple(
+            spark.read.parquet(f"{base}__f{i}.parquet").persist()
+            for i in range(meta["n_frames"])
+        )
+        if kind == "frames+scalars":
+            with open(base + ".json") as f:
+                value = value + tuple(json.load(f))
+        return value
+    raise ValueError(f"unknown model kind {kind!r} for {slug}")  # pragma: no cover

@@ -62,7 +62,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from s3_manifest_spark.registry import register, session_model_cache
+from s3_manifest_spark.registry import cached, register
 from s3_manifest_spark.sources.tables import load_table
 
 #: merge rounds — the vocabulary-size hyperparameter (real tokenizers
@@ -141,13 +141,15 @@ def train_bpe(
     Driver vs distributed strategy chosen by :data:`VOCAB_DRIVER_CAP`
     over the histogram row count; ``force_distributed`` exists for the
     path-equivalence test."""
-    model_cache = session_model_cache(spark)
-    key = ("bpe_merges", sf_dir)
-    if not force_distributed:
-        cached = model_cache.get(key)
-        if cached is not None:
-            return cached
+    if force_distributed:
+        return _fit_bpe(spark, sf_dir, force_distributed=True)
+    return cached(spark, ("bpe_merges", sf_dir), lambda: _fit_bpe(spark, sf_dir))
 
+
+def _fit_bpe(
+    spark: SparkSession, sf_dir: str, force_distributed: bool = False
+):
+    """The uncached :func:`train_bpe` build."""
     docs = load_table(spark, sf_dir, "documents")
     words = (
         docs.select(F.explode(_nonempty_tokens(F.col("text"))).alias("word"))
@@ -161,7 +163,6 @@ def train_bpe(
             merges = _driver_merge_loop(words.toPandas())
         finally:
             words.unpersist(blocking=False)
-        model_cache[key] = merges
         return merges
 
     cur = words.select(_char_seg(F.col("word")).alias("seg"), "cnt").persist()
@@ -216,8 +217,6 @@ def train_bpe(
     finally:
         cur.unpersist(blocking=False)
 
-    if not force_distributed:
-        model_cache[key] = merges
     return merges
 
 

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from s3_manifest_spark.registry import register, track_persist, session_model_cache
+from s3_manifest_spark.registry import cached, register, release, track_persist
 from s3_manifest_spark.sources.tables import load_table, parquet_row_count
 
 CHUNK_TOKENS = 30
@@ -167,11 +167,13 @@ def _tfidf_dfreq(spark: SparkSession, sf_dir: str):
     ``models.save_models`` (kind ``broadcast_json``); the frame shape
     is rebuilt from data by design and is skip-reported by the store.
     """
-    model_cache = session_model_cache(spark)
-    cached = model_cache.get(("tfidf_dfreq", sf_dir))
-    if cached is not None:
-        return cached
+    return cached(
+        spark, ("tfidf_dfreq", sf_dir), lambda: _fit_tfidf_dfreq(spark, sf_dir)
+    )
 
+
+def _fit_tfidf_dfreq(spark: SparkSession, sf_dir: str):
+    """The uncached :func:`_tfidf_dfreq` build."""
     docs = load_table(spark, sf_dir, "documents", widen=True)
 
     def distinct_terms(batches):
@@ -210,16 +212,10 @@ def _tfidf_dfreq(spark: SparkSession, sf_dir: str):
     # the vocabulary fits, these rows ARE the whole relation; when it
     # doesn't, we stop at cap+1 rows and keep the model distributed.
     head = dfreq_ckpt.take(cap + 1)
-    if len(head) <= cap:
-        dfreq = {r["term"]: r["dfreq"] for r in head}
-        value: object = spark.sparkContext.broadcast(dfreq)
-        # the dict is the model now; free the checkpoint blocks
-        from s3_manifest_spark.registry import _release_checkpoint_blocks
-
-        _release_checkpoint_blocks(dfreq_ckpt)
-    else:
-        value = dfreq_ckpt
-    model_cache[("tfidf_dfreq", sf_dir)] = value
+    if len(head) > cap:
+        return dfreq_ckpt
+    value = spark.sparkContext.broadcast({r["term"]: r["dfreq"] for r in head})
+    release(dfreq_ckpt)  # the dict is the model now
     return value
 
 
@@ -1149,13 +1145,11 @@ def contamination_bloom(
     # session-cached like the IVF quantizer; bench.py records the full
     # cold build+screen cost separately (cold_sec).  The test-only
     # breakage path never touches the cache.
-    mc = session_model_cache(spark)
-    model_key = ("contam_bloom_model", sf_dir)
     # geometry is needed by the screening kernel on every call (cache
     # hit or not); it is a memoized parquet-footer read, no job
     m_bits, n_words = _bloom_geometry(sf_dir)
-    bc = mc.get(model_key) if _zero_bits_frac == 0.0 else None
-    if bc is None:
+
+    def build_filter():
         probe = (
             shingle_fingerprints(
                 load_table(spark, sf_dir, "documents").filter(
@@ -1179,9 +1173,12 @@ def contamination_bloom(
             # test-only breakage: manufactured false negatives must flip
             # no_false_negative_ok (test_bloom_certificate_falsifies)
             bloom_bits[: int(n_words * _zero_bits_frac)] = 0
-        bc = spark.sparkContext.broadcast((probe_sorted, bloom_bits))
-        if _zero_bits_frac == 0.0:
-            mc[model_key] = bc
+        return spark.sparkContext.broadcast((probe_sorted, bloom_bits))
+
+    if _zero_bits_frac == 0.0:
+        bc = cached(spark, ("contam_bloom_model", sf_dir), build_filter)
+    else:
+        bc = build_filter()
 
     def dual(batches):
         pr, bits = bc.value
@@ -1796,22 +1793,19 @@ def _cms_sketch(spark: SparkSession, sf_dir: str) -> bytes:
     across sessions like the other trained artifacts (a CMS over
     yesterday's corpus IS yesterday's index; estimates are readable
     forever without re-scanning)."""
-    mc = session_model_cache(spark)
-    key = ("cms_sketch", sf_dir)
-    cached = mc.get(key)
-    if cached is not None:
-        return cached
-    docs = load_table(spark, sf_dir, "documents", widen=True)
-    toks = docs.select(F.explode(F.expr(_TOKENS)).alias("token"))
-    raw = bytes(
-        toks.agg(
-            F.count_min_sketch(
-                "token", F.lit(CMS_EPS), F.lit(CMS_CONF), F.lit(CMS_SEED)
-            ).alias("sk")
-        ).collect()[0]["sk"]
-    )
-    mc[key] = raw
-    return raw
+
+    def build():
+        docs = load_table(spark, sf_dir, "documents", widen=True)
+        toks = docs.select(F.explode(F.expr(_TOKENS)).alias("token"))
+        return bytes(
+            toks.agg(
+                F.count_min_sketch(
+                    "token", F.lit(CMS_EPS), F.lit(CMS_CONF), F.lit(CMS_SEED)
+                ).alias("sk")
+            ).collect()[0]["sk"]
+        )
+
+    return cached(spark, ("cms_sketch", sf_dir), build)
 
 
 @register("heavy_hitters_cms", oracle=_HH_ORACLE)

@@ -15,10 +15,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from s3_manifest_spark.registry import (
-    session_model_cache,
+    cached,
     defer_cleanup,
     register,
-    track_cleanup,
     track_persist,
 )
 from s3_manifest_spark.sources.tables import load_table, parquet_row_count
@@ -185,16 +184,16 @@ def _shingles_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
             load_table(spark, sf_dir, "documents", widen=True),
             with_count=True,
         )
-    mc = session_model_cache(spark)
-    key = ("shingle_fps", sf_dir)
-    cached = mc.get(key)
-    if cached is not None:
-        return cached[0]
-    sh = shingle_fingerprints(
-        load_table(spark, sf_dir, "documents", widen=True), with_count=True
-    ).localCheckpoint(eager=True)
-    mc[key] = (sh,)
-    return sh
+    return cached(
+        spark,
+        ("shingle_fps", sf_dir),
+        lambda: (
+            shingle_fingerprints(
+                load_table(spark, sf_dir, "documents", widen=True),
+                with_count=True,
+            ).localCheckpoint(eager=True),
+        ),
+    )[0]
 
 
 def _batch_doc_fps(pdf):
@@ -1061,17 +1060,7 @@ def _embedding_lsh_pairs_sparse(
     # detects the session model cache and records the full cold
     # build+verify cost separately (cold_sec).  Plain .persist(), not
     # track_persist: the index must outlive individual registry calls.
-    spark = v.sparkSession
-    mc = None
-    cached = None
-    if cache_key is not None:
-        # the construction parameters are folded into the stored key
-        # here — a caller-supplied tag alone must never serve an index
-        # built under different band/plane/threshold settings
-        cache_key = (*cache_key, L, r, float(thr))
-        mc = session_model_cache(spark)
-        cached = mc.get(cache_key)
-    if cached is None:
+    def build(index: bool):
         bucketed = _lsh_band_rows(v, L, r, with_embedding=False)
         candidates = (
             bucketed.groupBy("band", "sig")
@@ -1091,7 +1080,7 @@ def _embedding_lsh_pairs_sparse(
             ).distinct()
         )
         ve = v.join(F.broadcast(cand_ids), "vec_id")
-        if mc is not None:
+        if index:
             # An ANN index stores the vectors it indexes: the pair
             # relation AND the candidate-filtered vectors are the
             # session-cached artifact, so a warm query touches neither
@@ -1100,9 +1089,17 @@ def _embedding_lsh_pairs_sparse(
             ve = ve.persist()
             candidates.count()  # materialize: the build is the cold cost
             ve.count()
-            mc[cache_key] = (candidates, ve)
+        return candidates, ve
+
+    if cache_key is None:
+        candidates, ve = build(index=False)
     else:
-        candidates, ve = cached
+        # the construction parameters are folded into the stored key
+        # here — a caller-supplied tag alone must never serve an index
+        # built under different band/plane/threshold settings
+        candidates, ve = cached(
+            v.sparkSession, (*cache_key, L, r, float(thr)), lambda: build(index=True)
+        )
     paired = (
         candidates.join(
             ve.select(
@@ -1849,10 +1846,15 @@ def _components_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     the loop only and released here, since the checkpoint truncates
     their lineage.  Persists to the model store as kind ``frames``
     and is released by ``registry.clear_model_cache``."""
-    model_cache = session_model_cache(spark)
-    cached = model_cache.get(("dedup_components", sf_dir))
-    if cached is not None:
-        return cached[0]
+    return cached(
+        spark,
+        ("dedup_components", sf_dir),
+        lambda: _fit_components_labels(spark, sf_dir),
+    )[0]
+
+
+def _fit_components_labels(spark: SparkSession, sf_dir: str) -> tuple:
+    """The uncached :func:`_components_labels` build."""
     # Persist the pair relation BEFORE the symmetrizing union: both
     # union branches share the Jaccard lineage, and without the persist
     # Spark evaluates that (expensive) subtree once per branch.
@@ -1865,8 +1867,7 @@ def _components_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         edges.unpersist(blocking=False)
         pairs.unpersist(blocking=False)
-    model_cache[("dedup_components", sf_dir)] = (labels,)
-    return labels
+    return (labels,)
 
 
 def min_label_components(spark: SparkSession, edges: DataFrame):
@@ -2005,11 +2006,15 @@ def _minhash_index(spark: SparkSession, sf_dir: str):
     store and is UPDATED by the listing change feed (streaming/cdc.py
     maintains the manifest twin of that feed), not rebuilt.
     """
-    model_cache = session_model_cache(spark)
-    cached = model_cache.get(("minhash_index", sf_dir))
-    if cached is not None:
-        return cached
+    return cached(
+        spark,
+        ("minhash_index", sf_dir),
+        lambda: _build_minhash_index(spark, sf_dir),
+    )
 
+
+def _build_minhash_index(spark: SparkSession, sf_dir: str):
+    """The uncached :func:`_minhash_index` build."""
     # the old-snapshot split is a row filter of the session shingle
     # index (per-doc distinct counts are a property of each doc's own
     # text, so the full-corpus relation restricted to old doc_ids IS
@@ -2056,9 +2061,7 @@ def _minhash_index(spark: SparkSession, sf_dir: str):
         )
         .localCheckpoint(eager=True)
     )
-    value = (buckets, shingles)
-    model_cache[("minhash_index", sf_dir)] = value
-    return value
+    return buckets, shingles
 
 
 #: full exact new-vs-old relation — the recall certificate shared by

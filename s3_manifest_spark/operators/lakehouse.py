@@ -42,7 +42,7 @@ from s3_manifest_spark.operators.manifest_queries import (
     _DIFF_NEW_PRED,
     _DIFF_OLD_PRED,
 )
-from s3_manifest_spark.registry import register, session_model_cache
+from s3_manifest_spark.registry import cached, register
 from s3_manifest_spark.sources.tables import (
     SYNTH_LISTING_SQL,
     listing_model,
@@ -414,29 +414,26 @@ def _exact_distincts(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct-pairs aggregation; see profile_table's docstring for why
     not countDistinct) and served warm.  Derived kind — rebuilt from
     data, not persisted by models.py; cold build priced in cold_sec."""
-    mc = session_model_cache(spark)
-    key = ("profile_ndv", sf_dir)
-    cached = mc.get(key)
-    if cached is not None:
-        return cached[0]
-    li = load_table(spark, sf_dir, "lineitem")
-    pair_structs = ", ".join(
-        f"struct('{c}' AS c, CAST({c} AS STRING) AS v)"
-        for c in PROFILE_COLS
-    )
-    nd = (
-        li.selectExpr(f"explode(array({pair_structs})) AS s")
-        .select(F.col("s.c").alias("col_name"), F.col("s.v").alias("v"))
-        .filter(F.col("v").isNotNull())
-        .groupBy("col_name", "v")
-        .agg(F.lit(1))
-        .groupBy("col_name")
-        .agg(F.count(F.lit(1)).alias("n_distinct"))
-        .persist()
-    )
-    nd.count()
-    mc[key] = (nd,)
-    return nd
+    def build():
+        li = load_table(spark, sf_dir, "lineitem")
+        pair_structs = ", ".join(
+            f"struct('{c}' AS c, CAST({c} AS STRING) AS v)"
+            for c in PROFILE_COLS
+        )
+        nd = (
+            li.selectExpr(f"explode(array({pair_structs})) AS s")
+            .select(F.col("s.c").alias("col_name"), F.col("s.v").alias("v"))
+            .filter(F.col("v").isNotNull())
+            .groupBy("col_name", "v")
+            .agg(F.lit(1))
+            .groupBy("col_name")
+            .agg(F.count(F.lit(1)).alias("n_distinct"))
+            .persist()
+        )
+        nd.count()
+        return (nd,)
+
+    return cached(spark, ("profile_ndv", sf_dir), build)[0]
 
 
 @register("profile_table", oracle=_PROFILE_ORACLE)

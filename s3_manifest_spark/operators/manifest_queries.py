@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from s3_manifest_spark.manifest.core import derive_manifest
-from s3_manifest_spark.registry import register, session_model_cache
+from s3_manifest_spark.registry import cached, register
 from s3_manifest_spark.sources.tables import (
     SYNTH_LISTING_SQL,
     load_table,
@@ -462,45 +462,44 @@ def _cdc_state(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, bool]:
     sweep because it must outlive individual query calls.  Returns
     ``(state, packed)`` where ``packed`` says which key form the
     state's ``k`` column carries."""
-    mc = session_model_cache(spark)
     packed = _packed_domain_ok(sf_dir)
+
+    def build():
+        li = load_table(spark, sf_dir, "lineitem")
+        l = li.select(
+            (_packed_key() if packed else _string_key()).alias("k"),
+            size_cents().alias("size"),
+            F.col("l_shipdate").alias("sd"),
+        )
+        state = (
+            l.filter(F.expr(f"({_DIFF_OLD_PRED}) OR ({_DIFF_NEW_PRED})"))
+            .repartition(_keyed_parts(spark, sf_dir), "k")
+            .groupBy("k")
+            .agg(
+                F.max(F.when(F.expr(_DIFF_OLD_PRED), F.col("size")))
+                .cast("long")
+                .alias("old_sz"),
+                F.max(F.when(F.expr(_DIFF_NEW_PRED), F.expr(_DIFF_BUMP)))
+                .cast("long")
+                .alias("new_sz"),
+                # old-snapshot mtime rides the same exchange (+1 native
+                # date/key): it makes the state serve VACUUM retention
+                # planning too — a dangling key is old_sz!=NULL,
+                # new_sz=NULL, and the age gate reads old_mtime_d (r11;
+                # diff/apply simply don't select it).
+                F.max(F.when(F.expr(_DIFF_OLD_PRED), F.col("sd"))).alias(
+                    "old_mtime_d"
+                ),
+            )
+            .persist()
+        )
+        state.count()  # materialize eagerly: the build is the cold cost
+        return state
+
     # conf part of the key comes from the ONE helper _keyed_parts
     # reads, so the sizing and the cache key cannot drift (ADVICE r8)
     key = ("cdc_state", sf_dir, packed, *_keyed_parts_conf(spark))
-    hit = mc.get(key)
-    if hit is not None:
-        return hit, packed
-    li = load_table(spark, sf_dir, "lineitem")
-    l = li.select(
-        (_packed_key() if packed else _string_key()).alias("k"),
-        size_cents().alias("size"),
-        F.col("l_shipdate").alias("sd"),
-    )
-    state = (
-        l.filter(F.expr(f"({_DIFF_OLD_PRED}) OR ({_DIFF_NEW_PRED})"))
-        .repartition(_keyed_parts(spark, sf_dir), "k")
-        .groupBy("k")
-        .agg(
-            F.max(F.when(F.expr(_DIFF_OLD_PRED), F.col("size")))
-            .cast("long")
-            .alias("old_sz"),
-            F.max(F.when(F.expr(_DIFF_NEW_PRED), F.expr(_DIFF_BUMP)))
-            .cast("long")
-            .alias("new_sz"),
-            # old-snapshot mtime rides the same exchange (+1 native
-            # date/key): it makes the state serve VACUUM retention
-            # planning too — a dangling key is old_sz!=NULL,
-            # new_sz=NULL, and the age gate reads old_mtime_d (r11;
-            # diff/apply simply don't select it).
-            F.max(F.when(F.expr(_DIFF_OLD_PRED), F.col("sd"))).alias(
-                "old_mtime_d"
-            ),
-        )
-        .persist()
-    )
-    state.count()  # materialize eagerly: the build is the cold cost
-    mc[key] = state
-    return state, packed
+    return cached(spark, key, build), packed
 
 
 @register(

@@ -57,7 +57,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from s3_manifest_spark.registry import register, session_model_cache
+from s3_manifest_spark.registry import cached, register
 from s3_manifest_spark.sources.tables import load_table, parquet_row_count
 
 #: gradient-descent steps / learning rate — fixed hyperparameters, part
@@ -147,14 +147,18 @@ def train_quality_lr(
     Driver vs distributed strategy chosen by the documented cap (see
     module docstring); ``force_distributed`` exists for the
     path-equivalence test."""
-    import numpy as np
+    if force_distributed:
+        return _fit_quality_lr(spark, sf_dir, force_distributed=True)
+    return cached(
+        spark, ("lr_quality", sf_dir), lambda: _fit_quality_lr(spark, sf_dir)
+    )
 
-    model_cache = session_model_cache(spark)
-    key = ("lr_quality", sf_dir)
-    if not force_distributed:
-        cached = model_cache.get(key)
-        if cached is not None:
-            return cached
+
+def _fit_quality_lr(
+    spark: SparkSession, sf_dir: str, force_distributed: bool = False
+):
+    """The uncached :func:`train_quality_lr` build."""
+    import numpy as np
 
     feat = _featurized(spark, sf_dir)
     train = feat.filter(F.col("doc_id") % TRAIN_MOD == 0)
@@ -209,8 +213,6 @@ def train_quality_lr(
         finally:
             train.unpersist(blocking=False)
 
-    if not force_distributed:
-        model_cache[key] = w
     return w
 
 
@@ -347,12 +349,13 @@ def train_bigram_lm(spark: SparkSession, sf_dir: str):
     through the driver (at 100 TB the bigram table is itself big
     data); only the two scalars (V, row count) are collected.
     """
-    model_cache = session_model_cache(spark)
-    key = ("bigram_lm", sf_dir)
-    cached = model_cache.get(key)
-    if cached is not None:
-        return cached
+    return cached(
+        spark, ("bigram_lm", sf_dir), lambda: _fit_bigram_lm(spark, sf_dir)
+    )
 
+
+def _fit_bigram_lm(spark: SparkSession, sf_dir: str):
+    """The uncached :func:`train_bigram_lm` build."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     train = docs.filter(F.col("doc_id") % LM_TRAIN_MOD == 0)
     toks = F.filter(F.split(F.col("text"), " "), lambda x: x != F.lit(""))
@@ -378,9 +381,7 @@ def train_bigram_lm(spark: SparkSession, sf_dir: str):
     )
     vocab = uni.count()  # V = distinct train tokens
     bigram_rows = bi.count()  # drives the join policy
-    model = (bi, uni, vocab, bigram_rows)
-    model_cache[key] = model
-    return model
+    return bi, uni, vocab, bigram_rows
 
 
 def _lm_oracle() -> str:

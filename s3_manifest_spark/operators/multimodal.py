@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from s3_manifest_spark.registry import register, session_model_cache
+from s3_manifest_spark.registry import cached, register
 from s3_manifest_spark.sources.tables import load_table
 
 
@@ -291,12 +291,7 @@ def _cached_corpus(spark: SparkSession, key: tuple, build) -> DataFrame:
     LSH/IVF indexes: an asset table is materialized once and decoded
     many ways — and bench.py's model-cache detection prices the cold
     build into ``cold_sec`` per consumer, so nothing hides in rep 1."""
-    model_cache = session_model_cache(spark)
-    cached = model_cache.get(key)
-    if cached is None:
-        cached = build().persist()
-        model_cache[key] = cached
-    return cached
+    return cached(spark, key, lambda: build().persist())
 
 
 def ppm_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -51,9 +51,8 @@ this extends the declared training-data-pipeline family (SURVEY.md
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from s3_manifest_spark.registry import register, session_model_cache
+from s3_manifest_spark.registry import cached, register
 from s3_manifest_spark.sources.tables import load_table
 
 #: number of clusters / Lloyd rounds — fixed hyperparameters, part of
@@ -111,16 +110,17 @@ def train_semdedup_centroids(spark: SparkSession, sf_dir: str):
     (the oracle's unrolled SQL has no keep-previous branch; with
     balanced seeding and K ≪ N an empty cell indicates a degenerate
     corpus, and silence would be a cross-engine divergence)."""
+    return cached(
+        spark, ("semdedup", sf_dir), lambda: _lloyd_centroids(spark, sf_dir)
+    )
+
+
+def _lloyd_centroids(spark: SparkSession, sf_dir: str):
+    """The uncached :func:`train_semdedup_centroids` build."""
     import numpy as np
     import pandas as pd
 
     from s3_manifest_spark.registry import track_persist
-
-    model_cache = session_model_cache(spark)
-    key = ("semdedup", sf_dir)
-    cached = model_cache.get(key)
-    if cached is not None:
-        return cached
 
     v = track_persist(
         load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
@@ -164,8 +164,6 @@ def train_semdedup_centroids(spark: SparkSession, sf_dir: str):
                 f"for K={SEM_K} (counts={counts.tolist()})"
             )
         cent = np.round(sums / counts[:, None], SEM_CENT_ROUND)
-
-    model_cache[key] = cent
     return cent
 
 

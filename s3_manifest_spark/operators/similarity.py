@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from s3_manifest_spark.registry import register, session_model_cache
+from s3_manifest_spark.registry import cached, register
 from s3_manifest_spark.sources.tables import load_table, parquet_row_count
 
 TOP_K = 5
@@ -67,14 +67,7 @@ def _query_pdf_cached(spark: SparkSession, sf_dir: str, v):
     built once, priced in bench cold_sec, dropped by
     ``registry.clear_model_cache`` (a plain pandas frame — no Spark
     resources to free)."""
-    mc = session_model_cache(spark)
-    key = ("query_pdf", sf_dir)
-    cached = mc.get(key)
-    if cached is not None:
-        return cached
-    pdf = _query_pdf(v)
-    mc[key] = pdf
-    return pdf
+    return cached(spark, ("query_pdf", sf_dir), lambda: _query_pdf(v))
 
 
 @register(
@@ -258,15 +251,18 @@ def _ivf_centroids(spark: SparkSession, sf_dir: str):
     short rows per round and never sees a sample vector; driver
     memory is O(K·d), independent of sample and corpus size.
     """
+    return cached(
+        spark, ("ivf", sf_dir), lambda: _train_ivf_centroids(spark, sf_dir)
+    )
+
+
+def _train_ivf_centroids(spark: SparkSession, sf_dir: str):
+    """The uncached :func:`_ivf_centroids` build."""
     import numpy as np
     import pandas as pd
 
     from s3_manifest_spark.registry import track_persist
 
-    model_cache = session_model_cache(spark)
-    cached_cent = model_cache.get(("ivf", sf_dir))
-    if cached_cent is not None:
-        return cached_cent
     v = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     tr = track_persist(v.filter(F.col("vec_id") % IVF_TRAIN_STRIDE == 0))
     cent: np.ndarray | None = None  # None -> seed round (vec_id % K)
@@ -315,7 +311,6 @@ def _ivf_centroids(spark: SparkSession, sf_dir: str):
         nz = counts > 0
         new_cent[nz] = sums[nz] / counts[nz, None]  # empty cells keep previous
         cent = new_cent
-    model_cache[("ivf", sf_dir)] = cent
     return cent
 
 
@@ -525,10 +520,7 @@ def similarity_ann_lsh_neighbors(
     # GC'd.  Cache it beside the query frame it derives from, keyed by
     # the seed offset (the broken-mode tests shift it); destroyed by
     # registry.clear_model_cache (Broadcast values are destroy()'d).
-    mc = _mc(spark)
-    bc_key = ("lsh_query_probes", sf_dir, query_seed_offset)
-    bc = mc.get(bc_key)
-    if bc is None:
+    def build_probes():
         qpdf = _query_pdf_cached(spark, sf_dir, v)
         qids = qpdf["vec_id"].to_numpy(dtype="int64")
         qm = np.stack(qpdf["embedding"].to_numpy()).astype("float64")
@@ -541,8 +533,11 @@ def similarity_ann_lsh_neighbors(
         flips = (1 << np.arange(LSH_PLANES, dtype=np.int64)) if LSH_MULTIPROBE >= 1 else np.empty(0, dtype=np.int64)
         probe_sets = [np.concatenate(([s], s ^ flips)) for s in qsigs]
         qn = qm / np.linalg.norm(qm, axis=1, keepdims=True)
-        bc = spark.sparkContext.broadcast((qids, qn, probe_sets))
-        mc[bc_key] = bc
+        return spark.sparkContext.broadcast((qids, qn, probe_sets))
+
+    bc = cached(
+        spark, ("lsh_query_probes", sf_dir, query_seed_offset), build_probes
+    )
     k = TOP_K
 
     def score(batches):
@@ -643,11 +638,6 @@ GROUP BY query_id
 """
 
 
-def _mc(spark: SparkSession) -> dict:
-    mc = session_model_cache(spark)
-    return mc
-
-
 def _membership_cached(
     spark: SparkSession,
     sf_dir: str,
@@ -679,61 +669,73 @@ def _membership_cached(
     alternate within one bench pass, and a single-slot cache would
     rebuild-and-leak the corpus-pass relation per alternation (r16
     review)."""
-    from s3_manifest_spark.registry import _release_checkpoint_blocks
 
-    def release(f):
-        # both releases — unpersist covers store-loaded frames
-        # (models.py persists parquet reads), the checkpoint release
-        # covers session-built LogicalRDDs; each a no-op for the other
-        f.unpersist(blocking=False)
-        _release_checkpoint_blocks(f)
-
-    mc = _mc(spark)
-    key = (f"ann_membership_{kind}", sf_dir)
-    cached = mc.get(key)
-    frames: list = []
-    widths: list[int] = []
-    if cached is not None:
-        frames = [v for v in cached if isinstance(v, DataFrame)]
-        widths = [int(v) for v in cached if not isinstance(v, DataFrame)]
-        if planes is None:
-            return frames[0]
-        if len(widths) == len(frames) and int(planes) in widths:
-            return frames[widths.index(int(planes))]
+    def split(entry) -> tuple[list, list[int]]:
+        frames = [v for v in entry if isinstance(v, DataFrame)]
+        widths = [int(v) for v in entry if not isinstance(v, DataFrame)]
         if len(widths) != len(frames):
-            # legacy planes-less store (widths unknown): evict it
-            for f in frames:
-                release(f)
-            frames, widths = [], []
-    # DRIVER-LOCAL relation, not a persisted frame (r17), for the
-    # QUERY-BOUNDED kinds only: their membership is k·queries rows by
-    # construction (derived from the exact relation), and a
-    # LocalRelation broadcasts into the certificate joins driver-side
-    # — no InMemoryTableScan job per call.  CORPUS-WIDE kinds
-    # ('knn': every vector is a query, the relation is N·k rows) pass
-    # ``localize=False`` (ADVICE r17): an unbounded driver collect is
-    # exactly what the 100 TB design forbids, and the resulting
-    # single-partition LocalRelation sits on the STREAMED side of the
-    # broadcast_found=False certificate join — the configuration the
-    # _knn_exact_cached A/B measured 0.15-0.2 s slower than a
-    # distributed checkpoint.  Those keep the r16 distributed path
-    # (eager localCheckpoint: blocks distributed, released through the
-    # LogicalRDD handle, never CacheManager-plan-matched).
-    built = builder()
-    if localize:
-        m = spark.createDataFrame(built.toPandas(), schema=built.schema)
-    else:
-        m = built.localCheckpoint(eager=True)
+            return [], []  # legacy planes-less store (widths unknown)
+        return frames, widths
+
+    def extend(entry) -> tuple:
+        # DRIVER-LOCAL relation, not a persisted frame (r17), for the
+        # QUERY-BOUNDED kinds only: their membership is k·queries rows
+        # by construction (derived from the exact relation), and a
+        # LocalRelation broadcasts into the certificate joins
+        # driver-side — no InMemoryTableScan job per call.  CORPUS-WIDE
+        # kinds ('knn': every vector is a query, the relation is N·k
+        # rows) pass ``localize=False`` (ADVICE r17): an unbounded
+        # driver collect is exactly what the 100 TB design forbids,
+        # and the resulting single-partition LocalRelation sits on the
+        # STREAMED side of the broadcast_found=False certificate join
+        # — the configuration the _knn_exact_cached A/B measured
+        # 0.15-0.2 s slower than a distributed checkpoint.  Those keep
+        # the r16 distributed path (eager localCheckpoint: blocks
+        # distributed, released through the LogicalRDD handle, never
+        # CacheManager-plan-matched).
+        built = builder()
+        if localize:
+            m = spark.createDataFrame(built.toPandas(), schema=built.schema)
+        else:
+            m = built.localCheckpoint(eager=True)
+        if planes is None:
+            return (m,)
+        frames, widths = split(entry)
+        # bounded: the oldest width drops out (cached() releases it)
+        frames, widths = (frames + [m])[-2:], (widths + [int(planes)])[-2:]
+        return tuple(frames) + tuple(widths)
+
+    key = (f"ann_membership_{kind}", sf_dir)
+    prev = cached(spark, key, lambda: extend(()))
     if planes is None:
-        mc[key] = (m,)
-        return m
-    frames.append(m)
-    widths.append(int(planes))
-    if len(frames) > 2:  # bounded: evict the oldest width
-        release(frames.pop(0))
-        widths.pop(0)
-    mc[key] = tuple(frames) + tuple(widths)
-    return m
+        return prev[0]
+    frames, widths = split(
+        cached(
+            spark,
+            key,
+            lambda: extend(prev),
+            valid=lambda entry: int(planes) in split(entry)[1],
+        )
+    )
+    return frames[widths.index(int(planes))]
+
+
+def _ann_with_membership(spark, sf_dir, kind, neighbors, resolve):
+    """``(ann, membership)`` for an ANN family whose neighbor function
+    can hand back its membership alongside the neighbors: a cold
+    membership build takes both from ONE
+    ``neighbors(with_membership=True)`` call (``resolve`` turns its
+    raw membership into the relation :func:`_membership_cached`
+    stores); a warm call plans the neighbors alone."""
+    built = []
+
+    def build():
+        ann, raw = neighbors(with_membership=True)
+        built.append(ann)
+        return resolve(raw)
+
+    membership = _membership_cached(spark, sf_dir, kind, build)
+    return (built[0] if built else neighbors()), membership
 
 
 def _exact_topk_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -744,11 +746,6 @@ def _exact_topk_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows persisted; released by ``registry.clear_model_cache``, cold
     build priced in bench cold_sec, persisted/reloaded by models.py
     like the other session artifacts)."""
-    mc = _mc(spark)
-    key = ("ann_exact", sf_dir)
-    cached = mc.get(key)
-    if cached is not None:
-        return cached[0]
     # DRIVER-LOCAL relation, not a persisted frame (r17, the
     # _knn_exact_sampled precedent): the relation is ≤ TOP_K ×
     # MAX_QUERIES rows by construction, and a LocalRelation
@@ -756,12 +753,16 @@ def _exact_topk_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-call InMemoryTableScan job a persisted frame pays (and can
     # never be CacheManager-served back to a fresh similarity_topk
     # plan — the r12/r14 plan-match rule for free).
-    exact = spark.createDataFrame(
-        similarity_topk(spark, sf_dir).toPandas(),
-        schema="query_id long, neighbor_id long, cos_sim double",
-    )
-    mc[key] = (exact,)
-    return exact
+    return cached(
+        spark,
+        ("ann_exact", sf_dir),
+        lambda: (
+            spark.createDataFrame(
+                similarity_topk(spark, sf_dir).toPandas(),
+                schema="query_id long, neighbor_id long, cos_sim double",
+            ),
+        ),
+    )[0]
 
 
 def _ann_certificate(
@@ -973,17 +974,13 @@ def similarity_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     The raw neighbor relation stays available as
     ``similarity_ivf_neighbors``."""
     exact = _exact_topk_cached(spark, sf_dir)
-    cached = _mc(spark).get(("ann_membership_ivf", sf_dir))
-    if cached is None:
-        ann, membership = similarity_ivf_neighbors(
-            spark, sf_dir, with_membership=True, exact=exact
-        )
-        membership = _membership_cached(
-            spark, sf_dir, "ivf", lambda: membership
-        )
-    else:
-        ann = similarity_ivf_neighbors(spark, sf_dir, exact=exact)
-        membership = cached[0]
+    ann, membership = _ann_with_membership(
+        spark,
+        sf_dir,
+        "ivf",
+        lambda **kw: similarity_ivf_neighbors(spark, sf_dir, exact=exact, **kw),
+        lambda membership: membership,
+    )
     return _ann_certificate(spark, sf_dir, ann, membership, exact=exact)
 
 
@@ -1014,15 +1011,17 @@ def _pq_codebooks(spark: SparkSession, sf_dir: str):
     certificate) is derived from this one cached array, so the emitted
     relation is self-consistent in any environment.
     """
+    return cached(
+        spark, ("pq", sf_dir), lambda: _train_pq_codebooks(spark, sf_dir)
+    )
+
+
+def _train_pq_codebooks(spark: SparkSession, sf_dir: str):
+    """The uncached :func:`_pq_codebooks` build."""
     import numpy as np
     import pandas as pd
 
     from s3_manifest_spark.registry import track_persist
-
-    model_cache = session_model_cache(spark)
-    cached = model_cache.get(("pq", sf_dir))
-    if cached is not None:
-        return cached
 
     v = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     tr = track_persist(v.filter(F.col("vec_id") % PQ_TRAIN_STRIDE == 0))
@@ -1086,7 +1085,6 @@ def _pq_codebooks(spark: SparkSession, sf_dir: str):
         nz = counts > 0
         new_books[nz] = sums[nz] / counts[nz][:, None]
         books = new_books
-    model_cache[("pq", sf_dir)] = books
     return books
 
 
@@ -1374,19 +1372,15 @@ def similarity_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     neighbor relation stays available as ``similarity_pq_neighbors``.
     """
     exact = _exact_topk_cached(spark, sf_dir)
-    cached = _mc(spark).get(("ann_membership_pq", sf_dir))
-    if cached is None:
-        ann, mem_raw = similarity_pq_neighbors(
-            spark, sf_dir, with_membership=True, exact=exact
-        )
-        # PQ hands membership back as a lazy builder over the exact
-        # relation — resolve it once here and session-cache the result
-        membership = _membership_cached(
-            spark, sf_dir, "pq", lambda: mem_raw(exact)
-        )
-    else:
-        ann = similarity_pq_neighbors(spark, sf_dir, exact=exact)
-        membership = cached[0]
+    # PQ hands membership back as a lazy builder over the exact
+    # relation — resolve it once here and session-cache the result
+    ann, membership = _ann_with_membership(
+        spark,
+        sf_dir,
+        "pq",
+        lambda **kw: similarity_pq_neighbors(spark, sf_dir, exact=exact, **kw),
+        lambda mem_raw: mem_raw(exact),
+    )
     return _ann_certificate(spark, sf_dir, ann, membership, exact=exact)
 
 
@@ -2013,38 +2007,27 @@ def _knn_ann_index_cached(
     :func:`_knn_ann_planes` boundary must be probed with ITS OWN bit
     width, not one re-derived from the current file — a mismatched
     flip set silently degrades candidate completeness."""
-    mc = _mc(spark)
-    key = ("knn_ann_index", sf_dir)
-    cached = mc.get(key)
-    # legacy guard: a store persisted before the plane count traveled
-    # with the relation loads as a 1-tuple — REBUILD rather than pair
-    # the packed relation with a re-derived count (the exact silent
-    # mismatch the tuple exists to prevent).
-    if cached is not None and len(cached) >= 2:
-        packed, p = cached[0], int(cached[1])
-        return packed, p
-    if cached is not None:
-        # legacy 1-tuple being rebuilt: free the old frame before
-        # overwriting the only handle (r16 review).  BOTH releases:
-        # unpersist covers store-loaded frames (models.py persists
-        # parquet reads — plan-keyed, not LogicalRDD), the checkpoint
-        # release covers session-built ones; each is a no-op for the
-        # other shape.
-        from s3_manifest_spark.registry import _release_checkpoint_blocks
 
-        cached[0].unpersist(blocking=False)
-        _release_checkpoint_blocks(cached[0])
-    v = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    n = parquet_row_count(f"{sf_dir}/embeddings.parquet")
-    p = _knn_ann_planes(n)
-    sigs = _ann_signatures(
-        v, seed_offset=KNN_ANN_SEED_OFFSET, planes=p
-    ).withColumnRenamed("sig", "bucket")
-    packed = _pack_buckets_salted(
-        sigs.select("vec_id", "embedding", "bucket")
-    ).localCheckpoint(eager=True)
-    mc[key] = (packed, p)
-    return packed, p
+    def build():
+        v = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+        p = _knn_ann_planes(parquet_row_count(f"{sf_dir}/embeddings.parquet"))
+        sigs = _ann_signatures(
+            v, seed_offset=KNN_ANN_SEED_OFFSET, planes=p
+        ).withColumnRenamed("sig", "bucket")
+        packed = _pack_buckets_salted(
+            sigs.select("vec_id", "embedding", "bucket")
+        ).localCheckpoint(eager=True)
+        return packed, p
+
+    # legacy guard: a store persisted before the plane count traveled
+    # with the relation loads as a 1-tuple — REBUILD (the stale frame
+    # is released) rather than pair the packed relation with a
+    # re-derived count (the exact silent mismatch the tuple exists to
+    # prevent).
+    packed, p = cached(
+        spark, ("knn_ann_index", sf_dir), build, valid=lambda e: len(e) >= 2
+    )[:2]
+    return packed, int(p)
 
 
 def _probe_masks(p: int, radius: int) -> list[int]:
@@ -2087,59 +2070,52 @@ def _knn_query_pack_cached(
     set is the production radius (:data:`KNN_ANN_MULTIPROBE`);
     :func:`knn_graph_ann_neighbors` rejects a pre-exploded pack at
     any other radius."""
-    mc = _mc(spark)
-    key = ("knn_query_pack", sf_dir)
-    cached = mc.get(key)
+    import pandas as pd
+
+    def build():
+        v = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+        qv = v.join(
+            F.broadcast(exact.select("vec_id").distinct()), "vec_id"
+        )
+        qsigs = _ann_signatures(
+            qv, seed_offset=KNN_ANN_SEED_OFFSET, planes=p
+        ).withColumnRenamed("sig", "bucket")
+        blocks = _pack_buckets_salted(
+            qsigs.select("vec_id", "embedding", "bucket")
+        ).toPandas()
+        # driver-side multi-probe explosion: replicate each query block
+        # under every probe mask — the same enumeration the column sweep
+        # uses (_probe_masks), XORed in int64 exactly like bitwiseXOR.
+        exploded = pd.concat(
+            [
+                pd.DataFrame(
+                    {
+                        "ids_a": blocks["ids"].map(list),
+                        "mat_a": blocks["mat"].map(list),
+                        "pblk": blocks["blk"].astype("int64") ^ m,
+                    }
+                )
+                for m in _probe_masks(int(p), KNN_ANN_MULTIPROBE)
+            ],
+            ignore_index=True,
+        )
+        pack = spark.createDataFrame(
+            exploded, schema="ids_a array<long>, mat_a array<double>, pblk long"
+        )
+        return pack, int(p)
+
     # The pack's bit width must equal the SERVED index's — a pack
     # persisted under a different plane count (legacy planes-less
     # 1-tuple, or a store saved across a _knn_ann_planes boundary)
     # would silently flip the wrong bits at probe time (ADVICE r15,
-    # query-side edition of the knn_ann_index legacy guard above).
-    if cached is not None and len(cached) >= 2 and int(cached[1]) == int(p):
-        return cached[0]
-    if cached is not None:
-        # superseded width (legacy 1-tuple or plane-boundary reload):
-        # free the stale pack before the rebuild drops the only handle
-        # (r16 review).  Both releases — unpersist for store-loaded
-        # frames, checkpoint release for session-built ones; each a
-        # no-op for the other shape.
-        from s3_manifest_spark.registry import _release_checkpoint_blocks
-
-        cached[0].unpersist(blocking=False)
-        _release_checkpoint_blocks(cached[0])
-    v = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    qv = v.join(
-        F.broadcast(exact.select("vec_id").distinct()), "vec_id"
-    )
-    qsigs = _ann_signatures(
-        qv, seed_offset=KNN_ANN_SEED_OFFSET, planes=p
-    ).withColumnRenamed("sig", "bucket")
-    import pandas as pd
-
-    blocks = _pack_buckets_salted(
-        qsigs.select("vec_id", "embedding", "bucket")
-    ).toPandas()
-    # driver-side multi-probe explosion: replicate each query block
-    # under every probe mask — the same enumeration the column sweep
-    # uses (_probe_masks), XORed in int64 exactly like bitwiseXOR.
-    exploded = pd.concat(
-        [
-            pd.DataFrame(
-                {
-                    "ids_a": blocks["ids"].map(list),
-                    "mat_a": blocks["mat"].map(list),
-                    "pblk": blocks["blk"].astype("int64") ^ m,
-                }
-            )
-            for m in _probe_masks(int(p), KNN_ANN_MULTIPROBE)
-        ],
-        ignore_index=True,
-    )
-    pack = spark.createDataFrame(
-        exploded, schema="ids_a array<long>, mat_a array<double>, pblk long"
-    )
-    mc[key] = (pack, int(p))
-    return pack
+    # query-side edition of the knn_ann_index legacy guard above); a
+    # superseded pack is rebuilt and released.
+    return cached(
+        spark,
+        ("knn_query_pack", sf_dir),
+        build,
+        valid=lambda e: len(e) >= 2 and int(e[1]) == int(p),
+    )[0]
 
 
 def _knn_query_probes_cached(
@@ -2162,36 +2138,33 @@ def _knn_query_probes_cached(
     destroyed by ``registry.clear_model_cache``)."""
     import numpy as np
 
-    mc = _mc(spark)
-    key = ("knn_query_probes", sf_dir)
-    cached = mc.get(key)
-    if cached is not None and int(cached[1]) == int(p):
-        return cached[0]
-    if cached is not None:
-        try:  # superseded width: free the stale broadcast's blocks
-            cached[0].destroy()
-        except Exception:
-            pass
-    pdf = pack.toPandas()
-    grouped: dict[int, list] = {}
-    for raw_ids, raw_mat, pblk in zip(
-        pdf["ids_a"].to_numpy(), pdf["mat_a"].to_numpy(), pdf["pblk"].to_numpy()
-    ):
-        ia = np.asarray(list(raw_ids), dtype="int64")
-        ma = np.asarray(list(raw_mat), dtype="float64").reshape(len(ia), -1)
-        # the scorer-side normalization clamp, applied ONCE at build
-        ma /= np.maximum(np.linalg.norm(ma, axis=1, keepdims=True), 1e-12)
-        grouped.setdefault(int(pblk), []).append((ia, ma))
-    probes = {
-        blk: (
-            np.concatenate([ia for ia, _ in parts]),
-            np.concatenate([ma for _, ma in parts], axis=0),
-        )
-        for blk, parts in grouped.items()
-    }
-    bc = spark.sparkContext.broadcast(probes)
-    mc[key] = (bc, int(p))
-    return bc
+    def build():
+        pdf = pack.toPandas()
+        grouped: dict[int, list] = {}
+        for raw_ids, raw_mat, pblk in zip(
+            pdf["ids_a"].to_numpy(), pdf["mat_a"].to_numpy(), pdf["pblk"].to_numpy()
+        ):
+            ia = np.asarray(list(raw_ids), dtype="int64")
+            ma = np.asarray(list(raw_mat), dtype="float64").reshape(len(ia), -1)
+            # the scorer-side normalization clamp, applied ONCE at build
+            ma /= np.maximum(np.linalg.norm(ma, axis=1, keepdims=True), 1e-12)
+            grouped.setdefault(int(pblk), []).append((ia, ma))
+        probes = {
+            blk: (
+                np.concatenate([ia for ia, _ in parts]),
+                np.concatenate([ma for _, ma in parts], axis=0),
+            )
+            for blk, parts in grouped.items()
+        }
+        return spark.sparkContext.broadcast(probes), int(p)
+
+    # a superseded width is rebuilt; the stale broadcast is destroyed
+    return cached(
+        spark,
+        ("knn_query_probes", sf_dir),
+        build,
+        valid=lambda e: int(e[1]) == int(p),
+    )[0]
 
 
 def knn_graph_ann_neighbors(
@@ -2437,14 +2410,11 @@ def _knn_exact_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     A/B read local ≈0.15-0.2 s SLOWER than the distributed checkpoint
     (min-of-8: 1.53 vs 1.34 s).  Driver-localization is for BUILD
     (broadcast) sides and tiny streamed relations only."""
-    mc = _mc(spark)
-    key = ("knn_exact", sf_dir)
-    cached = mc.get(key)
-    if cached is not None:
-        return cached[0]
-    exact = knn_graph(spark, sf_dir).localCheckpoint(eager=True)
-    mc[key] = (exact,)
-    return exact
+    return cached(
+        spark,
+        ("knn_exact", sf_dir),
+        lambda: (knn_graph(spark, sf_dir).localCheckpoint(eager=True),),
+    )[0]
 
 
 def _knn_ann_membership(
@@ -2604,14 +2574,18 @@ def _knn_exact_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     job per probe, where the former localCheckpoint paid one.  (A
     LocalRelation also satisfies the r12/r14 plan-match rule: it can
     never be CacheManager-served back to a fresh query plan.)"""
+    return cached(
+        spark,
+        ("knn_exact_sampled", sf_dir),
+        lambda: _score_knn_exact_sampled(spark, sf_dir),
+    )[0]
+
+
+def _score_knn_exact_sampled(spark: SparkSession, sf_dir: str) -> tuple:
+    """The uncached :func:`_knn_exact_sampled` build."""
     import numpy as np
     import pandas as pd
 
-    mc = _mc(spark)
-    key = ("knn_exact_sampled", sf_dir)
-    cached = mc.get(key)
-    if cached is not None:
-        return cached[0]
     v = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     qpdf = (
         v.filter(F.col("vec_id") % KNN_CERT_STRIDE == 0)
@@ -2665,8 +2639,7 @@ def _knn_exact_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
         .toPandas(),
         schema="vec_id long, neighbor_id long, cos_sim double",
     )
-    mc[key] = (exact,)
-    return exact
+    return (exact,)
 
 
 _KNN_ANN_SAMPLED_CERT_SQL = f"""
@@ -2909,21 +2882,19 @@ def knn_ann_expected_capture(
         planes = _knn_ann_planes(
             parquet_row_count(f"{sf_dir}/embeddings.parquet")
         )
-    mc = _mc(spark)
-    key = ("knn_ann_capture", sf_dir, int(planes), int(radius))
-    cached = mc.get(key)
-    if cached is not None:
-        return float(cached[0])
     cap = _hyperplane_capture_expr(int(planes), int(radius))
-    row = (
-        _knn_exact_cached(spark, sf_dir)
-        .selectExpr(f"{_HYPERPLANE_Q_SQL} AS q")
-        .agg(F.round(F.avg(F.expr(cap)), 6).alias("ec"))
-        .collect()[0]
-    )
-    value = float(row["ec"])
-    mc[key] = (value,)
-    return value
+
+    def build():
+        row = (
+            _knn_exact_cached(spark, sf_dir)
+            .selectExpr(f"{_HYPERPLANE_Q_SQL} AS q")
+            .agg(F.round(F.avg(F.expr(cap)), 6).alias("ec"))
+            .collect()[0]
+        )
+        return (float(row["ec"]),)
+
+    key = ("knn_ann_capture", sf_dir, int(planes), int(radius))
+    return float(cached(spark, key, build)[0])
 
 
 #: centroid components are rounded to this many decimals on BOTH
@@ -3378,15 +3349,11 @@ def similarity_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     refine) — see :func:`_ann_certificate`.  The raw neighbor
     relation stays available as ``similarity_ivf_pq_neighbors``."""
     exact = _exact_topk_cached(spark, sf_dir)
-    cached = _mc(spark).get(("ann_membership_ivf_pq", sf_dir))
-    if cached is None:
-        ann, membership = similarity_ivf_pq_neighbors(
-            spark, sf_dir, with_membership=True
-        )
-        membership = _membership_cached(
-            spark, sf_dir, "ivf_pq", lambda: membership(exact)
-        )
-    else:
-        ann = similarity_ivf_pq_neighbors(spark, sf_dir)
-        membership = cached[0]
+    ann, membership = _ann_with_membership(
+        spark,
+        sf_dir,
+        "ivf_pq",
+        lambda **kw: similarity_ivf_pq_neighbors(spark, sf_dir, **kw),
+        lambda mem_raw: mem_raw(exact),
+    )
     return _ann_certificate(spark, sf_dir, ann, membership, exact=exact)

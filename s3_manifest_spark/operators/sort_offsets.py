@@ -85,38 +85,25 @@ def cached_sort_meta(
     (localCheckpoint — the layout must outlive the registry call and
     lineage truncation makes a divergent recompute impossible, see
     compaction_plan's inline note), served warm, released by
-    ``clear_model_cache`` (via a ``Releasable`` handle on the
-    checkpointed RDD — a plain ``DataFrame.unpersist()`` is a no-op
-    for localCheckpoint blocks, which never register in the
+    ``clear_model_cache`` (which frees the checkpoint blocks through
+    the frame's LogicalRDD — a plain ``DataFrame.unpersist()`` is a
+    no-op for localCheckpoint blocks, which never register in the
     CacheManager), cold build priced in bench cold_sec.  The
     cache key carries partitions + sort cols + group cols so two
     operators sharing a caller-provided ``key_tuple`` but different
     shapes can never serve each other's layout."""
-    from s3_manifest_spark.registry import Releasable, session_model_cache
+    from s3_manifest_spark.registry import cached
 
-    spark = df.sparkSession
-    mc = session_model_cache(spark)
-    key = (
-        "sorted_meta",
-        *key_tuple,
-        partitions,
-        tuple(cols),
-        tuple(group_cols),
-    )
-    hit = mc.get(key)
-    if hit is not None:
-        return hit[0], hit[1]
-    data = (
-        df.repartitionByRange(partitions, *cols)
-        .sortWithinPartitions(*cols)
-        .localCheckpoint(eager=True)
-    )
-    meta = partition_weights(data, group_cols, weight)
-    # The checkpointed blocks live on the LogicalRDD's backing RDD —
-    # keep its handle so clear_model_cache can actually free them.
-    jrdd = data._jdf.queryExecution().analyzed().rdd()
-    mc[key] = (data, meta, Releasable(lambda: jrdd.unpersist(False)))
-    return data, meta
+    def build():
+        data = (
+            df.repartitionByRange(partitions, *cols)
+            .sortWithinPartitions(*cols)
+            .localCheckpoint(eager=True)
+        )
+        return data, partition_weights(data, group_cols, weight)
+
+    key = ("sorted_meta", *key_tuple, partitions, tuple(cols), tuple(group_cols))
+    return cached(df.sparkSession, key, build)
 
 
 def exclusive_offsets(

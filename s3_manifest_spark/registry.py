@@ -4,12 +4,30 @@ Every operator module registers its ``queries()`` entries (and, where
 SQL-expressible, the DuckDB oracle twin) via :func:`register`.  The
 driver contract requires identical column names between the Spark
 DataFrame and the oracle result — alias both sides, always.
+
+Registry queries keep session state through one small API:
+
+- :func:`cached` — build-once, serve-warm SESSION state (trained
+  models, indexes, materialized relations) in the session model cache
+  ``spark._smsp_model_cache``, keyed by tuples.  Lookup, build and
+  store happen in one place under a per-key lock, so two threads
+  missing the same key build it once.  :func:`release` frees one
+  payload's Spark resources; :func:`clear_model_cache` drops them all.
+- the calling thread's CLEANUP SCOPE — QUERY-scoped state a registered
+  query leaves behind for its caller's lazy evaluation
+  (:func:`track_persist`, :func:`track_cleanup`,
+  :func:`pin_partitions`, :func:`defer_cleanup`).  Each thread has its
+  own scope, swept at that thread's next outermost registry call, so
+  one client's call never tears down another client's live result.
 """
 
 from __future__ import annotations
 
+import threading
 from collections.abc import Callable
+from typing import Any
 
+from pyspark import Broadcast
 from pyspark.sql import DataFrame, SparkSession
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -17,34 +35,45 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 QUERIES: dict[str, QueryFn] = {}
 ORACLES: dict[str, str] = {}
 
-#: DataFrames persisted by registry queries via :func:`track_persist`,
-#: awaiting cleanup at the NEXT registry invocation (their owner's
-#: result is evaluated lazily by the caller after the function
-#: returns, so the owner cannot unpersist them itself).
-_TRACKED_PERSISTS: list[DataFrame] = []
 
-#: Arbitrary cleanup callbacks registered by queries whose returned
-#: (lazy) result still depends on query-scoped state — e.g. a session
-#: conf override that must stay live until the caller evaluates the
-#: frame.  Run at the NEXT registry invocation, after the persists.
-_DEFERRED_CLEANUPS: list[Callable[[], None]] = []
+class _CleanupScope(threading.local):
+    """One thread's query-scoped state: frames persisted and callbacks
+    deferred by its registry calls, released at its NEXT outermost
+    registry call (the owner's result is evaluated lazily by the
+    caller after the function returns, so the owner cannot release
+    them itself).  ``depth`` counts nested registered calls
+    (certificates compose other registered queries); only depth 0
+    sweeps, so a nested call never tears down its caller's state
+    mid-construction."""
 
-#: Nesting depth of registered-query calls (certificates compose other
-#: registered queries); only depth-0 entry runs the cleanup sweep.
-_CALL_DEPTH = 0
+    def __init__(self) -> None:
+        self.persists: list[DataFrame] = []
+        self.cleanups: list[Callable[[], None]] = []
+        self.depth = 0
+
+    def entries(self) -> int:
+        return len(self.persists) + len(self.cleanups)
+
+    def sweep(self) -> None:
+        while self.persists:
+            self.persists.pop().unpersist(blocking=False)
+        while self.cleanups:
+            self.cleanups.pop()()
+
+
+_SCOPE = _CleanupScope()
 
 
 def track_persist(df: DataFrame) -> DataFrame:
     """Persist ``df`` and register it for deferred cleanup.
 
     Registry queries must use this instead of bare ``.persist()`` so
-    that the next registry call unpersists exactly these blocks — not
-    the whole session cache (``clearCache`` would also evict caches the
-    driver or embedding application created outside the registry).
+    that the thread's next registry call unpersists exactly these
+    blocks — not the whole session cache (``clearCache`` would also
+    evict caches the driver or embedding application created outside
+    the registry).
     """
-    df.persist()
-    _TRACKED_PERSISTS.append(df)
-    return df
+    return track_cleanup(df.persist())
 
 
 def track_cleanup(df: DataFrame) -> DataFrame:
@@ -52,7 +81,7 @@ def track_cleanup(df: DataFrame) -> DataFrame:
     for frames persisted with a bare ``.persist()`` inside a loop
     (where superseded generations are unpersisted eagerly) whose final
     generation must outlive the query function."""
-    _TRACKED_PERSISTS.append(df)
+    _SCOPE.persists.append(df)
     return df
 
 
@@ -79,11 +108,11 @@ def pin_partitions(df: DataFrame, eager_cleanup: bool) -> DataFrame:
 
 
 def defer_cleanup(fn: Callable[[], None]) -> None:
-    """Run ``fn`` at the next registry invocation (after persists are
-    released).  For query-scoped session state — conf overrides,
-    temp views — that the caller's lazy evaluation still needs after
-    the query function returns."""
-    _DEFERRED_CLEANUPS.append(fn)
+    """Run ``fn`` at the thread's next registry invocation (after
+    persists are released).  For query-scoped state — scratch
+    directories, conf overrides, temp views — that the caller's lazy
+    evaluation still needs after the query function returns."""
+    _SCOPE.cleanups.append(fn)
 
 
 def prefer_parallel_exchanges(spark) -> None:
@@ -117,76 +146,104 @@ def prefer_parallel_exchanges(spark) -> None:
     defer_cleanup(_restore)
 
 
-class Releasable:
-    """Wrap a non-DataFrame resource held by a model-cache entry so
-    :func:`clear_model_cache` can free it — e.g. the py4j RDD handle
-    backing a ``localCheckpoint`` (whose blocks a ``DataFrame
-    .unpersist()`` would NOT release: checkpointed RDDs never register
-    in the CacheManager, so without this they linger until the
-    ContextCleaner GCs the RDD)."""
-
-    def __init__(self, release_fn: Callable[[], None]):
-        self._release_fn = release_fn
-
-    def release(self) -> None:
-        try:
-            self._release_fn()
-        except Exception:
-            pass  # session already stopped / blocks already freed
+def session_dict(spark: SparkSession, attr: str) -> dict:
+    """The dict stored on the session object as ``attr``, created on
+    first use.  Session state lives ON the session (model cache, plan
+    memo, reader memo), so its entries die with the session instead of
+    pinning a stopped session's JVM state from a module global;
+    ``setdefault`` makes first use race-free across threads."""
+    return vars(spark).setdefault(attr, {})
 
 
 def session_model_cache(spark: SparkSession) -> dict:
     """The session model cache (``spark._smsp_model_cache``), created
-    on first use.  Trainers key it by ``(prefix, sf_dir)`` tuples;
-    release entries with :func:`clear_model_cache`, never a bare
-    ``.clear()`` (see that function's docstring)."""
-    mc = getattr(spark, "_smsp_model_cache", None)
-    if mc is None:
-        mc = {}
-        spark._smsp_model_cache = mc
-    return mc
+    on first use.  Registry code reaches it only through
+    :func:`cached`; release entries with :func:`clear_model_cache`,
+    never a bare ``.clear()`` (see that function's docstring)."""
+    return session_dict(spark, "_smsp_model_cache")
+
+
+_MISSING = object()
+
+
+def cached(
+    spark: SparkSession,
+    key: tuple,
+    build: Callable[[], Any],
+    valid: Callable[[Any], bool] | None = None,
+) -> Any:
+    """The session model cache entry for ``key``, built by ``build()``
+    and stored on a miss.
+
+    Builds run under a per-key lock: of two threads missing the same
+    key, one builds and the other is served its payload (two builds
+    would overwrite one payload in the dict and leave its persisted or
+    checkpointed blocks unreleasable).  Builders may call
+    :func:`cached` for OTHER keys (derived indexes nest).  ``valid``
+    screens a hit — a superseded plane width, a legacy store shape: a
+    rejected entry is rebuilt, and the parts of it the new payload no
+    longer holds are released.  Callers that must not touch the cache
+    (test doubles, forced strategies) call their builder directly."""
+    mc = session_model_cache(spark)
+    hit = mc.get(key, _MISSING)
+    if hit is not _MISSING and (valid is None or valid(hit)):
+        return hit
+    lock = session_dict(spark, "_smsp_build_locks").setdefault(
+        key, threading.Lock()
+    )
+    with lock:
+        hit = mc.get(key, _MISSING)
+        if hit is not _MISSING and (valid is None or valid(hit)):
+            return hit
+        value = mc[key] = build()
+    if hit is not _MISSING:
+        kept = {id(p) for p in _parts(value)}
+        release(tuple(p for p in _parts(hit) if id(p) not in kept))
+    return value
+
+
+def _parts(payload: Any) -> tuple:
+    return payload if isinstance(payload, tuple) else (payload,)
+
+
+def release(payload: Any) -> None:
+    """Free the Spark resources a model-cache payload holds: a
+    DataFrame is unpersisted AND its checkpoint blocks freed (each a
+    no-op for the other shape — store-loaded frames persist,
+    session-built ones localCheckpoint), a Broadcast is destroyed, a
+    tuple is released member by member.  Other payloads (numpy
+    arrays, scalars, bytes, pandas frames) hold nothing to free."""
+    for p in _parts(payload):
+        try:
+            if isinstance(p, DataFrame):
+                p.unpersist(blocking=False)
+                # checkpointed frames never register in the
+                # CacheManager: their blocks hang off the LogicalRDD's
+                # backing RDD and would otherwise linger until the
+                # ContextCleaner GCs it (ADVICE r11)
+                analyzed = p._jdf.queryExecution().analyzed()
+                if analyzed.getClass().getSimpleName() == "LogicalRDD":
+                    analyzed.rdd().unpersist(False)
+            elif isinstance(p, Broadcast):
+                p.destroy()
+        except Exception:
+            pass  # session already stopped / blocks already freed
 
 
 def clear_model_cache(spark: SparkSession) -> None:
     """Release the session model cache (trained quantizers, LSH
     indexes, CDC state, broadcast filters) WITHOUT leaking its
-    payloads: cached DataFrames are unpersisted, broadcasts destroyed
-    (payloads may be bare objects, DataFrames, Broadcasts, or tuples
-    of them).  This — not ``spark._smsp_model_cache.clear()`` — is
-    the supported way to drop models (a bare ``clear()`` orphans the
-    persisted blocks in the BlockManager with no reachable handle).
-    The plan memo is dropped WITH the models: memoized plans may
-    reference the destroyed broadcasts/persisted frames, and serving
-    one after this call would fail at evaluation time."""
-    getattr(spark, "_smsp_plan_cache", {}).clear()
-    mc = getattr(spark, "_smsp_model_cache", None)
-    if not mc:
-        return
-    for value in mc.values():
-        parts = value if isinstance(value, tuple) else (value,)
-        for p in parts:
-            if isinstance(p, DataFrame):
-                p.unpersist(blocking=False)
-                _release_checkpoint_blocks(p)
-            elif isinstance(p, Releasable):  # non-frame resources
-                p.release()
-            elif hasattr(p, "destroy") and hasattr(p, "value"):  # Broadcast
-                p.destroy()
-    mc.clear()
-
-
-def _release_checkpoint_blocks(df: DataFrame) -> None:
-    """Free the executor blocks behind a ``localCheckpoint``'d model
-    frame.  ``DataFrame.unpersist()`` above covers only CacheManager
-    entries; checkpointed frames never register there — their blocks
-    hang off the LogicalRDD's backing RDD and would otherwise linger
-    until the ContextCleaner GCs it (ADVICE r11)."""
-    try:
-        analyzed = df._jdf.queryExecution().analyzed()
-        if analyzed.getClass().getSimpleName() == "LogicalRDD":
-            analyzed.rdd().unpersist(False)
-    except Exception:
-        pass  # session stopped / non-checkpoint plan — nothing to free
+    payloads (see :func:`release`).  This — not
+    ``spark._smsp_model_cache.clear()`` — is the supported way to drop
+    models (a bare ``clear()`` orphans the persisted blocks in the
+    BlockManager with no reachable handle).  The plan memo is dropped
+    WITH the models: memoized plans may reference the destroyed
+    broadcasts/persisted frames, and serving one after this call would
+    fail at evaluation time."""
+    session_dict(spark, "_smsp_plan_cache").clear()
+    mc = session_model_cache(spark)
+    while mc:
+        release(mc.popitem()[1])
 
 
 def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
@@ -195,41 +252,30 @@ def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryF
             raise ValueError(f"duplicate query name {name!r}")
 
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-            # Cache hygiene between registry calls: unpersist only the
-            # intermediates a PRIOR registry query persisted (tracked
-            # above).  By the time the next query is requested, the
-            # previous result is materialized, so this releases executor
-            # memory without evicting anything still needed — and without
-            # touching caches created outside the registry.
-            # REENTRANCY: only the OUTERMOST registered call sweeps —
-            # a registered fn that composes another registered query
-            # (the certificate pattern) must not have its own tracked
-            # persists or conf-restoring cleanups torn down
-            # mid-construction by the nested call.
-            global _CALL_DEPTH
-            if _CALL_DEPTH == 0:
-                while _TRACKED_PERSISTS:
-                    _TRACKED_PERSISTS.pop().unpersist(blocking=False)
-                while _DEFERRED_CLEANUPS:
-                    _DEFERRED_CLEANUPS.pop()()
+            # Cleanup between registry calls: release only the state
+            # THIS thread's prior registry queries left behind (its
+            # cleanup scope).  By the time the thread requests its next
+            # query, its previous result is materialized, so this frees
+            # executor memory without evicting anything still needed —
+            # without touching caches created outside the registry, and
+            # without touching another thread's live results.  Only the
+            # OUTERMOST registered call sweeps (see _CleanupScope).
+            scope = _SCOPE
+            if scope.depth == 0:
+                scope.sweep()
             # Plan memoization (prepared-statement reuse): DataFrames
             # are immutable LAZY plans, so re-serving one is
             # semantically identical to rebuilding it, while skipping
             # the per-call py4j expression construction + analysis
             # (50-700 ms — up to half a floor-class query's wall).
-            # Stored on the session object like the reader cache, so
-            # entries die with the session.  A query that registered
-            # persists or cleanups DURING construction (detected by
-            # list growth across fn, which nesting cannot mask since
-            # nested calls never drain) is NOT cached: its returned
-            # plan depends on query-scoped state (scratch spools, conf
-            # overrides, persisted intermediates) that the next
-            # outermost registry call tears down.
-            cache = getattr(spark, "_smsp_plan_cache", None)
-            if cache is None:
-                cache = {}
-                spark._smsp_plan_cache = cache
-            # The cache key carries every piece of session state a
+            # A query whose call put entries in the cleanup scope is
+            # NOT memoized: its returned plan depends on query-scoped
+            # state (scratch spools, conf overrides, persisted
+            # intermediates) that the thread's next outermost registry
+            # call tears down.  Nested calls never sweep, so scope
+            # growth across ``fn`` is exactly this call's entries.
+            memo = session_dict(spark, "_smsp_plan_cache")
+            # The memo key carries every piece of session state a
             # plan CONSTRUCTION reads: the session TIMEZONE (manifest
             # timestamp fusions branch on it via _utc_session),
             # shuffle.partitions (widen_scan / _keyed_parts bake it
@@ -251,21 +297,17 @@ def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryF
                 spark.conf.get("spark.sql.shuffle.partitions", "200"),
                 spark.sparkContext.defaultParallelism,
             )
-            cached = cache.get(key)
-            if cached is not None:
-                return cached
-            before = (len(_TRACKED_PERSISTS), len(_DEFERRED_CLEANUPS))
-            _CALL_DEPTH += 1
+            plan = memo.get(key)
+            if plan is not None:
+                return plan
+            before = scope.entries()
+            scope.depth += 1
             try:
                 df = fn(spark, sf_dir)
             finally:
-                _CALL_DEPTH -= 1
-            registered_state = (
-                len(_TRACKED_PERSISTS),
-                len(_DEFERRED_CLEANUPS),
-            ) != before
-            if not registered_state:
-                cache[key] = df
+                scope.depth -= 1
+            if scope.entries() == before:
+                memo[key] = df
             return df
 
         wrapped.__name__ = fn.__name__

@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from s3_manifest_spark.registry import cached, session_dict
+
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings".split()
 )
@@ -142,11 +144,7 @@ def _reader_cache(spark: SparkSession) -> dict:
     process that creates and stops many sessions never accumulates
     plans that pin stopped sessions' JVM state, and an id() collision
     on a recycled address can never serve a stale plan."""
-    cache = getattr(spark, "_smsp_reader_cache", None)
-    if cache is None:
-        cache = {}
-        spark._smsp_reader_cache = cache
-    return cache
+    return session_dict(spark, "_smsp_reader_cache")
 
 
 def load_table(
@@ -160,9 +158,9 @@ def load_table(
         raise ValueError(f"unknown table {name!r}; expected one of {TABLES}")
     cache = _reader_cache(spark)
     key = (sf_dir, name, widen)
-    cached = cache.get(key)
-    if cached is not None:
-        return cached
+    hit = cache.get(key)
+    if hit is not None:
+        return hit
     path = f"{sf_dir}/{name}.parquet"
     if name == "events":
         # Re-assert nanosAsLong for externally-created sessions that
@@ -200,9 +198,9 @@ def synth_listing(spark: SparkSession, sf_dir: str, widen: bool = True) -> DataF
     """
     cache = _reader_cache(spark)
     key = (sf_dir, "__synth_listing__", widen)
-    cached = cache.get(key)
-    if cached is not None:
-        return cached
+    hit = cache.get(key)
+    if hit is not None:
+        return hit
     li = load_table(spark, sf_dir, "lineitem")
     out = listing_projection(li)
     out = widen_scan(out, f"{sf_dir}/lineitem.parquet") if widen else out
@@ -223,17 +221,12 @@ def listing_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     DERIVED kind — rebuilt from data by design, deliberately not
     persisted by models.py — and the cold build is priced in
     BENCH_FULL.json's cold_sec like every other session model."""
-    from s3_manifest_spark.registry import session_model_cache
+    def build():
+        df = synth_listing(spark, sf_dir, widen=True).persist()
+        df.count()
+        return (df,)
 
-    mc = session_model_cache(spark)
-    key = ("synth_listing", sf_dir)
-    cached = mc.get(key)
-    if cached is not None:
-        return cached[0]
-    df = synth_listing(spark, sf_dir, widen=True).persist()
-    df.count()
-    mc[key] = (df,)
-    return df
+    return cached(spark, ("synth_listing", sf_dir), build)[0]
 
 
 def size_cents(col: F.Column | None = None) -> F.Column:

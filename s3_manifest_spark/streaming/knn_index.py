@@ -335,20 +335,11 @@ def release_refresh_inputs(refreshed: DataFrame, prev_packed=None) -> None:
     paths per the r16 rule — ``unpersist`` covers store-loaded
     (plan-keyed persisted) frames, the checkpoint release covers
     session-built LogicalRDDs; each is a no-op for the other shape."""
-    from s3_manifest_spark.registry import _release_checkpoint_blocks
+    from s3_manifest_spark.registry import release
 
-    targets = [getattr(refreshed, "_smsp_refresh_append", None)]
-    if prev_packed is not None:
-        targets.append(prev_packed)
-    for df in targets:
-        if df is None:
-            continue
-        try:
-            df.unpersist(blocking=False)
-        except Exception:
-            pass
-        _release_checkpoint_blocks(df)
-    if getattr(refreshed, "_smsp_refresh_append", None) is not None:
+    append = getattr(refreshed, "_smsp_refresh_append", None)
+    release((append, prev_packed))
+    if append is not None:
         refreshed._smsp_refresh_append = None
 
 

@@ -12,6 +12,7 @@ import numpy as np
 import pandas as pd
 
 from s3_manifest_spark.operators import similarity as S
+from s3_manifest_spark.registry import session_model_cache
 
 SF = "/root/testdata/sf0.001"
 
@@ -139,7 +140,7 @@ def test_index_cache_carries_plane_count(spark):
     corpus-growth boundary keeps probing its own bit width."""
     packed, p = S._knn_ann_index_cached(spark, SF)
     assert isinstance(p, int) and S.KNN_ANN_MIN_PLANES <= p <= S.KNN_ANN_MAX_PLANES
-    cached = S._mc(spark)[("knn_ann_index", SF)]
+    cached = session_model_cache(spark)[("knn_ann_index", SF)]
     assert int(cached[1]) == p
 
 
@@ -348,7 +349,7 @@ def test_legacy_index_cache_tuple_triggers_rebuild(spark):
     """A pre-r15 persisted store loads the index as a 1-tuple (no
     plane count): the cache read must REBUILD rather than pair the
     packed relation with a re-derived count."""
-    mc = S._mc(spark)
+    mc = session_model_cache(spark)
     key = ("knn_ann_index", SF)
     fresh_packed, fresh_p = S._knn_ann_index_cached(spark, SF)
     try:

@@ -11,6 +11,7 @@ import numpy as np
 import pandas as pd
 
 from s3_manifest_spark.operators import similarity as S
+from s3_manifest_spark.registry import session_model_cache
 
 SF = "/root/testdata/sf0.001"
 
@@ -21,7 +22,7 @@ SF = "/root/testdata/sf0.001"
 
 
 def test_query_pack_cache_carries_plane_count(spark):
-    mc = S._mc(spark)
+    mc = session_model_cache(spark)
     key = ("knn_query_pack", SF)
     mc.pop(key, None)
     exact = S._knn_exact_sampled(spark, SF)
@@ -39,7 +40,7 @@ def test_query_pack_plane_mismatch_triggers_rebuild(spark):
     index (legacy 1-tuple, partial store, or a _knn_ann_planes boundary
     crossing) must REBUILD at the caller's count — a stale hit is the
     silent bit-width mismatch the tuple exists to prevent."""
-    mc = S._mc(spark)
+    mc = session_model_cache(spark)
     key = ("knn_query_pack", SF)
     mc.pop(key, None)
     exact = S._knn_exact_sampled(spark, SF)
@@ -68,7 +69,7 @@ def test_membership_cache_keyed_on_planes(spark):
     width; a cached hit under a DIFFERENT served plane count must
     rebuild so the completeness certificate grades the promise the
     sweep actually probes."""
-    mc = S._mc(spark)
+    mc = session_model_cache(spark)
     key = ("ann_membership_knn", SF)
     saved = mc.pop(key, None)
     calls = []

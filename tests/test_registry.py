@@ -45,11 +45,15 @@ def test_tracked_persists_are_released_on_next_call(spark, q):
     release those blocks.  (dedup_minhash_lsh, the previous subject,
     persists only when the document-frequency cap binds — r18 made the
     inert-cap path read the session shingle checkpoint directly.)"""
+    from pyspark import StorageLevel
+
     df = q["dedup_incremental"](spark, SF)
     df.count()  # materialize → probe intermediates persisted
-    assert len(registry._TRACKED_PERSISTS) >= 1
+    probes = list(registry._SCOPE.persists)  # this thread's scope
+    assert len(probes) >= 1
     q["hash_join"](spark, SF).count()
-    assert len(registry._TRACKED_PERSISTS) == 0
+    assert registry._SCOPE.persists == []
+    assert all(p.storageLevel == StorageLevel.NONE for p in probes)
 
 
 def test_duplicate_registration_rejected():
@@ -411,3 +415,162 @@ def test_session_models_survive_registry_sweeps(spark):
     assert not still_stored, (
         f"clear_model_cache left checkpoint blocks resident: {still_stored}"
     )
+
+
+def _run_threads(*targets, timeout=600):
+    """Run each target on its own thread; re-raise the first error."""
+    import threading
+
+    errors = []
+
+    def guard(fn):
+        def run():
+            try:
+                fn()
+            except Exception as exc:  # surfaced on the caller thread
+                errors.append(exc)
+
+        return run
+
+    threads = [threading.Thread(target=guard(t)) for t in targets]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout)
+        assert not t.is_alive(), "client thread hung"
+    if errors:
+        raise errors[0]
+
+
+def test_cleanup_scope_is_per_thread(spark, q):
+    """One client's registry call must not tear down another client's
+    live query state: A plans stream_cdc_apply_live (its lazy result
+    reads a scratch snapshot removed by a deferred cleanup), B then
+    runs a full registry call on another thread, and A's evaluation
+    must still find its snapshot.  Events, not sleeps, order the
+    three steps."""
+    import threading
+
+    planned, b_done = threading.Event(), threading.Event()
+    rows = []
+
+    def client_a():
+        try:
+            df = q["stream_cdc_apply_live"](spark, SF)
+        finally:
+            planned.set()
+        assert b_done.wait(600)
+        rows.append(len(df.toPandas()))
+        q["hash_join"](spark, SF).count()  # A's next call sweeps A's scope
+
+    def client_b():
+        assert planned.wait(600)
+        try:
+            q["hash_join"](spark, SF).count()
+        finally:
+            b_done.set()
+
+    _run_threads(client_a, client_b)
+    assert rows and rows[0] > 0
+
+
+def test_concurrent_model_miss_builds_once(spark, q, monkeypatch):
+    """Two clients missing the same cold model build it once, and
+    clear_model_cache then leaves no persisted RDD or checkpoint block
+    of the build behind."""
+    import threading
+
+    from s3_manifest_spark.operators import semdedup as sd
+
+    registry.clear_model_cache(spark)
+    jsc = spark.sparkContext._jsc.sc()
+
+    def persistent_rdds() -> set:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    before = persistent_rdds()
+    builds = []
+    real = sd._lloyd_centroids
+
+    def counting(spark_, sf_dir):
+        builds.append(sf_dir)
+        return real(spark_, sf_dir)
+
+    monkeypatch.setattr(sd, "_lloyd_centroids", counting)
+    barrier = threading.Barrier(2)
+    results = []
+
+    def client():
+        barrier.wait(60)
+        results.append(q["semdedup"](spark, SF).toPandas())
+        q["hash_join"](spark, SF).count()  # sweep this thread's scope
+
+    _run_threads(client, client)
+    assert builds == [SF]
+    assert len(results) == 2 and results[0].equals(results[1])
+
+    # a checkpointed payload raced the same way is stored once and
+    # freed by clear_model_cache
+    ckpt_builds = []
+
+    def build_frame():
+        ckpt_builds.append(1)
+        return spark.range(1000).localCheckpoint(eager=True)
+
+    frames = []
+
+    def frame_client():
+        barrier.wait(60)
+        frames.append(registry.cached(spark, ("t_race",), build_frame))
+
+    _run_threads(frame_client, frame_client)
+    assert len(ckpt_builds) == 1 and frames[0] is frames[1]
+    rid = frames[0]._jdf.queryExecution().analyzed().rdd().id()
+    assert jsc.getPersistentRDDs().contains(rid)
+    registry.clear_model_cache(spark)
+    after = persistent_rdds()
+    assert not after - before, f"leaked persistent RDDs: {after - before}"
+    assert not _frame_stored(spark, frames[0])
+
+
+def test_cached_builds_each_key_once_under_contention(spark):
+    """More client threads than cores race cached() over a few cold
+    keys with a short switch interval: every key is built exactly
+    once and every caller gets that one payload."""
+    import sys
+    import threading
+
+    keys = [("t_contention", i) for i in range(3)]
+    builds = {k: 0 for k in keys}
+    count_lock = threading.Lock()
+    got = []
+
+    def build_for(key):
+        def build():
+            with count_lock:
+                builds[key] += 1
+            return object()
+
+        return build
+
+    barrier = threading.Barrier(16)
+
+    def client(i):
+        def run():
+            barrier.wait(60)
+            for key in keys[i % 3 :] + keys[: i % 3]:
+                got.append((key, registry.cached(spark, key, build_for(key))))
+
+        return run
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        _run_threads(*(client(i) for i in range(16)), timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+        for key in keys:
+            registry.session_model_cache(spark).pop(key, None)
+    assert builds == {k: 1 for k in keys}
+    assert len(got) == 16 * len(keys)
+    assert all(len({id(v) for k, v in got if k == key}) == 1 for key in keys)
