@@ -11,6 +11,11 @@ neighbors per query vector):
   sign-pattern, score only same-bucket pairs.  The 100 TB path: the
   shuffle carries (vector, bucket) once, not Q×N scores.
 
+Every per-query variant (exact, truncated-dims, IVF, LSH, PQ / IVF-PQ,
+the sampled kNN certificate's exact side) runs ONE scan,
+:func:`_query_topk`: the variant supplies routing and scoring per
+Arrow batch; the per-batch top-k and the window merge live there.
+
 Scoring numerics: all three strategies score with numpy BLAS/einsum in
 float64 (the r7 rework moved ``similarity_ann_lsh`` off interpreted
 zip_with/aggregate folds — JVM-side but per-row-lambda evaluated, they
@@ -70,6 +75,93 @@ def _query_pdf_cached(spark: SparkSession, sf_dir: str, v):
     return cached(spark, ("query_pdf", sf_dir), lambda: _query_pdf(v))
 
 
+def _query_topk(
+    v: DataFrame,
+    k: int,
+    per_batch,
+    id_col: str = "query_id",
+    score_col: str = "cos_sim",
+) -> DataFrame:
+    """The one per-query top-k scan every similarity variant runs:
+    ``(id_col, neighbor_id, score_col)`` rows, the ``k`` best
+    candidates per query under (score desc, neighbor_id asc).
+
+    ``per_batch(batch)`` is the variant's own routing and scoring: for
+    one non-empty Arrow batch of ``v`` (a pandas frame) it yields
+    ``(query_id, candidate_ids, candidate_scores)`` numpy triples.  The
+    scan keeps each batch's local top-k per query under the FINAL
+    ordering — sound because every global top-k member is a top-k
+    member of its own batch — and a window merges the ≤ k·batches
+    candidate rows per query.  The corpus itself never shuffles; only
+    candidates cross the exchange.  Empty batches and queries with no
+    candidates emit nothing."""
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql import Window
+
+    def scan(batches):
+        for batch in batches:
+            if not len(batch):
+                continue
+            out_q, out_n, out_s = [], [], []
+            for qid, cand_ids, cand_scores in per_batch(batch):
+                order = np.lexsort((cand_ids, -cand_scores))[:k]
+                out_q.append(np.full(len(order), qid, dtype=np.int64))
+                out_n.append(cand_ids[order])
+                out_s.append(cand_scores[order])
+            if out_q:
+                yield pd.DataFrame(
+                    {
+                        id_col: np.concatenate(out_q),
+                        "neighbor_id": np.concatenate(out_n),
+                        score_col: np.concatenate(out_s),
+                    }
+                )
+
+    scored = v.mapInPandas(
+        scan, schema=f"{id_col} long, neighbor_id long, {score_col} double"
+    )
+    w = Window.partitionBy(id_col).orderBy(
+        F.col(score_col).desc(), F.col("neighbor_id")
+    )
+    return (
+        scored.select("*", F.row_number().over(w).alias("rn"))
+        .filter(F.col("rn") <= k)
+        .drop("rn")
+    )
+
+
+def _exact_topk_dims(
+    spark: SparkSession, sf_dir: str, dims: int | None = None
+) -> DataFrame:
+    """Exact cosine top-k over the FIRST ``dims`` dimensions (all of
+    them when None): the small query matrix (N/{QUERY_STRIDE}
+    unit-normalized rows) is broadcast and each Arrow batch of the
+    corpus scores every query with one BLAS ``block @ queriesᵀ``, then
+    :func:`_query_topk` keeps and merges the candidates."""
+    import numpy as np
+
+    v = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    qpdf = _query_pdf_cached(spark, sf_dir, v)
+    qids = qpdf["vec_id"].to_numpy(dtype="int64")
+    qm = np.stack(qpdf["embedding"].to_numpy()).astype("float64")[:, :dims]
+    qm /= np.linalg.norm(qm, axis=1, keepdims=True)
+    bc = spark.sparkContext.broadcast((qids, qm))
+
+    def per_batch(batch):
+        ids_q, queries = bc.value
+        nids = batch["vec_id"].to_numpy(dtype="int64")
+        e = np.stack(batch["embedding"].to_numpy()).astype("float64")
+        e = e[:, : queries.shape[1]]
+        e /= np.linalg.norm(e, axis=1, keepdims=True)
+        sims = np.round(e @ queries.T, 6)  # (batch, q)
+        for j, qid in enumerate(ids_q):
+            keep = nids != qid  # exclude self-match
+            yield qid, nids[keep], sims[keep, j]
+
+    return _query_topk(v, TOP_K, per_batch)
+
+
 @register(
     "similarity_topk",
     oracle=f"""
@@ -97,63 +189,13 @@ def similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Physical strategy — broadcast-query matrix scoring with per-batch
     partial top-k (same rewrite that took dedup_embedding from 68 s to
-    ~2 s): the small query matrix (N/{QUERY_STRIDE} unit-normalized
-    rows) is broadcast; each Arrow batch of the corpus computes one
-    BLAS ``block @ queriesᵀ`` and keeps only its local top-k per query
-    under the FINAL ordering (rounded score desc, neighbor_id asc) —
-    sound because every global top-k member is a top-k member of its
-    own batch.  The window then merges ≤ k·batches candidate rows per
-    query instead of N — the shuffle carries candidates, not scores.
-    No shuffle touches the corpus itself.
+    ~2 s): :func:`_exact_topk_dims` at full width.  Each Arrow batch of
+    the corpus computes one BLAS ``block @ queriesᵀ`` and keeps only its
+    local top-k per query; the window then merges ≤ k·batches candidate
+    rows per query instead of N — the shuffle carries candidates, not
+    scores.  No shuffle touches the corpus itself.
     """
-    import numpy as np
-    import pandas as pd
-
-    v = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    qpdf = _query_pdf_cached(spark, sf_dir, v)
-    qids = qpdf["vec_id"].to_numpy(dtype="int64")
-    qm = np.stack(qpdf["embedding"].to_numpy()).astype("float64")
-    qm /= np.linalg.norm(qm, axis=1, keepdims=True)
-    bc = spark.sparkContext.broadcast((qids, qm))
-    k = TOP_K
-
-    def score(batches):
-        ids_q, queries = bc.value
-        for batch in batches:
-            nids = batch["vec_id"].to_numpy(dtype="int64")
-            e = np.stack(batch["embedding"].to_numpy()).astype("float64")
-            e /= np.linalg.norm(e, axis=1, keepdims=True)
-            sims = np.round(e @ queries.T, 6)  # (batch, q)
-            out_q, out_n, out_s = [], [], []
-            for j, qid in enumerate(ids_q):
-                keep = nids != qid  # exclude self-match
-                cand_ids, cand_sims = nids[keep], sims[keep, j]
-                # exact partial top-k under (sim desc, neighbor_id asc)
-                order = np.lexsort((cand_ids, -cand_sims))[:k]
-                out_q.append(np.full(len(order), qid))
-                out_n.append(cand_ids[order])
-                out_s.append(cand_sims[order])
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "neighbor_id": np.concatenate(out_n),
-                    "cos_sim": np.concatenate(out_s),
-                }
-            )
-
-    scored = v.mapInPandas(
-        score, schema="query_id long, neighbor_id long, cos_sim double"
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.select("*", F.row_number().over(w).alias("rn"))
-        .filter(F.col("rn") <= TOP_K)
-        .drop("rn")
-    )
+    return _exact_topk_dims(spark, sf_dir)
 
 
 #: Seed for the ANN-LSH hyperplanes (distinct from the dedup module's).
@@ -365,49 +407,19 @@ def similarity_ivf_neighbors(
     order_sign = 1.0 if probe_farthest else -1.0
     probes = np.argsort(order_sign * qsims, kind="stable", axis=1)[:, :IVF_NPROBE]
     bc = spark.sparkContext.broadcast((qids, qm, probes, centn))
-    k = TOP_K
 
-    def score(batches):
+    def per_batch(batch):
         ids_q, queries, probe_cells, cents = bc.value
-        for batch in batches:
-            nids = batch["vec_id"].to_numpy(dtype="int64")
-            e = np.stack(batch["embedding"].to_numpy()).astype("float64")
-            en = e / np.linalg.norm(e, axis=1, keepdims=True)
-            cells = np.argmax(en @ cents.T, axis=1)
-            sims = np.round(en @ queries.T, 6)
-            out_q, out_n, out_s = [], [], []
-            for j, qid in enumerate(ids_q):
-                keep = np.isin(cells, probe_cells[j]) & (nids != qid)
-                if not keep.any():
-                    continue
-                cand_ids, cand_sims = nids[keep], sims[keep, j]
-                order = np.lexsort((cand_ids, -cand_sims))[:k]
-                out_q.append(np.full(len(order), qid))
-                out_n.append(cand_ids[order])
-                out_s.append(cand_sims[order])
-            if not out_q:
-                continue
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "neighbor_id": np.concatenate(out_n),
-                    "cos_sim": np.concatenate(out_s),
-                }
-            )
+        nids = batch["vec_id"].to_numpy(dtype="int64")
+        e = np.stack(batch["embedding"].to_numpy()).astype("float64")
+        en = e / np.linalg.norm(e, axis=1, keepdims=True)
+        cells = np.argmax(en @ cents.T, axis=1)
+        sims = np.round(en @ queries.T, 6)
+        for j, qid in enumerate(ids_q):
+            keep = np.isin(cells, probe_cells[j]) & (nids != qid)
+            yield qid, nids[keep], sims[keep, j]
 
-    scored = v.mapInPandas(
-        score, schema="query_id long, neighbor_id long, cos_sim double"
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    topk = (
-        scored.select("*", F.row_number().over(w).alias("rn"))
-        .filter(F.col("rn") <= TOP_K)
-        .drop("rn")
-    )
+    topk = _query_topk(v, TOP_K, per_batch)
     if not with_membership:
         return topk
 
@@ -489,7 +501,6 @@ def similarity_ann_lsh_neighbors(
     (bucket granularity) and LSH_MULTIPROBE (probe fan-out).
     """
     import numpy as np
-    import pandas as pd
 
     v = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     # Query side is driver-resident (r17, the IVF/_knn_query_probes
@@ -538,68 +549,24 @@ def similarity_ann_lsh_neighbors(
     bc = cached(
         spark, ("lsh_query_probes", sf_dir, query_seed_offset), build_probes
     )
-    k = TOP_K
 
-    def score(batches):
-        empty = pd.DataFrame(
-            {
-                "query_id": np.empty(0, dtype=np.int64),
-                "neighbor_id": np.empty(0, dtype=np.int64),
-                "cos_sim": np.empty(0, dtype=np.float64),
-            }
-        )
-        planes = None
+    def per_batch(b):
         ids_q, queries, probes = bc.value
-        for b in batches:
-            if not len(b):
-                yield empty
-                continue
-            ids = b["vec_id"].to_numpy(dtype="int64")
-            e = np.stack(b["embedding"].to_numpy()).astype("float64")
-            if planes is None:
-                # corpus planes are ALWAYS the canonical seed — only
-                # the query side shifts in broken mode, as before;
-                # same construction point as the driver-side probes
-                planes = _lsh_plane_matrix(LSH_PLANES, e.shape[1])
-            sigs = (((e @ planes.T) > 0) * powers).sum(axis=1)
-            en = e / np.linalg.norm(e, axis=1, keepdims=True)
-            out_q, out_n, out_s = [], [], []
-            for j, qid in enumerate(ids_q):
-                keep = np.isin(sigs, probes[j]) & (ids != qid)
-                if not keep.any():
-                    continue
-                sims = np.round(
-                    np.einsum("ij,j->i", en[keep], queries[j]), 6
-                )
-                cand_ids = ids[keep]
-                order = np.lexsort((cand_ids, -sims))[:k]
-                out_q.append(np.full(len(order), qid, dtype=np.int64))
-                out_n.append(cand_ids[order])
-                out_s.append(sims[order])
-            if not out_q:
-                yield empty
-                continue
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "neighbor_id": np.concatenate(out_n),
-                    "cos_sim": np.concatenate(out_s),
-                }
-            )
+        ids = b["vec_id"].to_numpy(dtype="int64")
+        e = np.stack(b["embedding"].to_numpy()).astype("float64")
+        # corpus planes are ALWAYS the canonical seed — only the query
+        # side shifts in broken mode; same construction point as the
+        # driver-side probes
+        planes = _lsh_plane_matrix(LSH_PLANES, e.shape[1])
+        sigs = (((e @ planes.T) > 0) * powers).sum(axis=1)
+        en = e / np.linalg.norm(e, axis=1, keepdims=True)
+        for j, qid in enumerate(ids_q):
+            keep = np.isin(sigs, probes[j]) & (ids != qid)
+            sims = np.round(np.einsum("ij,j->i", en[keep], queries[j]), 6)
+            yield qid, ids[keep], sims
 
-    scored = v.mapInPandas(
-        score, schema="query_id long, neighbor_id long, cos_sim double"
-    )
-    from pyspark.sql import Window
+    return _query_topk(v, TOP_K, per_batch)
 
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.select("*", F.row_number().over(w).alias("rn"))
-        .filter(F.col("rn") <= TOP_K)
-        .drop("rn")
-    )
 
 #: DuckDB twin of the certificates' exact side — the SAME scored/topk
 #: construction as similarity_topk's oracle, aggregated to the k-th
@@ -740,8 +707,8 @@ def _ann_with_membership(spark, sf_dir, kind, neighbors, resolve):
 
 def _exact_topk_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The materialized brute-force exact top-k relation, shared by
-    all three ANN completeness certificates (LSH / IVF / PQ): each
-    certificate needs the SAME exact-kth relation, so it is scored
+    all four ANN completeness certificates (LSH / IVF / PQ / IVF-PQ):
+    each certificate needs the SAME exact-kth relation, so it is scored
     once per session and served from the model cache (k·queries tiny
     rows persisted; released by ``registry.clear_model_cache``, cold
     build priced in bench cold_sec, persisted/reloaded by models.py
@@ -1113,49 +1080,97 @@ def _pq_adc(codes, lut_q):
     return s
 
 
-def similarity_pq_neighbors(
+def _pq_batch(b, books, cents):
+    """``(ids, codes, cells)`` of one Arrow batch: the unit-normalized
+    rows' PQ codes and, when an IVF quantizer ``cents`` is given, each
+    row's coarse cell (None without one)."""
+    import numpy as np
+
+    nids = b["vec_id"].to_numpy(dtype="int64")
+    e = np.stack(b["embedding"].to_numpy()).astype("float64")
+    en = e / np.linalg.norm(e, axis=1, keepdims=True)
+    cells = None if cents is None else np.argmax(en @ cents.T, axis=1)
+    return nids, _pq_encode(en, books), cells
+
+
+def _pq_scanned(nids, cells, ids_q, probes, j):
+    """Rows the PQ scan scores for query ``j``: every row but the query
+    itself, restricted to the query's probed cells under IVF routing
+    (``cells`` not None)."""
+    import numpy as np
+
+    keep = nids != ids_q[j]
+    if cells is not None:
+        keep &= np.isin(cells, probes[j])
+    return keep
+
+
+def _pq_lut(q, books):
+    """One query's canonical (M, K) ADC table, q_m · books[m, c]."""
+    import numpy as np
+
+    dsub = books.shape[2]
+    return np.stack(
+        [q[m * dsub : (m + 1) * dsub] @ books[m].T for m in range(PQ_M)]
+    )
+
+
+def _pq_neighbors(
     spark: SparkSession,
     sf_dir: str,
+    ivf: bool,
     with_membership: bool = False,
-    exact: DataFrame | None = None,
     corrupt_lut: bool = False,
 ):
-    """ANN top-k via product quantization + asymmetric distance.
+    """ANN top-k via product quantization + asymmetric distance, with
+    or without IVF cell routing.  PQ-Flat (``ivf=False``) is IVF-PQ
+    with every cell probed: it neither trains nor loads the IVF
+    quantizer.
 
     1. TRAIN: per-subspace codebooks (:func:`_pq_codebooks`) — the
        index stores {PQ_M} single-byte codes per vector instead of the
        full float vector (8 B vs 512 B at dim 64: the memory story
-       IVF-Flat lacks at 100 TB).
+       IVF-Flat lacks at 100 TB).  Under IVF routing the coarse
+       quantizer (:func:`_ivf_centroids`, shared with similarity_ivf)
+       sends each query to its {IVF_NPROBE} nearest cells.
     2. SCAN (one distributed pass): queries' ADC lookup tables
        (Q × M × K doubles) are broadcast; each Arrow batch encodes its
-       rows once, scores all queries by table lookups (no float
-       vector math per candidate), and keeps its local top-{PQ_REFINE}
-       per query under (adc desc, id asc) — sound for the global
-       top-{PQ_REFINE} because the order is total.
-    3. REFINE: the ≤ {PQ_REFINE}·Q global candidates (window merge)
-       are re-scored EXACTLY against the broadcast query matrix
-       (corpus joined to the broadcast candidate list — candidate-
-       bounded, never a corpus shuffle) and the final top-{TOP_K} per
-       query is emitted with exact rounded cosine.
+       rows once, scores every query's scanned rows (probed-cell rows
+       under IVF routing) by table lookups — no float vector math per
+       candidate — and :func:`_query_topk` keeps the global
+       top-{PQ_REFINE} per query under (adc desc, id asc).
+    3. REFINE: the ≤ {PQ_REFINE}·Q global candidates are re-scored
+       EXACTLY against the broadcast query matrix (corpus joined to the
+       broadcast candidate list — candidate-bounded, never a corpus
+       shuffle) and the final top-{TOP_K} per query is emitted with
+       exact rounded cosine.
 
     ``corrupt_lut=True`` is the deliberate BROKEN mode for the
     certificate test: negated lookup tables rank the WORST candidates
     first, so probed exact members drop out and ann_complete_ok must
-    falsify.  ``with_membership`` returns the canonical (query,
-    member) → should_find relation: member's ADC rank < {PQ_REFINE}
-    under the UNCORRUPTED tables — computed by one candidate-bounded
-    member pass plus one corpus count pass (predecessor counting under
-    the same total order the scan uses).
+    falsify.  ``with_membership`` also returns the canonical (query,
+    member) → should_find builder (:func:`_pq_membership`).
     """
     import numpy as np
     import pandas as pd
+    from pyspark.sql import Window
 
     v = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    probes = centn = None
+    if ivf:
+        cent = _ivf_centroids(spark, sf_dir)
+        centn = cent / np.maximum(
+            np.linalg.norm(cent, axis=1, keepdims=True), 1e-12
+        )
     books = _pq_codebooks(spark, sf_dir)
     qpdf = _query_pdf_cached(spark, sf_dir, v)
     qids = qpdf["vec_id"].to_numpy(dtype="int64")
     qm = np.stack(qpdf["embedding"].to_numpy()).astype("float64")
     qm /= np.linalg.norm(qm, axis=1, keepdims=True)
+    if ivf:
+        probes = np.argsort(-(qm @ centn.T), kind="stable", axis=1)[
+            :, :IVF_NPROBE
+        ]
     dsub = books.shape[2]
     # ADC lookup tables: lut[q, m, c] = q_m · books[m, c]
     lut = np.stack(
@@ -1163,55 +1178,27 @@ def similarity_pq_neighbors(
         axis=1,
     )  # (Q, M, K)
     scan_lut = -lut if corrupt_lut else lut
-    bc = spark.sparkContext.broadcast((qids, qm, books, scan_lut))
-    r_keep = PQ_REFINE
-
-    def scan(batches):
-        ids_q, _, bks, tables = bc.value
-        for b in batches:
-            nids = b["vec_id"].to_numpy(dtype="int64")
-            e = np.stack(b["embedding"].to_numpy()).astype("float64")
-            en = e / np.linalg.norm(e, axis=1, keepdims=True)
-            codes = _pq_encode(en, bks)
-            out_q, out_n, out_s = [], [], []
-            for j, qid in enumerate(ids_q):
-                adc = _pq_adc(codes, tables[j])
-                keep = nids != qid
-                cand_ids, cand_adc = nids[keep], adc[keep]
-                order = np.lexsort((cand_ids, -cand_adc))[:r_keep]
-                out_q.append(np.full(len(order), qid))
-                out_n.append(cand_ids[order])
-                out_s.append(cand_adc[order])
-            if not out_q:
-                continue
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "neighbor_id": np.concatenate(out_n),
-                    "adc": np.concatenate(out_s),
-                }
-            )
-
-    cands = v.mapInPandas(
-        scan, schema="query_id long, neighbor_id long, adc double"
+    bc = spark.sparkContext.broadcast(
+        (qids, qm, books, scan_lut, probes, centn)
     )
-    from pyspark.sql import Window
 
-    w_adc = Window.partitionBy("query_id").orderBy(
-        F.col("adc").desc(), F.col("neighbor_id")
-    )
-    global_cands = (
-        cands.select("*", F.row_number().over(w_adc).alias("rn"))
-        .filter(F.col("rn") <= r_keep)
-        .select("query_id", "neighbor_id")
-    )
+    def per_batch(b):
+        ids_q, _, bks, tables, probe_cells, cents = bc.value
+        nids, codes, cells = _pq_batch(b, bks, cents)
+        for j, qid in enumerate(ids_q):
+            keep = _pq_scanned(nids, cells, ids_q, probe_cells, j)
+            yield qid, nids[keep], _pq_adc(codes[keep], tables[j])
+
+    global_cands = _query_topk(
+        v, PQ_REFINE, per_batch, score_col="adc"
+    ).select("query_id", "neighbor_id")
     # exact refine: corpus rows joined to the BROADCAST candidate list
     refine_src = v.withColumnRenamed("vec_id", "neighbor_id").join(
         F.broadcast(global_cands), "neighbor_id"
     )
 
     def refine(batches):
-        ids_q, queries, _, _ = bc.value
+        ids_q, queries = bc.value[:2]
         qrow = {int(q): i for i, q in enumerate(ids_q)}
         for b in batches:
             if not len(b):
@@ -1250,14 +1237,51 @@ def similarity_pq_neighbors(
     return topk, membership
 
 
+def similarity_pq_neighbors(
+    spark: SparkSession,
+    sf_dir: str,
+    with_membership: bool = False,
+    corrupt_lut: bool = False,
+):
+    """PQ-Flat ANN top-k: :func:`_pq_neighbors` scanning every row's
+    codes."""
+    return _pq_neighbors(spark, sf_dir, False, with_membership, corrupt_lut)
+
+
+def similarity_ivf_pq_neighbors(
+    spark: SparkSession,
+    sf_dir: str,
+    with_membership: bool = False,
+    corrupt_lut: bool = False,
+):
+    """IVF-PQ approximate top-k — the production FAISS composition of
+    the two indexes this module already trains (:func:`_pq_neighbors`
+    with IVF routing): the coarse quantizer routes each query to its
+    :data:`IVF_NPROBE` nearest cells and PQ codes ADC-score ONLY the
+    rows living in probed cells.
+
+    Why this is THE 100 TB shape: IVF-Flat still touches full float
+    vectors for every probed row (512 B/vector at dim 64); PQ-Flat
+    scans every row's codes.  Composed, the scan touches 8 B codes
+    for ~nprobe/K of the corpus — both the memory story and the
+    selectivity story at once, exactly like a FAISS ``IVFx,PQy``
+    index."""
+    return _pq_neighbors(spark, sf_dir, True, with_membership, corrupt_lut)
+
+
 def _pq_membership(spark, sf_dir, bc, exact):
-    """(query_id, neighbor_id, should_find) for the PQ ANN: the exact
-    member's canonical ADC rank (predecessors under (adc desc, id
-    asc), self-query excluded) is below PQ_REFINE.  Two bounded
-    passes: member ADC thresholds from the candidate-filtered corpus
-    (O(k·queries) rows), then one corpus pass counting predecessors
-    per (query, member) — partial counts combine by SUM, so the rank
-    is exact and partition-independent."""
+    """(query_id, neighbor_id, should_find) for the PQ family: the
+    exact member's canonical ADC rank among the rows the scan scores
+    (predecessors under (adc desc, id asc), self-query excluded, and
+    only probed-cell rows under IVF routing) is below PQ_REFINE — and,
+    under IVF routing, the member's own cell is among the query's
+    canonical nearest :data:`IVF_NPROBE` cells.  Canonical
+    (UNcorrupted) tables throughout, so the broken-mode certificate
+    falsifies against this relation.  Two bounded passes: member ADC
+    thresholds from the candidate-filtered corpus (O(k·queries) rows),
+    then one corpus pass counting predecessors per (query, member) —
+    partial counts combine by SUM, so the rank is exact and
+    partition-independent."""
     import numpy as np
     import pandas as pd
 
@@ -1271,29 +1295,19 @@ def _pq_membership(spark, sf_dir, bc, exact):
     )
 
     def member_adc(batches):
-        ids_q, _, bks, _ = bc.value
-        # canonical (UNcorrupted) tables, rebuilt from the codebooks
+        ids_q, queries, bks, _, probe_cells, cents = bc.value
         for b in batches:
-            nids = b["vec_id"].to_numpy(dtype="int64")
-            e = np.stack(b["embedding"].to_numpy()).astype("float64")
-            en = e / np.linalg.norm(e, axis=1, keepdims=True)
-            codes = _pq_encode(en, bks)
-            _, queries, _, _ = bc.value
-            dsub = bks.shape[2]
+            nids, codes, cells = _pq_batch(b, bks, cents)
             out = []
             for j, qid in enumerate(ids_q):
-                lut_q = np.stack(
-                    [
-                        queries[j, m * dsub : (m + 1) * dsub] @ bks[m].T
-                        for m in range(PQ_M)
-                    ]
-                )
                 out.append(
                     pd.DataFrame(
                         {
                             "query_id": np.full(len(nids), qid),
                             "neighbor_id": nids,
-                            "madc": _pq_adc(codes, lut_q),
+                            "madc": _pq_adc(codes, _pq_lut(queries[j], bks)),
+                            "probed": cells is None
+                            or np.isin(cells, probe_cells[j]),
                         }
                     )
                 )
@@ -1301,7 +1315,8 @@ def _pq_membership(spark, sf_dir, bc, exact):
 
     madc = (
         memb_src.mapInPandas(
-            member_adc, schema="query_id long, neighbor_id long, madc double"
+            member_adc,
+            schema="query_id long, neighbor_id long, madc double, probed boolean",
         )
         # keep only the (query, member) pairs the certificate checks
         .join(F.broadcast(exact_ids), ["query_id", "neighbor_id"])
@@ -1316,34 +1331,24 @@ def _pq_membership(spark, sf_dir, bc, exact):
     )
 
     def count_predecessors(batches):
-        ids_q, queries, bks, _ = bc.value
+        ids_q, queries, bks, _, probe_cells, cents = bc.value
         tq, tn, tm = bc_thr.value
-        dsub = bks.shape[2]
         qrow = {int(q): j for j, q in enumerate(ids_q)}
         tj = np.array([qrow[int(q)] for q in tq], dtype=np.int64)
         # thresholds grouped by query: each query's ADC is computed
         # ONCE per batch, then compared against its ≤ k thresholds
-        by_query: dict[int, np.ndarray] = {}
+        by_query: dict[int, list] = {}
         for i, j in enumerate(tj):
             by_query.setdefault(int(j), []).append(i)
         for b in batches:
-            nids = b["vec_id"].to_numpy(dtype="int64")
-            e = np.stack(b["embedding"].to_numpy()).astype("float64")
-            en = e / np.linalg.norm(e, axis=1, keepdims=True)
-            codes = _pq_encode(en, bks)
+            nids, codes, cells = _pq_batch(b, bks, cents)
             cnts = np.empty(len(tq), dtype=np.int64)
             for j, idxs in by_query.items():
-                lut_q = np.stack(
-                    [
-                        queries[j, m * dsub : (m + 1) * dsub] @ bks[m].T
-                        for m in range(PQ_M)
-                    ]
-                )
-                adc = _pq_adc(codes, lut_q)
-                not_self = nids != ids_q[j]
+                adc = _pq_adc(codes, _pq_lut(queries[j], bks))
+                scanned = _pq_scanned(nids, cells, ids_q, probe_cells, j)
                 for i in idxs:
                     better = (adc > tm[i]) | ((adc == tm[i]) & (nids < tn[i]))
-                    better &= not_self & (nids != tn[i])
+                    better &= scanned & (nids != tn[i])
                     cnts[i] = int(better.sum())
             yield pd.DataFrame(
                 {"query_id": tq, "neighbor_id": tn, "cnt": cnts}
@@ -1357,10 +1362,16 @@ def _pq_membership(spark, sf_dir, bc, exact):
         .groupBy("query_id", "neighbor_id")
         .agg(F.sum("cnt").alias("rank"))
     )
-    return counts.select(
+    # explicit schema (ADVICE r13): inference raises on an empty pandas
+    # frame, and an empty exact/membership relation is a legal input.
+    probed_flag = spark.createDataFrame(
+        thresholds[["query_id", "neighbor_id", "probed"]],
+        schema="query_id long, neighbor_id long, probed boolean",
+    )
+    return counts.join(probed_flag, ["query_id", "neighbor_id"]).select(
         "query_id",
         "neighbor_id",
-        (F.col("rank") < PQ_REFINE).alias("should_find"),
+        (F.col("probed") & (F.col("rank") < PQ_REFINE)).alias("should_find"),
     )
 
 
@@ -1371,14 +1382,19 @@ def similarity_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     :func:`_ann_certificate` for what each column certifies.  The raw
     neighbor relation stays available as ``similarity_pq_neighbors``.
     """
+    return _pq_certificate(spark, sf_dir, ivf=False)
+
+
+def _pq_certificate(spark: SparkSession, sf_dir: str, ivf: bool) -> DataFrame:
+    """The PQ family's certificate (:func:`_pq_neighbors`, with or
+    without IVF routing).  PQ hands membership back as a lazy builder
+    over the exact relation — resolved once here and session-cached."""
     exact = _exact_topk_cached(spark, sf_dir)
-    # PQ hands membership back as a lazy builder over the exact
-    # relation — resolve it once here and session-cache the result
     ann, membership = _ann_with_membership(
         spark,
         sf_dir,
-        "pq",
-        lambda **kw: similarity_pq_neighbors(spark, sf_dir, exact=exact, **kw),
+        "ivf_pq" if ivf else "pq",
+        lambda **kw: _pq_neighbors(spark, sf_dir, ivf, **kw),
         lambda mem_raw: mem_raw(exact),
     )
     return _ann_certificate(spark, sf_dir, ann, membership, exact=exact)
@@ -1604,61 +1620,6 @@ LEFT JOIN t_topk t
   ON t.query_id = f.query_id AND t.neighbor_id = f.neighbor_id
 GROUP BY f.query_id
 """
-
-
-def _exact_topk_dims(spark: SparkSession, sf_dir: str, dims: int) -> DataFrame:
-    """Exact cosine top-k over the FIRST ``dims`` dimensions only —
-    same broadcast-query BLAS + per-batch partial top-k physical plan
-    as :func:`similarity_topk` (corpus never shuffles; the window
-    merges <= k·batches candidates per query)."""
-    import numpy as np
-    import pandas as pd
-
-    v = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    qpdf = _query_pdf_cached(spark, sf_dir, v)
-    qids = qpdf["vec_id"].to_numpy(dtype="int64")
-    qm = np.stack(qpdf["embedding"].to_numpy()).astype("float64")[:, :dims]
-    qm /= np.linalg.norm(qm, axis=1, keepdims=True)
-    bc = spark.sparkContext.broadcast((qids, qm))
-    k = TOP_K
-
-    def score(batches):
-        ids_q, queries = bc.value
-        d = queries.shape[1]
-        for batch in batches:
-            nids = batch["vec_id"].to_numpy(dtype="int64")
-            e = np.stack(batch["embedding"].to_numpy()).astype("float64")[:, :d]
-            e /= np.linalg.norm(e, axis=1, keepdims=True)
-            sims = np.round(e @ queries.T, 6)
-            out_q, out_n, out_s = [], [], []
-            for j, qid in enumerate(ids_q):
-                keep = nids != qid
-                cand_ids, cand_sims = nids[keep], sims[keep, j]
-                order = np.lexsort((cand_ids, -cand_sims))[:k]
-                out_q.append(np.full(len(order), qid))
-                out_n.append(cand_ids[order])
-                out_s.append(cand_sims[order])
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "neighbor_id": np.concatenate(out_n),
-                    "cos_sim": np.concatenate(out_s),
-                }
-            )
-
-    scored = v.mapInPandas(
-        score, schema="query_id long, neighbor_id long, cos_sim double"
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.select("*", F.row_number().over(w).alias("rn"))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-    )
 
 
 @register("embedding_matryoshka", oracle=_MRL_ORACLE)
@@ -2584,7 +2545,6 @@ def _knn_exact_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _score_knn_exact_sampled(spark: SparkSession, sf_dir: str) -> tuple:
     """The uncached :func:`_knn_exact_sampled` build."""
     import numpy as np
-    import pandas as pd
 
     v = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     qpdf = (
@@ -2597,46 +2557,19 @@ def _score_knn_exact_sampled(spark: SparkSession, sf_dir: str) -> tuple:
     qm = np.stack(qpdf["embedding"].to_numpy()).astype("float64")
     qm /= np.maximum(np.linalg.norm(qm, axis=1, keepdims=True), 1e-12)
     bc = spark.sparkContext.broadcast((qids, qm))
-    k = KNN_GRAPH_K
 
-    def score(batches):
+    def per_batch(batch):
         ids_q, queries = bc.value
-        for batch in batches:
-            nids = batch["vec_id"].to_numpy(dtype="int64")
-            e = np.stack(batch["embedding"].to_numpy()).astype("float64")
-            e /= np.maximum(np.linalg.norm(e, axis=1, keepdims=True), 1e-12)
-            sims = np.round(e @ queries.T, 6)  # (batch, q)
-            out_v, out_n, out_s = [], [], []
-            for j, qid in enumerate(ids_q):
-                keep = nids != qid
-                cand_ids, cand_sims = nids[keep], sims[keep, j]
-                order = np.lexsort((cand_ids, -cand_sims))[:k]
-                out_v.append(np.full(len(order), qid))
-                out_n.append(cand_ids[order])
-                out_s.append(cand_sims[order])
-            if not out_v:
-                continue
-            yield pd.DataFrame(
-                {
-                    "vec_id": np.concatenate(out_v),
-                    "neighbor_id": np.concatenate(out_n),
-                    "cos_sim": np.concatenate(out_s),
-                }
-            )
+        nids = batch["vec_id"].to_numpy(dtype="int64")
+        e = np.stack(batch["embedding"].to_numpy()).astype("float64")
+        e /= np.maximum(np.linalg.norm(e, axis=1, keepdims=True), 1e-12)
+        sims = np.round(e @ queries.T, 6)  # (batch, q)
+        for j, qid in enumerate(ids_q):
+            keep = nids != qid
+            yield qid, nids[keep], sims[keep, j]
 
-    scored = v.mapInPandas(
-        score, schema="vec_id long, neighbor_id long, cos_sim double"
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("vec_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
     exact = spark.createDataFrame(
-        scored.select("*", F.row_number().over(w).alias("rn"))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-        .toPandas(),
+        _query_topk(v, KNN_GRAPH_K, per_batch, id_col="vec_id").toPandas(),
         schema="vec_id long, neighbor_id long, cos_sim double",
     )
     return (exact,)
@@ -3081,266 +3014,6 @@ def embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def similarity_ivf_pq_neighbors(
-    spark: SparkSession,
-    sf_dir: str,
-    with_membership: bool = False,
-    corrupt_lut: bool = False,
-):
-    """IVF-PQ approximate top-k — the production FAISS composition of
-    the two indexes this module already trains: the IVF coarse
-    quantizer (:func:`_ivf_centroids`, shared session model) routes
-    each query to its :data:`IVF_NPROBE` nearest cells, PQ codes
-    (:func:`_pq_codebooks`, shared session model) ADC-score ONLY the
-    rows living in probed cells, the global top-:data:`PQ_REFINE` ADC
-    candidates per query re-score exactly, and the final
-    top-:data:`TOP_K` emits exact rounded cosine.
-
-    Why this is THE 100 TB shape: IVF-Flat still touches full float
-    vectors for every probed row (512 B/vector at dim 64); PQ-Flat
-    scans every row's codes.  Composed, the scan touches 8 B codes
-    for ~nprobe/K of the corpus — both the memory story and the
-    selectivity story at once, exactly like a FAISS ``IVFx,PQy``
-    index.  One distributed pass, corpus never shuffled, the only
-    driver rows are the Lloyd/codebook partials and the bounded query
-    set.
-
-    ``corrupt_lut=True`` is the deliberate BROKEN mode for the
-    certificate falsification test (negated ADC tables, as
-    similarity_pq).  ``with_membership`` returns the canonical
-    (query, exact-member) → should_find relation: member's cell is
-    probed AND its ADC rank among probed-cell candidates is below
-    {PQ_REFINE} under uncorrupted tables — both conditions
-    deterministic, so the completeness flag falsifies mechanically.
-    """
-    import numpy as np
-    import pandas as pd
-
-    v = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    cent = _ivf_centroids(spark, sf_dir)
-    centn = cent / np.maximum(np.linalg.norm(cent, axis=1, keepdims=True), 1e-12)
-    books = _pq_codebooks(spark, sf_dir)
-    qpdf = _query_pdf_cached(spark, sf_dir, v)
-    qids = qpdf["vec_id"].to_numpy(dtype="int64")
-    qm = np.stack(qpdf["embedding"].to_numpy()).astype("float64")
-    qm /= np.linalg.norm(qm, axis=1, keepdims=True)
-    probes = np.argsort(-(qm @ centn.T), kind="stable", axis=1)[:, :IVF_NPROBE]
-    dsub = books.shape[2]
-    lut = np.stack(
-        [qm[:, m * dsub : (m + 1) * dsub] @ books[m].T for m in range(PQ_M)],
-        axis=1,
-    )  # (Q, M, K)
-    scan_lut = -lut if corrupt_lut else lut
-    bc = spark.sparkContext.broadcast((qids, qm, books, scan_lut, probes, centn))
-    r_keep = PQ_REFINE
-
-    def scan(batches):
-        ids_q, _, bks, tables, probe_cells, cents = bc.value
-        for b in batches:
-            nids = b["vec_id"].to_numpy(dtype="int64")
-            e = np.stack(b["embedding"].to_numpy()).astype("float64")
-            en = e / np.linalg.norm(e, axis=1, keepdims=True)
-            cells = np.argmax(en @ cents.T, axis=1)
-            codes = _pq_encode(en, bks)
-            out_q, out_n, out_s = [], [], []
-            for j, qid in enumerate(ids_q):
-                keep = np.isin(cells, probe_cells[j]) & (nids != qid)
-                if not keep.any():
-                    continue
-                adc = _pq_adc(codes[keep], tables[j])
-                cand_ids = nids[keep]
-                order = np.lexsort((cand_ids, -adc))[:r_keep]
-                out_q.append(np.full(len(order), qid))
-                out_n.append(cand_ids[order])
-                out_s.append(adc[order])
-            if not out_q:
-                continue
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "neighbor_id": np.concatenate(out_n),
-                    "adc": np.concatenate(out_s),
-                }
-            )
-
-    cands = v.mapInPandas(
-        scan, schema="query_id long, neighbor_id long, adc double"
-    )
-    from pyspark.sql import Window
-
-    w_adc = Window.partitionBy("query_id").orderBy(
-        F.col("adc").desc(), F.col("neighbor_id")
-    )
-    global_cands = (
-        cands.select("*", F.row_number().over(w_adc).alias("rn"))
-        .filter(F.col("rn") <= r_keep)
-        .select("query_id", "neighbor_id")
-    )
-    refine_src = v.withColumnRenamed("vec_id", "neighbor_id").join(
-        F.broadcast(global_cands), "neighbor_id"
-    )
-
-    def refine(batches):
-        ids_q, queries, _, _, _, _ = bc.value
-        qrow = {int(q): i for i, q in enumerate(ids_q)}
-        for b in batches:
-            if not len(b):
-                continue
-            e = np.stack(b["embedding"].to_numpy()).astype("float64")
-            en = e / np.linalg.norm(e, axis=1, keepdims=True)
-            qi = np.array(
-                [qrow[int(q)] for q in b["query_id"].to_numpy()], dtype=np.int64
-            )
-            sims = np.round(np.einsum("ij,ij->i", queries[qi], en), 6)
-            yield pd.DataFrame(
-                {
-                    "query_id": b["query_id"].to_numpy().astype("int64"),
-                    "neighbor_id": b["neighbor_id"].to_numpy().astype("int64"),
-                    "cos_sim": sims,
-                }
-            )
-
-    refined = refine_src.mapInPandas(
-        refine, schema="query_id long, neighbor_id long, cos_sim double"
-    )
-    w_cos = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    topk = (
-        refined.select("*", F.row_number().over(w_cos).alias("rn"))
-        .filter(F.col("rn") <= TOP_K)
-        .drop("rn")
-    )
-    if not with_membership:
-        return topk
-
-    def membership(exact_df):
-        return _ivf_pq_membership(spark, sf_dir, bc, exact_df)
-
-    return topk, membership
-
-
-def _ivf_pq_membership(spark, sf_dir, bc, exact):
-    """(query_id, neighbor_id, should_find) for the IVF-PQ ANN:
-    the exact member's centroid cell is among the query's canonical
-    nearest :data:`IVF_NPROBE` cells AND its canonical ADC rank among
-    probed-cell candidates (predecessors under (adc desc, id asc),
-    self-query excluded) is below :data:`PQ_REFINE`.  Same two
-    bounded passes as :func:`_pq_membership`, with the cell filter
-    applied to both the member and its predecessor candidates —
-    canonical (UNcorrupted) tables throughout, so the broken-mode
-    certificate falsifies against this relation."""
-    import numpy as np
-    import pandas as pd
-
-    v = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    exact_ids = exact.select("query_id", "neighbor_id")
-    memb_src = v.join(
-        F.broadcast(
-            exact_ids.select(F.col("neighbor_id").alias("vec_id")).distinct()
-        ),
-        "vec_id",
-    )
-
-    def member_adc(batches):
-        ids_q, queries, bks, _, probe_cells, cents = bc.value
-        dsub = bks.shape[2]
-        for b in batches:
-            nids = b["vec_id"].to_numpy(dtype="int64")
-            e = np.stack(b["embedding"].to_numpy()).astype("float64")
-            en = e / np.linalg.norm(e, axis=1, keepdims=True)
-            cells = np.argmax(en @ cents.T, axis=1)
-            codes = _pq_encode(en, bks)
-            out = []
-            for j, qid in enumerate(ids_q):
-                lut_q = np.stack(
-                    [
-                        queries[j, m * dsub : (m + 1) * dsub] @ bks[m].T
-                        for m in range(PQ_M)
-                    ]
-                )
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": np.full(len(nids), qid),
-                            "neighbor_id": nids,
-                            "madc": _pq_adc(codes, lut_q),
-                            "probed": np.isin(cells, probe_cells[j]),
-                        }
-                    )
-                )
-            yield pd.concat(out, ignore_index=True)
-
-    madc = (
-        memb_src.mapInPandas(
-            member_adc,
-            schema="query_id long, neighbor_id long, madc double, probed boolean",
-        )
-        .join(F.broadcast(exact_ids), ["query_id", "neighbor_id"])
-    )
-    thresholds = madc.toPandas()  # <= k·queries rows, bounded
-    bc_thr = spark.sparkContext.broadcast(
-        (
-            thresholds["query_id"].to_numpy("int64"),
-            thresholds["neighbor_id"].to_numpy("int64"),
-            thresholds["madc"].to_numpy("float64"),
-        )
-    )
-
-    def count_predecessors(batches):
-        ids_q, queries, bks, _, probe_cells, cents = bc.value
-        tq, tn, tm = bc_thr.value
-        dsub = bks.shape[2]
-        qrow = {int(q): j for j, q in enumerate(ids_q)}
-        tj = np.array([qrow[int(q)] for q in tq], dtype=np.int64)
-        by_query: dict[int, list] = {}
-        for i, j in enumerate(tj):
-            by_query.setdefault(int(j), []).append(i)
-        for b in batches:
-            nids = b["vec_id"].to_numpy(dtype="int64")
-            e = np.stack(b["embedding"].to_numpy()).astype("float64")
-            en = e / np.linalg.norm(e, axis=1, keepdims=True)
-            cells = np.argmax(en @ cents.T, axis=1)
-            codes = _pq_encode(en, bks)
-            cnts = np.empty(len(tq), dtype=np.int64)
-            for j, idxs in by_query.items():
-                lut_q = np.stack(
-                    [
-                        queries[j, m * dsub : (m + 1) * dsub] @ bks[m].T
-                        for m in range(PQ_M)
-                    ]
-                )
-                adc = _pq_adc(codes, lut_q)
-                in_probe = np.isin(cells, probe_cells[j]) & (nids != ids_q[j])
-                for i in idxs:
-                    better = (adc > tm[i]) | ((adc == tm[i]) & (nids < tn[i]))
-                    better &= in_probe & (nids != tn[i])
-                    cnts[i] = int(better.sum())
-            yield pd.DataFrame(
-                {"query_id": tq, "neighbor_id": tn, "cnt": cnts}
-            )
-
-    counts = (
-        v.mapInPandas(
-            count_predecessors,
-            schema="query_id long, neighbor_id long, cnt long",
-        )
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.sum("cnt").alias("rank"))
-    )
-    # explicit schema (ADVICE r13): inference raises on an empty pandas
-    # frame, and an empty exact/membership relation is a legal input.
-    probed_flag = spark.createDataFrame(
-        thresholds[["query_id", "neighbor_id", "probed"]],
-        schema="query_id long, neighbor_id long, probed boolean",
-    )
-    return counts.join(probed_flag, ["query_id", "neighbor_id"]).select(
-        "query_id",
-        "neighbor_id",
-        (F.col("probed") & (F.col("rank") < PQ_REFINE)).alias("should_find"),
-    )
-
-
 @register("similarity_ivf_pq", oracle=_ANN_CERT_SQL)
 def similarity_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Completeness certificate for
@@ -3348,12 +3021,4 @@ def similarity_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     IVF-PQ index: coarse-cell routing + in-cell ADC scan + exact
     refine) — see :func:`_ann_certificate`.  The raw neighbor
     relation stays available as ``similarity_ivf_pq_neighbors``."""
-    exact = _exact_topk_cached(spark, sf_dir)
-    ann, membership = _ann_with_membership(
-        spark,
-        sf_dir,
-        "ivf_pq",
-        lambda **kw: similarity_ivf_pq_neighbors(spark, sf_dir, **kw),
-        lambda mem_raw: mem_raw(exact),
-    )
-    return _ann_certificate(spark, sf_dir, ann, membership, exact=exact)
+    return _pq_certificate(spark, sf_dir, ivf=True)

@@ -11,6 +11,7 @@ unpickle the client factory by module reference.
 from __future__ import annotations
 
 import datetime as dt
+import functools
 from bisect import bisect_left, bisect_right
 
 
@@ -38,9 +39,8 @@ class FakeS3Client:
     """Minimal ListObjectsV2 over a static {bucket: {key: (size, mtime)}}."""
 
     def __init__(self, buckets: dict[str, dict[str, tuple[int, dt.datetime]]]):
-        self._buckets = {
-            b: dict(sorted(objs.items())) for b, objs in buckets.items()
-        }
+        self._buckets = {b: dict(objs) for b, objs in buckets.items()}
+        self._keys = {b: sorted(objs) for b, objs in self._buckets.items()}
 
     def list_objects_v2(self, **kw):
         bucket = kw["Bucket"]
@@ -54,7 +54,7 @@ class FakeS3Client:
         start_after = "" if token else kw.get("StartAfter", "")
 
         objs = self._buckets[bucket]
-        keys = list(objs.keys())
+        keys = self._keys[bucket]
         lo = bisect_left(keys, max(prefix, token))
         if start_after:
             lo = max(lo, bisect_right(keys, start_after))
@@ -102,16 +102,14 @@ class FakeS3Client:
         return resp
 
 
-import functools
-
-
 @functools.lru_cache(maxsize=4)
 def synth_bucket(n: int = 2500) -> dict[str, dict[str, tuple[int, dt.datetime]]]:
-    """Deterministic fake bucket: n keys across nested prefixes plus
-    root-level objects — exercises sharding, pagination, and delimiter
-    grouping.  Cached so reused executor workers (and repeated test
-    clients) don't rebuild large buckets per task — clients never
-    mutate it (FakeS3Client copies on construction)."""
+    """Deterministic fake bucket ``{"fake-bucket": {key: (size,
+    mtime)}}``: n keys under ``dir<i%7>/sub<i%13>/`` plus 20 root-level
+    objects — exercises sharding, pagination, and delimiter grouping.
+    Cached per process, so every caller shares ONE dict and must not
+    mutate it; each FakeS3Client copies it and sorts its keys once, on
+    construction."""
     epoch = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
     objs: dict[str, tuple[int, dt.datetime]] = {}
     for i in range(n):
@@ -135,26 +133,3 @@ def custom_client_factory(buckets):
     """Picklable factory over an arbitrary bucket dict (tests with
     adversarial keys — e.g. astral-plane code points)."""
     return functools.partial(FakeS3Client, buckets)
-
-
-class LatentFakeS3Client(FakeS3Client):
-    """Fake client with a simulated per-request round trip — for
-    benchmarking listing strategies against realistic S3 RTTs."""
-
-    def __init__(self, buckets, rtt_ms: float):
-        super().__init__(buckets)
-        self._rtt_s = rtt_ms / 1000.0
-
-    def list_objects_v2(self, **kw):
-        import time
-
-        time.sleep(self._rtt_s)
-        return super().list_objects_v2(**kw)
-
-
-@functools.lru_cache(maxsize=8)
-def shared_latent_client(n: int = 2500, rtt_ms: float = 0.0) -> LatentFakeS3Client:
-    """One client per (n, rtt) per PROCESS: reused executor workers get
-    a cache hit instead of re-sorting an n-key bucket per task.  Safe
-    because clients are read-only after construction."""
-    return LatentFakeS3Client(synth_bucket(n), rtt_ms)

@@ -120,14 +120,41 @@ def _retry(fn, attempts: int = 3, base_ms: int = 100):
             time.sleep(delay)
 
 
+def _pages(client, **request) -> Iterator[dict]:
+    """Every ListObjectsV2 response page of one listing, following
+    continuation tokens (``StartAfter`` rides on the first request
+    only; the token already encodes the position).  A truncated page
+    must carry a new token: one with no token, or with the token it
+    was requested with, would restart or repeat the listing and
+    duplicate keys forever, so it raises instead."""
+    kw = request
+    while True:
+        resp = _retry(lambda: client.list_objects_v2(**kw))
+        yield resp
+        if not resp.get("IsTruncated"):
+            return
+        token = resp.get("NextContinuationToken")
+        if not token or token == kw.get("ContinuationToken"):
+            raise RuntimeError(
+                f"ListObjectsV2 {request.get('Prefix', '')!r}: truncated "
+                f"page with continuation token {token!r} does not advance"
+            )
+        kw = {k: v for k, v in request.items() if k != "StartAfter"}
+        kw["ContinuationToken"] = token
+
+
+#: BFS levels :func:`discover_shards` expands at most.
+DISCOVER_MAX_ROUNDS = 3
+#: driver threads listing one BFS level concurrently.
+DISCOVER_MAX_WORKERS = 16
+
+
 def discover_shards(
     client,
     bucket: str,
     prefix: str = "",
     delimiter: str = "/",
     target_shards: int = 64,
-    max_rounds: int = 3,
-    max_workers: int = 16,
 ) -> tuple[list[str], list[dict]]:
     """Split the keyspace under ``prefix`` into disjoint shard prefixes
     via delimiter listings (S3 CommonPrefixes), BFS-expanding until
@@ -147,37 +174,26 @@ def discover_shards(
     from concurrent.futures import ThreadPoolExecutor
 
     def list_level(p: str) -> tuple[list[str], list[dict]]:
-        token = None
         children: list[str] = []
         objs: list[dict] = []
-        while True:
-            kw = {
-                "Bucket": bucket,
-                "Prefix": p,
-                "Delimiter": delimiter,
-                "MaxKeys": PAGE_SIZE,
-            }
-            if token:
-                kw["ContinuationToken"] = token
-            resp = _retry(lambda: client.list_objects_v2(**kw))
+        for resp in _pages(
+            client, Bucket=bucket, Prefix=p, Delimiter=delimiter, MaxKeys=PAGE_SIZE
+        ):
             objs.extend(resp.get("Contents", []))
             children.extend(cp["Prefix"] for cp in resp.get("CommonPrefixes", []))
-            if not resp.get("IsTruncated"):
-                break
-            token = resp.get("NextContinuationToken")
         return children, objs
 
     shards: list[str] = []
     direct: list[dict] = []
     frontier = [prefix]
-    for _ in range(max_rounds):
+    for _ in range(DISCOVER_MAX_ROUNDS):
         if not frontier:
             break
         if len(frontier) == 1:
             results = [list_level(frontier[0])]
         else:
             with ThreadPoolExecutor(
-                max_workers=min(max_workers, len(frontier))
+                max_workers=min(DISCOVER_MAX_WORKERS, len(frontier))
             ) as pool:
                 # pool.map preserves frontier order → deterministic shards
                 results = list(pool.map(list_level, frontier))
@@ -271,22 +287,15 @@ def list_objects_df(
         client = client_factory()  # one client per task, never pickled
         for pdf in batches:
             for shard in pdf["shard"]:
-                token = None
-                while True:
-                    kw = {"Bucket": bucket, "Prefix": shard, "MaxKeys": page_size}
-                    if start_after and not token:
-                        kw["StartAfter"] = start_after
-                    if token:
-                        kw["ContinuationToken"] = token
-                    resp = _retry(lambda: client.list_objects_v2(**kw))
+                kw = {"Bucket": bucket, "Prefix": shard, "MaxKeys": page_size}
+                if start_after:
+                    kw["StartAfter"] = start_after
+                for resp in _pages(client, **kw):
                     contents = resp.get("Contents", [])
                     if contents:
                         if acc is not None:
                             acc.add(len(contents))
                         yield pd.DataFrame([_obj_to_row(o) for o in contents])
-                    if not resp.get("IsTruncated"):
-                        break
-                    token = resp.get("NextContinuationToken")
 
     parts = []
     if shards:

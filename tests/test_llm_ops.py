@@ -211,6 +211,46 @@ def test_similarity_topk_matches_numpy(spark, q):
         assert np.allclose(list(got.cos_sim), [c for _, c in expect], atol=1e-6)
 
 
+def test_query_topk_merges_ties_across_batches(spark):
+    """The shared similarity scan keeps (score desc, id asc) across
+    batch boundaries: scores repeat every 5 ids, so every query's k-th
+    place is a tie decided by ids that live in different partitions,
+    and one partition is empty.  The result must equal a NumPy
+    brute-force top-k under the same order."""
+    import numpy as np
+
+    from s3_manifest_spark.operators.similarity import _query_topk
+
+    # range partitions are contiguous: ids 48..59 (the last of 5) are
+    # filtered away, leaving that partition empty
+    v = spark.range(0, 60, numPartitions=5).filter("id < 48")
+    v = v.withColumnRenamed("id", "vec_id")
+    assert 0 in [len(p) for p in v.rdd.glom().collect()]
+    qids = np.array([0, 7, 30], dtype=np.int64)
+    k = 4
+
+    def scores(q, ids):
+        return ((ids * (q + 1)) % 5) / 5.0
+
+    def per_batch(batch):
+        ids = batch["vec_id"].to_numpy(dtype="int64")
+        for qid in qids:
+            keep = ids != qid
+            yield qid, ids[keep], scores(qid, ids[keep])
+
+    got = _query_topk(v, k, per_batch).toPandas()
+    assert list(got.columns) == ["query_id", "neighbor_id", "cos_sim"]
+    for qid in qids:
+        cand = [i for i in range(48) if i != qid]
+        expect = sorted(
+            zip(scores(qid, np.array(cand)), cand), key=lambda t: (-t[0], t[1])
+        )[:k]
+        rows = got[got.query_id == qid].sort_values(
+            ["cos_sim", "neighbor_id"], ascending=[False, True]
+        )
+        assert list(zip(rows.cos_sim, rows.neighbor_id)) == expect, qid
+
+
 def test_ann_lsh_candidates_are_correct(spark, q):
     """ANN reports a subset of the true pair space with correct cosine
     values (the fixture's vectors are near-orthogonal, so recall vs

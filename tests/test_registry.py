@@ -308,7 +308,7 @@ def test_cached_sort_meta_blocks_freed_by_clear(spark):
     """cached_sort_meta pins its sorted layout via localCheckpoint —
     whose blocks a DataFrame.unpersist() can NOT release (checkpointed
     RDDs never register in the CacheManager).  clear_model_cache must
-    free them through the Releasable RDD handle, or every bench cold
+    free them through the frame's LogicalRDD handle, or every bench cold
     run leaks a sorted copy of the relation into executor memory."""
     from pyspark.sql import functions as F
 

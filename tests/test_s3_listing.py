@@ -121,6 +121,50 @@ def test_retry_gives_up_then_succeeds(spark):
     assert len(shards) == 7 and len(direct) == 20
 
 
+class _StuckPaging(FakeS3Client):
+    """Real fake paging, except that every truncated page after the
+    first carries a bad continuation token: none at all, or the token
+    the page was requested with.  A listing that trusts either restarts
+    or repeats pages forever, so the client raises after MAX_CALLS
+    requests — the test then fails instead of hanging."""
+
+    MAX_CALLS = 50
+
+    def __init__(self, buckets, drop_token: bool):
+        super().__init__(buckets)
+        self.drop_token = drop_token
+        self.calls = 0
+
+    def list_objects_v2(self, **kw):
+        self.calls += 1
+        if self.calls > self.MAX_CALLS:
+            raise AssertionError("listing re-requested pages without end")
+        resp = super().list_objects_v2(**kw)
+        if resp["IsTruncated"] and "ContinuationToken" in kw:
+            if self.drop_token:
+                del resp["NextContinuationToken"]
+            else:
+                resp["NextContinuationToken"] = kw["ContinuationToken"]
+        return resp
+
+
+@pytest.mark.parametrize("drop_token", [True, False], ids=["no_token", "same_token"])
+def test_pagination_fails_loud_on_stuck_token(drop_token):
+    """A truncated page whose continuation token is missing or does
+    not advance must stop the listing with an error, not restart the
+    prefix and emit duplicate keys (5,000 keys over 1,000-key pages:
+    page 2 is the first stuck one)."""
+    import datetime as dt
+
+    t = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
+    client = _StuckPaging(
+        {"b": {f"k{i:05d}": (1, t) for i in range(5000)}}, drop_token
+    )
+    with pytest.raises(RuntimeError, match="does not advance"):
+        discover_shards(client, "b", "")
+    assert client.calls == 2
+
+
 def test_manifest_observed_stats_single_job(spark, tmp_path):
     """Observation collects count/bytes from the same job that writes
     the manifest - no second listing pass (A2, main.rs:284-289)."""
