@@ -2,14 +2,14 @@
 /root/reference/src/main.rs:176-183: an indicatif spinner redrawing
 elapsed time, object count, and obj/sec while the listing runs).
 
-Spark-native translation: the listing tasks add each page's row count
-to a Spark accumulator (task-side increments surface on the driver as
+Spark-native translation: the listing tasks add each Arrow batch's row
+count to a Spark accumulator (task-side increments surface on the driver as
 tasks complete — the same freshness indicatif gets from its atomic
 counter), and a driver daemon thread redraws one console line in place
 every ``interval`` seconds.
 
 Accuracy caveat: the accumulator is incremented inside a
-transformation (``mapInPandas``), so task retries and speculative
+transformation (``mapInArrow``), so task retries and speculative
 execution DOUBLE-COUNT their pages — fine for a spinner, wrong for a
 report.  The final line rendered on ``__exit__`` is therefore the
 task-reported count, not an authoritative total; callers that need

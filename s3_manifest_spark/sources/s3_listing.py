@@ -1,25 +1,29 @@
 """Parallel S3 object-listing connector (reference operators S1/S2/R1/
-C1/C2 — /root/reference/src/main.rs:86-118, 187-257, 294-319).
+C1/C2 — the reference's main.rs:86-118, 187-257, 294-319).
 
 The reference lists serially: one tokio task, 1000 keys per round trip
 (main.rs:187-257) — its throughput ceiling is ~page_size/RTT.  Here the
 keyspace is split into shards (delimiter-discovered common prefixes)
-and each Spark task pages through its own shard with an independent
-client, so listing throughput scales with executor count instead of
-being pinned to one connection.  This is the single biggest scale win
-over the reference (SURVEY.md §4, "serial listing" anti-pattern row).
+and the shards are paged concurrently: at most ``defaultParallelism``
+Spark tasks, each paging its slice of the shards on a small thread
+pool over one client, so listing throughput scales with requests in
+flight instead of being pinned to one connection — and a task's fixed
+Python cost is paid once per slice, not once per shard (SURVEY.md §4,
+"serial listing" anti-pattern row).
 
 Dataflow::
 
     discover_shards (driver, few API calls)
-        → spark.createDataFrame(shards)          # tiny
-        → repartition(n_shards)                  # one task per shard
-        → mapInPandas(page through shard)        # bounded memory: one
-                                                 #   page → one batch
+        → spark.createDataFrame(shards)          # tiny local relation:
+                                                 #   min(shards, defaultParallelism)
+                                                 #   contiguous slices, no shuffle
+        → mapInArrow(_list_shards per slice)     # MAX_IN_FLIGHT requests in
+                                                 #   flight; one page → one
+                                                 #   Arrow batch
         → listing DataFrame(key, size, last_modified, etag, storage_class)
         → derive_manifest(...)                   # manifest/core.py
 
-boto3 is import-gated (not in this container): pass any picklable
+boto3 is import-gated (an optional dependency): pass any picklable
 zero-arg ``client_factory`` returning an object with ``list_objects_v2``
 (see sources.fake_s3 for the test double with real S3 pagination
 semantics).
@@ -29,12 +33,15 @@ from __future__ import annotations
 
 import random
 import time
-from collections.abc import Callable, Iterator
+from collections.abc import Callable, Iterable, Iterator
+from concurrent.futures import ThreadPoolExecutor
+from itertools import chain, islice
 
-import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 #: Listing rows mirror rusoto_s3::Object's consumed fields (main.rs:209,
 #: 361-390) — nullable, RFC3339 string mtime, exactly what
@@ -126,10 +133,22 @@ def _pages(client, **request) -> Iterator[dict]:
     only; the token already encodes the position).  A truncated page
     must carry a new token: one with no token, or with the token it
     was requested with, would restart or repeat the listing and
-    duplicate keys forever, so it raises instead."""
+    duplicate keys forever, so it raises instead.  Keys must strictly
+    increase across the whole listing — a page that replays or
+    reorders keys raises before it is yielded, rather than emitting
+    duplicates."""
     kw = request
+    last = None
     while True:
         resp = _retry(lambda: client.list_objects_v2(**kw))
+        for obj in resp.get("Contents", ()):
+            key = obj["Key"]
+            if last is not None and key <= last:
+                raise RuntimeError(
+                    f"ListObjectsV2 {request.get('Prefix', '')!r}: key "
+                    f"{key!r} does not sort after {last!r}"
+                )
+            last = key
         yield resp
         if not resp.get("IsTruncated"):
             return
@@ -143,10 +162,42 @@ def _pages(client, **request) -> Iterator[dict]:
         kw["ContinuationToken"] = token
 
 
+#: ListObjectsV2 requests one pager keeps in flight: discovery's driver
+#: pool and each listing task's pool.
+MAX_IN_FLIGHT = 16
+
+
+def _list_shards(
+    client, prefixes: Iterable[str], **request
+) -> Iterator[tuple[str, dict]]:
+    """``(prefix, page)`` for every page of every prefix's listing,
+    with up to :data:`MAX_IN_FLIGHT` prefixes paged concurrently over
+    one (thread-safe) client.
+
+    Each round advances every active prefix's :func:`_pages` by one
+    page on a thread pool and yields the round's pages in prefix order
+    before the next round starts.  So at most ``MAX_IN_FLIGHT`` pages
+    are requested and not yet yielded, the output order is
+    deterministic, a request's error (or ``_pages``' own) propagates
+    out of this generator, and closing it early leaves no request
+    running."""
+    waiting = iter(prefixes)
+    active: list[tuple[str, Iterator[dict]]] = []
+    with ThreadPoolExecutor(MAX_IN_FLIGHT) as pool:
+        while True:
+            for p in islice(waiting, MAX_IN_FLIGHT - len(active)):
+                active.append((p, _pages(client, Prefix=p, **request)))
+            if not active:
+                return
+            pages = list(pool.map(lambda a: next(a[1], None), active))
+            for (p, _), page in zip(active, pages):
+                if page is not None:
+                    yield p, page
+            active = [a for a, page in zip(active, pages) if page is not None]
+
+
 #: BFS levels :func:`discover_shards` expands at most.
 DISCOVER_MAX_ROUNDS = 3
-#: driver threads listing one BFS level concurrently.
-DISCOVER_MAX_WORKERS = 16
 
 
 def discover_shards(
@@ -160,66 +211,52 @@ def discover_shards(
     via delimiter listings (S3 CommonPrefixes), BFS-expanding until
     ``target_shards`` is reached or nothing expands.
 
-    Each BFS level's prefixes are listed CONCURRENTLY on a driver
-    thread pool (boto3 clients are thread-safe; the calls are pure
-    I/O waits) — a level with N prefixes costs ~1 round-trip instead
-    of N.  Results are re-assembled in frontier order so shard
-    discovery stays deterministic.
+    Each BFS level's prefixes are listed CONCURRENTLY
+    (:func:`_list_shards`; the calls are pure I/O waits) — a level with
+    N prefixes costs ~1 round-trip instead of N.  Results are
+    re-assembled in frontier order so shard discovery stays
+    deterministic.
 
     Returns (shard_prefixes, direct_objects): objects that live at a
     listed level (not under any returned shard) come back as rows so
     coverage is exact — every key is in exactly one shard or in
     direct_objects.
     """
-    from concurrent.futures import ThreadPoolExecutor
-
-    def list_level(p: str) -> tuple[list[str], list[dict]]:
-        children: list[str] = []
-        objs: list[dict] = []
-        for resp in _pages(
-            client, Bucket=bucket, Prefix=p, Delimiter=delimiter, MaxKeys=PAGE_SIZE
-        ):
-            objs.extend(resp.get("Contents", []))
-            children.extend(cp["Prefix"] for cp in resp.get("CommonPrefixes", []))
-        return children, objs
-
-    shards: list[str] = []
     direct: list[dict] = []
     frontier = [prefix]
     for _ in range(DISCOVER_MAX_ROUNDS):
-        if not frontier:
-            break
-        if len(frontier) == 1:
-            results = [list_level(frontier[0])]
-        else:
-            with ThreadPoolExecutor(
-                max_workers=min(DISCOVER_MAX_WORKERS, len(frontier))
-            ) as pool:
-                # pool.map preserves frontier order → deterministic shards
-                results = list(pool.map(list_level, frontier))
-        next_frontier: list[str] = []
-        for children, objs in results:
-            direct.extend(objs)
-            next_frontier.extend(children)
-        if len(shards) + len(next_frontier) >= target_shards or not next_frontier:
-            shards.extend(next_frontier)
-            frontier = []
-        else:
-            # not enough parallelism yet — expand one more level
-            frontier = next_frontier
-    shards.extend(frontier)
-    return shards, direct
+        pages: dict[str, list[dict]] = {p: [] for p in frontier}
+        for p, resp in _list_shards(
+            client, frontier, Bucket=bucket, Delimiter=delimiter, MaxKeys=PAGE_SIZE
+        ):
+            pages[p].append(resp)
+        children: list[str] = []
+        for resp in chain.from_iterable(pages.values()):  # frontier order
+            direct.extend(resp.get("Contents", []))
+            children.extend(cp["Prefix"] for cp in resp.get("CommonPrefixes", []))
+        frontier = children
+        if not frontier or len(frontier) >= target_shards:
+            break  # else: not enough parallelism yet — expand one more level
+    return frontier, direct
 
 
-def _obj_to_row(obj: dict) -> dict:
-    lm = obj.get("LastModified")
-    return {
-        "key": obj.get("Key"),
-        "size": obj.get("Size"),
-        "last_modified": lm.isoformat() if hasattr(lm, "isoformat") else lm,
-        "etag": obj.get("ETag"),
-        "storage_class": obj.get("StorageClass"),
-    }
+#: The ListObjectsV2 ``Contents`` field behind each LISTING_SCHEMA column.
+_S3_FIELDS = {"key": "Key", "size": "Size", "last_modified": "LastModified",
+              "etag": "ETag", "storage_class": "StorageClass"}
+_ARROW_LISTING_SCHEMA = to_arrow_schema(LISTING_SCHEMA)
+#: One row per shard; the first row also carries discovery's direct objects.
+_TASK_SCHEMA = T.StructType().add("shard", T.StringType()).add(
+    "direct", T.ArrayType(LISTING_SCHEMA)
+)
+
+
+def _page_batch(contents: list[dict]) -> pa.RecordBatch:
+    """ListObjectsV2 ``Contents`` entries as one LISTING_SCHEMA batch."""
+    cols = {c: [o.get(f) for o in contents] for c, f in _S3_FIELDS.items()}
+    cols["last_modified"] = [
+        t.isoformat() if hasattr(t, "isoformat") else t for t in cols["last_modified"]
+    ]
+    return pa.RecordBatch.from_pydict(cols, schema=_ARROW_LISTING_SCHEMA)
 
 
 def list_objects_df(
@@ -236,13 +273,17 @@ def list_objects_df(
     """Listing DataFrame over ``s3://bucket/prefix``, parallel by shard.
 
     The prefix predicate is pushed into the API request itself (S2,
-    main.rs:190).  Each task holds at most one page (``page_size``
-    rows) plus one Arrow batch in memory, mirroring the reference's
-    bounded-buffer flush loop (main.rs:236-246) but N-wide.
+    main.rs:190).  The shards run in at most ``defaultParallelism``
+    tasks with no shuffle; each task pages its shards through
+    :func:`_list_shards`, so it holds at most ``MAX_IN_FLIGHT`` pages
+    (``page_size`` rows each) and the Arrow batch it is emitting —
+    the reference's bounded-buffer flush loop (main.rs:236-246),
+    N-wide.
 
     ``progress`` (a :class:`~s3_manifest_spark.manifest.progress.
-    ListingProgress`) gets its accumulator incremented once per listed
-    page — the live spinner's data feed (U1, main.rs:176-183).
+    ListingProgress`) gets its accumulator incremented by each emitted
+    batch's row count — the live spinner's data feed (U1,
+    main.rs:176-183).
 
     ``start_after`` makes the listing INCREMENTAL: only keys strictly
     greater than the marker are returned (S3 ``StartAfter``, pushed
@@ -279,42 +320,41 @@ def list_objects_df(
         direct = [
             o for o in direct if (o.get("Key") or "") > start_after
         ]
+    request = {"Bucket": bucket, "MaxKeys": page_size}
+    if start_after:
+        request["StartAfter"] = start_after
     # Only the accumulator crosses into the task closure (it pickles by
     # reference); the progress object's thread/stream stay driver-side.
     acc = progress.accumulator if progress is not None else None
 
-    def list_shard(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        client = client_factory()  # one client per task, never pickled
-        for pdf in batches:
-            for shard in pdf["shard"]:
-                kw = {"Bucket": bucket, "Prefix": shard, "MaxKeys": page_size}
-                if start_after:
-                    kw["StartAfter"] = start_after
-                for resp in _pages(client, **kw):
-                    contents = resp.get("Contents", [])
-                    if contents:
-                        if acc is not None:
-                            acc.add(len(contents))
-                        yield pd.DataFrame([_obj_to_row(o) for o in contents])
-
-    parts = []
-    if shards:
-        shard_df = spark.createDataFrame(
-            [(s,) for s in shards], T.StructType([T.StructField("shard", T.StringType())])
-        ).repartition(len(shards), "shard")
-        parts.append(shard_df.mapInPandas(list_shard, schema=LISTING_SCHEMA))
-    if direct:
+    def counted(batch: pa.RecordBatch) -> pa.RecordBatch:
+        # Called in the task's own thread, never a pager thread:
+        # Accumulator.add is an unlocked read-modify-write.
         if acc is not None:
-            acc.add(len(direct))  # discovered driver-side, count them too
-        parts.append(
-            spark.createDataFrame([_obj_to_row(o) for o in direct], LISTING_SCHEMA)
-        )
-    if not parts:
-        return spark.createDataFrame([], LISTING_SCHEMA)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionAll(p)
-    return out
+            acc.add(batch.num_rows)
+        return batch
+
+    def list_task(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        mine: list[str] = []
+        for b in batches:
+            mine += [s for s in b.column("shard").to_pylist() if s is not None]
+            listed = b.column("direct").flatten()
+            if len(listed):
+                yield counted(pa.RecordBatch.from_struct_array(listed))
+        if mine:
+            client = client_factory()  # one client per task, never pickled
+            for _, page in _list_shards(client, mine, **request):
+                if page.get("Contents"):
+                    yield counted(_page_batch(page["Contents"]))
+
+    # A local relation is split into min(rows, defaultParallelism)
+    # contiguous slices with no shuffle.  The direct objects ride on
+    # the first row, so the listing is this one relation, never a union.
+    first = shards[0] if shards else None
+    rows = [(first, _page_batch(direct).to_pylist())] + [(s, []) for s in shards[1:]]
+    return spark.createDataFrame(rows, _TASK_SCHEMA).mapInArrow(
+        list_task, LISTING_SCHEMA
+    )
 
 
 def manifest_from_s3(

@@ -11,6 +11,8 @@ from s3_manifest_spark.sources.fake_s3 import (
     synth_bucket,
 )
 from s3_manifest_spark.sources.s3_listing import (
+    MAX_IN_FLIGHT,
+    _list_shards,
     discover_shards,
     list_objects_df,
     manifest_from_s3,
@@ -163,6 +165,149 @@ def test_pagination_fails_loud_on_stuck_token(drop_token):
     with pytest.raises(RuntimeError, match="does not advance"):
         discover_shards(client, "b", "")
     assert client.calls == 2
+
+
+def _sharded_bucket(n_shards: int = 40) -> dict:
+    """``{"b": {key: (size, mtime)}}`` over ``n_shards`` shard prefixes
+    of 0..(3 * n_shards - 1) keys each: uneven, some shards empty."""
+    import datetime as dt
+
+    t = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
+    return {
+        "b": {
+            f"s{i:03d}/k{j:04d}": (j, t)
+            for i in range(n_shards)
+            for j in range((i * 7) % (3 * n_shards))
+        }
+    }
+
+
+class _Counting(FakeS3Client):
+    """Counts requests, and the most that were ever running at once."""
+
+    def __init__(self, buckets, delay_s: float = 0.0):
+        import threading
+
+        super().__init__(buckets)
+        self.delay_s = delay_s
+        self.calls = self.running = self.max_running = 0
+        self._lock = threading.Lock()
+
+    def list_objects_v2(self, **kw):
+        import time
+
+        with self._lock:
+            self.calls += 1
+            self.running += 1
+            self.max_running = max(self.max_running, self.running)
+        time.sleep(self.delay_s)
+        try:
+            return super().list_objects_v2(**kw)
+        finally:
+            with self._lock:
+                self.running -= 1
+
+
+def test_list_shards_every_key_once_with_bounded_pages_in_flight():
+    """The in-task pager returns each key of many uneven shards exactly
+    once, pages concurrently, and never has more than MAX_IN_FLIGHT
+    pages requested but not yet yielded (16 threads, 1 us switch
+    interval)."""
+    import sys
+
+    bucket = _sharded_bucket()
+    client = _Counting(bucket, delay_s=0.002)
+    shards = [f"s{i:03d}/" for i in range(40)]
+    keys, yielded = [], 0
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for prefix, page in _list_shards(client, shards, Bucket="b", MaxKeys=7):
+            yielded += 1
+            assert client.calls - yielded <= MAX_IN_FLIGHT
+            assert all(o["Key"].startswith(prefix) for o in page["Contents"])
+            keys += [o["Key"] for o in page["Contents"]]
+    finally:
+        sys.setswitchinterval(interval)
+    assert sorted(keys) == sorted(bucket["b"])
+    assert len(keys) == len(set(keys))
+    assert 1 < client.max_running <= MAX_IN_FLIGHT
+
+
+def test_list_shards_stuck_shard_raises():
+    client = _StuckPaging(
+        {"b": {f"s{i}/k{j:05d}": (1, None) for i in range(3) for j in range(50)}},
+        drop_token=True,
+    )
+    shards = ["s0/", "s1/", "s2/"]
+    with pytest.raises(RuntimeError, match="does not advance"):
+        list(_list_shards(client, shards, Bucket="b", MaxKeys=10))
+
+
+def test_list_shards_close_early_stops_requests():
+    """A consumer that stops after one page gets control back without
+    waiting for the other shards, and no request is left running."""
+    import time
+
+    client = _Counting(_sharded_bucket(), delay_s=0.01)
+    pager = _list_shards(
+        client, [f"s{i:03d}/" for i in range(40)], Bucket="b", MaxKeys=1
+    )
+    next(pager)
+    t0 = time.perf_counter()
+    pager.close()
+    assert time.perf_counter() - t0 < 1.0
+    calls = client.calls
+    time.sleep(0.05)
+    assert client.running == 0 and client.calls == calls <= MAX_IN_FLIGHT
+
+
+class _Misordered(FakeS3Client):
+    """Real paging, except that page 2 replays page 1's keys (with a
+    valid, advancing token) or one page lists its keys backwards."""
+
+    def __init__(self, buckets, mode: str):
+        super().__init__(buckets)
+        self.mode = mode
+        self.first = None
+
+    def list_objects_v2(self, **kw):
+        resp = super().list_objects_v2(**kw)
+        if self.mode == "replay":
+            if self.first is None:
+                self.first = resp["Contents"]
+            else:
+                resp["Contents"] = self.first
+        elif "ContinuationToken" in kw:
+            resp["Contents"] = resp["Contents"][::-1]
+        return resp
+
+
+@pytest.mark.parametrize("mode", ["replay", "backwards"])
+def test_listing_fails_loud_on_non_increasing_keys(mode):
+    """A page whose keys do not strictly follow the previous key (a
+    replayed page, or keys out of order within a page) fails the
+    listing instead of emitting duplicate or unsorted keys."""
+    import datetime as dt
+
+    t = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
+    client = _Misordered({"b": {f"d/k{i:05d}": (1, t) for i in range(300)}}, mode)
+    pages = _list_shards(client, ["d/"], Bucket="b", MaxKeys=100)
+    with pytest.raises(RuntimeError, match="does not sort after"):
+        list(pages)
+
+
+def test_listing_runs_in_parallelism_tasks_without_shuffle(spark):
+    """The listing is one local relation of shard rows mapped in Arrow:
+    no Exchange and at most defaultParallelism partitions, not a task
+    per shard (91 shards plus 20 direct root objects here; that every
+    key is listed once is test_list_objects_df_complete_and_exact)."""
+    df = list_objects_df(
+        spark, "fake-bucket", client_factory=fake_client_factory, page_size=100
+    )
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan, plan
+    assert df.rdd.getNumPartitions() <= spark.sparkContext.defaultParallelism
 
 
 def test_manifest_observed_stats_single_job(spark, tmp_path):
