@@ -113,15 +113,46 @@ def make_boto3_client_factory(
     return factory
 
 
+#: Error codes S3 sends with a 4xx status when the caller should slow
+#: down and retry rather than give up.
+THROTTLE_CODES = frozenset(
+    {
+        "SlowDown",
+        "Throttling",
+        "ThrottlingException",
+        "RequestLimitExceeded",
+        "TooManyRequests",
+    }
+)
+
+
+def _fatal(e: Exception) -> bool:
+    """True for an error response that retrying cannot fix: a 4xx
+    status whose code is not a throttling code (AccessDenied,
+    NoSuchBucket, ...).  Reads the ``response`` dict botocore's
+    ``ClientError`` carries, so botocore stays optional."""
+    resp = getattr(e, "response", None)
+    if not isinstance(resp, dict):
+        return False
+    status = resp.get("ResponseMetadata", {}).get("HTTPStatusCode")
+    code = resp.get("Error", {}).get("Code")
+    return (
+        isinstance(status, int)
+        and 400 <= status < 500
+        and code not in THROTTLE_CODES
+    )
+
+
 def _retry(fn, attempts: int = 3, base_ms: int = 100):
     """Exponential backoff + jitter around an API call (main.rs:174,
     196-206).  boto3 retries transport errors itself; this guards
-    non-boto clients and throttling responses uniformly."""
+    non-boto clients and throttling responses uniformly.  A fatal
+    error response (:func:`_fatal`) raises on its first attempt."""
     for attempt in range(attempts):
         try:
             return fn()
-        except Exception:
-            if attempt == attempts - 1:
+        except Exception as e:
+            if attempt == attempts - 1 or _fatal(e):
                 raise
             delay = (base_ms / 1000.0) * (2**attempt) * (0.5 + random.random())
             time.sleep(delay)

@@ -10,18 +10,19 @@ appends its (doc_id, digest) rows to durable index state, exactly like
 the MinHash maintainer appends band rows.  This module is that
 maintainer as a Structured Streaming drain:
 
-- the full document corpus replays as a multi-file parquet spool; the
-  registered drain takes it in ONE availableNow micro-batch, and the
-  multi-batch arrival path (one file per trigger) is pinned equal to
-  the batch report by tests/test_streaming_state.py — per-document
-  closure (a doc's chunk digests derive only from its own text) makes
-  batch boundaries invisible to index content;
+- the full document corpus replays as a multi-file parquet spool
+  (shared with ``heavy_hitters``); the registered drain takes it in
+  ONE availableNow micro-batch, and the multi-batch arrival path (one
+  file per trigger) is pinned equal to the batch report by
+  tests/test_streaming_state.py — per-document closure (a doc's chunk
+  digests derive only from its own text) makes batch boundaries
+  invisible to index content;
 - ``foreachBatch`` computes each batch's chunk digests with THE SAME
   expansion the batch query uses (corpus.chunk_digest_rows) and
-  appends them to the index store (executor→parquet, no driver hop;
-  overwrite-by-batch keeps the sink idempotent under foreachBatch
-  re-delivery — an append would double-count digests and silently
-  inflate every frequency);
+  writes them to the index store (executor→parquet, no driver hop;
+  overwrite-by-batch, see ``streaming/scratch.py`` for the drain
+  contract — an append would double-count digests on re-delivery and
+  silently inflate every frequency);
 - after the drain, the registered query runs the SAME read-time
   rollup as the batch query (corpus.boilerplate_report) over the
   STREAMED index, graded by the SAME oracle — so the hash match
@@ -39,10 +40,6 @@ trigger.
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 
 from s3_manifest_spark.operators.corpus import (
@@ -50,25 +47,25 @@ from s3_manifest_spark.operators.corpus import (
     boilerplate_report,
     chunk_digest_rows,
 )
-from s3_manifest_spark.registry import defer_cleanup, register
+from s3_manifest_spark.registry import register
 from s3_manifest_spark.sources.tables import load_table
-from s3_manifest_spark.streaming.metrics import record_progress
-from s3_manifest_spark.streaming.scratch import build_spool, scratch_base
+from s3_manifest_spark.streaming.scratch import (
+    drain,
+    frame_spool,
+    open_spool,
+    read_store,
+    scratch_store,
+    write_batch,
+)
 
 
-def _spool_docs(spark: SparkSession, sf_dir: str, files: int = 8) -> str:
-    """Stage the FULL document corpus as a multi-file parquet spool
-    (contrast index_update's old-docs split: the boilerplate report
-    covers every document).  Shared spool protocol (build_spool):
-    content fingerprint, staging + atomic rename, self-heal."""
-
-    def build(staging: str) -> None:
-        load_table(spark, sf_dir, "documents").repartition(
-            files
-        ).write.mode("overwrite").parquet(staging)
-
-    return build_spool(
-        "boilerfeed", [f"{sf_dir}/documents.parquet"], f"v1x{files}", build
+def documents_spool(spark: SparkSession, sf_dir: str) -> str:
+    """The FULL document corpus as a multi-file parquet spool (contrast
+    index_update's old-docs split: the boilerplate report covers every
+    document)."""
+    src = f"{sf_dir}/documents.parquet"
+    return frame_spool(
+        "boilerfeed", src, lambda: load_table(spark, sf_dir, "documents"), "v1"
     )
 
 
@@ -82,35 +79,13 @@ def drain_chunk_feed(
     ``max_files_per_trigger`` unset, availableNow takes every ready
     file in one micro-batch; set it to force a multi-batch drain
     (the batch-boundary invariance test)."""
-    idx_dir = tempfile.mkdtemp(prefix="smsp-chidx-", dir=scratch_base())
-    defer_cleanup(lambda: shutil.rmtree(idx_dir, ignore_errors=True))
-    store = os.path.join(idx_dir, "chunks")
-
-    schema = spark.read.parquet(spool).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    feed = reader.format("parquet").load(spool)
+    store = scratch_store("chidx")
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        # One OVERWRITTEN subdirectory per micro-batch (the
-        # index_update.py sink contract): idempotent under
-        # at-least-once foreachBatch delivery, full stage width.
-        chunk_digest_rows(batch_df).write.mode("overwrite").parquet(
-            os.path.join(store, f"batch{batch_id}")
-        )
+        write_batch(chunk_digest_rows(batch_df), store, batch_id)
 
-    with tempfile.TemporaryDirectory(
-        prefix="smsp-ckpt-", dir=scratch_base()
-    ) as ckpt:
-        q = (
-            feed.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        record_progress(q, family="boilerplate")
+    feed = open_spool(spark, spool, max_files_per_trigger)
+    drain(feed, "boilerplate", sink, partitions=None)
     return store
 
 
@@ -122,12 +97,7 @@ def stream_boilerplate_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     same oracle as ``chunk_dedup_boilerplate`` — the hash match
     certifies streaming maintenance reaches exactly the batch-built
     chunk state."""
-    spool = _spool_docs(spark, sf_dir)
-    store = drain_chunk_feed(spark, spool)
-    chunks = (
-        spark.read.option("recursiveFileLookup", "true")
-        .parquet(store)
-        .select("doc_id", "h")
-    )
+    store = drain_chunk_feed(spark, documents_spool(spark, sf_dir))
+    chunks = read_store(spark, store).select("doc_id", "h")
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     return boilerplate_report(docs, chunks)

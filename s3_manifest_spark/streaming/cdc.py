@@ -24,19 +24,24 @@ Design (scale notes):
   delete, unchanged keeps old) is stateless, so it runs over the
   drained state table — at production it would sit in a
   ``foreachBatch`` writing the snapshot parquet per trigger.
+
+Spool, checkpoint, store and conf plumbing: ``streaming/scratch.py``.
 """
 
 from __future__ import annotations
 
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 
 from s3_manifest_spark.operators.manifest_queries import APPLY_ORACLE_SQL
-from s3_manifest_spark.registry import defer_cleanup, register
-from s3_manifest_spark.streaming.metrics import record_progress
-from s3_manifest_spark.streaming.scratch import build_spool, scratch_base
+from s3_manifest_spark.registry import register
+from s3_manifest_spark.streaming.scratch import (
+    drain,
+    frame_spool,
+    open_spool,
+    read_store,
+    scratch_store,
+    write_batch,
+)
 from s3_manifest_spark.sources.tables import listing_projection, parquet_row_count
 
 
@@ -60,52 +65,25 @@ def state_store_partitions(spark: SparkSession, n_keys_hint: int) -> str:
     return str(max(8, min(4 * cores, -(-n_keys_hint // 65_536))))
 
 
-#: listing-spool writer-format version — rides the spool fingerprint so
-#: a change to the chunking (or a return to the old single-hardlink
-#: layout) can never silently reuse a stale spool.
-_LISTING_SPOOL_V = 2  # v2: multi-file chunks (was: one hardlinked file)
-
-#: listing-chunk files per spool.  A real listing feed lands as many
-#: chunk files per window; staging several also gives the micro-batch
-#: SCAN that many parallel tasks — the v1 single-file spool ran the
-#: whole 600k-row projection + filter + partial aggregation in ONE
-#: task before the state shuffle (measured ~0.9 s of serial addBatch
-#: at sf0.1).
-_LISTING_CHUNKS = 8
-
-
 def read_listing_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream of listing rows (the production layout: a
     directory that listing-chunk files land in), derived from the
     staged lineitem fixture with the SAME projection the batch
     ``synth_listing`` uses."""
     src = f"{sf_dir}/lineitem.parquet"
-    # Shared spool protocol (scratch.build_spool, r13): content-
-    # fingerprint identity (path|mtime_ns|size|format-version, per-uid
-    # dir), staging + atomic rename so readers never see half-written
-    # chunks, marker-rechecked self-heal for crashed-build debris.
-    spool = build_spool(
-        "listing",
-        [src],
-        f"v{_LISTING_SPOOL_V}x{_LISTING_CHUNKS}",
-        lambda staging: (
-            spark.read.parquet(src)
-            .repartition(_LISTING_CHUNKS)
-            .write.mode("overwrite")
-            .parquet(staging)
-        ),
-    )
-    schema = spark.read.parquet(spool).schema
-    raw = spark.readStream.schema(schema).format("parquet").load(spool)
-    return listing_projection(raw)
+    spool = frame_spool("listing", src, lambda: spark.read.parquet(src), "v2")
+    return listing_projection(open_spool(spark, spool))
 
 
-def drain_cdc_updates(spark: SparkSession, per_key_stream: DataFrame) -> DataFrame:
+def drain_cdc_updates(
+    spark: SparkSession, per_key_stream: DataFrame, partitions: str | None = None
+) -> DataFrame:
     """availableNow drain of a stateful CDC aggregation through the
-    DISTRIBUTED sink shape: ``foreachBatch`` in UPDATE mode appends
+    DISTRIBUTED sink shape: ``foreachBatch`` in UPDATE mode writes
     each micro-batch's changed keys (stamped with the batch id) to a
-    parquet spool; the snapshot is then the latest row per key — a
-    distributed window, executed at read time.
+    scratch store; the snapshot is then the latest row per key.
+    ``partitions`` is the state-store count (``None`` keeps the
+    session's shuffle width).
 
     This replaces the earlier complete-mode memory sink, which
     materialized the ENTIRE state table INTO THE DRIVER once per
@@ -117,39 +95,21 @@ def drain_cdc_updates(spark: SparkSession, per_key_stream: DataFrame) -> DataFra
     instead of the full state every time."""
     from pyspark.sql import functions as F
 
-    out_dir = tempfile.mkdtemp(prefix="smsp-cdc-snap-", dir=scratch_base())
-    defer_cleanup(lambda: shutil.rmtree(out_dir, ignore_errors=True))
+    store = scratch_store("cdc-snap")
     n_batches = {"n": 0}
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        # Re-delivery-safe without overwrite-by-batch (contrast the
-        # index maintainer's sink, index_update.py): a re-delivered
-        # batch appends rows with the SAME batch_id and the SAME
-        # final-state values, so the latest-per-key compaction below
-        # picks an identical row either way (and the re-delivery bumps
-        # n_batches past 1, routing around the single-batch shortcut).
+        # A re-delivered batch overwrites its own rows; it also bumps
+        # n_batches past 1, routing around the single-batch shortcut.
         n_batches["n"] += 1
-        (
-            batch_df.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("append")
-            .parquet(out_dir)
-        )
+        write_batch(batch_df.withColumn("batch_id", F.lit(batch_id)), store, batch_id)
 
-    with tempfile.TemporaryDirectory(prefix="smsp-ckpt-", dir=scratch_base()) as ckpt:
-        q = (
-            per_key_stream.writeStream.foreachBatch(sink)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        record_progress(q, family="cdc_apply")
-    snap = spark.read.parquet(out_dir)
+    drain(per_key_stream, "cdc_apply", sink, "update", partitions)
+    snap = read_store(spark, store)
     value_cols = [c for c in snap.columns if c not in ("key", "batch_id")]
     if n_batches["n"] == 1:
         # Update mode emits each touched key at most once PER
-        # micro-batch, so a single-batch drain's spool already holds
+        # micro-batch, so a single-batch drain's store already holds
         # exactly one (final-state) row per key — the latest-per-key
         # compaction would be a full extra shuffle that merges nothing.
         return snap.select("key", *value_cols)
@@ -174,16 +134,12 @@ def run_cdc_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     per_key = cdc_per_key(read_listing_stream(spark, sf_dir))
-    key = "spark.sql.shuffle.partitions"
-    old_parts = spark.conf.get(key)
     # ~75% of listing rows are distinct keys in this feed — row count
     # from the parquet footer is a fine live-key hint.
     n_rows = parquet_row_count(f"{sf_dir}/lineitem.parquet")
-    spark.conf.set(key, state_store_partitions(spark, n_rows))
-    try:
-        latest = drain_cdc_updates(spark, per_key)
-    finally:
-        spark.conf.set(key, old_parts)
+    latest = drain_cdc_updates(
+        spark, per_key, partitions=state_store_partitions(spark, n_rows)
+    )
     # Stateless MERGE over the drained snapshot.
     return cdc_merge(latest)
 

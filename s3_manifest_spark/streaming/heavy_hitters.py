@@ -23,12 +23,12 @@ sketches are tiny (~1 MB flat regardless of input), merge in O(width
 raw data.
 
 The reference (/root/reference/src/main.rs) has no streaming surface;
-this extends the SURVEY.md §2B streaming family.
+this extends the SURVEY.md §2B streaming family.  It replays the
+boilerplate maintainer's document spool; spool, checkpoint and conf
+plumbing live in ``streaming/scratch.py``.
 """
 
 from __future__ import annotations
-
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -43,11 +43,9 @@ from s3_manifest_spark.operators.curation import (
     _cms_sketch,
 )
 from s3_manifest_spark.registry import register
-from s3_manifest_spark.sources.tables import load_table, parquet_row_count
-from s3_manifest_spark.streaming.metrics import record_progress
-from s3_manifest_spark.streaming.scratch import build_spool, scratch_base
-
-_HH_SPOOL_FORMAT_V = 1  # v1: (doc_id, text) parquet, `files` split files
+from s3_manifest_spark.sources.tables import load_table
+from s3_manifest_spark.streaming.boilerplate import documents_spool
+from s3_manifest_spark.streaming.scratch import SPOOL_FILES, drain, open_spool
 
 _HH_LIVE_ORACLE = _HH_ORACLE.replace(
     "true AS cms_within_eps",
@@ -62,31 +60,11 @@ assert _HH_LIVE_ORACLE != _HH_ORACLE, (
 )
 
 
-def _spool_all_docs(spark: SparkSession, sf_dir: str, files: int = 4) -> str:
-    """Stage the WHOLE documents corpus as a multi-file parquet spool
-    (2 files per trigger under maxFilesPerTrigger=2 -> 2 micro-batches).
-    Built through the shared spool protocol (scratch.build_spool, r13:
-    this builder previously wrote in place — two concurrent sessions
-    could overwrite each other mid-read)."""
-
-    def build(staging: str) -> None:
-        docs = load_table(spark, sf_dir, "documents").select(
-            "doc_id", "text"
-        )
-        docs.repartition(files).write.mode("overwrite").parquet(staging)
-
-    return build_spool(
-        "hhfeed",
-        [f"{sf_dir}/documents.parquet"],
-        f"v{_HH_SPOOL_FORMAT_V}x{files}",
-        build,
-    )
-
-
 def drain_merged_sketch(spark: SparkSession, sf_dir: str) -> bytes:
     """Replay the corpus as a stream, build one CMS per micro-batch,
-    merge driver-side; returns the merged sketch's serialized bytes."""
-    spool = _spool_all_docs(spark, sf_dir)
+    merge driver-side; returns the merged sketch's serialized bytes.
+    Half the spool's files per trigger gives the two micro-batches the
+    merge-invariance certificate needs."""
     jvm_cms = spark._jvm.org.apache.spark.util.sketch.CountMinSketch
     merged = {"sk": None, "batches": 0}
 
@@ -110,25 +88,8 @@ def drain_merged_sketch(spark: SparkSession, sf_dir: str) -> bytes:
             merged["sk"].mergeInPlace(sk)
         merged["batches"] += 1
 
-    stream = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", 2)
-        .parquet(spool)
-    )
-    with tempfile.TemporaryDirectory(
-        prefix="smsp-ckpt-", dir=scratch_base()
-    ) as ckpt:
-        q = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        # foreachBatch queries have no queryName — pass the family
-        # explicitly (metrics.py contract) so progress aggregates under
-        # one key instead of a fresh per-run UUID.
-        record_progress(q, family="heavy_hitters")
+    stream = open_spool(spark, documents_spool(spark, sf_dir), SPOOL_FILES // 2)
+    drain(stream, "heavy_hitters", merge_batch, partitions=None)
     if merged["batches"] < 2:
         # Product-path contract, not a debug assert (survives python -O):
         # the merge-invariance certificate is vacuous on a 1-batch drain.

@@ -16,11 +16,12 @@ module is that maintainer as a Structured Streaming drain:
   index by tests/test_streaming_state.py — per-doc closure makes
   batch boundaries invisible to index content;
 - ``foreachBatch`` computes each batch's band rows + fingerprints with
-  THE SAME seeded pipeline the batch index uses and appends them to
-  the index store (executor→parquet, no driver hop — the cdc.py sink
-  shape).  Per-document closure makes this sound: a document's
-  signature depends only on its own text, so batch boundaries cannot
-  change index content, only arrival order — and the index is a set;
+  THE SAME seeded pipeline the batch index uses and writes them to
+  the index stores (executor→parquet, no driver hop; overwrite-by-
+  batch — the drain contract is in ``streaming/scratch.py``).
+  Per-document closure makes this sound: a document's signature
+  depends only on its own text, so batch boundaries cannot change
+  index content, only arrival order — and the index is a set;
 - after the drain, the registered query answers the SAME probe as
   ``dedup_incremental`` from the STREAMED index, graded by the SAME
   full exact-relation oracle — so the hash match certifies that
@@ -45,8 +46,6 @@ per-doc closure, unlike the CDC maintainer's keyed upserts).
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -60,10 +59,16 @@ from s3_manifest_spark.operators.dedup import (
     probe_incremental,
     shingle_fingerprints,
 )
-from s3_manifest_spark.registry import defer_cleanup, register
+from s3_manifest_spark.registry import register
 from s3_manifest_spark.sources.tables import load_table, parquet_row_count
-from s3_manifest_spark.streaming.metrics import record_progress
-from s3_manifest_spark.streaming.scratch import build_spool, scratch_base
+from s3_manifest_spark.streaming.scratch import (
+    drain,
+    frame_spool,
+    open_spool,
+    read_store,
+    scratch_store,
+    write_batch,
+)
 
 
 def _index_rows(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -109,24 +114,17 @@ def _index_rows(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
     return buckets, shingles
 
 
-def _spool_old_docs(spark: SparkSession, sf_dir: str, files: int = 8) -> str:
-    """Stage the existing-corpus split as a multi-file parquet spool
-    (``files`` chunks = the availableNow micro-batch's scan width).
-    Content is deterministic and per-doc closure makes the file
-    assignment irrelevant to index content.  Built through the shared
-    spool protocol (scratch.build_spool): full-precision content
-    fingerprint, staging + atomic rename, marker-rechecked self-heal
-    — a stale spool from a regenerated fixture or another corpus can
-    never be reused, and concurrent builders/readers are safe."""
-
-    def build(staging: str) -> None:
-        old = load_table(spark, sf_dir, "documents").filter(
+def _spool_old_docs(spark: SparkSession, sf_dir: str) -> str:
+    """The existing-corpus split as a multi-file parquet spool.
+    Per-doc closure makes the file assignment irrelevant to index
+    content."""
+    return frame_spool(
+        "docfeed",
+        f"{sf_dir}/documents.parquet",
+        lambda: load_table(spark, sf_dir, "documents").filter(
             F.col("doc_id") % SNAPSHOT_MOD != 0
-        )
-        old.repartition(files).write.mode("overwrite").parquet(staging)
-
-    return build_spool(
-        "docfeed", [f"{sf_dir}/documents.parquet"], f"v2x{files}", build
+        ),
+        "v2",
     )
 
 
@@ -152,17 +150,8 @@ def stream_index_update_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     # index indifferent to batching, and the multi-batch drain path is
     # pinned by tests/test_streaming_state.py with maxFilesPerTrigger=1).
     bdir, sdir = drain_index_feed(spark, spool)
-    buckets_old = read_index_store(spark, bdir)
-    sh_old = read_index_store(spark, sdir)
-    return probe_incremental(spark, sf_dir, buckets_old, sh_old)
-
-
-def read_index_store(spark: SparkSession, store_dir: str) -> DataFrame:
-    """Read an index-store directory written by :func:`drain_index_feed`
-    (one overwritten ``batch<N>`` subdirectory per micro-batch — the
-    idempotent layout; see the sink comment)."""
-    return (
-        spark.read.option("recursiveFileLookup", "true").parquet(store_dir)
+    return probe_incremental(
+        spark, sf_dir, read_store(spark, bdir), read_store(spark, sdir)
     )
 
 
@@ -176,16 +165,9 @@ def drain_index_feed(
     ``max_files_per_trigger`` unset, availableNow takes every ready
     file in one micro-batch (one kernel pass, one append job per
     relation); set it to force a multi-batch drain (tests)."""
-    idx_dir = tempfile.mkdtemp(prefix="smsp-mhidx-", dir=scratch_base())
-    defer_cleanup(lambda: shutil.rmtree(idx_dir, ignore_errors=True))
+    idx_dir = scratch_store("mhidx")
     bdir = os.path.join(idx_dir, "buckets")
     sdir = os.path.join(idx_dir, "shingles")
-
-    schema = spark.read.parquet(spool).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    feed = reader.format("parquet").load(spool)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         buckets, shingles = _index_rows(batch_df)
@@ -196,37 +178,11 @@ def drain_index_feed(
         # (materializes the cache), then buckets reuses it.
         shingles.persist()
         try:
-            # One OVERWRITTEN subdirectory per micro-batch, not a bare
-            # append: foreachBatch may re-deliver a batch id after a
-            # failure, and an append would double-count every shingle
-            # row in the re-delivered batch — intersection sizes (and
-            # so Jaccard) would silently inflate.  Overwrite-by-batch
-            # makes the sink idempotent (exactly-once index content
-            # under at-least-once delivery), which is the contract a
-            # durable index maintainer must have.  Writes run at full
-            # stage width — the r12 coalesce(4) here NARROWED the
-            # upstream kernel/aggregation stages to 4 tasks (coalesce
-            # is a narrow dependency), serializing the drain's real
-            # work on a 32-core box; more-but-small files per batch is
-            # the normal trade and the probe reads them in one scan.
-            shingles.write.mode("overwrite").parquet(
-                os.path.join(sdir, f"batch{batch_id}")
-            )
-            buckets.write.mode("overwrite").parquet(
-                os.path.join(bdir, f"batch{batch_id}")
-            )
+            write_batch(shingles, sdir, batch_id)
+            write_batch(buckets, bdir, batch_id)
         finally:
             shingles.unpersist(blocking=False)
 
-    with tempfile.TemporaryDirectory(
-        prefix="smsp-ckpt-", dir=scratch_base()
-    ) as ckpt:
-        q = (
-            feed.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        record_progress(q, family="index_update")
+    feed = open_spool(spark, spool, max_files_per_trigger)
+    drain(feed, "index_update", sink, partitions=None)
     return bdir, sdir

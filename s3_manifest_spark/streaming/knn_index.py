@@ -20,11 +20,11 @@ index_update.py foreachBatch pattern:
 - ``foreachBatch`` computes each batch's bucket assignments with THE
   SAME seeded signature kernel the batch index uses
   (``_ann_signatures``, seed offset :data:`KNN_ANN_SEED_OFFSET`) and
-  appends ``(vec_id, bucket, embedding)`` rows to the index store
-  (executor→parquet, no driver hop; overwrite-by-batch keeps the sink
-  idempotent under foreachBatch re-delivery — an append would
-  duplicate vectors inside packed blocks and corrupt every diagonal
-  self-mask downstream);
+  writes ``(vec_id, bucket, embedding)`` rows to the index store
+  (executor→parquet, no driver hop; overwrite-by-batch, see
+  ``streaming/scratch.py`` for the drain contract — an append would
+  duplicate vectors inside packed blocks on re-delivery and corrupt
+  every diagonal self-mask downstream);
 - the PLANE COUNT is index metadata, pinned at drain start and
   verified on every append and read (``_PLANES.json``): signatures
   are only comparable under one plane matrix, so a corpus that grows
@@ -52,8 +52,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -70,27 +68,29 @@ from s3_manifest_spark.operators.similarity import (
     _pack_buckets_salted,
     knn_graph_ann_neighbors,
 )
-from s3_manifest_spark.registry import defer_cleanup, register
+from s3_manifest_spark.registry import register
 from s3_manifest_spark.sources.tables import load_table, parquet_row_count
-from s3_manifest_spark.streaming.metrics import record_progress
-from s3_manifest_spark.streaming.scratch import build_spool, scratch_base
+from s3_manifest_spark.streaming.scratch import (
+    drain,
+    frame_spool,
+    open_spool,
+    read_store,
+    scratch_store,
+    write_batch,
+)
 
 _PLANES_META = "_PLANES.json"
 
 
-def _spool_embeddings(spark: SparkSession, sf_dir: str, files: int = 8) -> str:
-    """Stage the embedding corpus as a multi-file parquet spool
-    (``files`` chunks = the availableNow micro-batch's scan width).
-    Shared spool protocol (build_spool): content fingerprint, staging
-    + atomic rename, self-heal."""
-
-    def build(staging: str) -> None:
-        load_table(spark, sf_dir, "embeddings").select(
+def _spool_embeddings(spark: SparkSession, sf_dir: str) -> str:
+    """The embedding corpus as a multi-file parquet spool."""
+    return frame_spool(
+        "embfeed",
+        f"{sf_dir}/embeddings.parquet",
+        lambda: load_table(spark, sf_dir, "embeddings").select(
             "vec_id", "embedding"
-        ).repartition(files).write.mode("overwrite").parquet(staging)
-
-    return build_spool(
-        "embfeed", [f"{sf_dir}/embeddings.parquet"], f"v1x{files}", build
+        ),
+        "v1",
     )
 
 
@@ -120,18 +120,9 @@ def drain_embedding_feed(
     ``max_files_per_trigger`` unset, availableNow takes every ready
     file in one micro-batch; set it to force a multi-batch drain
     (the batch-boundary invariance test)."""
-    idx_dir = tempfile.mkdtemp(prefix="smsp-knnidx-", dir=scratch_base())
-    defer_cleanup(lambda: shutil.rmtree(idx_dir, ignore_errors=True))
-    store = os.path.join(idx_dir, "buckets")
-    os.makedirs(store, exist_ok=True)
+    store = scratch_store("knnidx")
     with open(os.path.join(store, _PLANES_META), "w") as f:
         json.dump({"planes": planes}, f)
-
-    schema = spark.read.parquet(spool).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    feed = reader.format("parquet").load(spool)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         # Every append re-checks the store's plane metadata: a resumed
@@ -143,24 +134,10 @@ def drain_embedding_feed(
             seed_offset=KNN_ANN_SEED_OFFSET,
             planes=planes,
         ).withColumnRenamed("sig", "bucket")
-        # One OVERWRITTEN subdirectory per micro-batch (the
-        # index_update.py sink contract): idempotent under
-        # at-least-once foreachBatch delivery, full stage width.
-        sigs.select("vec_id", "bucket", "embedding").write.mode(
-            "overwrite"
-        ).parquet(os.path.join(store, f"batch{batch_id}"))
+        write_batch(sigs.select("vec_id", "bucket", "embedding"), store, batch_id)
 
-    with tempfile.TemporaryDirectory(
-        prefix="smsp-ckpt-", dir=scratch_base()
-    ) as ckpt:
-        q = (
-            feed.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        record_progress(q, family="knn_index")
+    feed = open_spool(spark, spool, max_files_per_trigger)
+    drain(feed, "knn_index", sink, partitions=None)
     return store
 
 
@@ -170,11 +147,7 @@ def read_knn_index_store(
     """Read the streamed (vec_id, bucket, embedding) rows, verifying
     the caller's plane count against the store metadata."""
     _check_planes(store, planes, "read")
-    return (
-        spark.read.option("recursiveFileLookup", "true")
-        .parquet(store)
-        .select("vec_id", "bucket", "embedding")
-    )
+    return read_store(spark, store).select("vec_id", "bucket", "embedding")
 
 
 def _unpack_blocks(packed: DataFrame) -> DataFrame:

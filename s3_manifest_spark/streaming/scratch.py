@@ -1,25 +1,112 @@
-"""Scratch-directory policy for the bounded streaming drains.
+"""The drain layer: the one place a bounded streaming maintainer's
+plumbing lives.
 
-Every registered ``stream_*_live`` query starts a Structured Streaming
-job, drains it with ``availableNow``, and stops — its checkpoint,
-spool, and snapshot-delta directories live exactly as long as the
-function call.  For that EPHEMERAL scratch, a RAM-backed filesystem is
-free speed: measured on the sf0.1 drains, pointing the checkpoint at
-``/dev/shm`` instead of a disk-backed ``/tmp`` saves 10-18% wall clock
-(stream_cdc_apply_live 2.72s -> 2.22s, stream_dedup_live 1.32s ->
-1.14s; fsync-heavy commit-log writes dominate the difference).
+Every registered ``stream_*_live`` query replays a fixture as a file
+stream, drains it with ``availableNow`` and stops.  The maintainers
+(``windows``, ``cdc``, ``boilerplate``, ``index_update``,
+``knn_index``, ``heavy_hitters``) keep only their sink body and their
+policy; this module owns the rest:
 
-Production streaming checkpoints are DURABLE state — they must survive
-driver restarts and belong on durable storage (HDFS/S3/EBS); this
+- **Spool identity.**  A stream source watches a directory of files,
+  so a fixture is staged as a spool directory first.
+  :func:`build_spool` names it by a sha256 over every source file's
+  absolute path, mtime_ns and size plus a writer-format version, and
+  per uid: a regenerated fixture, a same-basename tree from another
+  root or a format change gets a fresh spool.  It is built in a
+  private staging directory and renamed into place with its ready
+  marker inside, so a reader never lists half-written files, racing
+  builders keep one winner, and markerless debris self-heals.
+  :func:`frame_spool` stages a DataFrame as :data:`SPOOL_FILES`
+  files; the file count is the micro-batch's scan width, and
+  ``availableNow`` without ``maxFilesPerTrigger`` still takes every
+  file in one micro-batch.  Spools are the only scratch that outlives
+  a call: they are reused across calls and sessions.
+- **Scratch lifetime.**  Everything else lives exactly as long as the
+  call that made it.  The checkpoint is a temporary directory removed
+  when :func:`drain` returns.  An index or snapshot store
+  (:func:`scratch_store`) is removed by the calling thread's next
+  outermost registry call (``registry.defer_cleanup``), because the
+  caller still reads it lazily after the query returns.
+- **Sinks.**  A memory sink (``sink`` is a table name) drains into a
+  driver-memory table and returns it; the query name doubles as the
+  table name, so one lock per name serialises two threads draining
+  the same query — two active queries cannot share a name.  A
+  ``foreachBatch`` sink (``sink`` is a function) runs on the driver
+  per micro-batch and writes executor-side; index stores use one
+  overwritten ``batch<N>`` subdirectory per micro-batch
+  (:func:`write_batch`), so a re-delivered batch replaces its own
+  rows instead of duplicating them.
+- **Conf scoping.**  The shuffle width at query start fixes the number
+  of state stores; ``partitions`` sets it for the drain only
+  (:data:`STREAM_SHUFFLE_PARTITIONS` by default, ``None`` leaves the
+  session's width alone).  Prior values are restored on exit.
+- **No-data guard.**  A drain skips Spark's trailing no-data
+  micro-batch (:data:`DRAIN_NO_DATA_BATCHES`) unless its output
+  depends on it: an append-mode streaming aggregation keeps Spark's
+  default (:func:`_drain_no_data_conf`).
+- **Progress.**  Each drain's ``recentProgress`` is kept on the
+  session under its family name (:func:`_record_progress`).
+
+Scratch location: a RAM-backed filesystem is free speed for scratch
+whose lifetime is the call.  Measured on the sf0.1 drains, a
+checkpoint on ``/dev/shm`` instead of a disk-backed ``/tmp`` saves
+10-18% wall clock (stream_cdc_apply_live 2.72s -> 2.22s,
+stream_dedup_live 1.32s -> 1.14s; fsync-heavy commit-log writes
+dominate the difference).  Production streaming checkpoints are
+DURABLE state and belong on durable storage (HDFS/S3/EBS); this
 policy applies only to drains whose checkpoint lifetime is the call.
-An explicit ``$TMPDIR`` always wins, so operators can redirect scratch
-without touching code.
+An explicit ``$TMPDIR`` always wins.
 """
 
 from __future__ import annotations
 
+import contextlib
+import json
 import os
+import shutil
 import tempfile
+import threading
+from collections.abc import Callable
+
+from pyspark.sql import DataFrame, SparkSession
+
+from s3_manifest_spark.registry import defer_cleanup, session_dict
+
+#: Files per staged spool: the ``availableNow`` micro-batch's scan
+#: width.  A single-file spool ran every drain's addBatch projection
+#: in ONE task before the state shuffle (measured ~0.9 s of serial
+#: addBatch for the sf0.1 listing feed).
+SPOOL_FILES = 8
+
+#: State-store partition count for the fixture drains.  The number of
+#: state stores (and per-micro-batch task waves, checkpoint files,
+#: store commits) is fixed by shuffle.partitions WHEN THE QUERY STARTS;
+#: 32 stores for a bounded fixture drain is pure overhead.  On a real
+#: cluster this is sized to executor count × cores — it's a per-query
+#: knob, which is exactly why it's scoped here and not in session.py.
+#: (Measured on the sf0.1 drains: 8 → 4 stores saves ~25%; 2 is flat.)
+STREAM_SHUFFLE_PARTITIONS = "4"
+
+#: Spark (by default) appends a NO-DATA micro-batch after the last data
+#: batch whenever the watermark advanced, so stateful operators can
+#: evict expired state and append-mode window aggregations can EMIT
+#: their finalized windows.  For these bounded availableNow drains the
+#: extra batch is pure machinery: every registered drain is either a
+#: complete-mode aggregation (full state re-emitted each data batch),
+#: an update-mode stateful map (emits only on state change; no input →
+#: no change), an INNER time-bound stream-stream join (emits on match
+#: during data batches; the no-data batch only evicts buffered state)
+#: or a stateless foreachBatch maintainer — none is the append-mode
+#: *aggregation* shape whose output depends on post-watermark emission.
+#: The no-data batch still pays a full trigger + offset/commit WAL +
+#: state-store commit on every state partition: measured on the sf0.1
+#: fixtures it fires for stream_dedup_live and stream_join_live (2
+#: batches → 1) and costs 26-30% of their wall (interleaved A/B
+#: min-of-6: dedup 1.31→0.97 s, join 2.12→1.49 s; replicated
+#: 1.80→1.01 / 2.44→1.51 in a second window), identical output rows.
+#: On an unbounded production stream the default stays on — this is
+#: drain-scoped, like the partition sizing above.
+DRAIN_NO_DATA_BATCHES = "false"
 
 
 def scratch_base() -> str:
@@ -48,37 +135,11 @@ def build_spool(
     version: str,
     build,
 ) -> str:
-    """Concurrency-safe, content-fingerprinted spool builder — the ONE
-    protocol every staged stream-source directory uses (r13: the
-    hardening was previously copy-pasted per builder and three of five
-    copies had drifted).
-
-    Guarantees:
-
-    - **identity**: the spool path encodes a sha256 over every source
-      file's absolute path, mtime_ns, and size, plus a writer-format
-      ``version`` string — regenerated fixtures, same-basename trees
-      from other roots, and format changes all get fresh spools; the
-      uid in the dirname keeps shared-tmpfs paths per-user.
-    - **atomic appearance**: ``build(staging_dir)`` writes into a
-      builder-private staging directory; the ready marker is created
-      INSIDE staging and the whole directory is ``os.rename``d into
-      place — a reader can never list half-written chunk files.
-    - **race-safe**: a builder that loses the rename keeps the
-      winner's spool (identical content by fingerprint) and removes
-      its own staging dir.
-    - **self-healing**: a markerless directory at the final path
-      (debris from a crashed pre-staging-era build) is cleared —
-      with the marker re-checked immediately before removal, so a
-      spool completed by a concurrent winner between the two checks
-      is kept, not destroyed.
-
-    ``build`` receives the staging directory path and must write the
-    spool's data files into it (e.g. ``df.write.parquet(staging)`` or
-    file copies).  Returns the ready spool path.
-    """
+    """Concurrency-safe, content-fingerprinted spool builder (see the
+    module docstring's spool identity).  ``build`` receives the
+    staging directory path and must write the spool's data files into
+    it.  Returns the ready spool path."""
     import hashlib
-    import shutil
     import uuid
 
     parts = []
@@ -115,3 +176,165 @@ def build_spool(
         shutil.rmtree(staging, ignore_errors=True)
         raise
     return spool
+
+
+def frame_spool(
+    name: str, src: str, frame: Callable[[], DataFrame], version: str
+) -> str:
+    """Stage ``frame()`` — a DataFrame derived from the file ``src`` —
+    as a :data:`SPOOL_FILES`-file parquet spool; returns its path.
+    Bump ``version`` when what ``frame`` stages changes shape, so a
+    stale spool is never reused."""
+    return build_spool(
+        name,
+        [src],
+        f"{version}x{SPOOL_FILES}",
+        lambda staging: frame()
+        .repartition(SPOOL_FILES)
+        .write.mode("overwrite")
+        .parquet(staging),
+    )
+
+
+def open_spool(
+    spark: SparkSession, spool: str, max_files_per_trigger: int | None = None
+) -> DataFrame:
+    """A parquet file stream over ``spool``.  The file source needs an
+    explicit schema, so it is probed with a footer-only batch read.
+    ``max_files_per_trigger`` splits the drain into micro-batches of
+    that many files (unset: one micro-batch)."""
+    schema = spark.read.parquet(spool).schema
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return reader.parquet(spool)
+
+
+def scratch_store(kind: str) -> str:
+    """A fresh store directory for one drain's output, removed at the
+    calling thread's next outermost registry call."""
+    path = tempfile.mkdtemp(prefix=f"smsp-{kind}-", dir=scratch_base())
+    defer_cleanup(lambda: shutil.rmtree(path, ignore_errors=True))
+    return path
+
+
+def write_batch(df: DataFrame, store: str, batch_id: int) -> None:
+    """Write one micro-batch's rows to ``store/batch<batch_id>``,
+    overwriting: foreachBatch may re-deliver a batch id after a
+    failure, and an append would duplicate the batch's rows.  Writes
+    run at full stage width (a ``coalesce`` here would narrow the
+    upstream stages to its task count)."""
+    df.write.mode("overwrite").parquet(os.path.join(store, f"batch{batch_id}"))
+
+
+def read_store(spark: SparkSession, store: str) -> DataFrame:
+    """Every row a drain wrote to ``store`` with :func:`write_batch`."""
+    return spark.read.option("recursiveFileLookup", "true").parquet(store)
+
+
+@contextlib.contextmanager
+def _drain_confs(
+    spark: SparkSession,
+    partitions: str | None = STREAM_SHUFFLE_PARTITIONS,
+    no_data_batches: str = DRAIN_NO_DATA_BATCHES,
+):
+    """Scoped session confs for a bounded availableNow drain: the
+    state-store partition count (``None`` leaves the session's shuffle
+    width alone) and the trailing no-data micro-batch switch.
+    Restores prior values on exit."""
+    pairs = {"spark.sql.streaming.noDataMicroBatches.enabled": no_data_batches}
+    if partitions is not None:
+        pairs["spark.sql.shuffle.partitions"] = partitions
+    old = {k: spark.conf.get(k, None) for k in pairs}
+    for k, v in pairs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, o in old.items():
+            if o is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, o)
+
+
+def _has_streaming_aggregation(df: DataFrame) -> bool:
+    """True when the streaming frame's analyzed logical plan contains
+    an aggregation — the shape whose append-mode output is emitted by
+    watermark advance (possibly only in the trailing no-data batch).
+    Conservative by construction: any Aggregate in the plan counts."""
+    try:
+        return "Aggregate" in df._jdf.queryExecution().analyzed().toString()
+    except Exception:
+        return True  # can't prove it's safe -> keep Spark's default
+
+
+def _drain_no_data_conf(df: DataFrame, mode: str) -> str:
+    """GUARD: DRAIN_NO_DATA_BATCHES='false' is only sound
+    for shapes whose output cannot depend on the trailing no-data
+    batch — complete-mode aggs, update-mode stateful maps, inner
+    time-bound stream-stream joins, stateless sinks (every drain
+    registered today).  An APPEND-MODE STREAMING AGGREGATION emits a
+    finalized window only when the watermark passes it, i.e. often
+    exactly IN the no-data batch — skipping it would silently drop the
+    last windows and fail oracles far from the cause.  Enforce the
+    invariant in code, not a comment: such a drain keeps Spark's
+    default (the no-data batch fires)."""
+    if mode == "append" and _has_streaming_aggregation(df):
+        return "true"
+    return DRAIN_NO_DATA_BATCHES
+
+
+def _record_progress(spark: SparkSession, q, family: str) -> None:
+    """Keep ``q.recentProgress`` as the session's last progress of
+    ``family`` (``spark._smsp_drain_progress``).  Rows carry
+    ``durationMs`` (triggerExecution / addBatch / walCommit /
+    commitOffsets / queryPlanning / getBatch / latestOffset) and
+    ``stateOperators`` commit metrics, so a drain's wall decomposes
+    into data work, commit-log fsyncs, state-store commits and
+    start/stop machinery.  Never raises: observability must not fail a
+    drain (a progress payload Spark changes shape on is dropped, not
+    fatal)."""
+    try:
+        progress = session_dict(spark, "_smsp_drain_progress")
+        progress[family] = [
+            p if isinstance(p, dict) else json.loads(str(p))
+            for p in q.recentProgress
+        ]
+    except Exception:  # pragma: no cover - defensive by contract
+        pass
+
+
+def drain(
+    df: DataFrame,
+    family: str,
+    sink: str | Callable[[DataFrame, int], None],
+    mode: str = "append",
+    partitions: str | None = STREAM_SHUFFLE_PARTITIONS,
+) -> DataFrame | None:
+    """Run one ``availableNow`` drain of the streaming frame ``df`` to
+    completion (module docstring has the contract).
+
+    ``sink`` is a memory-table name — the drained table is returned,
+    resolved under the name's lock so a concurrent drain of the same
+    name cannot swap it — or a ``foreachBatch`` function (returns
+    None).  ``family`` names the drain's progress record."""
+    spark = df.sparkSession
+    memory = isinstance(sink, str)
+    lock = (
+        session_dict(spark, "_smsp_drain_locks").setdefault(sink, threading.Lock())
+        if memory
+        else contextlib.nullcontext()
+    )
+    with lock, _drain_confs(
+        spark, partitions, _drain_no_data_conf(df, mode)
+    ), tempfile.TemporaryDirectory(prefix="smsp-ckpt-", dir=scratch_base()) as ckpt:
+        writer = df.writeStream.outputMode(mode).option("checkpointLocation", ckpt)
+        if memory:
+            writer = writer.format("memory").queryName(sink)
+        else:
+            writer = writer.foreachBatch(sink)
+        q = writer.trigger(availableNow=True).start()
+        q.awaitTermination()
+        _record_progress(spark, q, family)
+        return spark.table(sink) if memory else None

@@ -4,8 +4,8 @@
 streaming, so each operator exists once as a column expression shared
 by (a) a batch query with a DuckDB oracle — the driver-checkable
 surface — and (b) a Structured Streaming path (file source →
-watermark → windowed agg → availableNow drain) proven in tests and the
-rows-only ``stream_tumbling_live`` entry.
+watermark → windowed agg → availableNow drain into a memory table,
+through ``scratch.drain``) graded by the same oracle.
 
 Scale notes: watermark + tumbling window is the canonical bounded-state
 aggregation — state size is (windows in flight × groups), independent
@@ -15,32 +15,43 @@ of input volume.  Session windows keep one open session per key; the
 
 from __future__ import annotations
 
-import contextlib
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from s3_manifest_spark.registry import register
-from s3_manifest_spark.streaming.metrics import record_progress
-from s3_manifest_spark.streaming.scratch import build_spool, scratch_base
+from s3_manifest_spark.streaming.scratch import (
+    STREAM_SHUFFLE_PARTITIONS,
+    build_spool,
+    drain,
+    frame_spool,
+    open_spool,
+)
 from s3_manifest_spark.sources.tables import load_table, normalize_event_ts
 
 
 def events_stream_source(spark: SparkSession, spool: str) -> DataFrame:
     """Streaming reader over an events spool directory, ts normalized.
 
-    The file-stream source requires an explicit schema, and the fixture
-    has shipped with ts as both TIMESTAMP(NANOS) (reads as bigint under
-    nanosAsLong) and timestamp[us] — so probe the on-disk schema with a
-    footer-only batch read and normalize exactly as the batch loader
-    does (sources.tables.normalize_event_ts).
+    The fixture has shipped with ts as both TIMESTAMP(NANOS) (reads as
+    bigint under nanosAsLong) and timestamp[us], so the spool is read
+    under nanosAsLong and normalized exactly as the batch loader does
+    (sources.tables.normalize_event_ts).
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(spool).schema
-    raw = spark.readStream.schema(schema).format("parquet").load(spool)
-    return normalize_event_ts(raw)
+    return normalize_event_ts(open_spool(spark, spool))
+
+
+def _drain(
+    df: DataFrame,
+    kind: str,
+    sf_dir: str,
+    mode: str,
+    partitions: str = STREAM_SHUFFLE_PARTITIONS,
+) -> DataFrame:
+    """Drain ``df`` into the memory table named after ``kind`` and the
+    fixture directory; returns the drained table."""
+    name = f"{kind}_{abs(hash(sf_dir)) % 10_000_000}"
+    return drain(df, kind, name, mode, partitions)
 
 
 def _tumbling_agg(events: DataFrame) -> DataFrame:
@@ -139,120 +150,14 @@ def stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: chunk files in the staged events spool.  A real event feed lands as
-#: many files per window, and the count is also the availableNow
-#: micro-batch's SCAN parallelism: the r13 audit found the old
-#: single-hardlink spool running every drain's addBatch projection +
-#: watermark pass in ONE task before the state shuffle (the same
-#: serial-addBatch defect the cdc listing spool fixed in r12).
-#: availableNow with no maxFilesPerTrigger still takes all chunks in
-#: one micro-batch, so the drains' one-batch determinism contracts
-#: (one update row per key, no late-drop) are unchanged.
-_EVENTS_CHUNKS = 8
-
-
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events parquet (ts normalized as in
-    the batch loader).
-
-    The file-stream source only accepts directories, so the fixture
-    is staged as a multi-chunk spool dir — which is also the
-    production layout: a stream source watches a directory that files
-    land in, it doesn't tail a single file.  Built through the shared
-    spool protocol (scratch.build_spool): content-fingerprinted,
-    staged + atomically renamed, marker-rechecked self-heal.
-    ``_EVENTS_CHUNKS`` chunks = the availableNow micro-batch's scan
-    width (the old single-hardlink spool ran every drain's addBatch
-    pass in ONE task); availableNow with no maxFilesPerTrigger still
-    takes all chunks in one micro-batch, so the drains' one-batch
-    determinism contracts are unchanged.
-    """
+    the batch loader), staged as a multi-file spool
+    (``scratch.frame_spool``): a stream source watches a directory
+    that files land in, it doesn't tail a single file."""
     src = f"{sf_dir}/events.parquet"
-    spool = build_spool(
-        "events",
-        [src],
-        f"v2x{_EVENTS_CHUNKS}",
-        lambda staging: (
-            spark.read.parquet(src)
-            .repartition(_EVENTS_CHUNKS)
-            .write.mode("overwrite")
-            .parquet(staging)
-        ),
-    )
+    spool = frame_spool("events", src, lambda: spark.read.parquet(src), "v2")
     return events_stream_source(spark, spool)
-
-
-#: State-store partition count for the fixture drains.  The number of
-#: state stores (and per-micro-batch task waves, checkpoint files,
-#: store commits) is fixed by shuffle.partitions WHEN THE QUERY STARTS;
-#: 32 stores for a bounded fixture drain is pure overhead.  On a real
-#: cluster this is sized to executor count × cores — it's a per-query
-#: knob, which is exactly why it's scoped here and not in session.py.
-#: (Measured on the sf0.1 drains: 8 → 4 stores saves ~25%; 2 is flat.)
-STREAM_SHUFFLE_PARTITIONS = "4"
-
-
-#: Spark (by default) appends a NO-DATA micro-batch after the last data
-#: batch whenever the watermark advanced, so stateful operators can
-#: evict expired state and append-mode window aggregations can EMIT
-#: their finalized windows.  For these bounded availableNow drains the
-#: extra batch is pure machinery: every registered drain is either a
-#: complete-mode aggregation (full state re-emitted each data batch),
-#: an update-mode stateful map (emits only on state change; no input →
-#: no change), or an INNER time-bound stream-stream join (emits on
-#: match during data batches; the no-data batch only evicts buffered
-#: state) — none is the append-mode *aggregation* shape whose output
-#: depends on post-watermark emission.  The no-data batch still pays a
-#: full trigger + offset/commit WAL + state-store commit on every
-#: state partition: measured on the sf0.1 fixtures it fires for
-#: stream_dedup_live and stream_join_live (2 batches → 1) and costs
-#: 26-30% of their wall (interleaved A/B min-of-6: dedup 1.31→0.97 s,
-#: join 2.12→1.49 s; replicated 1.80→1.01 / 2.44→1.51 in a second
-#: window), identical output rows.  On an unbounded production stream
-#: the default stays on — this is drain-scoped, like the partition
-#: sizing above.
-DRAIN_NO_DATA_BATCHES = "false"
-
-
-@contextlib.contextmanager
-def _drain_confs(
-    spark: SparkSession,
-    partitions: str | None = None,
-    no_data_batches: str = DRAIN_NO_DATA_BATCHES,
-):
-    """Scoped session confs for a bounded availableNow drain: few
-    state-store partitions (fixture-sized state) and no trailing
-    no-data micro-batch (see DRAIN_NO_DATA_BATCHES).  Restores prior
-    values on exit.
-
-    ``partitions`` overrides :data:`STREAM_SHUFFLE_PARTITIONS` for
-    drains whose per-partition work is CPU-dense Python rather than a
-    JVM state-store commit — the state-partition count is also the
-    Python-worker parallelism of an ``applyInPandasWithState`` fold,
-    so those drains want MORE partitions, not fewer (see
-    run_user_state_stream).
-
-    ``no_data_batches``: :func:`_drain` passes Spark's default
-    (``"true"``) for the one shape whose OUTPUT depends on the
-    trailing no-data batch — an append-mode streaming aggregation,
-    which only emits a finalized window once the watermark passes it
-    (see the guard in _drain)."""
-    pairs = {
-        "spark.sql.shuffle.partitions": partitions
-        or STREAM_SHUFFLE_PARTITIONS,
-        "spark.sql.streaming.noDataMicroBatches.enabled": no_data_batches,
-    }
-    old = {k: spark.conf.get(k, None) for k in pairs}
-    for k, v in pairs.items():
-        spark.conf.set(k, v)
-    try:
-        yield
-    finally:
-        for k, o in old.items():
-            if o is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, o)
 
 
 def run_tumbling_stream(
@@ -262,10 +167,7 @@ def run_tumbling_stream(
     an availableNow trigger (deterministic fixture replay, SURVEY.md
     §7.4.7) and return the drained result as a batch DataFrame."""
     stream = read_events_stream(spark, sf_dir).withWatermark("ts", watermark)
-    agg = _tumbling_agg(stream)
-    name = f"tumbling_{abs(hash(sf_dir)) % 10_000_000}"
-    _drain(agg, name, "complete")
-    return spark.table(name)
+    return _drain(_tumbling_agg(stream), "tumbling", sf_dir, "complete")
 
 
 @register("stream_tumbling_live", oracle=_TUMBLING_ORACLE)
@@ -339,7 +241,6 @@ def run_user_state_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = f"user_state_{abs(hash(sf_dir)) % 10_000_000}"
     # The state-partition count IS this drain's Python parallelism:
     # each partition runs ONE applyInPandasWithState worker iterating
     # its keys serially, so the 4-store default tuned for JVM
@@ -349,8 +250,9 @@ def run_user_state_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (min-of-5: 2.94→1.86 / 4.20→3.12 s); 32 added task-wave
     # variance without beating 16.
     cpus = spark.sparkContext.defaultParallelism
-    _drain(profiles, name, "update", partitions=str(min(16, cpus)))
-    return spark.table(name)
+    return _drain(
+        profiles, "user_state", sf_dir, "update", partitions=str(min(16, cpus))
+    )
 
 
 @register(
@@ -434,11 +336,8 @@ def _spool_events(sf_dir: str, copies: int = 1, tag: str = "") -> str:
     """Stage the events fixture into a spool directory (the layout a
     production file-stream source watches).  ``copies>1`` stages the
     same parquet N times — a deterministic duplicated stream for
-    exactly-once/dedup scenarios.  Uses the shared spool protocol
-    (r13: this builder previously had NO content fingerprint, no ready
-    marker, and a non-atomic per-file copy — a concurrent reader could
-    stream a truncated file, and a regenerated fixture silently reused
-    stale bytes)."""
+    exactly-once/dedup scenarios.  Files are hard-linked (copied
+    across filesystems), not rewritten."""
     import os
     import shutil
 
@@ -454,55 +353,6 @@ def _spool_events(sf_dir: str, copies: int = 1, tag: str = "") -> str:
                 shutil.copy(src, dst)
 
     return build_spool(f"events{tag}-x{copies}", [src], "v2", build)
-
-
-def _has_streaming_aggregation(df: DataFrame) -> bool:
-    """True when the streaming frame's analyzed logical plan contains
-    an aggregation — the shape whose append-mode output is emitted by
-    watermark advance (possibly only in the trailing no-data batch).
-    Conservative by construction: any Aggregate in the plan counts."""
-    try:
-        return "Aggregate" in df._jdf.queryExecution().analyzed().toString()
-    except Exception:
-        return True  # can't prove it's safe -> keep Spark's default
-
-
-def _drain_no_data_conf(df: DataFrame, mode: str) -> str:
-    """GUARD (ADVICE r17): DRAIN_NO_DATA_BATCHES='false' is only sound
-    for shapes whose output cannot depend on the trailing no-data
-    batch — complete-mode aggs, update-mode stateful maps, inner
-    time-bound stream-stream joins (every drain registered today).
-    An APPEND-MODE STREAMING AGGREGATION emits a finalized window
-    only when the watermark passes it, i.e. often exactly IN the
-    no-data batch — skipping it would silently drop the last
-    windows and fail oracles far from the cause.  Enforce the
-    invariant in code, not a comment: such a drain keeps Spark's
-    default (the no-data batch fires)."""
-    if mode == "append" and _has_streaming_aggregation(df):
-        return "true"
-    return DRAIN_NO_DATA_BATCHES
-
-
-def _drain(
-    df: DataFrame, name: str, mode: str, partitions: str | None = None
-) -> None:
-    with _drain_confs(
-        df.sparkSession,
-        partitions,
-        no_data_batches=_drain_no_data_conf(df, mode),
-    ), tempfile.TemporaryDirectory(
-        prefix="smsp-ckpt-", dir=scratch_base()
-    ) as ckpt:
-        q = (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        record_progress(q)
 
 
 @register(
@@ -539,9 +389,7 @@ def stream_dedup_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
-    name = f"dedup_{abs(hash(sf_dir)) % 10_000_000}"
-    _drain(deduped, name, "complete")
-    return spark.table(name)
+    return _drain(deduped, "dedup", sf_dir, "complete")
 
 
 #: click→purchase attribution horizon for the interval join
@@ -631,9 +479,7 @@ def stream_join_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("purchase_ts") >= F.col("click_ts"))
         & (F.col("purchase_ts") <= F.col("click_ts") + F.expr(f"INTERVAL {_ATTRIB_WINDOW}")),
     ).select("click_id", "purchase_id", "user_id", "purchase_ts")
-    name = f"ssjoin_{abs(hash(sf_dir)) % 10_000_000}"
-    _drain(joined, name, "append")
-    return spark.table(name)
+    return _drain(joined, "ssjoin", sf_dir, "append")
 
 
 @register("stream_sliding_live", oracle=_SLIDING_ORACLE)
@@ -644,7 +490,4 @@ def stream_sliding_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     state, never 2× input.  Oracle-graded with the batch twin's SQL
     (r8, see stream_tumbling_live for the determinism argument)."""
     stream = read_events_stream(spark, sf_dir).withWatermark("ts", "2 hours")
-    agg = _sliding_agg(stream)
-    name = f"sliding_{abs(hash(sf_dir)) % 10_000_000}"
-    _drain(agg, name, "complete")
-    return spark.table(name)
+    return _drain(_sliding_agg(stream), "sliding", sf_dir, "complete")

@@ -187,7 +187,7 @@ def test_drain_confs_scoped_and_restored(spark):
     context and restore the caller's session values afterwards — the
     no-data default must NOT leak out of a drain into batch queries or
     long-lived streams started later in the session."""
-    from s3_manifest_spark.streaming.windows import (
+    from s3_manifest_spark.streaming.scratch import (
         DRAIN_NO_DATA_BATCHES,
         STREAM_SHUFFLE_PARTITIONS,
         _drain_confs,

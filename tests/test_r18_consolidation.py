@@ -89,7 +89,7 @@ def test_no_data_guard_append_aggregation(spark):
     Spark's default (the trailing no-data batch fires); every shape
     registered today (complete/update aggs, append join without
     aggregation) keeps the skip."""
-    from s3_manifest_spark.streaming.windows import (
+    from s3_manifest_spark.streaming.scratch import (
         DRAIN_NO_DATA_BATCHES,
         _drain_no_data_conf,
     )

@@ -13,6 +13,7 @@ from s3_manifest_spark.sources.fake_s3 import (
 from s3_manifest_spark.sources.s3_listing import (
     MAX_IN_FLIGHT,
     _list_shards,
+    _pages,
     discover_shards,
     list_objects_df,
     manifest_from_s3,
@@ -121,6 +122,88 @@ def test_retry_gives_up_then_succeeds(spark):
     c = Flaky(synth_bucket())
     shards, direct = discover_shards(c, "fake-bucket", "", target_shards=5)
     assert len(shards) == 7 and len(direct) == 20
+
+
+def _client_error(status: int, code: str):
+    from botocore.exceptions import ClientError
+
+    return ClientError(
+        {
+            "Error": {"Code": code, "Message": code},
+            "ResponseMetadata": {"HTTPStatusCode": status},
+        },
+        "ListObjectsV2",
+    )
+
+
+@pytest.mark.parametrize(
+    "status,code", [(403, "AccessDenied"), (404, "NoSuchBucket")]
+)
+def test_retry_fails_fast_on_fatal_error_response(status, code):
+    """A 4xx error response that is not throttling cannot succeed on a
+    retry: it propagates after exactly one call, with no backoff."""
+    from botocore.exceptions import ClientError
+
+    class Denied(FakeS3Client):
+        calls = 0
+
+        def list_objects_v2(self, **kw):
+            self.calls += 1
+            raise _client_error(status, code)
+
+    c = Denied(synth_bucket())
+    with pytest.raises(ClientError) as err:
+        list(_pages(c, Bucket="fake-bucket"))
+    assert c.calls == 1
+    assert err.value.response["Error"]["Code"] == code
+
+
+@pytest.mark.parametrize(
+    "status,code", [(503, "SlowDown"), (400, "ThrottlingException")]
+)
+def test_retry_rides_out_throttling_to_the_fault_free_manifest(
+    spark, status, code
+):
+    """Every client answers its first two requests with a throttling
+    error, then normally: the manifest equals a fault-free run's."""
+    import functools
+    import threading
+
+    from botocore.exceptions import ClientError
+
+    class ThrottledTwice(FakeS3Client):
+        def __init__(self, buckets):
+            super().__init__(buckets)
+            self.lock = threading.Lock()
+            self.calls = 0
+
+        def list_objects_v2(self, **kw):
+            with self.lock:
+                self.calls += 1
+                throttled = self.calls <= 2
+            if throttled:
+                # built here, not by _client_error: executors unpickle
+                # this class by value and cannot import the test module
+                raise ClientError(
+                    {
+                        "Error": {"Code": code, "Message": code},
+                        "ResponseMetadata": {"HTTPStatusCode": status},
+                    },
+                    "ListObjectsV2",
+                )
+            return super().list_objects_v2(**kw)
+
+    c = ThrottledTwice(synth_bucket())
+    list(_pages(c, Bucket="fake-bucket"))
+    assert c.calls > 2
+
+    def manifest(factory):
+        df = manifest_from_s3(spark, "s3://fake-bucket/", client_factory=factory)
+        return sorted(map(tuple, df.collect()))
+
+    throttled = manifest(functools.partial(ThrottledTwice, synth_bucket()))
+    assert throttled == manifest(fake_client_factory)
+    assert len(throttled) == len(ALL_KEYS)
 
 
 class _StuckPaging(FakeS3Client):

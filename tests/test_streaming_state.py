@@ -434,6 +434,7 @@ def test_drain_index_feed_multi_batch_equals_batch_index(spark):
 
     from s3_manifest_spark.operators.dedup import _minhash_index
     from s3_manifest_spark.streaming import index_update as iu
+    from s3_manifest_spark.streaming.scratch import read_store
 
     sf = "/root/testdata/sf0.001"
     spool = iu._spool_old_docs(spark, sf)
@@ -447,10 +448,10 @@ def test_drain_index_feed_multi_batch_equals_batch_index(spark):
     bcols = ["doc_old", "n_old", "band", "bh"]
     scols = ["doc_old", "fp", "n_old"]
     pd.testing.assert_frame_equal(
-        norm(iu.read_index_store(spark, bdir), bcols), norm(batch_b, bcols)
+        norm(read_store(spark, bdir), bcols), norm(batch_b, bcols)
     )
     pd.testing.assert_frame_equal(
-        norm(iu.read_index_store(spark, sdir), scols), norm(batch_s, scols)
+        norm(read_store(spark, sdir), scols), norm(batch_s, scols)
     )
 
 
@@ -463,6 +464,7 @@ def test_drain_index_feed_sink_is_idempotent_under_redelivery(spark):
     import pandas as pd
 
     from s3_manifest_spark.streaming import index_update as iu
+    from s3_manifest_spark.streaming.scratch import read_store
 
     sf = "/root/testdata/sf0.001"
     spool = iu._spool_old_docs(spark, sf)
@@ -474,7 +476,7 @@ def test_drain_index_feed_sink_is_idempotent_under_redelivery(spark):
         return pdf.sort_values(cols).reset_index(drop=True)
 
     scols = ["doc_old", "fp", "n_old"]
-    before = norm(iu.read_index_store(spark, sdir), scols)
+    before = norm(read_store(spark, sdir), scols)
     # simulate foreachBatch re-delivering batch 0 (the whole spool
     # drained in one availableNow trigger)
     import os
@@ -483,7 +485,7 @@ def test_drain_index_feed_sink_is_idempotent_under_redelivery(spark):
     shingles.coalesce(4).write.mode("overwrite").parquet(
         os.path.join(sdir, "batch0")
     )
-    after = norm(iu.read_index_store(spark, sdir), scols)
+    after = norm(read_store(spark, sdir), scols)
     pd.testing.assert_frame_equal(before, after)
 
 
@@ -554,7 +556,7 @@ def test_streamed_boilerplate_equals_batch_report(spark):
     assert len(live) == len(batch)
 
     # forced multi-batch arrival: one file per trigger
-    spool = bp._spool_docs(spark, sf)
+    spool = bp.documents_spool(spark, sf)
     store = bp.drain_chunk_feed(spark, spool, max_files_per_trigger=1)
     chunks = (
         spark.read.option("recursiveFileLookup", "true")
@@ -564,3 +566,62 @@ def test_streamed_boilerplate_equals_batch_report(spark):
     docs = load_table(spark, sf, "documents").select("doc_id")
     multi = boilerplate_report(docs, chunks).toPandas()
     pd.testing.assert_frame_equal(norm(multi), norm(batch))
+
+
+def test_concurrent_first_calls_of_one_memory_drain(spark):
+    """Two threads making the first call of one memory-sink live query
+    on one session both get the drained table.  The query name is the
+    memory table's name, and two active queries cannot share a name."""
+    import threading
+
+    import __spark_entry__ as entrymod
+    from s3_manifest_spark.registry import session_dict
+
+    q = entrymod.queries()
+    want = q["stream_sliding"](spark, SF).count()
+    q["stream_sliding_live"](spark, SF).count()  # warm: the race is then tight
+    for _ in range(3):
+        session_dict(spark, "_smsp_plan_cache").clear()  # both calls drain
+        barrier = threading.Barrier(2, timeout=60)
+        counts, errors = [None, None], []
+
+        def call(i):
+            barrier.wait()
+            try:
+                counts[i] = q["stream_sliding_live"](spark, SF).count()
+            except Exception as e:  # noqa: BLE001 - reported below
+                errors.append(e)
+
+        threads = [threading.Thread(target=call, args=(i,)) for i in range(2)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+        assert not any(t.is_alive() for t in threads), "a drain hung"
+        assert not errors, errors
+        assert counts == [want, want] and want > 0
+
+
+def test_live_drains_leave_only_ready_spools(spark, tmp_path, monkeypatch):
+    """Every live drain ends with nothing left in scratch but ready
+    spools: no checkpoint, no index or snapshot store and no spool
+    staging survive the thread's next registry call."""
+    import os
+
+    from s3_manifest_spark.registry import QUERIES, session_dict
+
+    monkeypatch.setenv("TMPDIR", str(tmp_path))
+    session_dict(spark, "_smsp_plan_cache").clear()  # every call drains
+    live = sorted(
+        n for n in QUERIES if n.startswith("stream_") and n.endswith("_live")
+    )
+    assert len(live) >= 7
+    for name in live:
+        assert QUERIES[name](spark, SF).count() > 0, name
+    QUERIES["stream_tumbling"](spark, SF)  # sweeps this thread's scope
+    left = sorted(os.listdir(tmp_path))
+    assert left, "the drains staged no spool under $TMPDIR"
+    assert not [d for d in left if "__" in d or "ckpt" in d], left
+    assert all(
+        os.path.exists(os.path.join(tmp_path, d, "_SPOOL_READY")) for d in left
+    ), left
