@@ -6,6 +6,18 @@ Scale design: exact dedup and Jaccard verification shuffle on hashes
 path, because the shuffle volume drops from all-pairs-sharing-a-shingle
 to (docs × bands).  Everything is built-in expressions — the "hash
 functions" are Spark's codegen'd xxhash64/murmur3, not Python.
+
+The shingle family (n-gram Jaccard, containment, MinHash-LSH, the
+incremental index and its streaming maintainer) shares one copy of
+each step it repeats: :func:`_minhash_bands` (seeded min-signature,
+band hash, band explode), :func:`_bucket_pairs` (in-group pair
+expansion), :func:`_shared_count` (the ``inter`` aggregate),
+:func:`_verify` (candidate-bounded shared-fingerprint count),
+:func:`_jaccard` (threshold filter and round) and :func:`_cap_binds`
+(whether the stop-shingle cap can drop anything).  The batch index
+and the streamed index band through the same :func:`_minhash_bands`,
+which reads ``MINHASH_K`` and ``LSH_BANDS`` at call time — so the two
+indexes agree by construction, also under a patched constant.
 """
 
 from __future__ import annotations
@@ -25,6 +37,7 @@ from s3_manifest_spark.sources.tables import load_table, parquet_row_count
 JACCARD_THRESHOLD = 0.5
 MINHASH_K = 16  # signature length
 LSH_BANDS = 4   # 4 bands × 4 rows: P(candidate) ≈ 1-(1-j^4)^4
+MINHASH_MAX_DF = 10_000  # stop-shingle guard (no-op at fixture scale)
 
 #: Intra-group ordered-pair expansion over a sorted array column —
 #: turns groupBy(key).collect_list(...) output into (a, b) pairs with
@@ -232,6 +245,120 @@ def _batch_doc_fps(pdf):
     return wdoc[keep], fps[keep]
 
 
+# ---------------------------------------------------------------------------
+# Shingle-family steps: one copy each (see the module docstring)
+# ---------------------------------------------------------------------------
+
+#: (a, na, b, nb) column names of a pair relation: the two doc ids and
+#: their per-doc distinct-shingle counts.
+_AB = ("doc_a", "na", "doc_b", "nb")
+
+
+def _cap_binds(sf_dir: str) -> bool:
+    """Whether the stop-shingle cap (:data:`MINHASH_MAX_DF`) can drop
+    anything from ``sf_dir``'s corpus.  A shingle's document frequency
+    never exceeds the corpus document count, so when the cap covers
+    the whole corpus it is provably inert and its shuffle is skipped
+    (the parquet row count is a metadata read)."""
+    return MINHASH_MAX_DF < parquet_row_count(f"{sf_dir}/documents.parquet")
+
+
+def _minhash_bands(sh: DataFrame, id_col: str, n_col: str) -> DataFrame:
+    """``(id_col, n_col, band, bh)``: the LSH band rows of every doc in
+    the fingerprint relation ``sh`` (``id_col``, ``fp``, ``n_col``).
+
+    The signature is ``MINHASH_K`` seeded xxhash64 min-hashes (one
+    aggregation, map-side combinable); each of ``LSH_BANDS`` bands
+    hashes its ``MINHASH_K // LSH_BANDS`` signature rows with murmur3,
+    and the bands explode to one row each.  Both constants are read
+    at call time, so every index (batch query, session index,
+    streamed index) bands identically."""
+    sig = sh.groupBy(id_col).agg(
+        F.first(n_col).alias(n_col),
+        *[
+            F.min(F.xxhash64(F.lit(i), F.col("fp"))).alias(f"h{i}")
+            for i in range(MINHASH_K)
+        ],
+    )
+    rows_per_band = MINHASH_K // LSH_BANDS
+    band_cols = [
+        F.struct(
+            F.lit(b).alias("band"),
+            F.hash(
+                *[F.col(f"h{b * rows_per_band + r}") for r in range(rows_per_band)]
+            ).alias("bh"),
+        )
+        for b in range(LSH_BANDS)
+    ]
+    return sig.select(
+        id_col, n_col, F.explode(F.array(*band_cols)).alias("bb")
+    ).select(id_col, n_col, F.col("bb.band").alias("band"), F.col("bb.bh").alias("bh"))
+
+
+def _bucket_pairs(rel: DataFrame, keys: list[str]) -> DataFrame:
+    """``(doc_a, na, doc_b, nb)`` for every ordered pair ``a < b`` of
+    ``(doc_id, n)`` rows sharing a ``keys`` group: one keyed exchange,
+    then the in-group expansion (``_PAIRS``) instead of a self-join.
+    A pair sharing several groups appears once per group."""
+    grp = (
+        rel.groupBy(*keys)
+        .agg(F.sort_array(F.collect_list(F.struct("doc_id", "n"))).alias("ds"))
+        .filter(F.size("ds") >= 2)
+    )
+    return grp.select(F.explode(F.expr(_PAIRS.format(c="ds"))).alias("p")).select(
+        F.col("p.a.doc_id").alias("doc_a"),
+        F.col("p.a.n").alias("na"),
+        F.col("p.b.doc_id").alias("doc_b"),
+        F.col("p.b.n").alias("nb"),
+    )
+
+
+def _shared_count(pairs: DataFrame, cols: tuple = _AB) -> DataFrame:
+    """``(a, b, inter, na, nb)`` from ``pairs``, which holds one row per
+    fingerprint a pair shares: one row per pair, ``inter`` the count."""
+    a, na, b, nb = cols
+    return pairs.groupBy(a, b).agg(
+        F.count(F.lit(1)).alias("inter"),
+        F.first(na).alias(na),  # constant per a
+        F.first(nb).alias(nb),
+    )
+
+
+def _verify(
+    sh_a: DataFrame, sh_b: DataFrame, candidates: DataFrame, cols: tuple = _AB
+) -> DataFrame:
+    """:func:`_shared_count` of the ``candidates`` pairs ``(a, na, b,
+    nb)`` over the fingerprint relations ``sh_a`` ``(a, fp)`` and
+    ``sh_b`` ``(b, fp)``, touching candidate docs only.
+
+    The broadcast candidates attach to the ``a`` side first, so
+    non-candidate ``a`` rows drop at that broadcast hash join and
+    shared-fp rows materialize only for candidate PAIRS, never for the
+    cross of shared-fp docs.  The ``b`` side is broadcast-semi-filtered
+    to candidate ids before the ``(b, fp)`` shuffle join: without it the
+    join shuffles the entire ``b`` fingerprint relation to verify a
+    candidate set that is typically a tiny fraction of the corpus."""
+    a, _, b, _ = cols
+    sb = sh_b.select(b, "fp").join(
+        F.broadcast(candidates.select(b).distinct()), b
+    )
+    return _shared_count(
+        sh_a.select(a, "fp").join(F.broadcast(candidates), a).join(sb, [b, "fp"]),
+        cols,
+    )
+
+
+def _jaccard(inter: DataFrame, cols: tuple = _AB) -> DataFrame:
+    """``(a, b, jaccard)`` rows of a :func:`_shared_count` relation with
+    Jaccard ``inter / (na + nb - inter)`` ≥ :data:`JACCARD_THRESHOLD`,
+    rounded to 4 dp."""
+    a, na, b, nb = cols
+    jac = F.col("inter") / (F.col(na) + F.col(nb) - F.col("inter"))
+    return inter.filter(jac >= JACCARD_THRESHOLD).select(
+        a, b, F.round(jac, 4).alias("jaccard")
+    )
+
+
 @register(
     "dedup_exact",
     oracle="""
@@ -323,32 +450,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # posting relation from the session shingle index (_shingles_cached
     # — one corpus kernel pass per session, not per call)
     sh = _shingles_cached(spark, sf_dir)
-    grp = (
-        sh.groupBy("fp")
-        .agg(F.sort_array(F.collect_list(F.struct("doc_id", "n"))).alias("ds"))
-        .filter(F.size("ds") >= 2)
-    )
-    pairs = grp.select(
-        F.explode(F.expr(_PAIRS.format(c="ds"))).alias("p")
-    ).select(
-        F.col("p.a.doc_id").alias("doc_a"),
-        F.col("p.a.n").alias("na"),
-        F.col("p.b.doc_id").alias("doc_b"),
-        F.col("p.b.n").alias("nb"),
-    )
-    inter = pairs.groupBy("doc_a", "doc_b").agg(
-        F.count(F.lit(1)).alias("inter"),
-        F.first("na").alias("na"),  # constant per doc_a
-        F.first("nb").alias("nb"),
-    )
-    jac = F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter"))
-    return (
-        inter.filter(jac >= JACCARD_THRESHOLD)
-        .select("doc_a", "doc_b", F.round(jac, 4).alias("jaccard"))
-    )
-
-
-MINHASH_MAX_DF = 10_000  # stop-shingle guard (no-op at fixture scale)
+    return _jaccard(_shared_count(_bucket_pairs(sh, ["fp"])))
 
 
 @register("dedup_minhash_lsh", oracle=_JACCARD_PAIRS_VALUED_SQL)
@@ -387,84 +489,34 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Shingles travel as 64-bit fingerprints (shingle_fingerprints):
     # min-hashing and intersection counting only need equality, and
     # hashing/shuffling longs beats ~20-byte strings throughout.
-    # Persisted: referenced by the signature build AND both sides of
-    # the verification join.  The document-frequency cap runs first so
+    # Referenced by the signature build AND both sides of the
+    # verification join.  The document-frequency cap runs first so
     # stop-shingles never reach the bucket state or the pair expansion
-    # — but document frequency can never exceed the corpus document
-    # count, so when max_df covers the whole corpus the cap is provably
-    # inert and its shuffle is skipped outright (the parquet row count
-    # is a metadata read).
-    raw_sh = _shingles_cached(spark, sf_dir)
-    n_docs = parquet_row_count(f"{sf_dir}/documents.parquet")
-    if MINHASH_MAX_DF < n_docs:
-        # the cap's keyed shuffle output is per-call state again
-        sh = track_persist(
-            cap_document_frequency(raw_sh, MINHASH_MAX_DF, col="fp")
-        )
-    else:
-        # cap provably inert: the session checkpoint is already
-        # materialized — every consumer below reads its blocks directly
-        sh = raw_sh
-    sig = sh.groupBy("doc_id").agg(
-        F.first("n").alias("n"),
-        *[
-            F.min(F.xxhash64(F.lit(i), F.col("fp"))).alias(f"h{i}")
-            for i in range(MINHASH_K)
-        ],
-    )
-    rows_per_band = MINHASH_K // LSH_BANDS
-    band_cols = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.hash(*[F.col(f"h{b * rows_per_band + r}") for r in range(rows_per_band)]).alias("bh"),
-        )
-        for b in range(LSH_BANDS)
-    ]
-    buckets = sig.select(
-        "doc_id", "n", F.explode(F.array(*band_cols)).alias("bb")
-    ).select("doc_id", "n", F.col("bb.band").alias("band"), F.col("bb.bh").alias("bh"))
+    # (skipped outright where it is provably inert, see _cap_binds).
+    sh = _shingles_cached(spark, sf_dir)
+    if _cap_binds(sf_dir):
+        # the cap's keyed shuffle output is per-call state again;
+        # uncapped, the session checkpoint is already materialized and
+        # every consumer below reads its blocks directly
+        sh = track_persist(cap_document_frequency(sh, MINHASH_MAX_DF, col="fp"))
+    buckets = _minhash_bands(sh, "doc_id", "n")
 
     # Same-bucket ordered pairs via intra-group expansion (no self-join),
     # deduped across bands.  Bucket shuffle volume is O(docs × bands).
-    grouped = (
-        buckets.groupBy("band", "bh")
-        .agg(F.sort_array(F.collect_list(F.struct("doc_id", "n"))).alias("ds"))
-        .filter(F.size("ds") >= 2)
-    )
-    candidates = (
-        grouped.select(F.explode(F.expr(_PAIRS.format(c="ds"))).alias("p"))
-        .select(
-            F.col("p.a.doc_id").alias("doc_a"),
-            F.col("p.a.n").alias("na"),
-            F.col("p.b.doc_id").alias("doc_b"),
-            F.col("p.b.n").alias("nb"),
-        )
-        .distinct()
-    )
+    candidates = _bucket_pairs(buckets, ["band", "bh"]).distinct()
 
     # Exact verification on the (small) candidate set only: broadcast the
-    # candidates against the persisted shingle fingerprints, count
-    # shared fingerprints.  BOTH sides are broadcast-semi-filtered to
-    # candidate docs BEFORE the (doc, fp) shuffle join — without the
-    # doc_b prefilter the join shuffled the ENTIRE fingerprint
-    # relation to verify a candidate set that is typically a tiny
-    # fraction of the corpus (candidate volume is what LSH bucketing
-    # exists to bound).
+    # candidates against the shingle fingerprints and count shared
+    # fingerprints.  The doc_a side drops non-candidates at the
+    # broadcast attach join; the doc_b side is broadcast-semi-filtered
+    # to candidate docs BEFORE the (doc_b, fp) shuffle join — without
+    # that prefilter the join shuffled the ENTIRE fingerprint relation
+    # to verify a candidate set that is typically a tiny fraction of
+    # the corpus (candidate volume is what LSH bucketing exists to
+    # bound).
     sa = sh.select(F.col("doc_id").alias("doc_a"), "fp")
-    sb = sh.select(F.col("doc_id").alias("doc_b"), "fp").join(
-        F.broadcast(candidates.select("doc_b").distinct()), "doc_b"
-    )
-    inter = (
-        sa.join(F.broadcast(candidates), "doc_a")
-        .join(sb, ["doc_b", "fp"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("inter"), F.first("na").alias("na"), F.first("nb").alias("nb"))
-    )
-    jac = F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter"))
-    return (
-        inter.filter(jac >= JACCARD_THRESHOLD)
-        .select("doc_a", "doc_b", F.round(jac, 4).alias("jaccard"))
-    )
+    sb = sh.select(F.col("doc_id").alias("doc_b"), "fp")
+    return _jaccard(_verify(sa, sb, candidates))
 
 
 EMBED_DUP_THRESHOLD = 0.4
@@ -1997,14 +2049,15 @@ def _minhash_index(spark: SparkSession, sf_dir: str):
     - ``shingles`` — (doc_old, fp, n_old): the fingerprint relation
       the exact-verify step filters to candidates.
 
-    Built ONCE per (session, sf_dir) with the same seeded signature
-    pipeline as ``dedup_minhash_lsh`` (identical constants, so the
-    index is exactly the batch query's bucket state restricted to the
-    old snapshot).  Cached via the session model cache — released by
-    ``registry.clear_model_cache`` (which unpersists both frames); at
-    production scale this state lives in a bucketed table / state
-    store and is UPDATED by the listing change feed (streaming/cdc.py
-    maintains the manifest twin of that feed), not rebuilt.
+    Built ONCE per (session, sf_dir) through :func:`_minhash_bands`,
+    the banding ``dedup_minhash_lsh`` and the streaming maintainer use
+    too, so the index is exactly the batch query's bucket state
+    restricted to the old snapshot.  Cached via the session model
+    cache — released by ``registry.clear_model_cache`` (which
+    unpersists both frames); at production scale this state lives in
+    a bucketed table / state store and is UPDATED by the listing
+    change feed (streaming/cdc.py maintains the manifest twin of that
+    feed), not rebuilt.
     """
     return cached(
         spark,
@@ -2022,8 +2075,7 @@ def _build_minhash_index(spark: SparkSession, sf_dir: str):
     raw_sh = _shingles_cached(spark, sf_dir).filter(
         F.col("doc_id") % SNAPSHOT_MOD != 0
     )
-    n_docs = parquet_row_count(f"{sf_dir}/documents.parquet")
-    if MINHASH_MAX_DF < n_docs:
+    if _cap_binds(sf_dir):
         raw_sh = cap_document_frequency(raw_sh, MINHASH_MAX_DF, col="fp")
     # localCheckpoint, not persist: the batch minhash/jaccard queries
     # track_persist plan-equal shingle relations, and the CacheManager
@@ -2034,33 +2086,7 @@ def _build_minhash_index(spark: SparkSession, sf_dir: str):
     shingles = raw_sh.select(
         F.col("doc_id").alias("doc_old"), "fp", F.col("n").alias("n_old")
     ).localCheckpoint(eager=True)
-    sig = shingles.groupBy("doc_old").agg(
-        F.first("n_old").alias("n_old"),
-        *[
-            F.min(F.xxhash64(F.lit(i), F.col("fp"))).alias(f"h{i}")
-            for i in range(MINHASH_K)
-        ],
-    )
-    rows_per_band = MINHASH_K // LSH_BANDS
-    band_cols = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.hash(
-                *[F.col(f"h{b * rows_per_band + r}") for r in range(rows_per_band)]
-            ).alias("bh"),
-        )
-        for b in range(LSH_BANDS)
-    ]
-    buckets = (
-        sig.select("doc_old", "n_old", F.explode(F.array(*band_cols)).alias("bb"))
-        .select(
-            "doc_old",
-            "n_old",
-            F.col("bb.band").alias("band"),
-            F.col("bb.bh").alias("bh"),
-        )
-        .localCheckpoint(eager=True)
-    )
+    buckets = _minhash_bands(shingles, "doc_old", "n_old").localCheckpoint(eager=True)
     return buckets, shingles
 
 
@@ -2127,45 +2153,22 @@ def probe_incremental(
     """The incremental probe against an EXPLICIT index state —
     ``dedup_incremental``'s body, shared with the streaming index
     maintainer (streaming/index_update.py), which answers the same
-    question from an index it built by draining a document feed."""
+    question from an index it built by draining a document feed.  The
+    incoming batch bands through :func:`_minhash_bands`, the one
+    banding every index uses, so its band rows meet the index's."""
     # incoming-batch split = row filter of the session shingle index
     # (see _minhash_index: per-doc counts are per-doc properties)
     raw_new = _shingles_cached(spark, sf_dir).filter(
         F.col("doc_id") % SNAPSHOT_MOD == 0
     )
-    n_docs = parquet_row_count(f"{sf_dir}/documents.parquet")
-    if MINHASH_MAX_DF < n_docs:
+    if _cap_binds(sf_dir):
         raw_new = cap_document_frequency(raw_new, MINHASH_MAX_DF, col="fp")
     sh_new = track_persist(
         raw_new.select(
             F.col("doc_id").alias("doc_new"), "fp", F.col("n").alias("n_new")
         )
     )
-    sig_new = sh_new.groupBy("doc_new").agg(
-        F.first("n_new").alias("n_new"),
-        *[
-            F.min(F.xxhash64(F.lit(i), F.col("fp"))).alias(f"h{i}")
-            for i in range(MINHASH_K)
-        ],
-    )
-    rows_per_band = MINHASH_K // LSH_BANDS
-    band_cols = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.hash(
-                *[F.col(f"h{b * rows_per_band + r}") for r in range(rows_per_band)]
-            ).alias("bh"),
-        )
-        for b in range(LSH_BANDS)
-    ]
-    new_bands = sig_new.select(
-        "doc_new", "n_new", F.explode(F.array(*band_cols)).alias("bb")
-    ).select(
-        "doc_new",
-        "n_new",
-        F.col("bb.band").alias("band"),
-        F.col("bb.bh").alias("bh"),
-    )
+    new_bands = _minhash_bands(sh_new, "doc_new", "n_new")
     # persisted: the candidate relation feeds the pair attach and the
     # old-side prefilter — without the persist each broadcast re-runs
     # the bucket join + distinct.  (r16: an eager-localCheckpoint
@@ -2177,35 +2180,16 @@ def probe_incremental(
         .select("doc_new", "n_new", "doc_old", "n_old")
         .distinct()
     )
-    # exact verify on candidate docs only.  The NEW side needs no
-    # prefilter (r16): the attach join below is itself a broadcast
-    # hash join on doc_new, so non-candidate rows drop there — a
-    # semi-filter first just re-broadcasts the same relation and adds
-    # a second pass over sh_new for zero row reduction at the attach.
-    # The OLD side's prefilter is load-bearing: it bounds the corpus
-    # side of the (doc_old, fp) join to candidate docs.
-    sa = sh_new.select("doc_new", "fp")
-    sb = sh_old.join(
-        F.broadcast(candidates.select("doc_old").distinct()), "doc_old"
-    ).select("doc_old", "fp")
-    # attach candidate pairs to the new side FIRST, then join the old
-    # fingerprints by (doc_old, fp): shared-fp rows materialize only
-    # for candidate PAIRS, never for the cross of shared-fp docs
-    # (same shape as dedup_minhash_lsh's verify).
-    inter = (
-        sa.join(F.broadcast(candidates), "doc_new")
-        .join(sb, ["doc_old", "fp"])
-        .groupBy("doc_new", "doc_old")
-        .agg(
-            F.count(F.lit(1)).alias("inter"),
-            F.first("n_new").alias("n_new"),
-            F.first("n_old").alias("n_old"),
-        )
-    )
-    jac = F.col("inter") / (F.col("n_new") + F.col("n_old") - F.col("inter"))
-    return inter.filter(jac >= JACCARD_THRESHOLD).select(
-        "doc_new", "doc_old", F.round(jac, 4).alias("jaccard")
-    )
+    # exact verify on candidate docs only (_verify, the same shape as
+    # dedup_minhash_lsh's).  The NEW side needs no prefilter (r16): the
+    # attach join is itself a broadcast hash join on doc_new, so
+    # non-candidate rows drop there — a semi-filter first just
+    # re-broadcasts the same relation and adds a second pass over
+    # sh_new for zero row reduction at the attach.  The OLD side's
+    # prefilter is load-bearing: it bounds the corpus side of the
+    # (doc_old, fp) join to candidate docs.
+    cols = ("doc_new", "n_new", "doc_old", "n_old")
+    return _jaccard(_verify(sh_new, sh_old, candidates, cols), cols)
 
 
 @register(
@@ -2499,24 +2483,7 @@ def doc_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     prefer_parallel_exchanges(spark)
     sh = _shingles_cached(spark, sf_dir)
-    grp = (
-        sh.groupBy("fp")
-        .agg(F.sort_array(F.collect_list(F.struct("doc_id", "n"))).alias("ds"))
-        .filter(F.size("ds") >= 2)
-    )
-    pairs = grp.select(
-        F.explode(F.expr(_PAIRS.format(c="ds"))).alias("p")
-    ).select(
-        F.col("p.a.doc_id").alias("doc_a"),
-        F.col("p.a.n").alias("na"),
-        F.col("p.b.doc_id").alias("doc_b"),
-        F.col("p.b.n").alias("nb"),
-    )
-    inter = pairs.groupBy("doc_a", "doc_b").agg(
-        F.count(F.lit(1)).alias("inter"),
-        F.first("na").alias("na"),
-        F.first("nb").alias("nb"),
-    )
+    inter = _shared_count(_bucket_pairs(sh, ["fp"]))
     # fan the unordered pair out to its qualifying directions without
     # another exchange: build both candidate rows, explode, filter
     both = inter.select(

@@ -15,8 +15,9 @@ module is that maintainer as a Structured Streaming drain:
   arrival path (one file per trigger) is pinned equal to the batch
   index by tests/test_streaming_state.py — per-doc closure makes
   batch boundaries invisible to index content;
-- ``foreachBatch`` computes each batch's band rows + fingerprints with
-  THE SAME seeded pipeline the batch index uses and writes them to
+- ``foreachBatch`` computes each batch's band rows + fingerprints
+  through ``dedup._minhash_bands``, THE SAME function the batch index
+  bands through (constants read at call time), and writes them to
   the index stores (executor→parquet, no driver hop; overwrite-by-
   batch — the drain contract is in ``streaming/scratch.py``).
   Per-document closure makes this sound: a document's signature
@@ -31,7 +32,8 @@ module is that maintainer as a Structured Streaming drain:
 Stop-shingle cap: the global document-frequency cap cannot be
 evaluated per micro-batch (df is a corpus property).  At every fixture
 scale the cap is provably inert (``MINHASH_MAX_DF`` ≥ corpus docs —
-same metadata guard the batch paths use); a corpus where it binds
+``dedup._cap_binds``, the metadata guard the batch paths use); a
+corpus where it binds
 needs the cap maintained as STREAMING STATE (a keyed df counter, the
 cdc.py pattern) — the maintainer fails loud rather than silently
 diverging from the batch index.
@@ -52,15 +54,14 @@ from pyspark.sql import functions as F
 
 from s3_manifest_spark.operators.dedup import (
     INCREMENTAL_ORACLE_SQL,
-    LSH_BANDS,
-    MINHASH_K,
-    MINHASH_MAX_DF,
     SNAPSHOT_MOD,
+    _cap_binds,
+    _minhash_bands,
     probe_incremental,
     shingle_fingerprints,
 )
 from s3_manifest_spark.registry import register
-from s3_manifest_spark.sources.tables import load_table, parquet_row_count
+from s3_manifest_spark.sources.tables import load_table
 from s3_manifest_spark.streaming.scratch import (
     drain,
     frame_spool,
@@ -72,46 +73,15 @@ from s3_manifest_spark.streaming.scratch import (
 
 
 def _index_rows(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(buckets, shingles) for a document batch — the dedup module's
-    seeded pipeline verbatim: xxhash64 min-signatures, murmur3 band
-    hashes.  Pure projection + one per-batch aggregation; per-doc
-    closure (a doc's rows never span batches) keeps it exact."""
-    sh = shingle_fingerprints(docs, with_count=True)
-    shingles = sh.select(
+    """(buckets, shingles) for a document batch, banded by the dedup
+    module's :func:`~s3_manifest_spark.operators.dedup._minhash_bands`
+    — the one banding the batch index uses too.  Pure projection + one
+    per-batch aggregation; per-doc closure (a doc's rows never span
+    batches) keeps it exact."""
+    shingles = shingle_fingerprints(docs, with_count=True).select(
         F.col("doc_id").alias("doc_old"), "fp", F.col("n").alias("n_old")
     )
-    sig = shingles.groupBy("doc_old").agg(
-        F.first("n_old").alias("n_old"),
-        *[
-            F.min(F.xxhash64(F.lit(i), F.col("fp"))).alias(f"h{i}")
-            for i in range(MINHASH_K)
-        ],
-    )
-    rows_per_band = MINHASH_K // LSH_BANDS
-    band_cols = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.hash(
-                *[
-                    F.col(f"h{b * rows_per_band + r}")
-                    for r in range(rows_per_band)
-                ]
-            ).alias("bh"),
-        )
-        for b in range(LSH_BANDS)
-    ]
-    buckets = (
-        sig.select(
-            "doc_old", "n_old", F.explode(F.array(*band_cols)).alias("bb")
-        )
-        .select(
-            "doc_old",
-            "n_old",
-            F.col("bb.band").alias("band"),
-            F.col("bb.bh").alias("bh"),
-        )
-    )
-    return buckets, shingles
+    return _minhash_bands(shingles, "doc_old", "n_old"), shingles
 
 
 def _spool_old_docs(spark: SparkSession, sf_dir: str) -> str:
@@ -135,8 +105,7 @@ def stream_index_update_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     STREAMED index.  Same output and same full exact-relation oracle
     as ``dedup_incremental`` — the hash match certifies that streaming
     maintenance reaches exactly the batch-built index state."""
-    n_docs = parquet_row_count(f"{sf_dir}/documents.parquet")
-    if MINHASH_MAX_DF < n_docs:
+    if _cap_binds(sf_dir):
         raise ValueError(
             "streaming index maintenance requires a stateful document-"
             "frequency cap above MINHASH_MAX_DF docs (see module "

@@ -29,8 +29,8 @@ policy; this module owns the rest:
   caller still reads it lazily after the query returns.
 - **Sinks.**  A memory sink (``sink`` is a table name) drains into a
   driver-memory table and returns it; the query name doubles as the
-  table name, so one lock per name serialises two threads draining
-  the same query — two active queries cannot share a name.  A
+  table name, and two active queries cannot share a name — the drain
+  lock (below) keeps two threads draining the same query apart.  A
   ``foreachBatch`` sink (``sink`` is a function) runs on the driver
   per micro-batch and writes executor-side; index stores use one
   overwritten ``batch<N>`` subdirectory per micro-batch
@@ -39,7 +39,9 @@ policy; this module owns the rest:
 - **Conf scoping.**  The shuffle width at query start fixes the number
   of state stores; ``partitions`` sets it for the drain only
   (:data:`STREAM_SHUFFLE_PARTITIONS` by default, ``None`` leaves the
-  session's width alone).  Prior values are restored on exit.
+  session's width alone).  Prior values are restored on exit.  The
+  confs are session-wide, so one lock per session keeps drains on
+  that session from overlapping.
 - **No-data guard.**  A drain skips Spark's trailing no-data
   micro-batch (:data:`DRAIN_NO_DATA_BATCHES`) unless its output
   depends on it: an append-mode streaming aggregation keeps Spark's
@@ -241,21 +243,28 @@ def _drain_confs(
     """Scoped session confs for a bounded availableNow drain: the
     state-store partition count (``None`` leaves the session's shuffle
     width alone) and the trailing no-data micro-batch switch.
-    Restores prior values on exit."""
+    Restores prior values on exit.
+
+    The confs are session-wide, so the scope holds the session's drain
+    lock throughout: two overlapping scopes would each save the
+    other's values and restore them last.  Not re-entrant — nothing
+    that runs inside a drain (a sink included) may start another."""
     pairs = {"spark.sql.streaming.noDataMicroBatches.enabled": no_data_batches}
     if partitions is not None:
         pairs["spark.sql.shuffle.partitions"] = partitions
-    old = {k: spark.conf.get(k, None) for k in pairs}
-    for k, v in pairs.items():
-        spark.conf.set(k, v)
-    try:
-        yield
-    finally:
-        for k, o in old.items():
-            if o is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, o)
+    # setdefault: first use is race-free across threads (session_dict)
+    with vars(spark).setdefault("_smsp_drain_lock", threading.Lock()):
+        old = {k: spark.conf.get(k, None) for k in pairs}
+        for k, v in pairs.items():
+            spark.conf.set(k, v)
+        try:
+            yield
+        finally:
+            for k, o in old.items():
+                if o is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, o)
 
 
 def _has_streaming_aggregation(df: DataFrame) -> bool:
@@ -316,17 +325,12 @@ def drain(
     completion (module docstring has the contract).
 
     ``sink`` is a memory-table name — the drained table is returned,
-    resolved under the name's lock so a concurrent drain of the same
+    resolved inside the drain scope so a concurrent drain of the same
     name cannot swap it — or a ``foreachBatch`` function (returns
     None).  ``family`` names the drain's progress record."""
     spark = df.sparkSession
     memory = isinstance(sink, str)
-    lock = (
-        session_dict(spark, "_smsp_drain_locks").setdefault(sink, threading.Lock())
-        if memory
-        else contextlib.nullcontext()
-    )
-    with lock, _drain_confs(
+    with _drain_confs(
         spark, partitions, _drain_no_data_conf(df, mode)
     ), tempfile.TemporaryDirectory(prefix="smsp-ckpt-", dir=scratch_base()) as ckpt:
         writer = df.writeStream.outputMode(mode).option("checkpointLocation", ckpt)

@@ -513,11 +513,13 @@ def test_bigram_lift_takeordered(spark):
     assert len(re.findall(r"HashAggregate", plan)) >= 2, plan
 
 
-def test_doc_containment_is_join_free(spark):
-    """Containment rides dedup_ngram_jaccard's join-free shape: one
-    shingle-keyed exchange + one pair-keyed count, the direction
+@pytest.mark.parametrize("name", ["doc_containment", "dedup_ngram_jaccard"])
+def test_doc_containment_is_join_free(spark, name):
+    """Containment rides dedup_ngram_jaccard's join-free shape (both
+    count shared shingles through one helper): one shingle-keyed
+    exchange + one pair-keyed count, and containment's direction
     fan-out is a post-agg explode — no Join operator anywhere."""
-    plan = plan_of(spark, "doc_containment")
+    plan = plan_of(spark, name)
     assert not re.search(r"SortMergeJoin|BroadcastHashJoin|ShuffledHashJoin", plan), plan
     assert _n_exchanges(plan) <= 2, plan
 

@@ -625,3 +625,119 @@ def test_live_drains_leave_only_ready_spools(spark, tmp_path, monkeypatch):
     assert all(
         os.path.exists(os.path.join(tmp_path, d, "_SPOOL_READY")) for d in left
     ), left
+
+
+def test_concurrent_drains_restore_session_confs(spark):
+    """Two threads draining different queries on one session leave the
+    session's drain confs as they found them.  Confs are session-wide,
+    so drain scopes on one session must not overlap: without that, T2
+    saves T1's drain values on entry and "restores" them after T1 has
+    restored the real ones."""
+    import threading
+
+    from s3_manifest_spark.streaming.scratch import _drain_confs
+
+    keys = (
+        "spark.sql.shuffle.partitions",
+        "spark.sql.streaming.noDataMicroBatches.enabled",
+    )
+    before = {k: spark.conf.get(k, None) for k in keys}
+    t1_in, t2_in, t1_out = threading.Event(), threading.Event(), threading.Event()
+    errors = []
+
+    def t1():
+        try:
+            with _drain_confs(spark, partitions="3"):
+                t1_in.set()
+                t2_in.wait(timeout=1)  # T2 gets in here only without a lock
+        except Exception as e:  # noqa: BLE001 - reported below
+            errors.append(e)
+        finally:
+            t1_out.set()
+
+    def t2():
+        t1_in.wait(timeout=60)
+        try:
+            with _drain_confs(spark, partitions=None):
+                t2_in.set()
+                t1_out.wait(timeout=60)
+        except Exception as e:  # noqa: BLE001 - reported below
+            errors.append(e)
+
+    threads = [threading.Thread(target=t1), threading.Thread(target=t2)]
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+        assert not any(t.is_alive() for t in threads), "a drain scope hung"
+        assert not errors, errors
+        assert {k: spark.conf.get(k, None) for k in keys} == before
+    finally:
+        for k, v in before.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def test_streamed_index_follows_dedup_constants(spark, monkeypatch):
+    """The streamed index reads the dedup module's constants at call
+    time, like the batch index: a patched band count bands both the
+    same way, and a patched stop-shingle cap makes the maintainer
+    refuse the corpus."""
+    import pandas as pd
+    import pytest
+
+    import s3_manifest_spark.operators.dedup as dedup
+    from s3_manifest_spark.registry import release
+    from s3_manifest_spark.streaming import index_update as iu
+
+    docs = spark.read.parquet(iu._spool_old_docs(spark, SF))
+    monkeypatch.setattr(dedup, "LSH_BANDS", 1)
+    cols = ["doc_old", "n_old", "band", "bh"]
+    streamed = iu._index_rows(docs)[0].toPandas()[cols]
+    # uncached build: a degraded index never enters the model cache
+    index = dedup._build_minhash_index(spark, SF)
+    try:
+        batch = index[0].toPandas()[cols]
+    finally:
+        release(index)
+    assert set(batch["band"]) == {0}
+
+    def norm(pdf):
+        return pdf.sort_values(cols).reset_index(drop=True)
+
+    pd.testing.assert_frame_equal(norm(streamed), norm(batch))
+
+    monkeypatch.setattr(dedup, "MINHASH_MAX_DF", 1)
+    with pytest.raises(ValueError, match="MINHASH_MAX_DF"):
+        iu.stream_index_update_live(spark, SF)
+
+
+def test_capped_minhash_pairs_are_exact_pairs_with_lower_jaccard(spark, monkeypatch):
+    """The stop-shingle cap branch of the MinHash paths (inert on every
+    fixture at the real MINHASH_MAX_DF): every emitted pair is an exact
+    ≥-threshold pair, and its Jaccard is at most the exact value — the
+    cap lowers ``inter`` while ``n`` keeps the full distinct count."""
+    import s3_manifest_spark.operators.dedup as dedup
+    from s3_manifest_spark.registry import clear_model_cache
+
+    exact = {
+        (r.doc_a, r.doc_b): r.jaccard
+        for r in dedup.dedup_ngram_jaccard(spark, SF).collect()
+    }
+    clear_model_cache(spark)
+    monkeypatch.setattr(dedup, "MINHASH_MAX_DF", 3)
+    try:
+        capped = dedup.dedup_minhash_lsh(spark, SF).collect()
+        incremental = dedup.dedup_incremental(spark, SF).collect()
+    finally:
+        clear_model_cache(spark)  # drop the capped index
+    assert capped and incremental
+    assert len(capped) < len(exact), "the cap dropped no pair"
+    for r in capped:
+        assert r.jaccard <= exact[(r.doc_a, r.doc_b)], r
+    for r in incremental:
+        pair = (min(r.doc_new, r.doc_old), max(r.doc_new, r.doc_old))
+        assert r.jaccard <= exact[pair], r
