@@ -13,10 +13,10 @@ transformation (``mapInArrow``), so task retries and speculative
 execution DOUBLE-COUNT their pages — fine for a spinner, wrong for a
 report.  The final line rendered on ``__exit__`` is therefore the
 task-reported count, not an authoritative total; callers that need
-exact totals (the CLI's "Done. Processed N objects" line,
-cli.py:118-125) read them from a ``pyspark.sql.Observation`` attached
-to the same job, which Spark computes exactly once per row regardless
-of retries.
+exact totals (the CLI's "Done. Processed N objects" line, from the
+``Observation`` block in ``cli.main``) read them from a
+``pyspark.sql.Observation`` attached to the same job, which Spark
+computes exactly once per row regardless of retries.
 
 Usage::
 

@@ -197,7 +197,7 @@ def ngram_corpus_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # self-disabling) widen gate the whole corpus expands on ONE task.
     docs = load_table(spark, sf_dir, "documents", widen=True)
     # Materialize the token array BEFORE the lambda (the _shingled
-    # lesson, dedup.py:40): higher-order functions are interpreted,
+    # lesson, dedup._shingled): higher-order functions are interpreted,
     # and slice(split(text), i, N) inside the transform re-splits the
     # text per window — O(tokens²)/doc, measured 2.2 s vs 0.5 s at
     # sf0.1 for this query.  element_at over the materialized array
@@ -273,7 +273,7 @@ def chunk_dedup_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy+join-back formulation evaluates that subtree twice and
     interleaved-A/B'd slower here too (0.59 vs 0.50 s min-of-5 paired
     at sf0.1), consistent with cap_document_frequency's 2× finding on
-    the same shape (dedup.py:81); the per-doc
+    the same shape (dedup.cap_document_frequency); the per-doc
     rollup re-aggregates only (doc_id, is_dup) pairs.  Documents
     shorter than one chunk survive via the final left join from the
     documents table (n_chunks = 0, ratio 0) — at 100 TB that join is
@@ -300,7 +300,7 @@ def boilerplate_report(docs: DataFrame, chunks: DataFrame) -> DataFrame:
     groupBy+join-back formulation evaluates the chunk subtree TWICE
     (freq side + probe side; nothing forces exchange reuse when AQE
     broadcasts the freq relation), the exact shape
-    cap_document_frequency (dedup.py:81) measured 2x slower."""
+    dedup.cap_document_frequency measured 2x slower."""
     from pyspark.sql import Window
 
     annotated = chunks.withColumn(

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from s3_manifest_spark.operators.text import _batch_tokens, _doc_runs
 from s3_manifest_spark.registry import cached, register, release, track_persist
 from s3_manifest_spark.sources.tables import load_table, parquet_row_count
 
@@ -172,6 +173,25 @@ def _tfidf_dfreq(spark: SparkSession, sf_dir: str):
     )
 
 
+def _term_counts(texts):
+    """``(row, code, cnt, dlen, terms)``: one entry per distinct
+    (document, term) of one Arrow batch's text column — the batch row,
+    the term's code into ``terms``, its count in the document and the
+    document's length — or None when the batch has no token.  The one
+    per-(doc, term) count of the TF-IDF fit and of both scoring
+    paths."""
+    import pandas as pd
+
+    lens, flat, di = _batch_tokens(texts)
+    if len(flat) == 0:
+        return None
+    codes, terms = pd.factorize(flat)
+    order, starts, cnt = _doc_runs(di, codes)
+    first = order[starts]
+    row = di[first]
+    return row, codes[first], cnt, lens[row], terms
+
+
 def _fit_tfidf_dfreq(spark: SparkSession, sf_dir: str):
     """The uncached :func:`_tfidf_dfreq` build."""
     docs = load_table(spark, sf_dir, "documents", widen=True)
@@ -181,16 +201,13 @@ def _fit_tfidf_dfreq(spark: SparkSession, sf_dir: str):
         import pandas as pd
 
         for pdf in batches:
-            counts: dict[str, int] = {}
-            for t in pdf["text"]:
-                if t is None:
-                    continue
-                for term in set(t.split(" ")):
-                    counts[term] = counts.get(term, 0) + 1
-            if not counts:
+            tf = _term_counts(pdf["text"])
+            if tf is None:
                 continue
+            _, code, _, _, terms = tf
+            # a term's batch dfreq = its number of (doc, term) entries
             yield pd.DataFrame(
-                {"term": list(counts), "pdf_": np.fromiter(counts.values(), dtype=np.int64)}
+                {"term": terms, "pdf_": np.bincount(code, minlength=len(terms))}
             )
 
     dfreq_rel = (
@@ -293,47 +310,31 @@ def tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         dfreq = bc_dfreq.value
         for pdf in batches:
-            toks = [
-                t.split(" ") if t is not None else [] for t in pdf["text"]
-            ]
-            lens = np.fromiter(
-                (len(t) for t in toks), dtype=np.int64, count=len(toks)
-            )
-            if lens.sum() == 0:
+            tf = _term_counts(pdf["text"])
+            if tf is None:
                 continue
-            flat = np.concatenate(
-                [np.asarray(t, dtype=object) for t in toks if t]
-            )
-            codes, uniques = pd.factorize(flat)
-            di = np.repeat(np.arange(len(toks), dtype=np.int64), lens)
-            order = np.lexsort((codes, di))
-            di_s, co_s = di[order], codes[order]
-            first = np.ones(len(co_s), dtype=bool)
-            first[1:] = (di_s[1:] != di_s[:-1]) | (co_s[1:] != co_s[:-1])
-            ridx = np.flatnonzero(first)
-            cnt = np.diff(np.append(ridx, len(co_s)))
+            row, code, cnt, dlen, terms = tf
             # IDF vectorized over the batch's UNIQUE terms (small),
             # then gathered per row; a term missing from the fitted
             # table means the model is stale for this corpus - fail
             # loud rather than score with a wrong default.
             try:
                 u_df = np.fromiter(
-                    (dfreq[u] for u in uniques), dtype=np.int64, count=len(uniques)
+                    (dfreq[u] for u in terms), dtype=np.int64, count=len(terms)
                 )
             except KeyError as exc:
                 raise ValueError(
                     f"term {exc.args[0]!r} absent from fitted dfreq model"
                 ) from exc
-            row_term = uniques.take(co_s[ridx])
             tfidf = np.round(
-                (cnt / lens[di_s[ridx]].astype("float64"))
-                * np.log(nd / u_df[co_s[ridx]].astype("float64")),
+                (cnt / dlen.astype("float64"))
+                * np.log(nd / u_df[code].astype("float64")),
                 6,
             )
             out = pd.DataFrame(
                 {
-                    "doc_id": pdf["doc_id"].to_numpy()[di_s[ridx]].astype("int64"),
-                    "term": row_term,
+                    "doc_id": pdf["doc_id"].to_numpy()[row].astype("int64"),
+                    "term": terms.take(code),
                     "tfidf": tfidf,
                 }
             )
@@ -365,33 +366,19 @@ def _tfidf_topterms_relational(
     output equality between paths on the fixtures."""
 
     def tf_rows(batches):
-        import numpy as np
         import pandas as pd
 
         for pdf in batches:
-            toks = [t.split(" ") if t is not None else [] for t in pdf["text"]]
-            lens = np.fromiter(
-                (len(t) for t in toks), dtype=np.int64, count=len(toks)
-            )
-            if lens.sum() == 0:
+            tf = _term_counts(pdf["text"])
+            if tf is None:
                 continue
-            flat = np.concatenate(
-                [np.asarray(t, dtype=object) for t in toks if t]
-            )
-            codes, uniques = pd.factorize(flat)
-            di = np.repeat(np.arange(len(toks), dtype=np.int64), lens)
-            order = np.lexsort((codes, di))
-            di_s, co_s = di[order], codes[order]
-            first = np.ones(len(co_s), dtype=bool)
-            first[1:] = (di_s[1:] != di_s[:-1]) | (co_s[1:] != co_s[:-1])
-            ridx = np.flatnonzero(first)
-            cnt = np.diff(np.append(ridx, len(co_s)))
+            row, code, cnt, dlen, terms = tf
             yield pd.DataFrame(
                 {
-                    "doc_id": pdf["doc_id"].to_numpy()[di_s[ridx]].astype("int64"),
-                    "term": uniques.take(co_s[ridx]),
+                    "doc_id": pdf["doc_id"].to_numpy()[row].astype("int64"),
+                    "term": terms.take(code),
                     "cnt": cnt.astype("int64"),
-                    "dlen": lens[di_s[ridx]].astype("int64"),
+                    "dlen": dlen.astype("int64"),
                 }
             )
 
@@ -743,38 +730,19 @@ def text_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
         for pdf in batches:
-            toks = [
-                t.split(" ") if t is not None else [] for t in pdf["text"]
-            ]
-            lens = np.fromiter(
-                (len(t) for t in toks), dtype=np.int64, count=len(toks)
-            )
-            n_tok = int(lens.sum())
-            if n_tok == 0:
+            _, flat, di = _batch_tokens(pdf["text"])
+            if len(flat) == 0:
                 yield empty
                 continue
-            flat = np.concatenate(
-                [np.asarray(t, dtype=object) for t in toks if t]
-            )
-            th = pd.util.hash_array(flat)
-            di = np.repeat(np.arange(len(toks), dtype=np.int64), lens)
-            order = np.lexsort((th, di))
-            di_s, th_s = di[order], th[order]
-            run_first = np.ones(len(th_s), dtype=bool)
-            run_first[1:] = (di_s[1:] != di_s[:-1]) | (th_s[1:] != th_s[:-1])
-            ridx = np.flatnonzero(run_first)
-            c = np.diff(np.append(ridx, len(th_s))).astype(np.float64)
-            rdoc = di_s[ridx]
-            dstart = np.flatnonzero(
-                np.concatenate(([True], rdoc[1:] != rdoc[:-1]))
-            )
+            order, starts, c = _doc_runs(di, pd.util.hash_array(flat))
+            c = c.astype(np.float64)
+            # runs are doc-contiguous: reduceat over each doc's first run
+            rdoc, dstart = np.unique(di[order[starts]], return_index=True)
             n = np.add.reduceat(c, dstart)
             s = np.add.reduceat(c * np.log2(c), dstart)
             yield pd.DataFrame(
                 {
-                    "doc_id": pdf["doc_id"]
-                    .to_numpy()[rdoc[dstart]]
-                    .astype("int64"),
+                    "doc_id": pdf["doc_id"].to_numpy()[rdoc].astype("int64"),
                     "n_tokens": n.astype("int64"),
                     "h_raw": np.log2(n) - s / n,
                 }

@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from s3_manifest_spark.operators.text import _batch_tokens, _doc_runs
 from s3_manifest_spark.registry import (
     cached,
     defer_cleanup,
@@ -217,31 +218,20 @@ def _batch_doc_fps(pdf):
     fingerprints as uint64, doc-contiguous, with ``row_idx`` indexing
     the batch's rows.  One ``pd.util.hash_array`` call for every token
     in the batch; windows crossing document boundaries masked out;
-    per-doc dedup via lexsort + neighbor-mask."""
+    per-doc dedup via :func:`_doc_runs`."""
     import numpy as np
     import pandas as pd
 
-    e = np.empty(0, dtype=np.int64), np.empty(0, dtype=np.uint64)
-    toks = [t.split(" ") if t is not None else [] for t in pdf["text"]]
-    lens = np.fromiter(
-        (len(t) for t in toks), dtype=np.int64, count=len(toks)
-    )
-    n_tok = int(lens.sum())
-    if n_tok < SHINGLE_W:
-        return e
-    flat = np.concatenate([np.asarray(t, dtype=object) for t in toks if t])
+    _, flat, di = _batch_tokens(pdf["text"])
     with np.errstate(over="ignore"):
         B1 = np.uint64(ROLL_BASE)
         B2 = B1 * B1
         th = pd.util.hash_array(flat)
         fp_all = th[:-2] * B2 + th[1:-1] * B1 + th[2:]
-    di = np.repeat(np.arange(len(toks), dtype=np.int64), lens)
     ok = di[:-2] == di[2:]  # window fully inside one doc
     wdoc, fps = di[:-2][ok], fp_all[ok]
-    order = np.lexsort((fps, wdoc))
-    wdoc, fps = wdoc[order], fps[order]
-    keep = np.ones(len(fps), dtype=bool)
-    keep[1:] = (wdoc[1:] != wdoc[:-1]) | (fps[1:] != fps[:-1])
+    order, starts, _ = _doc_runs(wdoc, fps)
+    keep = order[starts]
     return wdoc[keep], fps[keep]
 
 
@@ -728,17 +718,14 @@ def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
             # either way.
             wdoc = np.asarray(ids, dtype=np.int64)
             hs_arr = np.asarray(hs, dtype=object)
-            hk = pd.util.hash_array(hs_arr)
-            order = np.lexsort((hk, wdoc))
-            wdoc, hk, hs_arr = wdoc[order], hk[order], hs_arr[order]
-            first = np.ones(len(hk), dtype=bool)
-            first[1:] = (wdoc[1:] != wdoc[:-1]) | (hk[1:] != hk[:-1])
-            idx = np.flatnonzero(first)
-            counts = np.diff(np.append(idx, len(hk)))
+            order, starts, counts = _doc_runs(
+                wdoc, pd.util.hash_array(hs_arr)
+            )
+            first = order[starts]
             yield pd.DataFrame(
                 {
-                    "doc_id": wdoc[idx],
-                    "span_hash": hs_arr[idx],
+                    "doc_id": wdoc[first],
+                    "span_hash": hs_arr[first],
                     "c": counts.astype("int64"),
                 }
             )
@@ -771,6 +758,29 @@ def _modinv_pow2_64(b: int) -> int:
     for _ in range(6):
         x = (x * (2 - b * x)) & 0xFFFFFFFFFFFFFFFF
     return x
+
+
+def _rolling_fps(th, W: int):
+    """``fp[i] = Σ_j th[i+j]·B^j`` (mod 2^64, ``B = ROLL_BASE``) for
+    every ``W``-window of the uint64 token-hash stream ``th``, in
+    O(len(th)): positional weights ``th[k]·B^(k+1)`` and their prefix
+    sum ``P``, window sums ``S[i] = P[i+W-1] − P[i-1]``, then
+    normalization by the inverse power ``B^-(i+1)``.  Empty when
+    ``th`` is shorter than ``W``."""
+    import numpy as np
+
+    n = len(th)
+    m = n - W + 1
+    if m <= 0:
+        return np.empty(0, dtype=np.uint64)
+    with np.errstate(over="ignore"):
+        bpow = np.multiply.accumulate(np.full(n, ROLL_BASE, dtype=np.uint64))
+        P = np.cumsum(th * bpow)  # stays uint64, wraps
+        S = P[W - 1 :] - np.concatenate((np.zeros(1, dtype=np.uint64), P[: m - 1]))
+        binvpow = np.multiply.accumulate(
+            np.full(m, _modinv_pow2_64(ROLL_BASE), dtype=np.uint64)
+        )
+        return S * binvpow
 
 
 #: DuckDB twin for the rolling variant: the md5 span relation (the
@@ -811,7 +821,8 @@ def dedup_substring_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 100 TB path its docstring promises.
 
     Per document (one Arrow batch pass, all numpy-vectorized uint64
-    with natural mod-2^64 wraparound):
+    with natural mod-2^64 wraparound; steps 2-4 are
+    :func:`_rolling_fps`):
 
     1. token hashes ``th`` via pandas' vectorized siphash
        (``pd.util.hash_array`` — C speed, deterministic);
@@ -861,74 +872,35 @@ def rolling_span_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     produce bit-identical fingerprints to the per-doc form; windows
     crossing a document boundary are masked out by doc index."""
     W = SPAN_WINDOW
-    B = ROLL_BASE
-    BINV = _modinv_pow2_64(B)
     docs = load_table(spark, sf_dir, "documents", widen=True)
 
     def span_fps(batches):
         import numpy as np
         import pandas as pd
 
-        empty = pd.DataFrame(
-            {
-                "doc_id": np.empty(0, dtype=np.int64),
-                "span_fp": np.empty(0, dtype=np.int64),
-                "c": np.empty(0, dtype=np.int64),
-            }
-        )
-        with np.errstate(over="ignore"):
-            for pdf in batches:
-                toks = [
-                    t.split(" ") if t is not None else []
-                    for t in pdf["text"]
-                ]
-                lens = np.fromiter(
-                    (len(t) for t in toks), dtype=np.int64, count=len(toks)
-                )
-                n_tok = int(lens.sum())
-                if n_tok < W:
-                    yield empty
-                    continue
-                flat = np.concatenate(
-                    [np.asarray(t, dtype=object) for t in toks if t]
-                )
-                th = pd.util.hash_array(flat)
-                m = n_tok - W + 1
-                bpow = np.multiply.accumulate(
-                    np.full(n_tok, B, dtype=np.uint64)
-                )
-                P = np.cumsum(th * bpow)  # stays uint64, wraps
-                S = P[W - 1 :] - np.concatenate(
-                    (np.zeros(1, dtype=np.uint64), P[: m - 1])
-                )
-                binvpow = np.multiply.accumulate(
-                    np.full(m, BINV, dtype=np.uint64)
-                )
-                fp_all = S * binvpow
-                di = np.repeat(np.arange(len(toks), dtype=np.int64), lens)
-                ok = di[: m] == di[W - 1 :]  # window inside one doc
-                wdoc, fps = di[:m][ok], fp_all[ok]
-                # Per-(doc, span) pre-aggregation: a document sits
-                # wholly inside one Arrow batch (one row per doc), so
-                # its span multiset is complete here — emitting one
-                # (doc, span, count) row per DISTINCT span lets the
-                # downstream groupBy count docs with a plain
-                # count(1)/sum(c) instead of a countDistinct expand.
-                order = np.lexsort((fps, wdoc))
-                wdoc, fps = wdoc[order], fps[order]
-                first = np.ones(len(fps), dtype=bool)
-                first[1:] = (wdoc[1:] != wdoc[:-1]) | (fps[1:] != fps[:-1])
-                idx = np.flatnonzero(first)
-                counts = np.diff(np.append(idx, len(fps)))
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pdf["doc_id"]
-                        .to_numpy()[wdoc[idx]]
-                        .astype("int64"),
-                        "span_fp": fps[idx].view(np.int64),
-                        "c": counts.astype("int64"),
-                    }
-                )
+        for pdf in batches:
+            _, flat, di = _batch_tokens(pdf["text"])
+            fp_all = _rolling_fps(pd.util.hash_array(flat), W)
+            m = len(fp_all)
+            ok = di[:m] == di[W - 1 :]  # window inside one doc
+            wdoc, fps = di[:m][ok], fp_all[ok]
+            # Per-(doc, span) pre-aggregation: a document sits wholly
+            # inside one Arrow batch (one row per doc), so its span
+            # multiset is complete here — emitting one (doc, span,
+            # count) row per DISTINCT span lets the downstream groupBy
+            # count docs with a plain count(1)/sum(c) instead of a
+            # countDistinct expand.
+            order, starts, counts = _doc_runs(wdoc, fps)
+            first = order[starts]
+            yield pd.DataFrame(
+                {
+                    "doc_id": pdf["doc_id"]
+                    .to_numpy()[wdoc[first]]
+                    .astype("int64"),
+                    "span_fp": fps[first].view(np.int64),
+                    "c": counts.astype("int64"),
+                }
+            )
 
     spans = docs.select("doc_id", "text").mapInPandas(
         span_fps, schema="doc_id long, span_fp long, c long"
@@ -1620,19 +1592,11 @@ def simhash_fingerprints(docs: DataFrame) -> DataFrame:
             }
         )
         for pdf in batches:
-            toks = [
-                t.split(" ") if t is not None else [] for t in pdf["text"]
-            ]
-            lens = np.fromiter(
-                (len(t) for t in toks), dtype=np.int64, count=len(toks)
-            )
+            lens, flat, _ = _batch_tokens(pdf["text"])
             keep = lens > 0
             if not keep.any():
                 yield empty
                 continue
-            flat = np.concatenate(
-                [np.asarray(t, dtype=object) for t in toks if t]
-            )
             th = pd.util.hash_array(flat)
             votes = (
                 ((th[:, None] >> shifts) & np.uint64(1))

@@ -1673,8 +1673,8 @@ KNN_BLOCKS = 8
 
 def _pack_blocks(v: DataFrame, key) -> DataFrame:
     """Pack ``(vec_id, embedding)`` rows into ``(blk, ids, mat)`` block
-    rows keyed by ``key`` (a Column) — dedup_embedding's packed-matrix
-    layout (dedup.py:430), shared by the exact block sweep and the
+    rows keyed by ``key`` (a Column) — ``dedup.dedup_embedding``'s
+    packed-matrix layout, shared by the exact block sweep and the
     LSH-bucketed candidate sweep.  ``sort_array`` pins member order so
     the packed matrix is deterministic under any shuffle schedule."""
     return (
@@ -1815,7 +1815,7 @@ def knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     here every corpus vector is a query, so broadcasting is not an
     option): the corpus is hashed into :data:`KNN_BLOCKS` packed
     block rows (id array + flattened matrix — dedup_embedding's
-    packing, dedup.py:430), the block relation is cross-joined with
+    packing), the block relation is cross-joined with
     itself into ALL B^2 ordered block pairs (kNN needs both
     orientations, unlike the dedup sweep's upper triangle), and each
     pair runs one BLAS ``blockA @ blockB^T`` keeping only each

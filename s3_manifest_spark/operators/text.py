@@ -2,11 +2,19 @@
 (SURVEY.md §2B extension surface): corpus stats, quality scoring,
 token counting, heuristic language-ID, document fingerprinting.
 
-All row-level logic is built-in array/string expressions — zero Python
-in the hot path, so every query here is a single codegen'd scan plus
-(at most) one map-side-combinable aggregate.  That shape is what makes
-these safe at 100 TB of documents: the scan parallelism is the only
-knob that matters.
+Every query here is one scan plus (at most) one map-side-combinable
+aggregate.  That shape is what makes these safe at 100 TB of
+documents: the scan parallelism is the only knob that matters.  Most
+are built-in array/string expressions; :func:`text_repetition` is a
+batch-vectorized pandas kernel.
+
+The token rule: a document's tokens are ``text.split(" ")`` — split on
+every single space, so ``""`` is one empty token, and a NULL text has
+no tokens.  It is Spark's ``split(text, ' ', -1)`` and DuckDB's
+``string_split(text, ' ')``.  Every pandas text kernel (here, in
+``dedup`` and in ``curation``) tokenizes through :func:`_batch_tokens`
+and counts equal tokens (or n-grams) per document through
+:func:`_doc_runs`.
 """
 
 from __future__ import annotations
@@ -33,6 +41,41 @@ _LANG_MARKERS = {
     "de": ("der", "die", "das", "und"),
     "fr": ("le", "la", "de", "et"),
 }
+
+
+def _batch_tokens(texts):
+    """``(lens, flat, di)`` for one Arrow batch's text column: tokens
+    per document (int64), every token in document order (object), and
+    each token's document index (int64).  Empty arrays when the batch
+    has no token."""
+    from itertools import chain
+
+    import numpy as np
+
+    toks = [t.split(" ") if t is not None else [] for t in texts]
+    lens = np.fromiter(map(len, toks), dtype=np.int64, count=len(toks))
+    flat = np.fromiter(
+        chain.from_iterable(toks), dtype=object, count=int(lens.sum())
+    )
+    di = np.repeat(np.arange(len(toks), dtype=np.int64), lens)
+    return lens, flat, di
+
+
+def _doc_runs(doc, key):
+    """``(order, starts, counts)``: the runs of equal ``(doc, key)``
+    rows.  ``order`` lexsorts the rows by ``(doc, key)``; ``starts``
+    indexes the first row of each run in that sorted order (so
+    ``order[starts]`` are the runs' rows in the input); ``counts`` are
+    the run lengths."""
+    import numpy as np
+
+    order = np.lexsort((key, doc))
+    d, k = doc[order], key[order]
+    first = np.ones(len(k), dtype=bool)
+    first[1:] = (d[1:] != d[:-1]) | (k[1:] != k[:-1])
+    starts = np.flatnonzero(first)
+    counts = np.diff(np.append(starts, len(k)))
+    return order, starts, counts
 
 
 @register(
@@ -232,10 +275,10 @@ def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ZERO shuffles: a document's token sequence is complete inside its
     Arrow batch, so one batch-vectorized kernel (the text_entropy /
-    _batch_doc_fps pattern, dedup.py:159) computes all three signals in
+    ``dedup._batch_doc_fps`` pattern) computes all three signals in
     a single pass — one ``pd.util.hash_array`` over every token in the
     batch, n-gram identity via 64-bit rolling fingerprints, distinct
-    counts and the per-doc max token run via lexsort + reduceat.  The
+    counts and the per-doc max token run via :func:`_doc_runs`.  The
     previous form was built-in array HOFs, but its top-token scan was
     O(distinct × tokens) PER DOCUMENT and the n-gram transforms built
     2·tokens fresh strings per doc — the kernel is O(tokens·log tokens)
@@ -252,76 +295,29 @@ def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
         import numpy as np
         import pandas as pd
 
-        empty = pd.DataFrame(
-            {
-                "doc_id": np.empty(0, dtype=np.int64),
-                "r2": np.empty(0, dtype=np.float64),
-                "r3": np.empty(0, dtype=np.float64),
-                # nullable Float64 like the data path — mixed dtypes
-                # across batches trip pandas' concat dtype inference
-                "share": pd.array([], dtype="Float64"),
-            }
-        )
-
         def dup_ratio(fp, wdoc, ndocs):
             """1 - distinct/total n-gram fingerprints per doc (0 where
             the doc has no n-grams)."""
             total = np.bincount(wdoc, minlength=ndocs).astype(np.float64)
-            order = np.lexsort((fp, wdoc))
-            wd, f = wdoc[order], fp[order]
-            first = np.ones(len(f), dtype=bool)
-            first[1:] = (wd[1:] != wd[:-1]) | (f[1:] != f[:-1])
-            distinct = np.bincount(wd[first], minlength=ndocs).astype(
-                np.float64
-            )
+            order, starts, _ = _doc_runs(wdoc, fp)
+            distinct = np.bincount(
+                wdoc[order[starts]], minlength=ndocs
+            ).astype(np.float64)
             with np.errstate(invalid="ignore", divide="ignore"):
                 r = 1.0 - distinct / total
             r[total == 0] = 0.0
             return r
 
         for pdf in batches:
-            toks = [
-                t.split(" ") if t is not None else [] for t in pdf["text"]
-            ]
-            lens = np.fromiter(
-                (len(t) for t in toks), dtype=np.int64, count=len(toks)
-            )
-            ndocs = len(toks)
-            if ndocs == 0:
-                yield empty
-                continue
-            if lens.sum() == 0:
-                # token-less docs still get a row (the oracle's CASE
-                # emits 0/0/NULL for them) — the old early-exit
-                # silently DROPPED them, latent only because the
-                # fixtures have no NULL texts.
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pdf["doc_id"].to_numpy().astype("int64"),
-                        "r2": np.zeros(ndocs),
-                        "r3": np.zeros(ndocs),
-                        "share": pd.array([pd.NA] * ndocs, dtype="Float64"),
-                    }
-                )
-                continue
-            flat = np.concatenate(
-                [np.asarray(t, dtype=object) for t in toks if t]
-            )
+            # token-less docs still get a row: the oracle's CASE emits
+            # 0/0/NULL for them
+            lens, flat, di = _batch_tokens(pdf["text"])
+            ndocs = len(lens)
             th = pd.util.hash_array(flat)
-            di = np.repeat(np.arange(ndocs, dtype=np.int64), lens)
-            # top token count per doc: runs of equal hashes within a doc
-            order = np.lexsort((th, di))
-            di_s, th_s = di[order], th[order]
-            first = np.ones(len(th_s), dtype=bool)
-            first[1:] = (di_s[1:] != di_s[:-1]) | (th_s[1:] != th_s[:-1])
-            ridx = np.flatnonzero(first)
-            runlen = np.diff(np.append(ridx, len(th_s))).astype(np.float64)
-            rdoc = di_s[ridx]
-            dstart = np.flatnonzero(
-                np.concatenate(([True], rdoc[1:] != rdoc[:-1]))
-            )
+            # top token count per doc: the longest run of equal hashes
+            order, starts, runlen = _doc_runs(di, th)
             top = np.zeros(ndocs, dtype=np.float64)
-            top[rdoc[dstart]] = np.maximum.reduceat(runlen, dstart)
+            np.maximum.at(top, di[order[starts]], runlen)
             with np.errstate(invalid="ignore", divide="ignore"):
                 share = top / lens.astype(np.float64)
             # token-less docs have NO top token: emit NULL, not NaN —

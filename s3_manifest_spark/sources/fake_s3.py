@@ -1,6 +1,6 @@
 """In-memory stand-in for the S3 ``list_objects_v2`` API.
 
-Dev/test fixture (no S3 or moto in this container): implements exactly
+Dev/test fixture (no network, S3 or moto needed): implements exactly
 the request/response subset the connector uses — Prefix, Delimiter,
 MaxKeys, ContinuationToken, IsTruncated, Contents, CommonPrefixes —
 with S3's real semantics (lexicographic key order, token = resume
@@ -35,6 +35,19 @@ def _succ(prefix: str) -> str | None:
     return None
 
 
+class NoSuchBucket(Exception):
+    """S3's answer for an unknown bucket: a 404 ``NoSuchBucket`` error
+    response, in the ``response`` shape of botocore's ``ClientError``
+    (which the connector reads without importing botocore)."""
+
+    def __init__(self, bucket: str):
+        super().__init__(f"NoSuchBucket: {bucket!r}")
+        self.response = {
+            "Error": {"Code": "NoSuchBucket", "Message": str(self)},
+            "ResponseMetadata": {"HTTPStatusCode": 404},
+        }
+
+
 class FakeS3Client:
     """Minimal ListObjectsV2 over a static {bucket: {key: (size, mtime)}}."""
 
@@ -53,6 +66,8 @@ class FakeS3Client:
         # is present (the token already encodes the position).
         start_after = "" if token else kw.get("StartAfter", "")
 
+        if bucket not in self._buckets:
+            raise NoSuchBucket(bucket)
         objs = self._buckets[bucket]
         keys = self._keys[bucket]
         lo = bisect_left(keys, max(prefix, token))

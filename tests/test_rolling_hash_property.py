@@ -1,10 +1,11 @@
 """Property tests for the Rabin-Karp rolling-fingerprint arithmetic in
-operators/dedup.py::dedup_substring_rolling — the prefix-sum +
-inverse-power-normalization scheme must equal a DIRECT per-window
-polynomial evaluation (Σ th[i+j]·B^j mod 2^64) on arbitrary inputs:
-duplicate tokens, empty strings, single-window docs, and window-length
-corpora.  The fixture-level histogram equality (test_llm_ops.py) pins
-the Spark pipeline; these pin the numpy kernel itself.
+operators/dedup.py::_rolling_fps (the kernel of dedup_substring_rolling)
+— the prefix-sum + inverse-power-normalization scheme must equal a
+DIRECT per-window polynomial evaluation (Σ th[i+j]·B^j mod 2^64) on
+arbitrary inputs: duplicate tokens, empty strings, single-window docs,
+and window-length corpora.  The fixture-level histogram equality
+(test_llm_ops.py) pins the Spark pipeline; these pin the numpy kernel
+itself.
 """
 
 from __future__ import annotations
@@ -18,25 +19,16 @@ from s3_manifest_spark.operators.dedup import (
     ROLL_BASE,
     SPAN_WINDOW,
     _modinv_pow2_64,
+    _rolling_fps,
 )
 
 MASK = 0xFFFFFFFFFFFFFFFF
 
 
 def rolling_fingerprints(tokens: list[str], W: int) -> list[int]:
-    """The production kernel, verbatim shape (dedup.py span_fps)."""
-    B, BINV = ROLL_BASE, _modinv_pow2_64(ROLL_BASE)
-    n = len(tokens)
-    m = n - W + 1
-    if m <= 0:
-        return []
-    with np.errstate(over="ignore"):
-        th = pd.util.hash_array(np.array(tokens, dtype=object))
-        bpow = np.multiply.accumulate(np.full(n, B, dtype=np.uint64))
-        P = np.cumsum(th * bpow)
-        S = P[W - 1 :] - np.concatenate((np.zeros(1, dtype=np.uint64), P[: m - 1]))
-        binvpow = np.multiply.accumulate(np.full(m, BINV, dtype=np.uint64))
-        return list((S * binvpow).astype(object))
+    """The production kernel (dedup._rolling_fps) over the tokens' hashes."""
+    th = pd.util.hash_array(np.array(tokens, dtype=object))
+    return list(_rolling_fps(th, W).astype(object))
 
 
 def direct_fingerprints(tokens: list[str], W: int) -> list[int]:

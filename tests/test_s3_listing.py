@@ -345,6 +345,17 @@ def test_list_shards_close_early_stops_requests():
     assert client.running == 0 and client.calls == calls <= MAX_IN_FLIGHT
 
 
+def test_unknown_bucket_fails_after_one_request():
+    """Like S3, the fake answers an unknown bucket with a 404
+    NoSuchBucket error response, which the listing raises at once
+    instead of retrying with backoff."""
+    c = _Counting(synth_bucket())
+    with pytest.raises(Exception) as err:
+        list(_pages(c, Bucket="missing"))
+    assert c.calls == 1
+    assert err.value.response["Error"]["Code"] == "NoSuchBucket"
+
+
 class _Misordered(FakeS3Client):
     """Real paging, except that page 2 replays page 1's keys (with a
     valid, advancing token) or one page lists its keys backwards."""
