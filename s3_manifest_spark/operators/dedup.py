@@ -26,6 +26,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from s3_manifest_spark.operators.similarity import (
+    _matrix,
+    _pack_blocks,
+    _unit,
+    _unpack_block,
+)
 from s3_manifest_spark.operators.text import _batch_tokens, _doc_runs
 from s3_manifest_spark.registry import (
     cached,
@@ -561,17 +567,7 @@ def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     thr = EMBED_DUP_THRESHOLD
 
     # Pack each block into one row: ids + flattened row-major matrix.
-    # sort_array on (vec_id, embedding) structs makes the packing
-    # deterministic; flatten(transform(...)) keeps it all codegen-side.
-    packed = (
-        v.groupBy(F.pmod(F.xxhash64("vec_id"), F.lit(EMBED_BLOCKS)).alias("blk"))
-        .agg(F.sort_array(F.collect_list(F.struct("vec_id", "embedding"))).alias("rs"))
-        .select(
-            "blk",
-            F.expr("transform(rs, r -> r.vec_id)").alias("ids"),
-            F.expr("flatten(transform(rs, r -> r.embedding))").alias("mat"),
-        )
-    )
+    packed = _pack_blocks(v, F.pmod(F.xxhash64("vec_id"), F.lit(EMBED_BLOCKS)))
     block_pairs = (
         packed.alias("x")
         .crossJoin(packed.alias("y"))
@@ -586,23 +582,26 @@ def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    def unpack(ids, mat):
-        i = np.asarray(list(ids), dtype="int64")
-        m = np.asarray(list(mat), dtype="float64").reshape(len(i), -1)
-        m /= np.linalg.norm(m, axis=1, keepdims=True)
-        return i, m
-
     def score(batches):
         for batch in batches:
-            for _, row in batch.iterrows():
-                ia, ma = unpack(row["ids_a"], row["mat_a"])
-                ib, mb = unpack(row["ids_b"], row["mat_b"])
+            # zip over the raw columns, not iterrows (see
+            # similarity._block_pair_topk)
+            for blk_a, raw_ia, raw_ma, blk_b, raw_ib, raw_mb in zip(
+                batch["blk_a"].to_numpy(),
+                batch["ids_a"].to_numpy(),
+                batch["mat_a"].to_numpy(),
+                batch["blk_b"].to_numpy(),
+                batch["ids_b"].to_numpy(),
+                batch["mat_b"].to_numpy(),
+            ):
+                ia, ma = _unpack_block(raw_ia, raw_ma)
+                ib, mb = _unpack_block(raw_ib, raw_mb)
                 sims = np.round(ma @ mb.T, 6)
                 # a<b pair orientation: diagonal blocks keep the strict
                 # upper triangle; off-diagonal blocks keep everything,
                 # then each hit is emitted (min, max).
                 keep = sims >= thr
-                if row["blk_a"] == row["blk_b"]:
+                if blk_a == blk_b:
                     keep &= ib[None, :] > ia[:, None]
                 ra, rb = np.nonzero(keep)
                 va, vb = ia[ra], ib[rb]
@@ -951,7 +950,7 @@ def _lsh_band_rows(
         powers = 1 << np.arange(r, dtype=np.int64)
         for b in batches:
             ids = b["vec_id"].to_numpy(dtype="int64")
-            e = np.stack(b["embedding"].to_numpy()).astype("float64")
+            e = _matrix(b["embedding"])
             if planes is None:  # seeded → identical on every executor
                 planes = np.random.RandomState(seed).standard_normal(
                     (L * r, e.shape[1])
@@ -1020,12 +1019,10 @@ def _embedding_lsh_pairs(
 
     def score(batches):
         for batch in batches:
-            for _, row in batch.iterrows():
-                ids = np.asarray(list(row["ids"]), dtype="int64")
-                m = np.asarray(list(row["mat"]), dtype="float64").reshape(
-                    len(ids), -1
-                )
-                m /= np.linalg.norm(m, axis=1, keepdims=True)
+            for raw_ids, raw_mat in zip(
+                batch["ids"].to_numpy(), batch["mat"].to_numpy()
+            ):
+                ids, m = _unpack_block(raw_ids, raw_mat)
                 sims = np.round(m @ m.T, 6)
                 ia, ib = np.nonzero(
                     (sims >= thr) & (ids[None, :] > ids[:, None])
@@ -1151,10 +1148,8 @@ def _embedding_lsh_pairs_sparse(
             if not len(b):
                 yield empty
                 continue
-            ea = np.stack(b["ea"].to_numpy()).astype("float64")
-            eb = np.stack(b["eb"].to_numpy()).astype("float64")
-            ea /= np.linalg.norm(ea, axis=1, keepdims=True)
-            eb /= np.linalg.norm(eb, axis=1, keepdims=True)
+            ea = _unit(_matrix(b["ea"]))
+            eb = _unit(_matrix(b["eb"]))
             sims = np.round(np.einsum("ij,ij->i", ea, eb), 6)
             keep = sims >= thr
             yield pd.DataFrame(
@@ -1285,11 +1280,11 @@ def planted_near_dup_probes(dim: int):
     import numpy as np
 
     rng = np.random.RandomState(PLANT_SEED)
-    base = rng.standard_normal((PLANT_PAIRS, dim))
-    base /= np.linalg.norm(base, axis=1, keepdims=True)
+    base = _unit(rng.standard_normal((PLANT_PAIRS, dim)))
     eps = rng.uniform(0.05, 0.35, size=(PLANT_PAIRS, 1))
-    dup = base + eps * rng.standard_normal((PLANT_PAIRS, dim)) / np.sqrt(dim)
-    dup /= np.linalg.norm(dup, axis=1, keepdims=True)
+    dup = _unit(
+        base + eps * rng.standard_normal((PLANT_PAIRS, dim)) / np.sqrt(dim)
+    )
     rows = []
     for i, v in enumerate(base):
         rows.append((PLANT_ID_BASE + i, [float(x) for x in v]))
@@ -1930,7 +1925,7 @@ def min_label_components(spark: SparkSession, edges: DataFrame):
         # materialization job via ``observe`` (verified: eager
         # localCheckpoint fires the observed-metrics listener), so
         # each round costs ONE driver job, not propagation + a second
-        # convergence collect (ADVICE r8 #8).
+        # convergence collect.
         from pyspark.sql import Observation
 
         def label_sum(lbl: DataFrame):

@@ -52,6 +52,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from s3_manifest_spark.operators.similarity import _matrix, _unit
 from s3_manifest_spark.registry import cached, register
 from s3_manifest_spark.sources.tables import load_table
 
@@ -74,28 +75,27 @@ SEM_BLOCK_ROWS = 1024
 
 
 def _normalize_batch(batch):
-    """(ids, unit-norm float64 matrix) for one Arrow batch — the exact
+    """(ids, unit-norm float64 matrix) for one Arrow batch — the
     arithmetic the oracle mirrors (cast to double, divide by the
     2-norm; components deliberately NOT rounded, the downstream sims
-    are)."""
-    import numpy as np
-
+    are).  The norm goes through ``similarity._unit``, so it is
+    floored at 1e-12: a zero vector stays zero (cosine 0 to every
+    centroid and member) where the oracle, which does not floor,
+    would divide by zero; no fixture row is near the floor."""
     ids = batch["vec_id"].to_numpy(dtype="int64")
-    e = np.stack(batch["embedding"].to_numpy()).astype("float64")
+    e = _matrix(batch["embedding"])
     if e.shape[1] != SEM_DIM:
         raise ValueError(
             f"semdedup oracle is pinned to dim={SEM_DIM}, got {e.shape[1]}"
         )
-    en = e / np.sqrt((e * e).sum(axis=1, keepdims=True))
-    return ids, en
+    return ids, _unit(e)
 
 
 def _assign_cells(ids, en, cent):
     """Final-round cell assignment: sims rounded, ties → lowest cell."""
     import numpy as np
 
-    cn = cent / np.sqrt((cent * cent).sum(axis=1, keepdims=True))
-    sims = np.round(en @ cn.T, SEM_SIM_ROUND)
+    sims = np.round(en @ _unit(cent).T, SEM_SIM_ROUND)
     return np.argmax(sims, axis=1)  # np.argmax ties -> lowest index
 
 
@@ -272,7 +272,7 @@ def semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def prune(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("vec_id", kind="mergesort").reset_index(drop=True)
-        en = np.stack(pdf["en"].to_numpy())
+        en = _matrix(pdf["en"])
         n = len(pdf)
         dup = np.zeros(n, dtype=bool)
         # row-blocked Gram: memory O(block * n), never n^2

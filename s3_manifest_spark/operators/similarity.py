@@ -26,7 +26,16 @@ before the top-k ordering, which makes the exact-hash oracles correct
 unless a true cosine lands within ~1e-16 of a 6-decimal rounding
 boundary AND the k-th/k+1-th candidates straddle it — vanishingly
 unlikely, but probabilistic, not guaranteed (it has held for every
-fixture vintage so far).
+fixture vintage so far).  Every vector kernel here and in
+``operators.dedup`` / ``operators.semdedup`` decodes through
+:func:`_matrix`, unpacks blocks through :func:`_unpack_block` and
+normalizes through :func:`_unit`, which holds the one zero-norm rule:
+a row's 2-norm is floored at 1e-12, so a zero vector stays zero and
+scores cosine 0 against everything instead of NaN.  Above the floor
+the quotient is bit-identical to the unguarded ``e / ‖e‖``, and the
+smallest fixture row norm is ~1, so the rule changes no fixture
+output.  The oracle SQL is unchanged and stays the reference (the knn
+oracles spell the same floor as ``greatest(..., 1e-12)``).
 """
 
 from __future__ import annotations
@@ -50,15 +59,47 @@ MAX_QUERIES = 4096
 LSH_PLANES = 6
 
 
-def _query_pdf(v):
-    """Driver-side query set with the documented hard bound: every
-    QUERY_STRIDE-th corpus vector, capped at MAX_QUERIES rows."""
+def _matrix(values, dims: int | None = None):
+    """A pandas column of embedding arrays as one float64 ``(n, d)``
+    matrix, cut to its first ``dims`` columns (all of them when
+    None)."""
+    import numpy as np
+
+    return np.stack(values.to_numpy()).astype("float64")[:, :dims]
+
+
+def _unit(m):
+    """``m`` with every row divided by its 2-norm floored at 1e-12 —
+    the zero-norm rule of the module docstring.  Returns a new array
+    (callers pass cached models)."""
+    import numpy as np
+
+    return m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
+
+
+def _unpack_block(ids, mat):
+    """One packed ``(ids, flattened row-major mat)`` block
+    (:func:`_pack_blocks`'s layout) as int64 ids and a unit matrix."""
+    import numpy as np
+
+    i = np.asarray(list(ids), dtype="int64")
+    return i, _unit(np.asarray(list(mat), dtype="float64").reshape(len(i), -1))
+
+
+def _query_set(v, stride: int = QUERY_STRIDE):
+    """The query rows with the documented hard bound: every
+    ``stride``-th corpus vector, lowest ids first, capped at
+    MAX_QUERIES rows."""
     return (
-        v.filter(F.col("vec_id") % QUERY_STRIDE == 0)
+        v.filter(F.col("vec_id") % stride == 0)
         .orderBy("vec_id")
         .limit(MAX_QUERIES)
-        .toPandas()
     )
+
+
+def _query_pdf(v, stride: int = QUERY_STRIDE):
+    """:func:`_query_set` collected to the driver."""
+    return _query_set(v, stride).toPandas()
 
 
 def _query_pdf_cached(spark: SparkSession, sf_dir: str, v):
@@ -132,34 +173,41 @@ def _query_topk(
 
 
 def _exact_topk_dims(
-    spark: SparkSession, sf_dir: str, dims: int | None = None
+    spark: SparkSession,
+    sf_dir: str,
+    dims: int | None = None,
+    stride: int = QUERY_STRIDE,
+    k: int = TOP_K,
+    id_col: str = "query_id",
 ) -> DataFrame:
-    """Exact cosine top-k over the FIRST ``dims`` dimensions (all of
-    them when None): the small query matrix (N/{QUERY_STRIDE}
-    unit-normalized rows) is broadcast and each Arrow batch of the
-    corpus scores every query with one BLAS ``block @ queriesᵀ``, then
-    :func:`_query_topk` keeps and merges the candidates."""
+    """Exact cosine top-``k`` over the FIRST ``dims`` dimensions (all
+    of them when None) for every ``stride``-th vector: the small query
+    matrix (:func:`_query_pdf`, unit-normalized) is broadcast and each
+    Arrow batch of the corpus scores every query with one BLAS
+    ``block @ queriesᵀ``, then :func:`_query_topk` keeps and merges
+    the candidates.  The default stride's query set is the
+    session-cached one."""
     import numpy as np
 
     v = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    qpdf = _query_pdf_cached(spark, sf_dir, v)
+    if stride == QUERY_STRIDE:
+        qpdf = _query_pdf_cached(spark, sf_dir, v)
+    else:
+        qpdf = _query_pdf(v, stride)
     qids = qpdf["vec_id"].to_numpy(dtype="int64")
-    qm = np.stack(qpdf["embedding"].to_numpy()).astype("float64")[:, :dims]
-    qm /= np.linalg.norm(qm, axis=1, keepdims=True)
+    qm = _unit(_matrix(qpdf["embedding"], dims))
     bc = spark.sparkContext.broadcast((qids, qm))
 
     def per_batch(batch):
         ids_q, queries = bc.value
         nids = batch["vec_id"].to_numpy(dtype="int64")
-        e = np.stack(batch["embedding"].to_numpy()).astype("float64")
-        e = e[:, : queries.shape[1]]
-        e /= np.linalg.norm(e, axis=1, keepdims=True)
+        e = _unit(_matrix(batch["embedding"], queries.shape[1]))
         sims = np.round(e @ queries.T, 6)  # (batch, q)
         for j, qid in enumerate(ids_q):
             keep = nids != qid  # exclude self-match
             yield qid, nids[keep], sims[keep, j]
 
-    return _query_topk(v, TOP_K, per_batch)
+    return _query_topk(v, k, per_batch, id_col=id_col)
 
 
 @register(
@@ -252,7 +300,7 @@ def _ann_signatures(
         powers = 1 << np.arange(r, dtype=np.int64)
         for b in batches:
             ids = b["vec_id"].to_numpy(dtype="int64")
-            e = np.stack(b["embedding"].to_numpy()).astype("float64")
+            e = _matrix(b["embedding"])
             if planes is None:
                 planes = _lsh_plane_matrix(r, e.shape[1], seed_offset)
             sig = (((e @ planes.T) > 0) * powers).sum(axis=1)
@@ -313,15 +361,11 @@ def _train_ivf_centroids(spark: SparkSession, sf_dir: str):
         def gen(batches):
             for b in batches:
                 ids = b["vec_id"].to_numpy(dtype="int64")
-                e = np.stack(b["embedding"].to_numpy()).astype("float64")
-                en = e / np.linalg.norm(e, axis=1, keepdims=True)
+                en = _unit(_matrix(b["embedding"]))
                 if cents is None:
                     cells = (ids % IVF_K).astype("int64")
                 else:
-                    cn = cents / np.maximum(
-                        np.linalg.norm(cents, axis=1, keepdims=True), 1e-12
-                    )
-                    cells = np.argmax(en @ cn.T, axis=1)  # ties -> lowest
+                    cells = np.argmax(en @ _unit(cents).T, axis=1)  # ties -> lowest
                 # one pass over the block: bincount for sizes,
                 # add.at for per-cell component sums (vs a masked
                 # rescan per occupied cell — K passes)
@@ -393,13 +437,12 @@ def similarity_ivf_neighbors(
 
     v = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     cent = _ivf_centroids(spark, sf_dir)
-    centn = cent / np.maximum(np.linalg.norm(cent, axis=1, keepdims=True), 1e-12)
+    centn = _unit(cent)
 
     # -- query probe lists (queries are corpus rows; tiny, driver-side)
     qpdf = _query_pdf_cached(spark, sf_dir, v)
     qids = qpdf["vec_id"].to_numpy(dtype="int64")
-    qm = np.stack(qpdf["embedding"].to_numpy()).astype("float64")
-    qm /= np.linalg.norm(qm, axis=1, keepdims=True)
+    qm = _unit(_matrix(qpdf["embedding"]))
     qsims = qm @ centn.T
     # probe_farthest=True is the deliberate BROKEN mode the certificate
     # test uses: probing the least-similar cells drops probed exact
@@ -411,8 +454,7 @@ def similarity_ivf_neighbors(
     def per_batch(batch):
         ids_q, queries, probe_cells, cents = bc.value
         nids = batch["vec_id"].to_numpy(dtype="int64")
-        e = np.stack(batch["embedding"].to_numpy()).astype("float64")
-        en = e / np.linalg.norm(e, axis=1, keepdims=True)
+        en = _unit(_matrix(batch["embedding"]))
         cells = np.argmax(en @ cents.T, axis=1)
         sims = np.round(en @ queries.T, 6)
         for j, qid in enumerate(ids_q):
@@ -451,8 +493,7 @@ def similarity_ivf_neighbors(
         _, _, _, cents = bc.value
         for b in batches:
             ids = b["vec_id"].to_numpy(dtype="int64")
-            e = np.stack(b["embedding"].to_numpy()).astype("float64")
-            en = e / np.linalg.norm(e, axis=1, keepdims=True)
+            en = _unit(_matrix(b["embedding"]))
             yield pd.DataFrame(
                 {
                     "neighbor_id": ids,
@@ -525,7 +566,7 @@ def similarity_ann_lsh_neighbors(
     # the corpus probe unrelated buckets, collapsing recall to ~random.
     powers = 1 << np.arange(LSH_PLANES, dtype=np.int64)
     # The (~2 MB) query-probe broadcast is SESSION STATE, not per-call
-    # state (ADVICE r17): a fresh sparkContext.broadcast per warm
+    # state: a fresh sparkContext.broadcast per warm
     # serving call accumulated never-destroyed broadcast blocks on the
     # driver and executors until the returned frame's closure was
     # GC'd.  Cache it beside the query frame it derives from, keyed by
@@ -534,7 +575,7 @@ def similarity_ann_lsh_neighbors(
     def build_probes():
         qpdf = _query_pdf_cached(spark, sf_dir, v)
         qids = qpdf["vec_id"].to_numpy(dtype="int64")
-        qm = np.stack(qpdf["embedding"].to_numpy()).astype("float64")
+        qm = _matrix(qpdf["embedding"])
         qplanes = _lsh_plane_matrix(
             LSH_PLANES, qm.shape[1], query_seed_offset
         )
@@ -543,8 +584,7 @@ def similarity_ann_lsh_neighbors(
         # flips (radius 1; deeper radii would chain the same expansion)
         flips = (1 << np.arange(LSH_PLANES, dtype=np.int64)) if LSH_MULTIPROBE >= 1 else np.empty(0, dtype=np.int64)
         probe_sets = [np.concatenate(([s], s ^ flips)) for s in qsigs]
-        qn = qm / np.linalg.norm(qm, axis=1, keepdims=True)
-        return spark.sparkContext.broadcast((qids, qn, probe_sets))
+        return spark.sparkContext.broadcast((qids, _unit(qm), probe_sets))
 
     bc = cached(
         spark, ("lsh_query_probes", sf_dir, query_seed_offset), build_probes
@@ -553,13 +593,13 @@ def similarity_ann_lsh_neighbors(
     def per_batch(b):
         ids_q, queries, probes = bc.value
         ids = b["vec_id"].to_numpy(dtype="int64")
-        e = np.stack(b["embedding"].to_numpy()).astype("float64")
+        e = _matrix(b["embedding"])
         # corpus planes are ALWAYS the canonical seed — only the query
         # side shifts in broken mode; same construction point as the
         # driver-side probes
         planes = _lsh_plane_matrix(LSH_PLANES, e.shape[1])
         sigs = (((e @ planes.T) > 0) * powers).sum(axis=1)
-        en = e / np.linalg.norm(e, axis=1, keepdims=True)
+        en = _unit(e)
         for j, qid in enumerate(ids_q):
             keep = np.isin(sigs, probes[j]) & (ids != qid)
             sims = np.round(np.einsum("ij,j->i", en[keep], queries[j]), 6)
@@ -628,9 +668,9 @@ def _membership_cached(
     cached relations travel with their widths as scalars
     ('frames+scalars' in models.py, frames-first: (m1, m2, w1, w2))
     and a demand for an UNCACHED width rebuilds instead of grading the
-    sweep against the wrong promise (ADVICE r15: after an index reload
-    across a _knn_ann_planes boundary the file-derived count and the
-    served index's count diverge).  Up to TWO widths live side by
+    sweep against the wrong promise (after an index reload across a
+    _knn_ann_planes boundary the file-derived count and the served
+    index's count diverge).  Up to TWO widths live side by
     side: in the boundary-reload scenario ``knn_graph_ann`` (served
     width) and ``stream_knn_index_live`` (file-derived width)
     alternate within one bench pass, and a single-slot cache would
@@ -651,7 +691,7 @@ def _membership_cached(
         # LocalRelation broadcasts into the certificate joins
         # driver-side — no InMemoryTableScan job per call.  CORPUS-WIDE
         # kinds ('knn': every vector is a query, the relation is N·k
-        # rows) pass ``localize=False`` (ADVICE r17): an unbounded
+        # rows) pass ``localize=False``: an unbounded
         # driver collect is exactly what the 100 TB design forbids,
         # and the resulting single-partition LocalRelation sits on the
         # STREAMED side of the broadcast_found=False certificate join
@@ -887,12 +927,7 @@ def _lsh_membership(
     ).select(
         F.col("vec_id").alias("neighbor_id"), F.col("sig").alias("nbucket")
     )
-    qb = _ann_signatures(
-        v.filter(F.col("vec_id") % QUERY_STRIDE == 0)
-        .orderBy("vec_id")
-        .limit(MAX_QUERIES),
-        with_embedding=False,
-    ).select(
+    qb = _ann_signatures(_query_set(v), with_embedding=False).select(
         F.col("vec_id").alias("query_id"), F.col("sig").alias("qbucket")
     )
     probes = F.array(
@@ -998,8 +1033,7 @@ def _train_pq_codebooks(spark: SparkSession, sf_dir: str):
         def gen(batches):
             for b in batches:
                 ids = b["vec_id"].to_numpy(dtype="int64")
-                e = np.stack(b["embedding"].to_numpy()).astype("float64")
-                en = e / np.linalg.norm(e, axis=1, keepdims=True)
+                en = _unit(_matrix(b["embedding"]))
                 dim = en.shape[1]
                 if dim % PQ_M:
                     raise ValueError(
@@ -1087,8 +1121,7 @@ def _pq_batch(b, books, cents):
     import numpy as np
 
     nids = b["vec_id"].to_numpy(dtype="int64")
-    e = np.stack(b["embedding"].to_numpy()).astype("float64")
-    en = e / np.linalg.norm(e, axis=1, keepdims=True)
+    en = _unit(_matrix(b["embedding"]))
     cells = None if cents is None else np.argmax(en @ cents.T, axis=1)
     return nids, _pq_encode(en, books), cells
 
@@ -1158,15 +1191,11 @@ def _pq_neighbors(
     v = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     probes = centn = None
     if ivf:
-        cent = _ivf_centroids(spark, sf_dir)
-        centn = cent / np.maximum(
-            np.linalg.norm(cent, axis=1, keepdims=True), 1e-12
-        )
+        centn = _unit(_ivf_centroids(spark, sf_dir))
     books = _pq_codebooks(spark, sf_dir)
     qpdf = _query_pdf_cached(spark, sf_dir, v)
     qids = qpdf["vec_id"].to_numpy(dtype="int64")
-    qm = np.stack(qpdf["embedding"].to_numpy()).astype("float64")
-    qm /= np.linalg.norm(qm, axis=1, keepdims=True)
+    qm = _unit(_matrix(qpdf["embedding"]))
     if ivf:
         probes = np.argsort(-(qm @ centn.T), kind="stable", axis=1)[
             :, :IVF_NPROBE
@@ -1203,8 +1232,7 @@ def _pq_neighbors(
         for b in batches:
             if not len(b):
                 continue
-            e = np.stack(b["embedding"].to_numpy()).astype("float64")
-            en = e / np.linalg.norm(e, axis=1, keepdims=True)
+            en = _unit(_matrix(b["embedding"]))
             qi = np.array(
                 [qrow[int(q)] for q in b["query_id"].to_numpy()], dtype=np.int64
             )
@@ -1362,7 +1390,7 @@ def _pq_membership(spark, sf_dir, bc, exact):
         .groupBy("query_id", "neighbor_id")
         .agg(F.sum("cnt").alias("rank"))
     )
-    # explicit schema (ADVICE r13): inference raises on an empty pandas
+    # explicit schema: inference raises on an empty pandas
     # frame, and an empty exact/membership relation is a legal input.
     probed_flag = spark.createDataFrame(
         thresholds[["query_id", "neighbor_id", "probed"]],
@@ -1702,16 +1730,6 @@ def _block_pair_topk(block_pairs: DataFrame, k: int) -> DataFrame:
     member is a top-k member of every B-block slice it appears in.
     The merge window then ranks ≤ k·(pairs touching the vector)
     candidates per vector, never N."""
-    import numpy as np
-    import pandas as pd
-
-    def unpack(ids, mat):
-        i = np.asarray(list(ids), dtype="int64")
-        m = np.asarray(list(mat), dtype="float64").reshape(len(i), -1)
-        # zero-norm guard (ADVICE r13): a zero vector must score 0, not
-        # NaN-poison every ranking it appears in (same clamp as centn).
-        m /= np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
-        return i, m
 
     def score(batches):
         for batch in batches:
@@ -1725,42 +1743,51 @@ def _block_pair_topk(block_pairs: DataFrame, k: int) -> DataFrame:
                 batch["ids_b"].to_numpy(),
                 batch["mat_b"].to_numpy(),
             ):
-                ia, ma = unpack(raw_ia, raw_ma)
-                ib, mb = unpack(raw_ib, raw_mb)
-                sims = np.round(ma @ mb.T, 6)  # (|A|, |B|)
-                # Vectorized exact per-row top-k (r14 — replaced a
-                # per-A-row Python lexsort loop, the wall of the 10x
-                # sweep): packing sorts ids ASCENDING, so ONE stable
-                # argsort of -sims along axis 1 yields exactly the
-                # final (rounded sim desc, neighbor_id asc) order per
-                # row.  Self-matches are masked by ID EQUALITY to
-                # -inf, which sorts last and is dropped by the finite
-                # filter: for corpus-partition sweeps (A and B are the
-                # same bucket/block — each vector lives in exactly
-                # one) this is precisely the old diagonal mask; for
-                # query-side-restricted sweeps (the sampled
-                # certificate packs only the query vectors, so A ⊂ B)
-                # the self cell sits off-diagonal.  O(|A||B|) int64
-                # compares — 64x cheaper than the matmul next to it.
-                sims[ia[:, None] == ib[None, :]] = -np.inf
-                kk = min(k, sims.shape[1])
-                order = np.argsort(-sims, axis=1, kind="stable")[:, :kk]
-                top = np.take_along_axis(sims, order, axis=1)
-                valid = np.isfinite(top).ravel()
-                if not valid.any():
-                    continue
-                yield pd.DataFrame(
-                    {
-                        "vec_id": np.repeat(ia, kk)[valid],
-                        "neighbor_id": ib[order.ravel()[valid]],
-                        "cos_sim": top.ravel()[valid],
-                    }
+                yield from _pair_topk(
+                    *_unpack_block(raw_ia, raw_ma),
+                    *_unpack_block(raw_ib, raw_mb),
+                    k,
                 )
 
     cand = block_pairs.mapInPandas(
         score, schema="vec_id long, neighbor_id long, cos_sim double"
     )
     return _merge_topk(cand, k)
+
+
+def _pair_topk(ia, ma, ib, mb, k: int):
+    """Each A-row's local top-``k`` against one B block (unit rows
+    ``ma`` / ``mb``, ids ``ia`` / ``ib``) as at most one
+    ``(vec_id, neighbor_id, cos_sim)`` frame — the per-pair step of
+    every blocked kNN sweep."""
+    import numpy as np
+    import pandas as pd
+
+    sims = np.round(ma @ mb.T, 6)  # (|A|, |B|)
+    # Vectorized exact per-row top-k (r14 — replaced a per-A-row Python
+    # lexsort loop, the wall of the 10x sweep): packing sorts ids
+    # ASCENDING, so ONE stable argsort of -sims along axis 1 yields
+    # exactly the final (rounded sim desc, neighbor_id asc) order per
+    # row.  Self-matches are masked by ID EQUALITY to -inf, which sorts
+    # last and is dropped by the finite filter: for corpus-partition
+    # sweeps (A and B are the same bucket/block — each vector lives in
+    # exactly one) this is precisely the old diagonal mask; for
+    # query-side-restricted sweeps (the sampled certificate packs only
+    # the query vectors, so A ⊂ B) the self cell sits off-diagonal.
+    # O(|A||B|) int64 compares — 64x cheaper than the matmul next to it.
+    sims[ia[:, None] == ib[None, :]] = -np.inf
+    kk = min(k, sims.shape[1])
+    order = np.argsort(-sims, axis=1, kind="stable")[:, :kk]
+    top = np.take_along_axis(sims, order, axis=1)
+    valid = np.isfinite(top).ravel()
+    if valid.any():
+        yield pd.DataFrame(
+            {
+                "vec_id": np.repeat(ia, kk)[valid],
+                "neighbor_id": ib[order.ravel()[valid]],
+                "cos_sim": top.ravel()[valid],
+            }
+        )
 
 
 def _merge_topk(cand: DataFrame, k: int) -> DataFrame:
@@ -1784,7 +1811,7 @@ def _merge_topk(cand: DataFrame, k: int) -> DataFrame:
     "knn_graph",
     # greatest(..., 1e-12) mirrors the Spark scorer's zero-norm clamp
     # (_block_pair_topk): a zero vector must score cos 0 on BOTH
-    # engines, not divide-by-zero on the oracle side (ADVICE r14).
+    # engines, not divide-by-zero on the oracle side.
     oracle=f"""
     WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
     scored AS (
@@ -1963,7 +1990,7 @@ def _knn_ann_index_cached(
     query would re-pay the corpus signature pass + packing shuffle
     every time.
 
-    The PLANE COUNT travels with the packed relation (ADVICE r14): a
+    The PLANE COUNT travels with the packed relation: a
     cached index built when the corpus sat on the other side of a
     :func:`_knn_ann_planes` boundary must be probed with ITS OWN bit
     width, not one re-derived from the current file — a mismatched
@@ -2068,7 +2095,7 @@ def _knn_query_pack_cached(
     # The pack's bit width must equal the SERVED index's — a pack
     # persisted under a different plane count (legacy planes-less
     # 1-tuple, or a store saved across a _knn_ann_planes boundary)
-    # would silently flip the wrong bits at probe time (ADVICE r15,
+    # would silently flip the wrong bits at probe time (the
     # query-side edition of the knn_ann_index legacy guard above); a
     # superseded pack is rebuilt and released.
     return cached(
@@ -2105,10 +2132,8 @@ def _knn_query_probes_cached(
         for raw_ids, raw_mat, pblk in zip(
             pdf["ids_a"].to_numpy(), pdf["mat_a"].to_numpy(), pdf["pblk"].to_numpy()
         ):
-            ia = np.asarray(list(raw_ids), dtype="int64")
-            ma = np.asarray(list(raw_mat), dtype="float64").reshape(len(ia), -1)
-            # the scorer-side normalization clamp, applied ONCE at build
-            ma /= np.maximum(np.linalg.norm(ma, axis=1, keepdims=True), 1e-12)
+            # the scorer-side normalization, applied ONCE at build
+            ia, ma = _unpack_block(raw_ids, raw_mat)
             grouped.setdefault(int(pblk), []).append((ia, ma))
         probes = {
             blk: (
@@ -2183,7 +2208,7 @@ def knn_graph_ann_neighbors(
     signature pass + packing shuffle).
     """
     if index is not None:
-        # probe with the INDEX'S OWN plane count (ADVICE r14): the
+        # probe with the INDEX'S OWN plane count: the
         # served relation may have been packed when the corpus sat on
         # the other side of a _knn_ann_planes boundary, and a flip set
         # derived from the current file would probe the wrong bits.
@@ -2200,10 +2225,10 @@ def knn_graph_ann_neighbors(
         packed = _pack_buckets_salted(
             sigs.select("vec_id", "embedding", "bucket")
         )
-    # Full multi-probe up to the requested Hamming radius (ADVICE r14:
-    # the old comprehension emitted only single-bit flips, so any
-    # radius >= 1 silently probed radius 1 while _knn_ann_membership
-    # promised Hamming <= radius).  Masks are distinct, so each ordered
+    # Full multi-probe up to the requested Hamming radius (an
+    # enumeration of single-bit flips only would probe radius 1 for
+    # any radius >= 1 while _knn_ann_membership promises Hamming <=
+    # radius).  Masks are distinct, so each ordered
     # block pair is still generated exactly once.  Fan-out is
     # sum_{j<=r} C(p, j) block copies — r=1 keeps the documented
     # (1+planes) shape; r=2 is the quadratic widening a recall-starved
@@ -2220,7 +2245,7 @@ def knn_graph_ann_neighbors(
         # WITH an explicit index: signatures are comparable only under
         # one plane matrix, and a pack built against a served index
         # probed at a file-derived count would silently flip the wrong
-        # bits (the ADVICE-r14 mismatch, query-side edition).
+        # bits (the plane-width mismatch, query-side edition).
         if index is None:
             raise ValueError(
                 "probing_pack requires an explicit index=(packed, "
@@ -2246,9 +2271,6 @@ def knn_graph_ann_neighbors(
             # to the pair path: per-A-row local top-k against a B
             # block is independent of which other A rows share the
             # matmul, and the same merge ranks the same candidates.
-            import numpy as np
-            import pandas as pd
-
             bc = _knn_query_probes_cached(
                 spark, sf_dir, probing_pack, p
             )
@@ -2265,33 +2287,8 @@ def knn_graph_ann_neighbors(
                         hit = lookup.get(int(raw_blk))
                         if hit is None:
                             continue
-                        ia, ma = hit
-                        ib = np.asarray(list(raw_ib), dtype="int64")
-                        mb = np.asarray(
-                            list(raw_mb), dtype="float64"
-                        ).reshape(len(ib), -1)
-                        mb /= np.maximum(
-                            np.linalg.norm(mb, axis=1, keepdims=True),
-                            1e-12,
-                        )
-                        sims = np.round(ma @ mb.T, 6)
-                        sims[ia[:, None] == ib[None, :]] = -np.inf
-                        kk = min(k, sims.shape[1])
-                        order = np.argsort(-sims, axis=1, kind="stable")[
-                            :, :kk
-                        ]
-                        top = np.take_along_axis(sims, order, axis=1)
-                        valid = np.isfinite(top).ravel()
-                        if not valid.any():
-                            continue
-                        yield pd.DataFrame(
-                            {
-                                "vec_id": np.repeat(ia, kk)[valid],
-                                "neighbor_id": ib[
-                                    order.ravel()[valid]
-                                ],
-                                "cos_sim": top.ravel()[valid],
-                            }
+                        yield from _pair_topk(
+                            *hit, *_unpack_block(raw_ib, raw_mb), k
                         )
 
             cand = packed.mapInPandas(
@@ -2390,7 +2387,7 @@ def _knn_ann_membership(
     relation, so the membership build is scan + two bounded joins,
     never an all-pairs relation.
 
-    ``planes``: the SERVED index's bit width (ADVICE r15) — the
+    ``planes``: the SERVED index's bit width — the
     should_find promise must be stated at the width the sweep actually
     probes, which after an index reload across a :func:`_knn_ann_planes`
     boundary differs from the file-derived count.  Defaults to the
@@ -2444,7 +2441,7 @@ def _knn_ann_membership(
 #: hash match proves the flag ACTUALLY came out true on the Spark
 #: side plus an independently recomputed exact_kth_sim per vector.
 #: greatest(..., 1e-12) mirrors the Spark scorer's zero-norm clamp
-#: (ADVICE r14: without it a zero vector diverges the engines).
+#: (without it a zero vector diverges the engines).
 _KNN_ANN_CERT_SQL = f"""
 WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
 scored AS (
@@ -2492,7 +2489,7 @@ def knn_graph_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda: _knn_ann_membership(spark, sf_dir, exact, planes=idx[1]),
         planes=idx[1],
         # corpus-wide kind (every vector is a query → N·k rows):
-        # never driver-localize (ADVICE r17) — keep the distributed
+        # never driver-localize — keep the distributed
         # checkpoint path like _knn_exact_cached.
         localize=False,
     )
@@ -2543,36 +2540,18 @@ def _knn_exact_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _score_knn_exact_sampled(spark: SparkSession, sf_dir: str) -> tuple:
-    """The uncached :func:`_knn_exact_sampled` build."""
-    import numpy as np
-
-    v = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    qpdf = (
-        v.filter(F.col("vec_id") % KNN_CERT_STRIDE == 0)
-        .orderBy("vec_id")
-        .limit(MAX_QUERIES)
-        .toPandas()
+    """The uncached :func:`_knn_exact_sampled` build:
+    :func:`_exact_topk_dims` at the sample stride and the graph's
+    fan-out, collected into a driver-local relation."""
+    exact = _exact_topk_dims(
+        spark, sf_dir, stride=KNN_CERT_STRIDE, k=KNN_GRAPH_K, id_col="vec_id"
     )
-    qids = qpdf["vec_id"].to_numpy(dtype="int64")
-    qm = np.stack(qpdf["embedding"].to_numpy()).astype("float64")
-    qm /= np.maximum(np.linalg.norm(qm, axis=1, keepdims=True), 1e-12)
-    bc = spark.sparkContext.broadcast((qids, qm))
-
-    def per_batch(batch):
-        ids_q, queries = bc.value
-        nids = batch["vec_id"].to_numpy(dtype="int64")
-        e = np.stack(batch["embedding"].to_numpy()).astype("float64")
-        e /= np.maximum(np.linalg.norm(e, axis=1, keepdims=True), 1e-12)
-        sims = np.round(e @ queries.T, 6)  # (batch, q)
-        for j, qid in enumerate(ids_q):
-            keep = nids != qid
-            yield qid, nids[keep], sims[keep, j]
-
-    exact = spark.createDataFrame(
-        _query_topk(v, KNN_GRAPH_K, per_batch, id_col="vec_id").toPandas(),
-        schema="vec_id long, neighbor_id long, cos_sim double",
+    return (
+        spark.createDataFrame(
+            exact.toPandas(),
+            schema="vec_id long, neighbor_id long, cos_sim double",
+        ),
     )
-    return (exact,)
 
 
 _KNN_ANN_SAMPLED_CERT_SQL = f"""
@@ -2974,7 +2953,7 @@ def embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
         for batch in batches:
             if len(batch) == 0:
                 continue
-            e = np.stack(batch["embedding"].to_numpy()).astype("float64")
+            e = _matrix(batch["embedding"])
             n, d = e.shape
             g = e.T @ e  # (d, d)
             s = e.sum(axis=0)  # (d,)

@@ -13,6 +13,7 @@ import pytest
 
 from s3_manifest_spark.operators import dedup as D
 from s3_manifest_spark.operators import graph as G
+from s3_manifest_spark.operators import semdedup as SD
 from s3_manifest_spark.operators import similarity as S
 
 SF = "/root/testdata/sf0.001"
@@ -163,28 +164,73 @@ def test_attribution_all_purchase_user(spark, monkeypatch):
     assert res["last_touch_id"].isna().all()
 
 
-def test_knn_graph_ann_zero_vector_yields_no_nan(spark, monkeypatch):
-    """The zero-norm guard in the shared block scorer (ADVICE r13) is
-    load-bearing: a zero vector must score cos 0 against everything —
-    never NaN, which would silently poison every ranking the block
-    pair touches."""
-    rows = [
-        (1, [1.0, 0.0], 0),
-        (2, [0.9, 0.1], 0),
-        (3, [0.0, 0.0], 0),  # zero vector
-        (4, [0.0, 1.0], 0),
-    ]
-    monkeypatch.setattr(
-        S, "load_table", lambda s, d, n, widen=False: _emb_df(spark, rows)
-    )
-    for fn in (S.knn_graph, S.knn_graph_ann_neighbors):
+#: the knn cases' four-row corpus: vec_id 3 is the zero vector
+_KNN_ZERO_ROWS = [
+    (1, [1.0, 0.0], 0),
+    (2, [0.9, 0.1], 0),
+    (3, [0.0, 0.0], 0),
+    (4, [0.0, 1.0], 0),
+]
+
+
+def _zero_corpus():
+    """300 seeded dim-64 rows (semdedup pins the dim, PQ needs a
+    multiple of PQ_M) with zero vectors at vec_id 8 — in the even-id
+    IVF / PQ training sample and in the semdedup Lloyd — and 100, a
+    similarity query (vec_id % QUERY_STRIDE == 0)."""
+    m = np.random.RandomState(13).standard_normal((300, 64))
+    m[[8, 100]] = 0.0
+    return [(i, [float(x) for x in m[i]], 0) for i in range(300)]
+
+
+_KNN_FNS = (S.knn_graph, S.knn_graph_ann_neighbors)
+
+
+@pytest.mark.parametrize(
+    "fn",
+    [
+        *_KNN_FNS,
+        S.similarity_topk,
+        S.similarity_ann_lsh_neighbors,
+        S.similarity_ivf_neighbors,
+        S.similarity_pq_neighbors,
+        S.similarity_ivf_pq_neighbors,
+        SD.semdedup,
+    ],
+    ids=lambda fn: fn.__name__,
+)
+def test_zero_vector_yields_no_nan(spark, monkeypatch, fn):
+    """The zero-norm rule (``similarity._unit``) is load-bearing in
+    every vector kernel: a zero vector must score cosine 0 against
+    everything, as a neighbor and as a query — never NaN, which would
+    poison every ranking it touches, or cross Arrow as a null into the
+    IVF / PQ / semdedup Lloyd reduces and fail them."""
+    from s3_manifest_spark.registry import clear_model_cache
+
+    if fn in _KNN_FNS:
+        rows, zero_ids = _KNN_ZERO_ROWS, (3,)
+    else:
+        rows, zero_ids = _zero_corpus(), (8, 100)
+    for mod in (S, SD):
+        monkeypatch.setattr(
+            mod, "load_table", lambda s, d, n, widen=False: _emb_df(spark, rows)
+        )
+    # the trained quantizers and the query set are session-cached per
+    # sf_dir: keep the synthetic corpus out of the other tests' models
+    clear_model_cache(spark)
+    try:
         out = fn(spark, SF).toPandas()
-        assert out["cos_sim"].notna().all(), fn.__name__
-        assert (out["vec_id"] != out["neighbor_id"]).all()
-        # the zero vector's similarities are exactly 0 wherever it
-        # appears as a neighbor
-        z = out[out["neighbor_id"] == 3]
-        assert (z["cos_sim"] == 0.0).all()
+    finally:
+        clear_model_cache(spark)
+    assert len(out) > 0
+    assert out.select_dtypes("number").notna().all().all()
+    if "cos_sim" not in out:
+        return
+    qcol = "vec_id" if "vec_id" in out else "query_id"
+    assert (out[qcol] != out["neighbor_id"]).all()
+    # exactly 0 wherever a zero vector is the neighbor or the query
+    z = out["neighbor_id"].isin(zero_ids) | out[qcol].isin(zero_ids)
+    assert (out.loc[z, "cos_sim"] == 0.0).all()
 
 
 def test_knn_graph_ann_candidates_respect_probe_radius(spark, monkeypatch):
