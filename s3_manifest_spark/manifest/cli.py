@@ -59,9 +59,10 @@ def build_parser() -> argparse.ArgumentParser:
         metavar="KEY",
         help=(
             "incremental listing: only keys strictly greater than KEY "
-            "(S3 StartAfter, pushed to the API; shards wholly at or "
-            "below it are never requested).  Feed the previous "
-            "manifest's max(Key) to list only the new tail."
+            "(S3 StartAfter, pushed to every request, shard discovery "
+            "included, so only the keyspace above KEY is walked).  "
+            "Feed the previous manifest's max(Key) to list only the "
+            "new tail."
         ),
     )
     p.add_argument(

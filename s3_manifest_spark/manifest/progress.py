@@ -5,8 +5,9 @@ elapsed time, object count, and obj/sec while the listing runs).
 Spark-native translation: the listing tasks add each Arrow batch's row
 count to a Spark accumulator (task-side increments surface on the driver as
 tasks complete — the same freshness indicatif gets from its atomic
-counter), and a driver daemon thread redraws one console line in place
-every ``interval`` seconds.
+counter; a listing that discovery completes on the driver adds its count
+there, at once), and a driver daemon thread redraws one console line in
+place every ``interval`` seconds.
 
 Accuracy caveat: the accumulator is incremented inside a
 transformation (``mapInArrow``), so task retries and speculative

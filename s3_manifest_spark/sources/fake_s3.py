@@ -2,10 +2,13 @@
 
 Dev/test fixture (no network, S3 or moto needed): implements exactly
 the request/response subset the connector uses — Prefix, Delimiter,
-MaxKeys, ContinuationToken, IsTruncated, Contents, CommonPrefixes —
-with S3's real semantics (lexicographic key order, token = resume
-position).  Lives in the package (not tests/) so Spark executors can
-unpickle the client factory by module reference.
+MaxKeys, ContinuationToken, StartAfter, IsTruncated, Contents,
+CommonPrefixes — with S3's real semantics (lexicographic key order,
+token = resume position; a CommonPrefixes group that sorts at or
+below StartAfter is left out even when it holds keys above it, as
+S3-compatible servers such as moto do).  Lives in the package (not
+tests/) so Spark executors can unpickle the client factory by module
+reference.
 """
 
 from __future__ import annotations
@@ -89,7 +92,9 @@ class FakeS3Client:
                 d = rest.find(delimiter)
                 if d >= 0:
                     cp = prefix + rest[: d + len(delimiter)]
-                    if cp not in seen_prefixes:
+                    # A group at or below StartAfter is left out, keys
+                    # above the marker inside it included.
+                    if cp not in seen_prefixes and cp > start_after:
                         seen_prefixes.add(cp)
                         common.append({"Prefix": cp})
                         emitted += 1

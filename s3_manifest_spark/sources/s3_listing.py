@@ -13,13 +13,19 @@ Python cost is paid once per slice, not once per shard (SURVEY.md §4,
 
 Dataflow::
 
-    discover_shards (driver, few API calls)
-        → spark.createDataFrame(shards)          # tiny local relation:
+    discover_shards (driver, few API calls;      # StartAfter on every delimiter
+                     start_after honoured)       #   listing: only the tail is walked
+        → shards left to page:
+            spark.createDataFrame(shards)        # tiny local relation:
                                                  #   min(shards, defaultParallelism)
                                                  #   contiguous slices, no shuffle
-        → mapInArrow(_list_shards per slice)     # MAX_IN_FLIGHT requests in
+            → mapInArrow(_list_shards per slice) # MAX_IN_FLIGHT requests in
                                                  #   flight; one page → one
                                                  #   Arrow batch
+        → no shard left (e.g. a short refresh tail):
+            spark.createDataFrame(pa.Table)      # discovery's direct objects as a
+                                                 #   driver-side Arrow relation,
+                                                 #   no Python task
         → listing DataFrame(key, size, last_modified, etag, storage_class)
         → derive_manifest(...)                   # manifest/core.py
 
@@ -35,7 +41,7 @@ import random
 import time
 from collections.abc import Callable, Iterable, Iterator
 from concurrent.futures import ThreadPoolExecutor
-from itertools import chain, islice
+from itertools import islice
 
 import pyarrow as pa
 
@@ -237,6 +243,7 @@ def discover_shards(
     prefix: str = "",
     delimiter: str = "/",
     target_shards: int = 64,
+    start_after: str = "",
 ) -> tuple[list[str], list[dict]]:
     """Split the keyspace under ``prefix`` into disjoint shard prefixes
     via delimiter listings (S3 CommonPrefixes), BFS-expanding until
@@ -252,19 +259,38 @@ def discover_shards(
     listed level (not under any returned shard) come back as rows so
     coverage is exact — every key is in exactly one shard or in
     direct_objects.
+
+    ``start_after`` rides on every delimiter listing as S3
+    ``StartAfter``, so only the keyspace above the marker is walked:
+    every direct object sorts above it, and every returned shard either
+    holds a key above it or is one of the marker's own ancestor
+    prefixes.  S3 leaves out a ``CommonPrefixes`` group that sorts at or
+    below ``StartAfter`` even when it holds keys above it — the group
+    the marker itself falls in — so at each level that group is
+    expanded without being asked for (a server that returns it anyway
+    gets the same requests).  It is the only prefix at or below the
+    marker that is ever requested: at most one per level.
     """
+    request = {"Bucket": bucket, "Delimiter": delimiter, "MaxKeys": PAGE_SIZE}
+    if start_after:
+        request["StartAfter"] = start_after
     direct: list[dict] = []
     frontier = [prefix]
     for _ in range(DISCOVER_MAX_ROUNDS):
         pages: dict[str, list[dict]] = {p: [] for p in frontier}
-        for p, resp in _list_shards(
-            client, frontier, Bucket=bucket, Delimiter=delimiter, MaxKeys=PAGE_SIZE
-        ):
+        for p, resp in _list_shards(client, frontier, **request):
             pages[p].append(resp)
         children: list[str] = []
-        for resp in chain.from_iterable(pages.values()):  # frontier order
-            direct.extend(resp.get("Contents", []))
-            children.extend(cp["Prefix"] for cp in resp.get("CommonPrefixes", []))
+        for p, resps in pages.items():  # frontier order
+            groups = [cp["Prefix"] for r in resps for cp in r.get("CommonPrefixes", [])]
+            d = -1
+            if delimiter and start_after.startswith(p):
+                d = start_after.find(delimiter, len(p))
+            if d >= 0 and (held := start_after[: d + len(delimiter)]) not in groups:
+                groups.insert(0, held)  # held <= marker < every returned group
+            children += groups
+            for r in resps:
+                direct.extend(r.get("Contents", []))
         frontier = children
         if not frontier or len(frontier) >= target_shards:
             break  # else: not enough parallelism yet — expand one more level
@@ -319,38 +345,32 @@ def list_objects_df(
     ``start_after`` makes the listing INCREMENTAL: only keys strictly
     greater than the marker are returned (S3 ``StartAfter``, pushed
     into the API like the prefix).  Feed it the previous manifest's
-    ``max(Key)`` and only the tail of the keyspace is ever listed —
-    shards whose entire key range sorts at or below the marker are
-    skipped without a single API call, so a mostly-unchanged bucket
-    costs O(new keys / page) round-trips, not O(bucket).  Composes
-    with the CDC apply (``operators/manifest_queries.py``) for
-    incremental manifest maintenance.  Note: S3 keys are append-sorted
-    only by name — this captures keys ABOVE the marker, the common
-    log/date-partitioned layout; arbitrary inserts need the full
-    listing + ``manifest_diff``.
+    ``max(Key)`` and only the tail of the keyspace is ever listed:
+    discovery sends the marker on its delimiter listings too, so below
+    the marker it requests only the marker's own ancestor groups
+    (:func:`discover_shards`), and a mostly-unchanged bucket costs
+    O(new keys / page) round-trips, not O(bucket).  Composes with the
+    CDC apply (``operators/manifest_queries.py``) for incremental
+    manifest maintenance.  Note: S3 keys are append-sorted only by name — this
+    captures keys ABOVE the marker, the common log/date-partitioned
+    layout; arbitrary inserts need the full listing + ``manifest_diff``.
+
+    When discovery leaves no shard to page (a short tail, or a bucket
+    shallower than discovery's BFS), its direct objects are the whole
+    listing: they already sit on the driver, so they become a local
+    Arrow relation and the listing runs no Python task.  The driver
+    adds their count to ``progress`` itself.
     """
     client_factory = client_factory or make_boto3_client_factory()
-    driver_client = client_factory()
     shards, direct = discover_shards(
-        driver_client, bucket, prefix, delimiter, target_shards
+        client_factory(), bucket, prefix, delimiter, target_shards, start_after
     )
-    if start_after:
-        # Every key in a shard starts with the shard prefix p.  ALL of
-        # them sort at or below the marker — i.e. the shard is safe to
-        # skip with zero API calls — exactly when p < marker AND p is
-        # not itself a prefix of the marker (if it were, keys like
-        # p + <high codepoint> could still exceed the marker).  This
-        # rule is exact for arbitrary Unicode keys; an upper-bound
-        # sentinel like p+"￿" would wrongly skip shards holding
-        # astral-plane (> U+FFFF) keys.
-        shards = [
-            p
-            for p in shards
-            if not (p < start_after and not start_after.startswith(p))
-        ]
-        direct = [
-            o for o in direct if (o.get("Key") or "") > start_after
-        ]
+    if not shards:
+        if progress is not None:
+            progress.accumulator.add(len(direct))
+        return spark.createDataFrame(
+            pa.Table.from_batches([_page_batch(direct)]), LISTING_SCHEMA
+        )
     request = {"Bucket": bucket, "MaxKeys": page_size}
     if start_after:
         request["StartAfter"] = start_after
@@ -368,7 +388,7 @@ def list_objects_df(
     def list_task(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         mine: list[str] = []
         for b in batches:
-            mine += [s for s in b.column("shard").to_pylist() if s is not None]
+            mine += b.column("shard").to_pylist()
             listed = b.column("direct").flatten()
             if len(listed):
                 yield counted(pa.RecordBatch.from_struct_array(listed))
@@ -381,8 +401,7 @@ def list_objects_df(
     # A local relation is split into min(rows, defaultParallelism)
     # contiguous slices with no shuffle.  The direct objects ride on
     # the first row, so the listing is this one relation, never a union.
-    first = shards[0] if shards else None
-    rows = [(first, _page_batch(direct).to_pylist())] + [(s, []) for s in shards[1:]]
+    rows = [(shards[0], _page_batch(direct).to_pylist())] + [(s, []) for s in shards[1:]]
     return spark.createDataFrame(rows, _TASK_SCHEMA).mapInArrow(
         list_task, LISTING_SCHEMA
     )

@@ -99,7 +99,6 @@ def upload_parquet_boto3(
         import pyarrow.parquet as pq
         from pyspark import TaskContext
 
-        pid = TaskContext.get().partitionId()
         writer = None
         n_rows = 0
         fd, tmp = tempfile.mkstemp(suffix=".parquet")
@@ -117,11 +116,11 @@ def upload_parquet_boto3(
                 writer = pq.ParquetWriter(tmp, driver_schema)
             writer.close()
             writer = None
-            obj_key = (
-                prefix
-                if single_object
-                else f"{prefix}/part-{pid:05d}-{run_id}.parquet"
-            )
+            if single_object:
+                obj_key = prefix
+            else:
+                pid = TaskContext.get().partitionId()
+                obj_key = f"{prefix}/part-{pid:05d}-{run_id}.parquet"
             size = os.path.getsize(tmp)
             client = factory()
             from boto3.s3.transfer import TransferConfig
@@ -149,6 +148,10 @@ def upload_parquet_boto3(
     summaries = df.mapInArrow(
         upload_partition, schema="key string, rows long, bytes long"
     ).collect()
+    if single_object and not summaries:
+        # A frame with no partitions (an empty local relation) runs no
+        # task: its zero-row object is written from the driver.
+        return [r for b in upload_partition(iter(())) for r in b.to_pylist()]
     if write_success_marker and not single_object:
         factory().put_object(Bucket=bucket, Key=f"{prefix}/_SUCCESS", Body=b"")
     return [r.asDict() for r in summaries]

@@ -600,3 +600,198 @@ def test_fake_client_delimiter_astral_keys_terminate():
     else:
         raise AssertionError("pagination did not terminate")
     assert sorted(seen) == sorted(set(got_prefixes + got_keys))
+
+
+def _deep_factory():
+    """A bucket whose keys sit one level deeper than discovery's BFS
+    reaches, so its last frontier is a shard left for the tasks."""
+    import datetime as dt
+
+    from s3_manifest_spark.sources.fake_s3 import custom_client_factory
+
+    t = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
+    keys = [f"a/b/c/d-{i:03d}.txt" for i in range(40)] + ["a/top.txt", "z.txt"]
+    return custom_client_factory({"deep": {k: (len(k), t) for k in keys}}), set(keys)
+
+
+def _is_task_path(df) -> bool:
+    return "MapInArrow" in df._jdf.queryExecution().executedPlan().toString()
+
+
+@pytest.mark.parametrize(
+    "case, target_shards, task_path",
+    [
+        ("synth", 1000, False),  # discovery walks every shard down to keys
+        ("synth", 1, True),      # BFS stops at dir3/.., and dir3/ holds the marker
+        ("deep", 64, True),      # keys deeper than DISCOVER_MAX_ROUNDS levels
+    ],
+)
+def test_incremental_listing_mid_shard_marker_equals_tail(
+    spark, case, target_shards, task_path
+):
+    """A marker that falls inside a shard lists exactly the keys above
+    it, whether discovery prunes every shard (the driver-side relation)
+    or leaves the marker's shard to the listing tasks."""
+    if case == "synth":
+        bucket, factory, keys = "fake-bucket", fake_client_factory, ALL_KEYS
+        inside = sorted(k for k in keys if k.startswith("dir3/sub5/"))
+    else:
+        bucket = "deep"
+        factory, keys = _deep_factory()
+        inside = sorted(k for k in keys if k.startswith("a/b/c/"))
+    marker = inside[len(inside) // 2]
+    inc = list_objects_df(
+        spark,
+        bucket,
+        client_factory=factory,
+        target_shards=target_shards,
+        page_size=7,
+        start_after=marker,
+    )
+    assert _is_task_path(inc) == task_path
+    got = [r.key for r in inc.collect()]
+    assert len(got) == len(set(got))
+    assert set(got) == {k for k in keys if k > marker}
+
+
+class _RecordingClient:
+    """Passes ListObjectsV2 through and records every request."""
+
+    def __init__(self, inner):
+        self.inner = inner
+        self.requests: list[dict] = []
+
+    def list_objects_v2(self, **kw):
+        self.requests.append(kw)
+        return self.inner.list_objects_v2(**kw)
+
+
+class _KeepsMarkerGroup:
+    """ListObjectsV2 that applies StartAfter before it groups keys into
+    CommonPrefixes (perfbench's stub does): the group holding the
+    marker comes back whenever it holds a key above the marker, where
+    S3 and FakeS3Client leave it out."""
+
+    def __init__(self, inner):
+        self.inner = inner
+
+    def list_objects_v2(self, **kw):
+        resp = self.inner.list_objects_v2(**kw)
+        marker, p = kw.get("StartAfter", ""), kw.get("Prefix", "")
+        d = marker.find("/", len(p)) if marker.startswith(p) else -1
+        if d >= 0 and kw.get("Delimiter") and "ContinuationToken" not in kw:
+            group = marker[: d + 1]
+            above = self.inner.list_objects_v2(
+                Bucket=kw["Bucket"], Prefix=group, StartAfter=marker, MaxKeys=1
+            )
+            if above["Contents"]:
+                common = [{"Prefix": group}] + resp["CommonPrefixes"]
+                resp = dict(resp, CommonPrefixes=common)
+        return resp
+
+
+@pytest.mark.parametrize(
+    "marker",
+    [
+        sorted(ALL_KEYS)[len(ALL_KEYS) // 2],                          # a key
+        sorted(k for k in ALL_KEYS if k.startswith("dir4/sub2/"))[5],  # mid-shard
+        max(k for k in ALL_KEYS if k.startswith("dir2/sub9/")),        # group's last key
+        "dir5/sub1/",                                                   # a bare group
+        max(ALL_KEYS),
+    ],
+)
+def test_discovery_requests_only_prefixes_above_marker(marker):
+    """Discovery sends the marker with its delimiter listings.  Apart
+    from the root and the marker's own ancestor groups (at most one per
+    level, which S3 leaves out of CommonPrefixes), no prefix whose keys
+    all sort at or below the marker is ever requested; shards plus
+    direct objects cover exactly the tail.  A server that applies
+    StartAfter before grouping gets the same requests and shards."""
+    tail = {k for k in ALL_KEYS if k > marker}
+    results = []
+    for wrap in (lambda c: c, _KeepsMarkerGroup):
+        c = _RecordingClient(wrap(fake_client_factory()))
+        shards, direct = discover_shards(
+            c, "fake-bucket", "", target_shards=50, start_after=marker
+        )
+        prefixes = [kw["Prefix"] for kw in c.requests]
+        assert all(kw["StartAfter"] == marker for kw in c.requests)
+        assert prefixes.count("") == 1
+        for p in prefixes:
+            assert marker.startswith(p) or any(k.startswith(p) for k in tail), p
+        direct_keys = {o["Key"] for o in direct}
+        assert direct_keys <= tail
+        assert {k for k in tail if not any(k.startswith(s) for s in shards)} == direct_keys
+        for s in shards:
+            assert marker.startswith(s) or any(k.startswith(s) for k in tail), s
+        results.append((sorted(prefixes), shards, direct_keys))
+    assert results[0] == results[1]
+
+
+def test_driver_path_refresh_keeps_progress_observation_and_schema(
+    spark, tmp_path
+):
+    """A refresh whose tail discovery lists on its own runs no Python
+    task and still honours the listing contracts: the progress count
+    is the tail size, an Observation reports the written rows, and an
+    empty tail writes a 0-row manifest with the reference schema (five
+    non-null columns, LastModified a millisecond timestamp)."""
+    import io
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import Observation
+
+    from s3_manifest_spark.manifest.progress import ListingProgress
+
+    marker = sorted(ALL_KEYS)[-40]
+    tail = {k for k in ALL_KEYS if k > marker}
+    with ListingProgress(spark, stream=io.StringIO(), interval=60) as prog:
+        inc = list_objects_df(
+            spark,
+            "fake-bucket",
+            client_factory=fake_client_factory,
+            progress=prog,
+            start_after=marker,
+        )
+        assert not _is_task_path(inc)
+        assert {r.key for r in inc.collect()} == tail
+    assert prog.count == len(tail)
+
+    out = str(tmp_path / "refresh.parquet")
+    obs = Observation("refresh")
+    manifest_from_s3(
+        spark,
+        "s3://fake-bucket/",
+        output=out,
+        client_factory=fake_client_factory,
+        observation=obs,
+        start_after=marker,
+    )
+    back = pq.read_table(out)
+    assert set(back.column("Key").to_pylist()) == tail
+    assert obs.get["objects"] == back.num_rows
+    assert obs.get["total_bytes"] == sum(back.column("Size").to_pylist())
+
+    for single_object in (False, True):
+        empty = str(tmp_path / f"empty-{single_object}.parquet")
+        obs = Observation(f"empty-{single_object}")
+        manifest_from_s3(
+            spark,
+            "s3://fake-bucket/",
+            output=empty,
+            client_factory=fake_client_factory,
+            observation=obs,
+            single_object=single_object,
+            start_after=max(ALL_KEYS),
+        )
+        table = pq.read_table(empty)
+        schema = table.schema
+        assert table.num_rows == 0
+        assert obs.get == {"objects": 0, "total_bytes": 0}
+        assert schema.names == ["Bucket", "Key", "FileName", "Size", "LastModified"]
+        assert not any(f.nullable for f in schema)
+        assert [schema.field(n).type for n in schema.names[:4]] == [
+            pa.string(), pa.string(), pa.string(), pa.int64()
+        ]
+        assert schema.field("LastModified").type == pa.timestamp("ms", tz="UTC")
