@@ -526,7 +526,8 @@ EMBED_BLOCKS = 8  # corpus block count for the pairwise block sweep
     p AS (
       SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
              round(list_dot_product(a.e, b.e)
-                   / (sqrt(list_dot_product(a.e, a.e)) * sqrt(list_dot_product(b.e, b.e))),
+                   / (greatest(sqrt(list_dot_product(a.e, a.e)), 1e-12)
+                      * greatest(sqrt(list_dot_product(b.e, b.e)), 1e-12)),
                    6) AS cos_sim
       FROM v a JOIN v b ON a.vec_id < b.vec_id
     )
@@ -1205,13 +1206,13 @@ def _embedding_lsh_oracle_sql() -> str:
     )
     SELECT c.vec_a, c.vec_b,
            round(list_dot_product(va.e, vb.e)
-                 / (sqrt(list_dot_product(va.e, va.e))
-                    * sqrt(list_dot_product(vb.e, vb.e))), 6) AS cos_sim
+                 / (greatest(sqrt(list_dot_product(va.e, va.e)), 1e-12)
+                    * greatest(sqrt(list_dot_product(vb.e, vb.e)), 1e-12)), 6) AS cos_sim
     FROM cand c JOIN v va ON c.vec_a = va.vec_id
                 JOIN v vb ON c.vec_b = vb.vec_id
     WHERE round(list_dot_product(va.e, vb.e)
-                / (sqrt(list_dot_product(va.e, va.e))
-                   * sqrt(list_dot_product(vb.e, vb.e))), 6)
+                / (greatest(sqrt(list_dot_product(va.e, va.e)), 1e-12)
+                   * greatest(sqrt(list_dot_product(vb.e, vb.e)), 1e-12)), 6)
           >= {EMBED_DUP_THRESHOLD}
     """
 
@@ -1397,8 +1398,8 @@ def _lsh_hi_oracle_sql() -> str:
     p AS (
       SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
              round(list_dot_product(a.e, b.e)
-                   / (sqrt(list_dot_product(a.e, a.e))
-                      * sqrt(list_dot_product(b.e, b.e))), 6) AS cos_sim
+                   / (greatest(sqrt(list_dot_product(a.e, a.e)), 1e-12)
+                      * greatest(sqrt(list_dot_product(b.e, b.e)), 1e-12)), 6) AS cos_sim
       FROM probes a JOIN probes b ON a.vec_id < b.vec_id
     )
     SELECT CAST(vec_a AS BIGINT) AS vec_a,
@@ -1470,12 +1471,12 @@ def dedup_embedding_lsh_hi(
     WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings)
     SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
            round(list_dot_product(a.e, b.e)
-                 / (sqrt(list_dot_product(a.e, a.e))
-                    * sqrt(list_dot_product(b.e, b.e))), 6) AS cos_sim
+                 / (greatest(sqrt(list_dot_product(a.e, a.e)), 1e-12)
+                    * greatest(sqrt(list_dot_product(b.e, b.e)), 1e-12)), 6) AS cos_sim
     FROM v a JOIN v b ON a.vec_id < b.vec_id
     WHERE round(list_dot_product(a.e, b.e)
-                / (sqrt(list_dot_product(a.e, a.e))
-                   * sqrt(list_dot_product(b.e, b.e))), 6)
+                / (greatest(sqrt(list_dot_product(a.e, a.e)), 1e-12)
+                   * greatest(sqrt(list_dot_product(b.e, b.e)), 1e-12)), 6)
           >= {EMBED_DUP_THRESHOLD_HI}
     """,
 )
@@ -1520,12 +1521,12 @@ CORPUS_POS_OFFSET = 100_000_000
     )
     SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
            round(list_dot_product(a.e, b.e)
-                 / (sqrt(list_dot_product(a.e, a.e))
-                    * sqrt(list_dot_product(b.e, b.e))), 6) AS cos_sim
+                 / (greatest(sqrt(list_dot_product(a.e, a.e)), 1e-12)
+                    * greatest(sqrt(list_dot_product(b.e, b.e)), 1e-12)), 6) AS cos_sim
     FROM aug a JOIN aug b ON a.vec_id < b.vec_id
     WHERE round(list_dot_product(a.e, b.e)
-                / (sqrt(list_dot_product(a.e, a.e))
-                   * sqrt(list_dot_product(b.e, b.e))), 6)
+                / (greatest(sqrt(list_dot_product(a.e, a.e)), 1e-12)
+                   * greatest(sqrt(list_dot_product(b.e, b.e)), 1e-12)), 6)
           >= {EMBED_DUP_THRESHOLD_HI}
     """,
 )

@@ -79,9 +79,9 @@ def _normalize_batch(batch):
     arithmetic the oracle mirrors (cast to double, divide by the
     2-norm; components deliberately NOT rounded, the downstream sims
     are).  The norm goes through ``similarity._unit``, so it is
-    floored at 1e-12: a zero vector stays zero (cosine 0 to every
-    centroid and member) where the oracle, which does not floor,
-    would divide by zero; no fixture row is near the floor."""
+    floored at 1e-12, as in the oracle: a zero vector stays zero
+    (cosine 0 to every centroid and member); no fixture row is near
+    the floor."""
     ids = batch["vec_id"].to_numpy(dtype="int64")
     e = _matrix(batch["embedding"])
     if e.shape[1] != SEM_DIM:
@@ -178,8 +178,9 @@ pts AS MATERIALIZED (
   SELECT vec_id,
          list_transform(CAST(embedding AS DOUBLE[]), x -> x / nrm) AS en
   FROM (SELECT vec_id, embedding,
-               sqrt(list_dot_product(CAST(embedding AS DOUBLE[]),
-                                     CAST(embedding AS DOUBLE[]))) AS nrm
+               greatest(sqrt(list_dot_product(CAST(embedding AS DOUBLE[]),
+                                              CAST(embedding AS DOUBLE[]))),
+                        1e-12) AS nrm
         FROM embeddings)
 ),
 a0 AS (SELECT vec_id, en, vec_id % {SEM_K} AS cell FROM pts)"""
@@ -201,7 +202,7 @@ a{t + 1} AS (
            row_number() OVER (
              PARTITION BY p.vec_id
              ORDER BY round(list_dot_product(p.en, c.c)
-                            / sqrt(list_dot_product(c.c, c.c)),
+                            / greatest(sqrt(list_dot_product(c.c, c.c)), 1e-12),
                             {SEM_SIM_ROUND}) DESC,
                       c.cell ASC) AS rn
     FROM pts p CROSS JOIN c{t} c)
@@ -215,7 +216,7 @@ fin AS MATERIALIZED (
            row_number() OVER (
              PARTITION BY p.vec_id
              ORDER BY round(list_dot_product(p.en, c.c)
-                            / sqrt(list_dot_product(c.c, c.c)),
+                            / greatest(sqrt(list_dot_product(c.c, c.c)), 1e-12),
                             {SEM_SIM_ROUND}) DESC,
                       c.cell ASC) AS rn
     FROM pts p CROSS JOIN c{last_c} c)

@@ -34,8 +34,9 @@ a row's 2-norm is floored at 1e-12, so a zero vector stays zero and
 scores cosine 0 against everything instead of NaN.  Above the floor
 the quotient is bit-identical to the unguarded ``e / ‖e‖``, and the
 smallest fixture row norm is ~1, so the rule changes no fixture
-output.  The oracle SQL is unchanged and stays the reference (the knn
-oracles spell the same floor as ``greatest(..., 1e-12)``).
+output.  Every DuckDB oracle spells the same floor as
+``greatest(sqrt(list_dot_product(x, x)), 1e-12)``, so a corpus with a
+zero vector still matches its oracle.
 """
 
 from __future__ import annotations
@@ -82,8 +83,8 @@ def _unpack_block(ids, mat):
     (:func:`_pack_blocks`'s layout) as int64 ids and a unit matrix."""
     import numpy as np
 
-    i = np.asarray(list(ids), dtype="int64")
-    return i, _unit(np.asarray(list(mat), dtype="float64").reshape(len(i), -1))
+    i = np.asarray(ids, dtype="int64")
+    return i, _unit(np.asarray(mat, dtype="float64").reshape(len(i), -1))
 
 
 def _query_set(v, stride: int = QUERY_STRIDE):
@@ -219,7 +220,8 @@ def _exact_topk_dims(
     scored AS (
       SELECT query_id, vec_id AS neighbor_id,
              round(list_dot_product(qe, e)
-                   / (sqrt(list_dot_product(qe, qe)) * sqrt(list_dot_product(e, e))),
+                   / (greatest(sqrt(list_dot_product(qe, qe)), 1e-12)
+                      * greatest(sqrt(list_dot_product(e, e)), 1e-12)),
                    6) AS cos_sim
       FROM q JOIN v ON vec_id <> query_id
     )
@@ -625,7 +627,8 @@ q AS (SELECT vec_id AS query_id, e AS qe FROM v
 scored AS (
   SELECT query_id, vec_id AS neighbor_id,
          round(list_dot_product(qe, e)
-               / (sqrt(list_dot_product(qe, qe)) * sqrt(list_dot_product(e, e))),
+               / (greatest(sqrt(list_dot_product(qe, qe)), 1e-12)
+                  * greatest(sqrt(list_dot_product(e, e)), 1e-12)),
                6) AS cos_sim
   FROM q JOIN v ON vec_id <> query_id
 ),
@@ -1516,7 +1519,8 @@ q AS (SELECT vec_id AS query_id, e AS qe FROM v
 scored AS (
   SELECT query_id, vec_id AS neighbor_id,
          round(list_dot_product(qe, e)
-               / (sqrt(list_dot_product(qe, qe)) * sqrt(list_dot_product(e, e))),
+               / (greatest(sqrt(list_dot_product(qe, qe)), 1e-12)
+                  * greatest(sqrt(list_dot_product(e, e)), 1e-12)),
                6) AS cos_sim
   FROM q JOIN v ON vec_id <> query_id
 ),
@@ -1616,7 +1620,8 @@ q AS (SELECT vec_id AS query_id, e AS qe FROM v
 full_scored AS (
   SELECT query_id, vec_id AS neighbor_id,
          round(list_dot_product(qe, e)
-               / (sqrt(list_dot_product(qe, qe)) * sqrt(list_dot_product(e, e))),
+               / (greatest(sqrt(list_dot_product(qe, qe)), 1e-12)
+                  * greatest(sqrt(list_dot_product(e, e)), 1e-12)),
                6) AS cos_sim
   FROM q JOIN v ON vec_id <> query_id
 ),
@@ -1629,8 +1634,10 @@ full_topk AS (
 t_scored AS (
   SELECT query_id, vec_id AS neighbor_id,
          round(list_dot_product(qe[1:{MRL_DIM}], e[1:{MRL_DIM}])
-               / (sqrt(list_dot_product(qe[1:{MRL_DIM}], qe[1:{MRL_DIM}]))
-                  * sqrt(list_dot_product(e[1:{MRL_DIM}], e[1:{MRL_DIM}]))),
+               / (greatest(sqrt(list_dot_product(qe[1:{MRL_DIM}],
+                                                 qe[1:{MRL_DIM}])), 1e-12)
+                  * greatest(sqrt(list_dot_product(e[1:{MRL_DIM}],
+                                                   e[1:{MRL_DIM}])), 1e-12)),
                6) AS cos_sim
   FROM q JOIN v ON vec_id <> query_id
 ),
@@ -2831,8 +2838,8 @@ CENTROID_ROUND = 7
     scored AS (
       SELECT v.label,
              round(list_dot_product(e, ce)
-                   / (sqrt(list_dot_product(e, e))
-                      * sqrt(list_dot_product(ce, ce))), 6) AS cos
+                   / (greatest(sqrt(list_dot_product(e, e)), 1e-12)
+                      * greatest(sqrt(list_dot_product(ce, ce)), 1e-12)), 6) AS cos
       FROM v JOIN cent USING (label)
     )
     SELECT label,

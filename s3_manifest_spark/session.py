@@ -11,6 +11,7 @@ every run sees identical semantics.
 from __future__ import annotations
 
 import os
+import sys
 
 from pyspark.sql import SparkSession
 
@@ -22,6 +23,64 @@ from pyspark.sql import SparkSession
 # belongs to Spark's partitioning, not to nested BLAS pools.
 for _var in ("OPENBLAS_NUM_THREADS", "OMP_NUM_THREADS", "MKL_NUM_THREADS"):
     os.environ.setdefault(_var, "1")
+
+
+def _stat_checked_zip_invalidation() -> None:
+    """Make ``zipimporter.invalidate_caches`` re-read an archive only
+    when its ``(st_mtime_ns, st_size)`` differs from the stamp taken at
+    its last read.
+
+    PySpark's worker calls ``importlib.invalidate_caches()`` before
+    every task (``worker_util.setup_spark_files``).  Before CPython
+    3.13 that makes each cached ``zipimporter`` (16 for pyspark.zip,
+    one per package directory) re-read its archive's central
+    directory: about 0.2 s per task on a reused worker.  A rewritten
+    or newly added archive is still read.  This package's ``__init__``
+    imports this module in every worker that unpickles program code,
+    so the shim lands there.  Delete it once requires-python >= 3.13,
+    whose ``invalidate_caches`` only drops the cached directory.
+    """
+    import zipimport
+
+    cls = zipimport.zipimporter
+    if sys.version_info >= (3, 13) or hasattr(cls.invalidate_caches, "stamps"):
+        return
+    read, reread = zipimport._read_directory, cls.invalidate_caches
+    stamps: dict[str, tuple[int, int] | None] = {}
+
+    def stamp(archive):
+        try:
+            st = os.stat(archive)
+        except OSError:
+            return None
+        return st.st_mtime_ns, st.st_size
+
+    def read_directory(archive):
+        taken = stamp(archive)  # before the read: a rewrite mid-read re-reads
+        files = read(archive)
+        stamps[archive] = taken
+        return files
+
+    def invalidate_caches(self):
+        files = zipimport._zip_directory_cache.get(self.archive)
+        now = stamp(self.archive)
+        if files is not None and now is not None and stamps.get(self.archive) == now:
+            self._files = files
+        else:
+            reread(self)
+
+    invalidate_caches.stamps = stamps
+    zipimport._read_directory = read_directory
+    cls.invalidate_caches = invalidate_caches
+    # Archives read before the shim have no stamp: read each once more.
+    for archive in list(zipimport._zip_directory_cache):
+        try:
+            zipimport._zip_directory_cache[archive] = read_directory(archive)
+        except zipimport.ZipImportError:
+            pass
+
+
+_stat_checked_zip_invalidation()
 
 # Correctness configs: identical results on local[*] and a real cluster.
 _SEMANTIC_CONFS = {

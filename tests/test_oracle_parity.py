@@ -6,11 +6,14 @@ the driver needs, so driver-side hash mismatches get caught here first.
 
 from __future__ import annotations
 
+import hashlib
 import math
 
 import duckdb
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
 import __spark_entry__ as entrymod
@@ -89,3 +92,42 @@ def test_entry_smoke(spark):
     rows = df.collect()
     assert len(rows) >= 1
     assert df.schema is not None
+
+
+def _vhash(pdf: pd.DataFrame) -> str:
+    """The order-insensitive value hash of ``tools/drive_driver.py``:
+    columns by name, floats rounded to 9 places, rows sorted."""
+    pdf = pdf[sorted(pdf.columns)].copy()
+    for c in pdf.columns:
+        s = pdf[c]
+        if pd.api.types.is_float_dtype(s):
+            pdf[c] = s.astype("float64").round(9).astype(str)
+        else:
+            pdf[c] = s.astype(str)
+    rows = sorted(map("|".join, pdf.to_numpy().tolist()))
+    return hashlib.sha256("\n".join(rows).encode()).hexdigest()[:12]
+
+
+@pytest.mark.parametrize("name", ["similarity_topk", "dedup_embedding", "semdedup"])
+def test_zero_embedding_matches_the_oracle_hash(spark, tmp_path, name):
+    # vec_id 0 is a query row of similarity_topk; its zero norm is
+    # floored at 1e-12 on both sides, so every cosine against it is 0
+    table = pq.read_table(f"{SF_DIR}/embeddings.parquet")
+    emb = table.column("embedding").to_pylist()
+    ids = table.column("vec_id").to_pylist()
+    emb[ids.index(0)] = [0.0] * len(emb[0])
+    table = table.set_column(
+        table.schema.get_field_index("embedding"),
+        table.schema.field("embedding"),
+        pa.array(emb, table.schema.field("embedding").type),
+    )
+    pq.write_table(table, tmp_path / "embeddings.parquet")
+    spark_pdf = entrymod.queries()[name](spark, str(tmp_path)).toPandas()
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW embeddings AS SELECT * FROM "
+        f"read_parquet('{tmp_path}/embeddings.parquet')"
+    )
+    duck_pdf = con.execute(entrymod.oracle_sql()[name]).df()
+    assert len(spark_pdf) == len(duck_pdf)
+    assert _vhash(spark_pdf) == _vhash(duck_pdf)

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 from hypothesis import assume, given, settings
 from hypothesis import strategies as st
@@ -115,3 +116,28 @@ def test_unpack_block_inverts_the_packing(as_list, rs, data):
     want = _unit(_matrix(column(rs, "float32")))
     assert got.shape == want.shape
     assert np.array_equal(got, want)
+
+
+@settings(max_examples=150, deadline=None)
+@given(blocks=st.lists(rows(), min_size=1, max_size=4), data=st.data())
+def test_unpack_block_bit_equals_the_per_element_conversion(blocks, data):
+    # the packed columns as Arrow delivers them to a pandas UDF: object
+    # arrays holding one int64 / float32 ndarray per block row
+    ids = [
+        data.draw(st.lists(st.integers(-(2**62), 2**62), min_size=len(b),
+                           max_size=len(b), unique=True))
+        for b in blocks
+    ]
+    flat = [[x for r in b for x in r] for b in blocks]
+    raw_ids = pa.array(ids, pa.list_(pa.int64())).to_pandas().to_numpy()
+    raw_mat = pa.array(flat, pa.list_(pa.float32())).to_pandas().to_numpy()
+    assert raw_mat.dtype == object and raw_mat[0].dtype == np.float32
+    for ri, rm in zip(raw_ids, raw_mat):
+        got_ids, got = _unpack_block(ri, rm)
+        # the expression _unpack_block used before: one Python scalar
+        # per component
+        want_ids = np.asarray(list(ri), dtype="int64")
+        want = np.asarray(list(rm), dtype="float64").reshape(len(want_ids), -1)
+        assert got_ids.dtype == np.int64
+        assert np.array_equal(got_ids, want_ids)
+        assert np.array_equal(got, _unit(want))
