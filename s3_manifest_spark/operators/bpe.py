@@ -63,7 +63,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from s3_manifest_spark.registry import cached, register
-from s3_manifest_spark.sources.tables import load_table
+from s3_manifest_spark.sources.tables import load_table, local_relation
 
 #: merge rounds — the vocabulary-size hyperparameter (real tokenizers
 #: run ~30-50k rounds of exactly this loop; the oracle unrolls R
@@ -283,8 +283,8 @@ def bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = [
         (r, a, b, a + b, c) for r, (a, b, c) in enumerate(merges)
     ]
-    return spark.createDataFrame(
-        rows, "step long, lhs string, rhs string, merged string, pair_count long"
+    return local_relation(
+        spark, rows, "step long, lhs string, rhs string, merged string, pair_count long"
     )
 
 

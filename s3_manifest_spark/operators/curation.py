@@ -18,7 +18,11 @@ from pyspark.sql import functions as F
 
 from s3_manifest_spark.operators.text import _batch_tokens, _doc_runs
 from s3_manifest_spark.registry import cached, register, release, track_persist
-from s3_manifest_spark.sources.tables import load_table, parquet_row_count
+from s3_manifest_spark.sources.tables import (
+    load_table,
+    local_relation,
+    parquet_row_count,
+)
 
 CHUNK_TOKENS = 30
 CHUNK_STRIDE = 20  # 10-token overlap between consecutive chunks
@@ -1834,7 +1838,8 @@ def heavy_hitters_cms(
                 bool(est <= r["exact_count"] + slack),
             )
         )
-    return spark.createDataFrame(
+    return local_relation(
+        spark,
         rows,
         "token string, exact_count long, cms_never_under boolean, "
         "cms_within_eps boolean",

@@ -47,6 +47,7 @@ from s3_manifest_spark.sources.tables import (
     SYNTH_LISTING_SQL,
     listing_model,
     load_table,
+    local_relation,
     parquet_row_count,
 )
 
@@ -368,7 +369,7 @@ def partition_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
         (i, (i * (n - 1)) // ADVISOR_PARTITIONS)
         for i in range(1, ADVISOR_PARTITIONS)
     ]
-    tdf = spark.createDataFrame(targets, "boundary_idx long, position long")
+    tdf = local_relation(spark, targets, "boundary_idx long, position long")
     li = listing_model(spark, sf_dir).select("key", "size")
     ordinal = global_ordinal(
         li, ["key", "size"], model_key=("advisor", sf_dir)

@@ -45,7 +45,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from s3_manifest_spark.registry import cached, register
-from s3_manifest_spark.sources.tables import load_table, parquet_row_count
+from s3_manifest_spark.sources.tables import (
+    load_table,
+    local_relation,
+    parquet_row_count,
+)
 
 TOP_K = 5
 #: every 100th vector is a query point — deterministic, sf-independent
@@ -474,12 +478,10 @@ def similarity_ivf_neighbors(
     # (O(k·queries) rows); the probe lists are driver-side,
     # query-cap-bounded data.
     canonical = np.argsort(-qsims, kind="stable", axis=1)[:, :IVF_NPROBE]
-    probe_df = spark.createDataFrame(
-        [
-            (int(q), [int(c) for c in canonical[i]])
-            for i, q in enumerate(qids)
-        ],
-        schema="query_id long, probe_cells array<int>",
+    probe_df = local_relation(
+        spark,
+        [(int(q), [int(c) for c in canonical[i]]) for i, q in enumerate(qids)],
+        "query_id long, probe_cells array<int>",
     )
     if exact is None:
         exact = similarity_topk(spark, sf_dir)

@@ -9,23 +9,25 @@ Spark tasks, each paging its slice of the shards on a small thread
 pool over one client, so listing throughput scales with requests in
 flight instead of being pinned to one connection — and a task's fixed
 Python cost is paid once per slice, not once per shard (SURVEY.md §4,
-"serial listing" anti-pattern row).
+"serial listing" anti-pattern row).  The shard table is an Arrow local
+relation (a ``LocalTableScan``, no Python RDD under it), so a listing
+task makes one Python pass: the paging itself.
 
 Dataflow::
 
     discover_shards (driver, few API calls;      # StartAfter on every delimiter
                      start_after honoured)       #   listing: only the tail is walked
         → shards left to page:
-            spark.createDataFrame(shards)        # tiny local relation:
+            local_relation(shard table)          # Arrow local relation:
                                                  #   min(shards, defaultParallelism)
                                                  #   contiguous slices, no shuffle
-            → mapInArrow(_list_shards per slice) # MAX_IN_FLIGHT requests in
+            → mapInArrow(_list_shards per slice) # the task's one Python pass;
+                                                 #   MAX_IN_FLIGHT requests in
                                                  #   flight; one page → one
                                                  #   Arrow batch
         → no shard left (e.g. a short refresh tail):
-            spark.createDataFrame(pa.Table)      # discovery's direct objects as a
-                                                 #   driver-side Arrow relation,
-                                                 #   no Python task
+            local_relation(direct objects)       # the same Arrow local relation
+                                                 #   path, no Python task
         → listing DataFrame(key, size, last_modified, etag, storage_class)
         → derive_manifest(...)                   # manifest/core.py
 
@@ -48,6 +50,8 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
+
+from s3_manifest_spark.sources.tables import local_relation
 
 #: Listing rows mirror rusoto_s3::Object's consumed fields (main.rs:209,
 #: 361-390) — nullable, RFC3339 string mtime, exactly what
@@ -368,8 +372,8 @@ def list_objects_df(
     if not shards:
         if progress is not None:
             progress.accumulator.add(len(direct))
-        return spark.createDataFrame(
-            pa.Table.from_batches([_page_batch(direct)]), LISTING_SCHEMA
+        return local_relation(
+            spark, pa.Table.from_batches([_page_batch(direct)]), LISTING_SCHEMA
         )
     request = {"Bucket": bucket, "MaxKeys": page_size}
     if start_after:
@@ -398,11 +402,17 @@ def list_objects_df(
                 if page.get("Contents"):
                     yield counted(_page_batch(page["Contents"]))
 
-    # A local relation is split into min(rows, defaultParallelism)
-    # contiguous slices with no shuffle.  The direct objects ride on
-    # the first row, so the listing is this one relation, never a union.
-    rows = [(shards[0], _page_batch(direct).to_pylist())] + [(s, []) for s in shards[1:]]
-    return spark.createDataFrame(rows, _TASK_SCHEMA).mapInArrow(
+    # One row per shard as an Arrow local relation: min(rows,
+    # defaultParallelism) contiguous slices, no shuffle, and list_task
+    # is the only Python pass a listing task makes.  The direct objects
+    # ride on the first row, so the listing is this one relation, never
+    # a union.
+    direct_col = pa.ListArray.from_arrays(
+        pa.array([0] + [len(direct)] * len(shards), pa.int32()),
+        _page_batch(direct).to_struct_array(),
+    )
+    table = pa.table({"shard": shards, "direct": direct_col})
+    return local_relation(spark, table, _TASK_SCHEMA).mapInArrow(
         list_task, LISTING_SCHEMA
     )
 

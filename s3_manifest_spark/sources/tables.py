@@ -8,12 +8,20 @@ deterministically from ``lineitem`` — and, crucially, the SAME
 derivation is expressed once in Spark and once in ANSI SQL
 (:data:`SYNTH_LISTING_SQL`) so the DuckDB oracle sees byte-identical
 input rows without any files changing hands.
+
+Rows built on the driver (the listing's shard table, small query
+results) become a relation through :func:`local_relation`, an Arrow
+local relation that runs no Python task.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from s3_manifest_spark.registry import cached, session_dict
 
@@ -172,6 +180,42 @@ def load_table(
     df = widen_scan(df, path) if widen else df
     cache[key] = df
     return df
+
+
+def local_relation(
+    spark: SparkSession, data: pa.Table | list[tuple], schema: T.StructType | str
+) -> DataFrame:
+    """Driver-side rows as an Arrow local relation: ``data`` (a pyarrow
+    Table, or row tuples in ``schema`` order) reaches
+    ``spark.createDataFrame`` as a pyarrow Table, so the plan leaf is a
+    ``LocalTableScan`` and no Python task runs to produce the rows.  A
+    Python list handed to ``createDataFrame`` instead becomes
+    ``parallelize`` plus a pickled identity map: a Python task per
+    ``defaultParallelism`` slice every time the relation runs.
+
+    The table goes over as one record batch per slice ``LocalTableScan``
+    cuts, ``min(rows, defaultParallelism)`` contiguous ones.  Above
+    ``spark.sql.execution.arrow.localRelationThreshold`` bytes Spark
+    ships the batches as an RDD with one partition per batch, so the
+    slicing is the same on both sides of the threshold (while no slice
+    exceeds ``spark.sql.execution.arrow.maxRecordsPerBatch`` rows, which
+    PySpark splits further)."""
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    if not isinstance(data, pa.Table):
+        arrow = to_arrow_schema(schema)
+        data = pa.table(
+            {f.name: [r[i] for r in data] for i, f in enumerate(arrow)}, schema=arrow
+        )
+    n = data.num_rows
+    k = min(n, spark.sparkContext.defaultParallelism)
+    if k:
+        rows = data.combine_chunks().to_batches()[0]
+        bounds = [i * n // k for i in range(k + 1)]
+        data = pa.Table.from_batches(
+            [rows.slice(lo, hi - lo) for lo, hi in zip(bounds, bounds[1:])]
+        )
+    return spark.createDataFrame(data, schema)
 
 
 def synth_listing(spark: SparkSession, sf_dir: str, widen: bool = True) -> DataFrame:

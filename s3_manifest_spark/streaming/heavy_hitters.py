@@ -43,7 +43,7 @@ from s3_manifest_spark.operators.curation import (
     _cms_sketch,
 )
 from s3_manifest_spark.registry import register
-from s3_manifest_spark.sources.tables import load_table
+from s3_manifest_spark.sources.tables import load_table, local_relation
 from s3_manifest_spark.streaming.boilerplate import documents_spool
 from s3_manifest_spark.streaming.scratch import SPOOL_FILES, drain, open_spool
 
@@ -142,7 +142,8 @@ def stream_heavy_hitters_live(spark: SparkSession, sf_dir: str) -> DataFrame:
                 bool(est == oneshot.estimateCount(r["token"])),
             )
         )
-    return spark.createDataFrame(
+    return local_relation(
+        spark,
         rows,
         "token string, exact_count long, cms_never_under boolean, "
         "cms_within_eps boolean, merge_invariant boolean",

@@ -20,6 +20,7 @@ from s3_manifest_spark.sources.s3_listing import (
     parse_output_location,
     parse_s3_uri,
 )
+from s3_manifest_spark.sources.tables import local_relation
 
 ALL_KEYS = set(synth_bucket()["fake-bucket"].keys())  # 2520 keys
 
@@ -69,10 +70,7 @@ def test_discover_shards_partition_keyspace():
     assert len(set(shards2)) == len(shards2)
 
 
-def test_list_objects_df_complete_and_exact(spark):
-    df = list_objects_df(
-        spark, "fake-bucket", client_factory=fake_client_factory, page_size=100
-    )
+def _assert_complete_and_exact(df):
     rows = df.collect()
     keys = [r.key for r in rows]
     assert len(keys) == len(ALL_KEYS)          # no dup from shard overlap
@@ -81,6 +79,14 @@ def test_list_objects_df_complete_and_exact(spark):
     sample = by_key["dir1/sub1/file-000001.parquet"]
     assert sample.size == 37
     assert sample.last_modified.startswith("2024-01-01T00:01:00")
+
+
+def test_list_objects_df_complete_and_exact(spark):
+    _assert_complete_and_exact(
+        list_objects_df(
+            spark, "fake-bucket", client_factory=fake_client_factory, page_size=100
+        )
+    )
 
 
 def test_list_objects_df_prefix_pushdown(spark):
@@ -391,17 +397,70 @@ def test_listing_fails_loud_on_non_increasing_keys(mode):
         list(pages)
 
 
+def _assert_arrow_local_relation(df):
+    """The executed plan's one leaf is a LocalTableScan and no Python
+    RDD produces its rows: the only Python a task runs is the plan's
+    own (the listing's mapInArrow)."""
+    qe = df._jdf.queryExecution()
+    leaves = qe.executedPlan().collectLeaves()
+    names = [leaves.apply(i).nodeName() for i in range(leaves.size())]
+    assert names == ["LocalTableScan"], names
+    lineage = qe.toRdd().toDebugString()
+    assert "PythonRDD" not in lineage, lineage
+
+
 def test_listing_runs_in_parallelism_tasks_without_shuffle(spark):
-    """The listing is one local relation of shard rows mapped in Arrow:
-    no Exchange and at most defaultParallelism partitions, not a task
-    per shard (91 shards plus 20 direct root objects here; that every
-    key is listed once is test_list_objects_df_complete_and_exact)."""
+    """The listing is one Arrow local relation of shard rows mapped in
+    Arrow: no Exchange, no Python RDD under the relation, and at most
+    defaultParallelism partitions, not a task per shard (91 shards plus
+    20 direct root objects here; that every key is listed once is
+    test_list_objects_df_complete_and_exact)."""
     df = list_objects_df(
         spark, "fake-bucket", client_factory=fake_client_factory, page_size=100
     )
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, plan
     assert df.rdd.getNumPartitions() <= spark.sparkContext.defaultParallelism
+    _assert_arrow_local_relation(df)
+
+
+def test_local_relation_is_arrow_sliced_like_local_table_scan(spark):
+    """The helper behind the listing and the driver-built query results:
+    row tuples become an Arrow local relation with the rows, schema and
+    min(rows, defaultParallelism) contiguous slices a list passed to
+    createDataFrame had, but no Python task."""
+    par = spark.sparkContext.defaultParallelism
+    rows = [(i, f"s{i}", [i, -i]) for i in range(2 * par + 1)]
+    df = local_relation(spark, rows, "n long, s string, a array<int>")
+    _assert_arrow_local_relation(df)
+    assert df.schema.simpleString() == "struct<n:bigint,s:string,a:array<int>>"
+    assert [tuple(r) for r in df.collect()] == rows
+    assert [len(p) for p in df.rdd.glom().collect()] == [
+        (i + 1) * len(rows) // par - i * len(rows) // par for i in range(par)
+    ]
+    one = local_relation(spark, rows[:1], "n long, s string, a array<int>")
+    assert one.rdd.getNumPartitions() == 1
+    assert local_relation(spark, [], "n long").count() == 0
+
+
+def test_listing_slices_survive_the_arrow_local_relation_threshold(spark):
+    """Above spark.sql.execution.arrow.localRelationThreshold Spark ships
+    an Arrow table as an RDD with one partition per record batch
+    instead of a local relation; the listing still runs in
+    min(shards, defaultParallelism) slices and lists every key once."""
+    key = "spark.sql.execution.arrow.localRelationThreshold"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "0")
+    try:
+        df = list_objects_df(
+            spark, "fake-bucket", client_factory=fake_client_factory, page_size=100
+        )
+        shards, _ = discover_shards(fake_client_factory(), "fake-bucket")
+        want = min(len(shards), spark.sparkContext.defaultParallelism)
+        assert df.rdd.getNumPartitions() == want
+        _assert_complete_and_exact(df)
+    finally:
+        spark.conf.set(key, before)
 
 
 def test_manifest_observed_stats_single_job(spark, tmp_path):
