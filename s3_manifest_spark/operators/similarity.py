@@ -707,7 +707,7 @@ def _membership_cached(
         # CacheManager-plan-matched).
         built = builder()
         if localize:
-            m = spark.createDataFrame(built.toPandas(), schema=built.schema)
+            m = local_relation(spark, built.toArrow(), built.schema)
         else:
             m = built.localCheckpoint(eager=True)
         if planes is None:
@@ -769,9 +769,10 @@ def _exact_topk_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         ("ann_exact", sf_dir),
         lambda: (
-            spark.createDataFrame(
-                similarity_topk(spark, sf_dir).toPandas(),
-                schema="query_id long, neighbor_id long, cos_sim double",
+            local_relation(
+                spark,
+                similarity_topk(spark, sf_dir).toArrow(),
+                "query_id long, neighbor_id long, cos_sim double",
             ),
         ),
     )[0]
@@ -1317,6 +1318,7 @@ def _pq_membership(spark, sf_dir, bc, exact):
     partition-independent."""
     import numpy as np
     import pandas as pd
+    import pyarrow as pa
 
     v = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     exact_ids = exact.select("query_id", "neighbor_id")
@@ -1397,9 +1399,12 @@ def _pq_membership(spark, sf_dir, bc, exact):
     )
     # explicit schema: inference raises on an empty pandas
     # frame, and an empty exact/membership relation is a legal input.
-    probed_flag = spark.createDataFrame(
-        thresholds[["query_id", "neighbor_id", "probed"]],
-        schema="query_id long, neighbor_id long, probed boolean",
+    probed_flag = local_relation(
+        spark,
+        pa.Table.from_pandas(
+            thresholds[["query_id", "neighbor_id", "probed"]], preserve_index=False
+        ),
+        "query_id long, neighbor_id long, probed boolean",
     )
     return counts.join(probed_flag, ["query_id", "neighbor_id"]).select(
         "query_id",
@@ -2068,6 +2073,7 @@ def _knn_query_pack_cached(
     :func:`knn_graph_ann_neighbors` rejects a pre-exploded pack at
     any other radius."""
     import pandas as pd
+    import pyarrow as pa
 
     def build():
         v = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
@@ -2096,8 +2102,10 @@ def _knn_query_pack_cached(
             ],
             ignore_index=True,
         )
-        pack = spark.createDataFrame(
-            exploded, schema="ids_a array<long>, mat_a array<double>, pblk long"
+        pack = local_relation(
+            spark,
+            pa.Table.from_pandas(exploded, preserve_index=False),
+            "ids_a array<long>, mat_a array<double>, pblk long",
         )
         return pack, int(p)
 
@@ -2556,9 +2564,8 @@ def _score_knn_exact_sampled(spark: SparkSession, sf_dir: str) -> tuple:
         spark, sf_dir, stride=KNN_CERT_STRIDE, k=KNN_GRAPH_K, id_col="vec_id"
     )
     return (
-        spark.createDataFrame(
-            exact.toPandas(),
-            schema="vec_id long, neighbor_id long, cos_sim double",
+        local_relation(
+            spark, exact.toArrow(), "vec_id long, neighbor_id long, cos_sim double"
         ),
     )
 

@@ -15,8 +15,13 @@ task makes one Python pass: the paging itself.
 
 Dataflow::
 
-    discover_shards (driver, few API calls;      # StartAfter on every delimiter
-                     start_after honoured)       #   listing: only the tail is walked
+    discover_shards (driver; start_after         # StartAfter on every listing:
+                     honoured)                   #   only the tail is walked
+        ├ flat probe: one page_size page         # on the first level's pool: no
+        │                                        #   extra round trip
+        └ delimiter BFS, one round trip a level  # skipped after the first level's
+                                                 #   round trip when the probe
+                                                 #   page is not truncated
         → shards left to page:
             local_relation(shard table)          # Arrow local relation:
                                                  #   min(shards, defaultParallelism)
@@ -25,7 +30,9 @@ Dataflow::
                                                  #   MAX_IN_FLIGHT requests in
                                                  #   flight; one page → one
                                                  #   Arrow batch
-        → no shard left (e.g. a short refresh tail):
+        → no shard left (the probe page is the   # e.g. a short refresh tail
+          whole listing, or the bucket is
+          shallower than the BFS):
             local_relation(direct objects)       # the same Arrow local relation
                                                  #   path, no Python task
         → listing DataFrame(key, size, last_modified, etag, storage_class)
@@ -43,6 +50,7 @@ import random
 import time
 from collections.abc import Callable, Iterable, Iterator
 from concurrent.futures import ThreadPoolExecutor
+from contextlib import closing
 from itertools import islice
 
 import pyarrow as pa
@@ -208,33 +216,38 @@ def _pages(client, **request) -> Iterator[dict]:
 MAX_IN_FLIGHT = 16
 
 
+def _rounds(
+    pagers: Iterable[tuple[str | None, Iterator[dict]]]
+) -> Iterator[tuple[str | None, dict]]:
+    """``(tag, page)`` for every page of every ``(tag, pager)``, with up
+    to :data:`MAX_IN_FLIGHT` pagers advanced concurrently on one pool.
+
+    Each round advances every active pager by one page on a thread pool
+    and yields the round's pages in pager order before the next round
+    starts.  So at most ``MAX_IN_FLIGHT`` pages are requested and not
+    yet yielded, the output order is deterministic, a request's error
+    (or ``_pages``' own) propagates out of this generator, and closing
+    it early leaves no request running."""
+    waiting = iter(pagers)
+    active: list[tuple[str | None, Iterator[dict]]] = []
+    with ThreadPoolExecutor(MAX_IN_FLIGHT) as pool:
+        while True:
+            active += islice(waiting, MAX_IN_FLIGHT - len(active))
+            if not active:
+                return
+            pages = list(pool.map(lambda a: next(a[1], None), active))
+            for (tag, _), page in zip(active, pages):
+                if page is not None:
+                    yield tag, page
+            active = [a for a, page in zip(active, pages) if page is not None]
+
+
 def _list_shards(
     client, prefixes: Iterable[str], **request
 ) -> Iterator[tuple[str, dict]]:
     """``(prefix, page)`` for every page of every prefix's listing,
-    with up to :data:`MAX_IN_FLIGHT` prefixes paged concurrently over
-    one (thread-safe) client.
-
-    Each round advances every active prefix's :func:`_pages` by one
-    page on a thread pool and yields the round's pages in prefix order
-    before the next round starts.  So at most ``MAX_IN_FLIGHT`` pages
-    are requested and not yet yielded, the output order is
-    deterministic, a request's error (or ``_pages``' own) propagates
-    out of this generator, and closing it early leaves no request
-    running."""
-    waiting = iter(prefixes)
-    active: list[tuple[str, Iterator[dict]]] = []
-    with ThreadPoolExecutor(MAX_IN_FLIGHT) as pool:
-        while True:
-            for p in islice(waiting, MAX_IN_FLIGHT - len(active)):
-                active.append((p, _pages(client, Prefix=p, **request)))
-            if not active:
-                return
-            pages = list(pool.map(lambda a: next(a[1], None), active))
-            for (p, _), page in zip(active, pages):
-                if page is not None:
-                    yield p, page
-            active = [a for a, page in zip(active, pages) if page is not None]
+    paged by :func:`_rounds` over one (thread-safe) client."""
+    return _rounds((p, _pages(client, Prefix=p, **request)) for p in prefixes)
 
 
 #: BFS levels :func:`discover_shards` expands at most.
@@ -248,6 +261,7 @@ def discover_shards(
     delimiter: str = "/",
     target_shards: int = 64,
     start_after: str = "",
+    page_size: int = PAGE_SIZE,
 ) -> tuple[list[str], list[dict]]:
     """Split the keyspace under ``prefix`` into disjoint shard prefixes
     via delimiter listings (S3 CommonPrefixes), BFS-expanding until
@@ -264,26 +278,45 @@ def discover_shards(
     coverage is exact — every key is in exactly one shard or in
     direct_objects.
 
-    ``start_after`` rides on every delimiter listing as S3
-    ``StartAfter``, so only the keyspace above the marker is walked:
-    every direct object sorts above it, and every returned shard either
-    holds a key above it or is one of the marker's own ancestor
-    prefixes.  S3 leaves out a ``CommonPrefixes`` group that sorts at or
-    below ``StartAfter`` even when it holds keys above it — the group
-    the marker itself falls in — so at each level that group is
-    expanded without being asked for (a server that returns it anyway
-    gets the same requests).  It is the only prefix at or below the
-    marker that is ever requested: at most one per level.
+    Alongside the first level, on the same pool, goes one flat page of
+    the prefix (no delimiter, ``page_size`` keys).  When that page is
+    not truncated it is the whole listing: discovery returns no shard
+    and the page's objects after that one round trip.  A truncated
+    page is discarded and the BFS goes on as if it had not been sent.
+
+    ``start_after`` rides on every listing as S3 ``StartAfter``, so
+    only the keyspace above the marker is walked: every direct object
+    sorts above it, and every returned shard either holds a key above
+    it or is one of the marker's own ancestor prefixes.  S3 leaves out
+    a ``CommonPrefixes`` group that sorts at or below ``StartAfter``
+    even when it holds keys above it — the group the marker itself
+    falls in — so at each level that group is expanded without being
+    asked for (a server that returns it anyway gets the same requests).
+    It is the only prefix at or below the marker that is ever
+    requested: at most one per level.
     """
     request = {"Bucket": bucket, "Delimiter": delimiter, "MaxKeys": PAGE_SIZE}
     if start_after:
         request["StartAfter"] = start_after
+    flat = {k: v for k, v in request.items() if k != "Delimiter"}
+    flat["MaxKeys"] = page_size
+    # The probe, tagged None: the first page of _pages, so retry and the
+    # key-order check apply to it.
+    pagers: list[tuple[str | None, Iterator[dict]]] = [
+        (None, islice(_pages(client, Prefix=prefix, **flat), 1))
+    ]
     direct: list[dict] = []
     frontier = [prefix]
     for _ in range(DISCOVER_MAX_ROUNDS):
         pages: dict[str, list[dict]] = {p: [] for p in frontier}
-        for p, resp in _list_shards(client, frontier, **request):
-            pages[p].append(resp)
+        pagers += [(p, _pages(client, Prefix=p, **request)) for p in frontier]
+        with closing(_rounds(pagers)) as level:  # a return leaves no request running
+            for p, resp in level:
+                if p is not None:
+                    pages[p].append(resp)
+                elif not resp.get("IsTruncated"):
+                    return [], resp.get("Contents", [])
+        pagers = []
         children: list[str] = []
         for p, resps in pages.items():  # frontier order
             groups = [cp["Prefix"] for r in resps for cp in r.get("CommonPrefixes", [])]
@@ -350,24 +383,27 @@ def list_objects_df(
     greater than the marker are returned (S3 ``StartAfter``, pushed
     into the API like the prefix).  Feed it the previous manifest's
     ``max(Key)`` and only the tail of the keyspace is ever listed:
-    discovery sends the marker on its delimiter listings too, so below
-    the marker it requests only the marker's own ancestor groups
-    (:func:`discover_shards`), and a mostly-unchanged bucket costs
-    O(new keys / page) round-trips, not O(bucket).  Composes with the
+    discovery sends the marker on its listings too, so below the marker
+    it requests only the marker's own ancestor groups
+    (:func:`discover_shards`).  A tail that fits one ``page_size`` page
+    costs one round trip (discovery's flat probe page is the whole
+    listing); a longer one costs the BFS's round trip per level and
+    then the shard paging, never O(bucket).  Composes with the
     CDC apply (``operators/manifest_queries.py``) for incremental
     manifest maintenance.  Note: S3 keys are append-sorted only by name — this
     captures keys ABOVE the marker, the common log/date-partitioned
     layout; arbitrary inserts need the full listing + ``manifest_diff``.
 
-    When discovery leaves no shard to page (a short tail, or a bucket
-    shallower than discovery's BFS), its direct objects are the whole
-    listing: they already sit on the driver, so they become a local
-    Arrow relation and the listing runs no Python task.  The driver
-    adds their count to ``progress`` itself.
+    When discovery leaves no shard to page (a tail or bucket that fits
+    the probe page, or a bucket shallower than discovery's BFS), its
+    direct objects are the whole listing: they already sit on the
+    driver, so they become a local Arrow relation and the listing runs
+    no Python task.  The driver adds their count to ``progress`` itself.
     """
     client_factory = client_factory or make_boto3_client_factory()
     shards, direct = discover_shards(
-        client_factory(), bucket, prefix, delimiter, target_shards, start_after
+        client_factory(), bucket, prefix, delimiter, target_shards, start_after,
+        page_size,
     )
     if not shards:
         if progress is not None:

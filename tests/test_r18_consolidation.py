@@ -55,6 +55,36 @@ def test_membership_cache_localize_flag(spark, sf_dir):
     clear_model_cache(spark)
 
 
+def test_exact_topk_is_arrow_local_relation_with_arrow_conf_off(spark, sf_dir):
+    """With spark.sql.execution.arrow.pyspark.enabled false (a plain
+    session's default), the driver-collected exact top-k relation is
+    still an Arrow local relation: its executed plan's one leaf is a
+    LocalTableScan and no PythonRDD produces its rows."""
+    from s3_manifest_spark.operators.similarity import (
+        _exact_topk_cached,
+        similarity_topk,
+    )
+    from s3_manifest_spark.registry import clear_model_cache
+
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    clear_model_cache(spark)
+    try:
+        exact = _exact_topk_cached(spark, sf_dir)
+        qe = exact._jdf.queryExecution()
+        leaves = qe.executedPlan().collectLeaves()
+        names = [leaves.apply(i).nodeName() for i in range(leaves.size())]
+        assert names == ["LocalTableScan"], names
+        lineage = qe.toRdd().toDebugString()
+        assert "PythonRDD" not in lineage, lineage
+        want = sorted(map(tuple, similarity_topk(spark, sf_dir).collect()))
+        assert want and sorted(map(tuple, exact.collect())) == want
+    finally:
+        clear_model_cache(spark)
+        spark.conf.set(key, before)
+
+
 def test_corpus_wide_membership_is_distributed(spark):
     """The registered corpus-wide 'knn' kind must come back as a
     distributed checkpoint, never a single-partition LocalRelation

@@ -244,7 +244,8 @@ def test_pagination_fails_loud_on_stuck_token(drop_token):
     """A truncated page whose continuation token is missing or does
     not advance must stop the listing with an error, not restart the
     prefix and emit duplicate keys (5,000 keys over 1,000-key pages:
-    page 2 is the first stuck one)."""
+    the calls are discovery's truncated flat probe page, the delimiter
+    listing's page 1, and its page 2, the first stuck one)."""
     import datetime as dt
 
     t = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
@@ -253,7 +254,7 @@ def test_pagination_fails_loud_on_stuck_token(drop_token):
     )
     with pytest.raises(RuntimeError, match="does not advance"):
         discover_shards(client, "b", "")
-    assert client.calls == 2
+    assert client.calls == 3
 
 
 def _sharded_bucket(n_shards: int = 40) -> dict:
@@ -760,12 +761,13 @@ class _KeepsMarkerGroup:
     ],
 )
 def test_discovery_requests_only_prefixes_above_marker(marker):
-    """Discovery sends the marker with its delimiter listings.  Apart
-    from the root and the marker's own ancestor groups (at most one per
-    level, which S3 leaves out of CommonPrefixes), no prefix whose keys
-    all sort at or below the marker is ever requested; shards plus
-    direct objects cover exactly the tail.  A server that applies
-    StartAfter before grouping gets the same requests and shards."""
+    """Discovery sends the marker with every listing: one flat probe of
+    the root and the delimiter listings.  Apart from the root and the
+    marker's own ancestor groups (at most one per level, which S3 leaves
+    out of CommonPrefixes), no prefix whose keys all sort at or below
+    the marker is ever requested; shards plus direct objects cover
+    exactly the tail.  A server that applies StartAfter before grouping
+    gets the same requests and shards."""
     tail = {k for k in ALL_KEYS if k > marker}
     results = []
     for wrap in (lambda c: c, _KeepsMarkerGroup):
@@ -773,7 +775,9 @@ def test_discovery_requests_only_prefixes_above_marker(marker):
         shards, direct = discover_shards(
             c, "fake-bucket", "", target_shards=50, start_after=marker
         )
-        prefixes = [kw["Prefix"] for kw in c.requests]
+        flat = [kw for kw in c.requests if "Delimiter" not in kw]
+        assert len(flat) == 1 and flat[0]["Prefix"] == ""
+        prefixes = [kw["Prefix"] for kw in c.requests if "Delimiter" in kw]
         assert all(kw["StartAfter"] == marker for kw in c.requests)
         assert prefixes.count("") == 1
         for p in prefixes:
@@ -854,3 +858,72 @@ def test_driver_path_refresh_keeps_progress_observation_and_schema(
             pa.string(), pa.string(), pa.string(), pa.int64()
         ]
         assert schema.field("LastModified").type == pa.timestamp("ms", tz="UTC")
+
+
+def test_tail_that_fits_one_page_is_one_round_trip(spark):
+    """A tail of at most one page is listed by discovery's flat probe:
+    exactly two requests, sent together (the probe and the root
+    delimiter listing, both carrying the marker), no shard, the tail as
+    direct objects in key order, and a listing on the driver path."""
+    marker = sorted(ALL_KEYS)[-40]
+    tail = sorted(k for k in ALL_KEYS if k > marker)
+    server = _Counting(synth_bucket(), delay_s=0.05)
+    c = _RecordingClient(server)
+    shards, direct = discover_shards(c, "fake-bucket", "", start_after=marker)
+    assert shards == []
+    assert [o["Key"] for o in direct] == tail
+    assert sorted(("Delimiter" in kw, kw["Prefix"]) for kw in c.requests) == [
+        (False, ""), (True, "")
+    ]
+    assert all(kw["StartAfter"] == marker for kw in c.requests)
+    assert server.max_running == 2
+    inc = list_objects_df(
+        spark, "fake-bucket", client_factory=fake_client_factory, start_after=marker
+    )
+    assert not _is_task_path(inc)
+    assert sorted(r.key for r in inc.collect()) == tail
+
+
+@pytest.mark.parametrize("extra, task_path", [(0, False), (1, True)])
+def test_probe_page_size_boundary(spark, extra, task_path):
+    """A listing of exactly ``page_size`` keys is the probe's one
+    untruncated page; one key more truncates it, and the listing falls
+    through to the BFS and the listing tasks.  Both list every key once."""
+    df = list_objects_df(
+        spark,
+        "fake-bucket",
+        client_factory=fake_client_factory,
+        page_size=len(ALL_KEYS) - extra,
+    )
+    assert _is_task_path(df) == task_path
+    _assert_complete_and_exact(df)
+
+
+class _MisorderedFlat(FakeS3Client):
+    """Real paging, except that a listing without a Delimiter lists its
+    keys backwards."""
+
+    def list_objects_v2(self, **kw):
+        resp = super().list_objects_v2(**kw)
+        if "Delimiter" not in kw:
+            resp["Contents"] = resp["Contents"][::-1]
+        return resp
+
+
+def test_probe_page_with_non_increasing_keys_fails_loud(spark, tmp_path):
+    """The probe is paged through the same checks as every listing: a
+    complete probe page whose keys do not strictly increase fails the
+    refresh instead of writing a manifest."""
+    import functools
+    import os
+
+    out = str(tmp_path / "refresh.parquet")
+    with pytest.raises(RuntimeError, match="does not sort after"):
+        manifest_from_s3(
+            spark,
+            "s3://fake-bucket/",
+            output=out,
+            client_factory=functools.partial(_MisorderedFlat, synth_bucket()),
+            start_after=sorted(ALL_KEYS)[-40],
+        )
+    assert not os.path.exists(out)
