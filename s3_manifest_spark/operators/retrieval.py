@@ -13,11 +13,11 @@ scoring function) as a pure-Catalyst plan:
   shuffle of token rows: per-term df is ``SUM(array_contains(...))``
   pushed into the same aggregate.
 - **Score pass**: the 1-row stats frame broadcast-crossJoins the
-  corpus; per-document term frequencies are ``size(filter(tokens,
-  x = t))`` array expressions (whole-stage codegen, zero Python,
-  zero shuffle), the BM25 sum is unrolled over the fixed query terms,
-  and the global top-k is a TakeOrdered merge of per-partition
-  partial top-ks.
+  corpus; per-document term frequencies are ``size(tokens) -
+  size(array_remove(tokens, t))`` array expressions (whole-stage
+  codegen, zero Python, zero shuffle), the BM25 sum is unrolled over
+  the fixed query terms, and the global top-k is a TakeOrdered merge
+  of per-partition partial top-ks.
 
 At 100 TB this is two corpus scans and nothing else: a combinable
 aggregate and a shuffle-free projection + bounded top-k — there is no
@@ -41,6 +41,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from s3_manifest_spark.operators.text import _term_count
 from s3_manifest_spark.registry import register
 from s3_manifest_spark.sources.tables import load_table
 
@@ -57,7 +58,7 @@ BM25_1MB = "0.25"
 
 
 def _toks(text: Column) -> Column:
-    return F.filter(F.split(text, " "), lambda x: x != F.lit(""))
+    return F.array_remove(F.split(text, " "), "")
 
 
 def _bm25_oracle() -> str:
@@ -125,16 +126,11 @@ def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
     )
 
-    def tf_col(term: str) -> Column:
-        # NB: the lambda must be unary — F.filter treats a second
-        # parameter as the element INDEX, not a free variable.
-        return F.size(F.filter(tk, lambda x: x == F.lit(term)))
-
     scored = docs.select(
         "doc_id",
         F.size(tk).cast("double").alias("dl"),
         *[
-            tf_col(t).cast("double").alias(f"tf{i}")
+            _term_count(tk, (t,)).cast("double").alias(f"tf{i}")
             for i, t in enumerate(BM25_QUERY_TERMS)
         ],
     ).crossJoin(F.broadcast(stats))

@@ -19,7 +19,7 @@ and counts equal tokens (or n-grams) per document through
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from s3_manifest_spark.registry import register
@@ -27,6 +27,21 @@ from s3_manifest_spark.sources.tables import load_table
 
 #: Whitespace tokens (documents fixture is space-separated).
 _TOKENS = "split(text, ' ', -1)"
+
+
+def _term_count(tokens: Column, terms) -> Column:
+    """How many elements of the string array ``tokens`` are in
+    ``terms``: the size drop after one ``array_remove`` per term.
+    Built-ins stay in whole-stage codegen, where ``size(filter(tokens,
+    w -> w IN terms))`` is a lambda Spark evaluates row by row.  A NULL
+    array counts ``size(NULL)``, as the filter form does."""
+    rest = tokens
+    for t in terms:
+        rest = F.array_remove(rest, t)
+    return F.when(tokens.isNull(), F.size(tokens)).otherwise(
+        F.size(tokens) - F.size(rest)
+    )
+
 
 #: BPE-ish lexer: alpha runs, digit runs, single other non-space chars.
 #: Same regex is valid in Java (Spark) and RE2 (DuckDB).
@@ -145,9 +160,7 @@ def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup/training steps — one narrow projection, no shuffle."""
     docs = load_table(spark, sf_dir, "documents")
     ntok = F.greatest(F.size(F.expr(_TOKENS)), F.lit(1))
-    stop = F.expr(
-        f"size(filter({_TOKENS}, w -> w IN ('the','a','of','and','in')))"
-    )
+    stop = _term_count(F.expr(_TOKENS), ("the", "a", "of", "and", "in"))
     return docs.select(
         "doc_id",
         F.size(F.expr(_TOKENS)).cast("long").alias("n_tokens"),
@@ -197,11 +210,7 @@ def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     argmax, no shuffle) is the part that must scale."""
     docs = load_table(spark, sf_dir, "documents")
 
-    def score(lang: str):
-        markers = ", ".join(f"'{w}'" for w in _LANG_MARKERS[lang])
-        return F.expr(f"size(filter({_TOKENS}, w -> w IN ({markers})))")
-
-    s = {lang: score(lang) for lang in _LANG_MARKERS}
+    s = {lang: _term_count(F.expr(_TOKENS), m) for lang, m in _LANG_MARKERS.items()}
     predicted = (
         F.when(
             (s["en"] == 0) & (s["es"] == 0) & (s["de"] == 0) & (s["fr"] == 0), "und"

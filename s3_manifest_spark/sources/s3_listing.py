@@ -37,6 +37,11 @@ Dataflow::
                                                  #   path, no Python task
         → listing DataFrame(key, size, last_modified, etag, storage_class)
         → derive_manifest(...)                   # manifest/core.py
+        → write_manifest(...)                    # shards: Spark's writer, one
+                                                 #   file per task; no shard: the
+                                                 #   manifest folds to a
+                                                 #   LocalRelation and the driver
+                                                 #   writes it, no Spark job
 
 boto3 is import-gated (an optional dependency): pass any picklable
 zero-arg ``client_factory`` returning an object with ``list_objects_v2``
@@ -399,6 +404,11 @@ def list_objects_df(
     direct objects are the whole listing: they already sit on the
     driver, so they become a local Arrow relation and the listing runs
     no Python task.  The driver adds their count to ``progress`` itself.
+    A manifest derived from such a listing folds into a
+    ``LocalRelation``, which :func:`~s3_manifest_spark.manifest.core.
+    write_manifest` writes from the driver: a refresh whose tail fits
+    one page is one round trip plus a driver write, and starts no Spark
+    job.
     """
     client_factory = client_factory or make_boto3_client_factory()
     shards, direct = discover_shards(

@@ -39,9 +39,11 @@ policy; this module owns the rest:
 - **Conf scoping.**  The shuffle width at query start fixes the number
   of state stores; ``partitions`` sets it for the drain only
   (:data:`STREAM_SHUFFLE_PARTITIONS` by default, ``None`` leaves the
-  session's width alone).  Prior values are restored on exit.  The
-  confs are session-wide, so one lock per session keeps drains on
-  that session from overlapping.
+  session's width alone).  A drain's state stores keep no committed
+  version in the heap (:data:`DRAIN_RETAINED_BATCHES`), so a finished
+  drain leaves no state maps behind.  Prior values are restored on
+  exit.  The confs are session-wide, so one lock per session keeps
+  drains on that session from overlapping.
 - **No-data guard.**  A drain skips Spark's trailing no-data
   micro-batch (:data:`DRAIN_NO_DATA_BATCHES`) unless its output
   depends on it: an append-mode streaming aggregation keeps Spark's
@@ -109,6 +111,15 @@ STREAM_SHUFFLE_PARTITIONS = "4"
 #: On an unbounded production stream the default stays on — this is
 #: drain-scoped, like the partition sizing above.
 DRAIN_NO_DATA_BATCHES = "false"
+
+#: State versions an HDFS-backed state store keeps in the heap after a
+#: commit.  Spark keeps 2, so a finished drain's providers hold their
+#: last versions' maps until the next maintenance pass (60 s by
+#: default).  A drain is over when it returns; a version is reloaded
+#: from its checkpoint files only by a later micro-batch of the same
+#: multi-batch drain.  Measured on the sf0.01 CDC drain:
+#: ``stateOperators[0].memoryUsedBytes`` 10,353,984 -> 640.
+DRAIN_RETAINED_BATCHES = "0"
 
 
 def scratch_base() -> str:
@@ -242,14 +253,18 @@ def _drain_confs(
 ):
     """Scoped session confs for a bounded availableNow drain: the
     state-store partition count (``None`` leaves the session's shuffle
-    width alone) and the trailing no-data micro-batch switch.
+    width alone), the trailing no-data micro-batch switch and the
+    state versions kept in memory (:data:`DRAIN_RETAINED_BATCHES`).
     Restores prior values on exit.
 
     The confs are session-wide, so the scope holds the session's drain
     lock throughout: two overlapping scopes would each save the
     other's values and restore them last.  Not re-entrant — nothing
     that runs inside a drain (a sink included) may start another."""
-    pairs = {"spark.sql.streaming.noDataMicroBatches.enabled": no_data_batches}
+    pairs = {
+        "spark.sql.streaming.noDataMicroBatches.enabled": no_data_batches,
+        "spark.sql.streaming.maxBatchesToRetainInMemory": DRAIN_RETAINED_BATCHES,
+    }
     if partitions is not None:
         pairs["spark.sql.shuffle.partitions"] = partitions
     # setdefault: first use is race-free across threads (session_dict)

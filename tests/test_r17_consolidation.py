@@ -205,3 +205,23 @@ def test_drain_confs_scoped_and_restored(spark):
         assert spark.conf.get(sp_key) == old_parts
     finally:
         spark.conf.unset(nd_key)
+
+
+def test_finished_drain_keeps_no_state_versions_in_the_heap(spark):
+    """A drain's state stores retain no committed version in memory, so
+    the CDC drain's recorded progress reports only a few KB of state
+    memory per operator (Spark's default of 2 retained versions keeps
+    every key's map in the heap after the drain has finished)."""
+    import __spark_entry__ as entrymod
+
+    from s3_manifest_spark.registry import session_dict
+
+    progress = session_dict(spark, "_smsp_drain_progress")
+    progress.pop("cdc_apply", None)
+    entrymod.queries()["stream_cdc_apply_live"](spark, "/root/testdata/sf0.001")
+    used = [
+        op["memoryUsedBytes"]
+        for p in progress["cdc_apply"]
+        for op in p["stateOperators"]
+    ]
+    assert used and max(used) <= 4096, used

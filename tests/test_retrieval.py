@@ -63,3 +63,38 @@ def test_oov_term_has_zero_df_and_contributes_nothing(spark):
     )
     assert with_oov == without  # 'zebra' never occurs: tf=0 everywhere
     assert not any("zebra" in text.split() for text in docs["text"])
+
+
+def test_codegen_token_counts_equal_the_lambda_forms(spark):
+    """The built-in token expressions of ``bm25_topk``, ``text_quality``
+    and ``lang_id`` equal the ``filter(..., lambda)`` forms they
+    replace, row for row, on NULL, empty, all-space and repeated-term
+    texts.  A NULL text keeps ``size(NULL)`` (-1 with ANSI off) where
+    a bare size difference would give 0."""
+    from pyspark.sql import functions as F
+
+    from s3_manifest_spark.operators.text import _LANG_MARKERS, _TOKENS, _term_count
+    from s3_manifest_spark.sources.tables import local_relation
+
+    texts = [None, "", " ", "    ", "table table scan", " the a  of the ",
+             "zebra", "merge\tmerge merge  window", "the the THE the", "la de la y"]
+    docs = local_relation(spark, [(t,) for t in texts], "text string")
+    old_tk = F.filter(F.split("text", " "), lambda x: x != F.lit(""))
+    new_tk = rt._toks(F.col("text"))
+    pairs = [(F.size(old_tk), F.size(new_tk))] + [
+        (F.size(F.filter(old_tk, lambda x: x == F.lit(t))), _term_count(new_tk, (t,)))
+        for t in rt.BM25_QUERY_TERMS
+    ] + [
+        (F.expr(f"size(filter({_TOKENS}, w -> w IN ({', '.join(repr(w) for w in ws)})))"),
+         _term_count(F.expr(_TOKENS), ws))
+        for ws in [("the", "a", "of", "and", "in"), *_LANG_MARKERS.values()]
+    ]
+    got = docs.select(
+        (old_tk == new_tk).alias("same_tokens"),
+        *[c for p in pairs for c in p],
+    ).collect()
+    for text, row in zip(texts, got):
+        assert row.same_tokens is (None if text is None else True), text
+        vals = list(row)[1:]
+        assert vals[0::2] == vals[1::2], (text, vals)
+    assert list(got[0])[1] == -1
