@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from s3_manifest_spark.operators.text import _batch_tokens, _doc_runs
+from s3_manifest_spark.operators.text import _batch_tokens, _doc_runs, _run_starts
 from s3_manifest_spark.registry import cached, register, release, track_persist
 from s3_manifest_spark.sources.tables import (
     load_table,
@@ -865,9 +865,7 @@ def contamination_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
             hit = (pr[pos] == fps).astype(np.int64)
             # wdoc is doc-contiguous: reduceat over first-occurrence
             # offsets gives final per-doc hit counts
-            starts = np.flatnonzero(
-                np.concatenate(([True], wdoc[1:] != wdoc[:-1]))
-            )
+            starts = _run_starts(wdoc)
             counts = np.add.reduceat(hit, starts)
             keep = counts > 0
             yield pd.DataFrame(
@@ -1025,9 +1023,7 @@ def contamination_bloom_candidates(
             )
             # wdoc is doc-contiguous and per-doc distinct: reduceat
             # over first-occurrence offsets gives final counts
-            starts = np.flatnonzero(
-                np.concatenate(([True], wdoc[1:] != wdoc[:-1]))
-            )
+            starts = _run_starts(wdoc)
             counts = np.add.reduceat(hit, starts)
             keep = counts > 0
             yield pd.DataFrame(
@@ -1181,9 +1177,7 @@ def contamination_bloom(
                 .all(axis=0)
                 .astype(np.int64)
             )
-            starts = np.flatnonzero(
-                np.concatenate(([True], wdoc[1:] != wdoc[:-1]))
-            )
+            starts = _run_starts(wdoc)
             ec = np.add.reduceat(ex, starts)
             bc_cnt = np.add.reduceat(bl, starts)
             keep = (ec > 0) | (bc_cnt > 0)

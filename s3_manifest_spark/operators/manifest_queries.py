@@ -754,6 +754,8 @@ def _binned_partials(data: DataFrame, b_off, target: int) -> DataFrame:
     per-prefix running state."""
     import numpy as np
 
+    from s3_manifest_spark.operators.text import _run_starts
+
     def binner(batches):
         import pandas as pd
         from pyspark import TaskContext
@@ -772,9 +774,7 @@ def _binned_partials(data: DataFrame, b_off, target: int) -> DataFrame:
             }
             # segment boundaries are where the prefix changes (a
             # handful per batch)
-            starts = np.flatnonzero(
-                np.concatenate(([True], prefixes[1:] != prefixes[:-1]))
-            )
+            starts = _run_starts(prefixes)
             bounds = np.append(starts, len(pdf))
             for i, j in zip(bounds[:-1], bounds[1:]):
                 p = prefixes[i]
@@ -785,9 +785,7 @@ def _binned_partials(data: DataFrame, b_off, target: int) -> DataFrame:
                 excl = np.cumsum(seg) - seg + base
                 segbins = excl // target
                 running[p] = int(excl[-1] + seg[-1])
-                bstarts = np.flatnonzero(
-                    np.concatenate(([True], segbins[1:] != segbins[:-1]))
-                )
+                bstarts = _run_starts(segbins)
                 bbounds = np.append(bstarts, j - i)
                 for a, b in zip(bbounds[:-1], bbounds[1:]):
                     out["prefix"].append(p)

@@ -14,7 +14,8 @@ no tokens.  It is Spark's ``split(text, ' ', -1)`` and DuckDB's
 ``string_split(text, ' ')``.  Every pandas text kernel (here, in
 ``dedup`` and in ``curation``) tokenizes through :func:`_batch_tokens`
 and counts equal tokens (or n-grams) per document through
-:func:`_doc_runs`.
+:func:`_doc_runs`; a kernel over rows already grouped by document
+finds each document's first row with :func:`_run_starts`.
 """
 
 from __future__ import annotations
@@ -85,12 +86,22 @@ def _doc_runs(doc, key):
     import numpy as np
 
     order = np.lexsort((key, doc))
-    d, k = doc[order], key[order]
-    first = np.ones(len(k), dtype=bool)
-    first[1:] = (d[1:] != d[:-1]) | (k[1:] != k[:-1])
-    starts = np.flatnonzero(first)
-    counts = np.diff(np.append(starts, len(k)))
+    starts = _run_starts(doc[order], key[order])
+    counts = np.diff(np.append(starts, len(key)))
     return order, starts, counts
+
+
+def _run_starts(*keys):
+    """Indexes of the rows that start a run of equal rows in the
+    equal-length arrays ``keys``: row 0, and every row where some key
+    differs from the row before (empty for no rows)."""
+    import numpy as np
+
+    first = np.zeros(len(keys[0]), dtype=bool)
+    first[:1] = True
+    for k in keys:
+        first[1:] |= k[1:] != k[:-1]
+    return np.flatnonzero(first)
 
 
 @register(

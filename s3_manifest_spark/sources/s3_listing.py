@@ -30,6 +30,10 @@ Dataflow::
                                                  #   MAX_IN_FLIGHT requests in
                                                  #   flight; one page → one
                                                  #   Arrow batch
+              via _paged_ahead                   # a pager thread requests the
+                                                 #   next round while the task
+                                                 #   writes: at most
+                                                 #   2 x MAX_IN_FLIGHT pages held
         → no shard left (the probe page is the   # e.g. a short refresh tail
           whole listing, or the bucket is
           shallower than the BFS):
@@ -51,7 +55,9 @@ semantics).
 
 from __future__ import annotations
 
+import queue
 import random
+import threading
 import time
 from collections.abc import Callable, Iterable, Iterator
 from concurrent.futures import ThreadPoolExecutor
@@ -255,6 +261,53 @@ def _list_shards(
     return _rounds((p, _pages(client, Prefix=p, **request)) for p in prefixes)
 
 
+def _paged_ahead(items: Iterator) -> Iterator:
+    """``items``' items in order, drawn on one pager thread through a
+    hand-off of up to :data:`MAX_IN_FLIGHT` items, so the pager keeps
+    requesting while the consumer writes what it already has.
+
+    Over :func:`_list_shards` the consumer holds at most
+    2 x ``MAX_IN_FLIGHT`` pages it has not yielded: a full hand-off,
+    plus one round of ``_rounds`` that is in flight or yielded only in
+    part.  An error in the pager thread raises here, in the consumer.
+    Closing this generator stops the pager, which closes ``items`` on
+    its own thread (so ``_rounds`` leaves no request running), and
+    joins it."""
+    handoff: queue.Queue = queue.Queue(MAX_IN_FLIGHT)
+    stop = threading.Event()
+    done = object()
+    error: list[BaseException] = []
+
+    def pager() -> None:
+        try:
+            with closing(items):
+                for item in items:
+                    handoff.put(item)
+                    if stop.is_set():
+                        return
+        except BaseException as e:  # re-raised in the consumer
+            error.append(e)
+        handoff.put(done)
+
+    thread = threading.Thread(target=pager, name="list-pager", daemon=True)
+    thread.start()
+    try:
+        while (item := handoff.get()) is not done:
+            yield item
+        if error:
+            raise error[0]
+    finally:
+        stop.set()
+        # At most one put follows this drain (the pager checks stop
+        # after each put), so the pager never blocks on a full hand-off.
+        while True:
+            try:
+                handoff.get_nowait()
+            except queue.Empty:
+                break
+        thread.join()
+
+
 #: BFS levels :func:`discover_shards` expands at most.
 DISCOVER_MAX_ROUNDS = 3
 
@@ -374,10 +427,12 @@ def list_objects_df(
     The prefix predicate is pushed into the API request itself (S2,
     main.rs:190).  The shards run in at most ``defaultParallelism``
     tasks with no shuffle; each task pages its shards through
-    :func:`_list_shards`, so it holds at most ``MAX_IN_FLIGHT`` pages
-    (``page_size`` rows each) and the Arrow batch it is emitting —
-    the reference's bounded-buffer flush loop (main.rs:236-246),
-    N-wide.
+    :func:`_list_shards` on one pager thread (:func:`_paged_ahead`),
+    which keeps the next round's requests in flight while the task
+    writes the pages it already has.  So a task holds at most
+    2 x ``MAX_IN_FLIGHT`` pages (``page_size`` rows each) and the Arrow
+    batch it is emitting — the reference's bounded-buffer flush loop
+    (main.rs:236-246), which keeps paging while it writes, N-wide.
 
     ``progress`` (a :class:`~s3_manifest_spark.manifest.progress.
     ListingProgress`) gets its accumulator incremented by each emitted
@@ -444,9 +499,10 @@ def list_objects_df(
                 yield counted(pa.RecordBatch.from_struct_array(listed))
         if mine:
             client = client_factory()  # one client per task, never pickled
-            for _, page in _list_shards(client, mine, **request):
-                if page.get("Contents"):
-                    yield counted(_page_batch(page["Contents"]))
+            with closing(_paged_ahead(_list_shards(client, mine, **request))) as pages:
+                for _, page in pages:
+                    if page.get("Contents"):
+                        yield counted(_page_batch(page["Contents"]))
 
     # One row per shard as an Arrow local relation: min(rows,
     # defaultParallelism) contiguous slices, no shuffle, and list_task

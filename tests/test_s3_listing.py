@@ -13,6 +13,7 @@ from s3_manifest_spark.sources.fake_s3 import (
 from s3_manifest_spark.sources.s3_listing import (
     MAX_IN_FLIGHT,
     _list_shards,
+    _paged_ahead,
     _pages,
     discover_shards,
     list_objects_df,
@@ -396,6 +397,87 @@ def test_listing_fails_loud_on_non_increasing_keys(mode):
     pages = _list_shards(client, ["d/"], Bucket="b", MaxKeys=100)
     with pytest.raises(RuntimeError, match="does not sort after"):
         list(pages)
+
+
+def _pager_threads() -> list:
+    import threading
+
+    return [t for t in threading.enumerate() if t.name == "list-pager"]
+
+
+def test_paged_ahead_yields_list_shards_pages_in_order():
+    """A listing task's pages, drawn ahead on the pager thread, are
+    _list_shards' pages in _list_shards' order, and the pager thread is
+    gone once they are exhausted."""
+    bucket = _sharded_bucket()
+    shards = [f"s{i:03d}/" for i in range(40)]
+
+    def pages(it):
+        return [(p, [o["Key"] for o in page.get("Contents", [])]) for p, page in it]
+
+    direct = pages(_list_shards(FakeS3Client(bucket), shards, Bucket="b", MaxKeys=7))
+    ahead = pages(
+        _paged_ahead(_list_shards(FakeS3Client(bucket), shards, Bucket="b", MaxKeys=7))
+    )
+    assert ahead == direct
+    assert sum(len(keys) for _, keys in ahead) == len(bucket["b"])
+    assert not _pager_threads()
+
+
+@pytest.mark.parametrize("mode", ["no_token", "same_token", "replay", "backwards"])
+def test_paged_ahead_raises_pager_errors_in_the_task(mode):
+    """A stuck continuation token or non-increasing keys, raised on the
+    pager thread, raise from the task's own generator, and the pager
+    thread has ended."""
+    import datetime as dt
+
+    t = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
+    if mode in ("no_token", "same_token"):
+        client = _StuckPaging(
+            {"b": {f"s{i}/k{j:05d}": (1, t) for i in range(3) for j in range(50)}},
+            drop_token=mode == "no_token",
+        )
+        shards, match = ["s0/", "s1/", "s2/"], "does not advance"
+    else:
+        client = _Misordered({"b": {f"d/k{i:05d}": (1, t) for i in range(300)}}, mode)
+        shards, match = ["d/"], "does not sort after"
+    with pytest.raises(RuntimeError, match=match):
+        list(_paged_ahead(_list_shards(client, shards, Bucket="b", MaxKeys=10)))
+    assert not _pager_threads()
+
+
+def test_paged_ahead_close_early_joins_the_pager():
+    """The pager requests ahead of a consumer that has taken one page,
+    but never more than 2 x MAX_IN_FLIGHT pages it has not yielded; a
+    close joins the pager thread and leaves no request running."""
+    import time
+
+    client = _Counting(_sharded_bucket(), delay_s=0.01)
+    pages = _paged_ahead(
+        _list_shards(client, [f"s{i:03d}/" for i in range(40)], Bucket="b", MaxKeys=1)
+    )
+    next(pages)
+    deadline = time.monotonic() + 30
+    while client.calls - 1 <= MAX_IN_FLIGHT and time.monotonic() < deadline:
+        time.sleep(0.01)
+    time.sleep(0.2)  # let the pager run into its bound
+    assert MAX_IN_FLIGHT < client.calls - 1 <= 2 * MAX_IN_FLIGHT
+    pages.close()
+    assert not _pager_threads()
+    calls = client.calls
+    time.sleep(0.05)
+    assert client.running == 0 and client.calls == calls <= 1 + 2 * MAX_IN_FLIGHT
+
+
+def test_listing_pages_ahead_lists_every_key_once(spark):
+    """Through a session, listing tasks that page many rounds ahead of
+    their output (3-key pages over 91 shards) list every key exactly
+    once."""
+    df = list_objects_df(
+        spark, "fake-bucket", client_factory=fake_client_factory, page_size=3
+    )
+    assert "MapInArrow" in df._jdf.queryExecution().executedPlan().toString()
+    _assert_complete_and_exact(df)
 
 
 def _assert_arrow_local_relation(df):
