@@ -18,6 +18,12 @@ function means Catalyst can push the prefix filter into whatever source
 produced the listing, and the whole projection stays inside one
 WholeStageCodegen span (no Python in the row path).
 
+The same rules in Arrow, :func:`manifest_batch`, derive a listing page
+where it already is — in a listing task or on the driver — so that
+``manifest_from_s3`` writes a local manifest through the one part
+writer, :func:`write_parts`, with no JVM derive-and-encode pass.  A
+property test holds the two derivations equal row for row.
+
 Fidelity contract (SURVEY.md §2C): literal (not regex) last-occurrence
 split, no nulls in the output, ms-precision tz-naive-UTC timestamps,
 exact column names/types.
@@ -25,7 +31,14 @@ exact column names/types.
 
 from __future__ import annotations
 
+import datetime as dt
+import re
+from collections.abc import Callable, Iterable, Iterator
+from typing import Any
+
+import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
 from pyspark.sql import Column, DataFrame
@@ -100,6 +113,205 @@ def derive_manifest(
 
 #: Column types the driver writer converts: the manifest's.
 _DRIVER_TYPES = (T.StringType, T.LongType, T.TimestampType)
+_TS_MS = pa.timestamp("ms", tz="UTC")
+_UTC = dt.timezone.utc
+_EPOCH = dt.datetime(1970, 1, 1, tzinfo=_UTC)
+_MS = dt.timedelta(milliseconds=1)
+#: The date-time text ``derive_manifest``'s string-to-timestamp cast
+#: reads as Spark does, for the forms a listing carries: an RFC 3339
+#: date, optionally a time, then after the seconds an offset (``Z``,
+#: ``UTC``, ``+hh:mm``, ``+hhmm``, ``+h``, ``+h:m``); no offset is UTC.
+#: A region name such as ``Europe/Paris``, which Spark also reads,
+#: reads as missing here.
+_TIME_TEXT = re.compile(
+    r"(\d{4})-(\d{1,2})-(\d{1,2})"
+    r"(?:[T ](\d{1,2})(?::(\d{1,2})(?::(\d{1,2})(?:\.(\d*))?"
+    r" ?(?:Z|(?:UTC|GMT|UT)?(?:([+-])(\d{1,2}(?::\d{1,2})?|\d{4}))?))?)?)?"
+)
+
+
+def _parse_time(text: str) -> dt.datetime | None:
+    """``text`` as an aware datetime, or None when it is not a date-time
+    :data:`_TIME_TEXT` reads.  ``datetime.fromisoformat`` is not used:
+    before Python 3.11 it rejects a trailing ``Z``."""
+    m = _TIME_TEXT.fullmatch(text.strip())
+    if m is None:
+        return None
+    y, mo, d, h, mi, s, frac, sign, zone = m.groups()
+    zone = zone or "0"
+    if ":" in zone:
+        oh, om = zone.split(":")
+    else:
+        oh, om = (zone[:2], zone[2:]) if len(zone) == 4 else (zone, 0)
+    try:
+        off = dt.timedelta(hours=int(oh), minutes=int(om))
+        if off > dt.timedelta(hours=18) or int(om) > 59:
+            return None
+        return dt.datetime(
+            int(y), int(mo), int(d), int(h or 0), int(mi or 0), int(s or 0),
+            int((frac or "")[:3].ljust(3, "0")) * 1000,
+            dt.timezone(-off if sign == "-" else off),
+        )
+    except ValueError:  # a field out of range
+        return None
+
+
+def _epoch_ms(t) -> int:
+    """``t`` (a datetime, naive meaning UTC, or its text) in whole
+    milliseconds since the epoch, floored; 0 when missing or unreadable."""
+    if isinstance(t, str):
+        t = _parse_time(t)
+    if not isinstance(t, dt.datetime):
+        return 0
+    if t.tzinfo is None:
+        t = t.replace(tzinfo=_UTC)
+    return (t - _EPOCH) // _MS
+
+
+#: The manifest's Arrow schema, as :func:`manifest_batch` builds it.
+MANIFEST_ARROW_SCHEMA = pa.schema(
+    [pa.field(n, pa.string(), False) for n in ("Bucket", "Key", "FileName")]
+    + [pa.field("Size", pa.int64(), False), pa.field("LastModified", _TS_MS, False)]
+)
+
+
+def manifest_batch(
+    contents: list[dict], bucket: str, prefix: str = "", delimiter: str = "/"
+) -> pa.RecordBatch:
+    """:func:`derive_manifest`'s rows for ListObjectsV2 ``Contents``
+    entries, derived in Arrow on the calling process: the same literal
+    last-occurrence split (an empty delimiter gives ``''``), coalesces,
+    floored milliseconds and prefix re-check.  ``LastModified`` may be a
+    datetime, as boto3 returns it, or RFC 3339 text."""
+    if prefix:
+        contents = [o for o in contents if (o.get("Key") or "").startswith(prefix)]
+    keys = [o.get("Key") or "" for o in contents]
+    n = len(delimiter)
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array([bucket] * len(keys), pa.string()),
+            pa.array(keys, pa.string()),
+            pa.array(
+                [k[i + n:] if (i := k.rfind(delimiter)) >= 0 else k for k in keys],
+                pa.string(),
+            ),
+            pa.array([o.get("Size") or 0 for o in contents], pa.int64()),
+            pa.array([_epoch_ms(o.get("LastModified")) for o in contents], _TS_MS),
+        ],
+        schema=MANIFEST_ARROW_SCHEMA,
+    )
+
+
+def part_schema(spark, schema: T.StructType) -> pa.Schema:
+    """The Arrow schema :func:`write_parts` writes rows of Spark
+    ``schema`` with: Spark's Arrow types, each timestamp column as
+    ``timestamp[ms, UTC]`` (the manifest's precision, which Spark's
+    writer writes under the session's ``TIMESTAMP_MILLIS``), and the
+    footer keys Spark's writer sets, with its values."""
+    return pa.schema(
+        [
+            pa.field(a.name, _TS_MS, a.nullable)
+            if isinstance(f.dataType, T.TimestampType) else a
+            for a, f in zip(to_arrow_schema(schema), schema.fields)
+        ],
+        metadata={
+            "org.apache.spark.sql.parquet.row.metadata":
+                spark._jsparkSession.parseDataType(schema.json()).json(),
+            "org.apache.spark.version": spark.version,
+        },
+    )
+
+
+#: Rows :func:`write_parts` gathers into one Parquet row group.
+ROW_GROUP_ROWS = 1 << 17
+#: Rows a manifest part file holds at most (Spark's ``maxRecordsPerFile``).
+MAX_RECORDS_PER_FILE = 5_000_000
+#: Sub-millisecond units per millisecond.
+_PER_MS = {"us": 1_000, "ns": 1_000_000}
+
+
+def _conform(batch: pa.RecordBatch, schema: pa.Schema) -> pa.RecordBatch:
+    """``batch`` with ``schema``'s types: a finer timestamp floored to
+    milliseconds, as Spark's writer does, any other column cast."""
+    if batch.schema.equals(schema):
+        return batch
+    cols = []
+    for c, f in zip(batch.columns, schema):
+        if c.type != f.type:
+            if (pa.types.is_timestamp(c.type) and pa.types.is_timestamp(f.type)
+                    and f.type.unit == "ms" and c.type.unit in _PER_MS):
+                n = c.cast(pa.int64())
+                ms = np.floor_divide(n.fill_null(0).to_numpy(), _PER_MS[c.type.unit])
+                c = pa.array(ms, mask=n.is_null().to_numpy(zero_copy_only=False))
+            c = c.cast(f.type)
+        cols.append(c)
+    return pa.RecordBatch.from_arrays(cols, schema=schema)
+
+
+def write_parts(
+    batches: Iterable[pa.RecordBatch],
+    schema: pa.Schema,
+    open_part: Callable[[int], Any],
+    max_records: int = 0,
+    empty_part: bool = False,
+    tally: str | None = None,
+) -> Iterator[tuple[Any, int, int]]:
+    """Write ``batches`` as snappy Parquet parts: the one part writer of
+    the driver, the listing tasks and the boto3 sink.
+
+    ``open_part(n)`` gives part ``n``'s path or stream.  One
+    :class:`pyarrow.parquet.ParquetWriter` is open at a time; rows are
+    gathered into row groups of :data:`ROW_GROUP_ROWS`, and part
+    ``n + 1`` starts after ``max_records`` rows (0: no limit), so a
+    writer holds at most one row group.  Only ``Bucket`` is
+    dictionary-encoded, which writes the manifest in about the bytes
+    Spark's writer does (pyarrow's defaults write about 18 % more).
+    Yields ``(target, rows, total)`` as each part closes, ``total``
+    being the sum of column ``tally`` (0 without one).  Batches of no
+    rows write no part, or one 0-row part with ``empty_part``."""
+    n, writer, target = 0, None, None
+    group: list[pa.RecordBatch] = []
+    held = rows = total = 0  # rows in the open row group; rows and tally of the part
+
+    def open_writer():
+        t = open_part(n)
+        return t, pq.ParquetWriter(t, schema, compression="snappy", use_dictionary=["Bucket"])
+
+    def flush() -> None:
+        nonlocal held
+        if group:
+            writer.write_table(pa.Table.from_batches(group, schema), row_group_size=ROW_GROUP_ROWS)
+            group.clear()
+        held = 0
+
+    for batch in batches:
+        batch = _conform(batch, schema)
+        while batch.num_rows:
+            if writer is None:
+                target, writer = open_writer()
+                rows = total = 0
+            take = min(batch.num_rows, ROW_GROUP_ROWS - held)
+            if max_records > 0:
+                take = min(take, max_records - rows)
+            head, batch = batch.slice(0, take), batch.slice(take)
+            group.append(head)
+            held, rows = held + take, rows + take
+            if tally is not None:
+                total += pc.sum(head.column(tally)).as_py() or 0
+            if held == ROW_GROUP_ROWS:
+                flush()
+            if rows == max_records:
+                flush()
+                writer.close()
+                writer = None
+                yield target, rows, total
+                n += 1
+    if writer is None and n == 0 and empty_part:
+        target, writer = open_writer()
+    if writer is not None:
+        flush()
+        writer.close()
+        yield target, rows, total
 
 
 def _driver_table(df: DataFrame) -> pa.Table | None:
@@ -116,7 +328,7 @@ def _driver_table(df: DataFrame) -> pa.Table | None:
     the collect, so the write leaves no folded copy of the rows in the
     session.  Each timestamp is collected as ``unix_millis`` and typed
     ``timestamp[ms, UTC]``, so the Python process's time zone never
-    touches it.  The footer carries the keys Spark's writer sets."""
+    touches it.  The table has :func:`part_schema`'s schema."""
     spark = df.sparkSession
     fields = df.schema.fields
     if spark.conf.get("spark.sql.parquet.compression.codec") != "snappy" or not all(
@@ -144,16 +356,7 @@ def _driver_table(df: DataFrame) -> pa.Table | None:
         rows = flat.collect()
     finally:
         _release(spark, plan, qe, flat._jdf)
-    schema = pa.schema(
-        [
-            pa.field(a.name, pa.timestamp("ms", tz="UTC"), a.nullable) if t else a
-            for a, t in zip(to_arrow_schema(df.schema), ts)
-        ],
-        metadata={
-            "org.apache.spark.sql.parquet.row.metadata": df._jdf.schema().json(),
-            "org.apache.spark.version": spark.version,
-        },
-    )
+    schema = part_schema(spark, df.schema)
     cols = zip(*rows) if rows else [[]] * len(fields)
     return pa.Table.from_arrays(
         [pa.array(c, type=a.type) for c, a in zip(cols, schema)], schema=schema
@@ -186,34 +389,47 @@ def _put(spark, fs, path, data: bytes) -> None:
         _release(spark, out)  # a closed stream still holds its buffers
 
 
-def _parquet(table: pa.Table) -> bytes:
-    buf = pa.BufferOutputStream()
-    pq.write_table(table, buf, compression="snappy")
-    return buf.getvalue().to_pybytes()
+def _parquet(table: pa.Table, max_records: int = 0) -> list[bytes]:
+    """``table`` as the bytes of its Parquet parts, at least one."""
+    parts = write_parts(
+        table.to_batches(), table.schema, lambda n: pa.BufferOutputStream(),
+        max_records, empty_part=True,
+    )
+    return [buf.getvalue().to_pybytes() for buf, _, _ in parts]
 
 
 def write_manifest(
     df: DataFrame,
     output: str,
-    max_records_per_file: int = 5_000_000,
+    max_records_per_file: int = MAX_RECORDS_PER_FILE,
     single_object: bool = False,
 ) -> None:
     """Persist a manifest as Parquet (local path, s3a://, hdfs://, ...).
 
-    Two writers, one layout.  The frame picks the writer: when the
-    optimized plan of a projection of it is a ``LocalRelation`` (a
-    driver-resident listing such as a short ``start_after`` refresh,
-    with no ``observe`` on it, whose ``CollectMetrics`` blocks the
-    fold), every row is already on the driver, and the driver writes
-    them with pyarrow through the destination's Hadoop ``FileSystem``
-    (:func:`_driver_table`): no Spark job, no task, no commit protocol.
-    Every other frame, and every frame of a session whose Parquet codec
-    is not Spark's default snappy, goes to Spark's writer.  Both write five
-    non-null columns and Spark's footer keys, and a 0-row frame writes
-    one 0-row file.  The driver always writes ``LastModified`` as a
-    millisecond UTC timestamp, the manifest's precision; Spark's writer
-    does so under the session's ``outputTimestampType`` of
-    ``TIMESTAMP_MILLIS`` (``session.get_spark``).
+    A manifest is written by one of three paths, one layout.  The
+    rule that picks one looks only at what the call already shows:
+
+    - ``manifest_from_s3`` into a local directory, in a session whose
+      Parquet codec is Spark's default snappy, and not single-object,
+      never reaches this function: its listing tasks, or the driver
+      when the listing has no shard, write the parts themselves with
+      :func:`write_parts` (``s3_listing._manifest_to_dir``).
+    - Here, a frame whose rows already sit on the driver: when the
+      optimized plan of a projection of it is a ``LocalRelation`` (a
+      driver-resident listing, with no ``observe`` on it, whose
+      ``CollectMetrics`` blocks the fold) and the codec is snappy, the
+      driver writes the rows with :func:`write_parts` through the
+      destination's Hadoop ``FileSystem`` (:func:`_driver_table`): no
+      Spark job, no task, no commit protocol.
+    - Every other frame, and every frame of a session with another
+      codec, goes to Spark's writer.
+
+    All of them write five non-null columns and Spark's footer keys,
+    and a 0-row frame writes one 0-row file.  The part writer always
+    writes ``LastModified`` as a millisecond UTC timestamp, the
+    manifest's precision; Spark's writer does so under the session's
+    ``outputTimestampType`` of ``TIMESTAMP_MILLIS``
+    (``session.get_spark``).
 
     Spark's writer replaces the reference's ArrowWriter +
     whole-file-in-RAM PutObject (main.rs:147-165, 321-359): S3A streams
@@ -258,14 +474,12 @@ def write_manifest(
     fs = Path(output).getFileSystem(conf)
     out_path = fs.makeQualified(Path(output))
     if not single_object:
-        n = max(table.num_rows, 1)  # a 0-row frame still writes one file
-        step = max_records_per_file if max_records_per_file > 0 else n
         job = uuid.uuid4()
         fs.delete(out_path, True)
         fs.mkdirs(out_path)
-        for i, lo in enumerate(range(0, n, step)):
+        for i, data in enumerate(_parquet(table, max_records_per_file)):
             name = f"part-00000-{job}-c{i:03d}.snappy.parquet"
-            _put(spark, fs, Path(out_path, name), _parquet(table.slice(lo, step)))
+            _put(spark, fs, Path(out_path, name), data)
         _put(spark, fs, Path(out_path, "_SUCCESS"), b"")
         return
 
@@ -280,7 +494,8 @@ def write_manifest(
                 if st.getPath().getName().startswith("part-")
             )
         else:
-            _put(spark, fs, tmp_path, _parquet(table))
+            (data,) = _parquet(table)
+            _put(spark, fs, tmp_path, data)
             part = tmp_path
         parent = out_path.getParent()
         if parent is not None and not fs.exists(parent):

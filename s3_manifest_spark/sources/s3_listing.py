@@ -39,13 +39,27 @@ Dataflow::
           shallower than the BFS):
             local_relation(direct objects)       # the same Arrow local relation
                                                  #   path, no Python task
-        → listing DataFrame(key, size, last_modified, etag, storage_class)
-        → derive_manifest(...)                   # manifest/core.py
-        → write_manifest(...)                    # shards: Spark's writer, one
-                                                 #   file per task; no shard: the
-                                                 #   manifest folds to a
-                                                 #   LocalRelation and the driver
-                                                 #   writes it, no Spark job
+        → list_objects_df: listing DataFrame(key, size, last_modified,
+          etag, storage_class), each task's pages as Arrow batches
+        → manifest_from_s3 into a local          # no Spark write job:
+          directory (snappy codec, not           #   _task_pages is the one
+          single-object):                        #   paging code for both
+            shards: mapInArrow(write task)       # each task derives its pages
+                                                 #   (core.manifest_batch) and
+                                                 #   writes its own part(s)
+                                                 #   (core.write_parts); the job
+                                                 #   collects one summary row per
+                                                 #   part, then the driver
+                                                 #   writes _SUCCESS
+            no shard: the driver derives and     # no Spark plan for the write
+                      writes the direct objects
+        → any other output:
+            derive_manifest(...)                 # manifest/core.py
+            → write_manifest(...)                # hdfs://, s3a://, another
+                                                 #   codec, single-object mode
+            → upload_parquet_boto3(...)          # s3:// without hadoop-aws: its
+                                                 #   tasks write through the
+                                                 #   same core.write_parts
 
 boto3 is import-gated (an optional dependency): pass any picklable
 zero-arg ``client_factory`` returning an object with ``list_objects_v2``
@@ -55,14 +69,18 @@ semantics).
 
 from __future__ import annotations
 
+import os
 import queue
 import random
+import shutil
 import threading
 import time
+import uuid
 from collections.abc import Callable, Iterable, Iterator
 from concurrent.futures import ThreadPoolExecutor
 from contextlib import closing
 from itertools import islice
+from urllib.parse import urlparse
 
 import pyarrow as pa
 
@@ -396,9 +414,13 @@ def discover_shards(
 _S3_FIELDS = {"key": "Key", "size": "Size", "last_modified": "LastModified",
               "etag": "ETag", "storage_class": "StorageClass"}
 _ARROW_LISTING_SCHEMA = to_arrow_schema(LISTING_SCHEMA)
+#: A ``Contents`` entry as a Spark struct, ``LastModified`` as RFC 3339 text.
+_CONTENTS = T.StructType(
+    [T.StructField(f, LISTING_SCHEMA[c].dataType) for c, f in _S3_FIELDS.items()]
+)
 #: One row per shard; the first row also carries discovery's direct objects.
 _TASK_SCHEMA = T.StructType().add("shard", T.StringType()).add(
-    "direct", T.ArrayType(LISTING_SCHEMA)
+    "direct", T.ArrayType(_CONTENTS)
 )
 
 
@@ -409,6 +431,77 @@ def _page_batch(contents: list[dict]) -> pa.RecordBatch:
         t.isoformat() if hasattr(t, "isoformat") else t for t in cols["last_modified"]
     ]
     return pa.RecordBatch.from_pydict(cols, schema=_ARROW_LISTING_SCHEMA)
+
+
+def _shard_table(spark: SparkSession, shards: list[str], direct: list[dict]) -> DataFrame:
+    """One row per shard as an Arrow local relation: min(rows,
+    defaultParallelism) contiguous slices, no shuffle, and the task's
+    pages are the only Python pass a listing task makes.  The direct
+    objects ride on the first row as ``Contents`` entries, so a listing
+    is this one relation, never a union."""
+    entries = pa.StructArray.from_arrays(
+        _page_batch(direct).columns, list(_S3_FIELDS.values())
+    )
+    direct_col = pa.ListArray.from_arrays(
+        pa.array([0] + [len(direct)] * len(shards), pa.int32()), entries
+    )
+    table = pa.table({"shard": shards, "direct": direct_col})
+    return local_relation(spark, table, _TASK_SCHEMA)
+
+
+def _task_pages(
+    client_factory: Callable[[], object],
+    bucket: str,
+    page_size: int,
+    start_after: str,
+    progress,
+) -> Callable[[Iterator[pa.RecordBatch]], Iterator[list[dict]]]:
+    """``pages(batches)``: the ``Contents`` list of each page a listing
+    task over shard-table ``batches`` lists.  The slice's direct objects
+    come first, then every page of its shards, through
+    :func:`_list_shards` on one pager thread (:func:`_paged_ahead`).
+    Each list's length goes to ``progress`` on the task's own thread.
+    Both the listing task and the manifest-writing task page this way."""
+    request = {"Bucket": bucket, "MaxKeys": page_size}
+    if start_after:
+        request["StartAfter"] = start_after
+    # Only the accumulator crosses into the task closure (it pickles by
+    # reference); the progress object's thread/stream stay driver-side.
+    acc = progress.accumulator if progress is not None else None
+
+    def counted(contents: list[dict]) -> list[dict]:
+        # Called in the task's own thread, never a pager thread:
+        # Accumulator.add is an unlocked read-modify-write.
+        if acc is not None:
+            acc.add(len(contents))
+        return contents
+
+    def pages(batches: Iterator[pa.RecordBatch]) -> Iterator[list[dict]]:
+        mine: list[str] = []
+        for b in batches:
+            mine += b.column("shard").to_pylist()
+            direct = b.column("direct").flatten().to_pylist()
+            if direct:
+                yield counted(direct)
+        if mine:
+            client = client_factory()  # one client per task, never pickled
+            with closing(_paged_ahead(_list_shards(client, mine, **request))) as listed:
+                for _, page in listed:
+                    if page.get("Contents"):
+                        yield counted(page["Contents"])
+
+    return pages
+
+
+def _listing(spark: SparkSession, table: DataFrame | None, direct: list[dict], pages) -> DataFrame:
+    """The listing DataFrame of one discovery: listing tasks over the
+    shard ``table``, or with no shard table the direct objects as an
+    Arrow local relation, which runs no Python task."""
+    if table is None:
+        return local_relation(
+            spark, pa.Table.from_batches([_page_batch(direct)]), LISTING_SCHEMA
+        )
+    return table.mapInArrow(lambda b: map(_page_batch, pages(b)), LISTING_SCHEMA)
 
 
 def list_objects_df(
@@ -459,64 +552,149 @@ def list_objects_df(
     direct objects are the whole listing: they already sit on the
     driver, so they become a local Arrow relation and the listing runs
     no Python task.  The driver adds their count to ``progress`` itself.
-    A manifest derived from such a listing folds into a
-    ``LocalRelation``, which :func:`~s3_manifest_spark.manifest.core.
-    write_manifest` writes from the driver: a refresh whose tail fits
-    one page is one round trip plus a driver write, and starts no Spark
-    job.
+    :func:`manifest_from_s3` writes such a listing's manifest from the
+    driver, with no Spark plan.
     """
     client_factory = client_factory or make_boto3_client_factory()
     shards, direct = discover_shards(
         client_factory(), bucket, prefix, delimiter, target_shards, start_after,
         page_size,
     )
-    if not shards:
-        if progress is not None:
-            progress.accumulator.add(len(direct))
-        return local_relation(
-            spark, pa.Table.from_batches([_page_batch(direct)]), LISTING_SCHEMA
-        )
-    request = {"Bucket": bucket, "MaxKeys": page_size}
-    if start_after:
-        request["StartAfter"] = start_after
-    # Only the accumulator crosses into the task closure (it pickles by
-    # reference); the progress object's thread/stream stay driver-side.
-    acc = progress.accumulator if progress is not None else None
+    if not shards and progress is not None:
+        progress.accumulator.add(len(direct))
+    table = _shard_table(spark, shards, direct) if shards else None
+    pages = _task_pages(client_factory, bucket, page_size, start_after, progress)
+    return _listing(spark, table, direct, pages)
 
-    def counted(batch: pa.RecordBatch) -> pa.RecordBatch:
-        # Called in the task's own thread, never a pager thread:
-        # Accumulator.add is an unlocked read-modify-write.
-        if acc is not None:
-            acc.add(batch.num_rows)
-        return batch
 
-    def list_task(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        mine: list[str] = []
-        for b in batches:
-            mine += b.column("shard").to_pylist()
-            listed = b.column("direct").flatten()
-            if len(listed):
-                yield counted(pa.RecordBatch.from_struct_array(listed))
-        if mine:
-            client = client_factory()  # one client per task, never pickled
-            with closing(_paged_ahead(_list_shards(client, mine, **request))) as pages:
-                for _, page in pages:
-                    if page.get("Contents"):
-                        yield counted(_page_batch(page["Contents"]))
+#: One row per manifest part written by a listing task or the driver.
+_PART_SUMMARY = (
+    T.StructType()
+    .add("file", T.StringType())
+    .add("objects", T.LongType())
+    .add("total_bytes", T.LongType())
+    .add("bytes", T.LongType())
+)
+_ARROW_PART_SUMMARY = to_arrow_schema(_PART_SUMMARY)
 
-    # One row per shard as an Arrow local relation: min(rows,
-    # defaultParallelism) contiguous slices, no shuffle, and list_task
-    # is the only Python pass a listing task makes.  The direct objects
-    # ride on the first row, so the listing is this one relation, never
-    # a union.
-    direct_col = pa.ListArray.from_arrays(
-        pa.array([0] + [len(direct)] * len(shards), pa.int32()),
-        _page_batch(direct).to_struct_array(),
+
+def _part_dir(spark: SparkSession, path: str) -> str | None:
+    """The absolute local directory :func:`manifest_from_s3` writes
+    ``path``'s manifest parts into itself, or None when ``path`` goes
+    to ``write_manifest``: a scheme other than ``file:``, no scheme
+    while Hadoop's default filesystem is not local, or a session whose
+    Parquet codec is not snappy (the rule of the driver writer,
+    ``core._driver_table``)."""
+    if spark.conf.get("spark.sql.parquet.compression.codec") != "snappy":
+        return None
+    url = urlparse(path)
+    if url.scheme == "file":
+        return os.path.abspath(url.path)
+    default_fs = spark._jsc.hadoopConfiguration().get("fs.defaultFS", "file:///")
+    if url.scheme or urlparse(default_fs).scheme != "file":
+        return None
+    return os.path.abspath(path)
+
+
+def _observed(summaries: DataFrame, observation) -> DataFrame:
+    """``summaries`` observed into ``observation`` as the reference's run
+    stats (object count and total bytes, main.rs:231, 284-289)."""
+    from pyspark.sql import functions as F
+
+    return summaries.observe(
+        observation,
+        F.coalesce(F.sum("objects"), F.lit(0)).alias("objects"),
+        F.coalesce(F.sum("total_bytes"), F.lit(0)).alias("total_bytes"),
     )
-    table = pa.table({"shard": shards, "direct": direct_col})
-    return local_relation(spark, table, _TASK_SCHEMA).mapInArrow(
-        list_task, LISTING_SCHEMA
+
+
+def _manifest_to_dir(
+    spark: SparkSession,
+    out_dir: str,
+    bucket: str,
+    prefix: str,
+    delimiter: str,
+    client_factory: Callable[[], object],
+    target_shards: int,
+    observation,
+    progress,
+    start_after: str,
+) -> DataFrame:
+    """:func:`manifest_from_s3` into the local directory ``out_dir``,
+    written straight from the listing's pages through the one part
+    writer (``core.write_parts``), wherever the pages are.
+
+    With shards, each listing task derives its pages
+    (``core.manifest_batch``) and writes its own part(s), named
+    ``part-<partition>-<job>-c<n>.snappy.parquet`` so a retried task
+    overwrites its own; the job collects one summary row per part
+    instead of running Spark's write job.  With no shard, the driver
+    derives and writes the direct objects, and builds no Spark plan for
+    the write.  Either way the directory is replaced first, a listing
+    of no rows writes one 0-row part, ``_SUCCESS`` is written after
+    every task has returned, and a failed build removes the directory.
+    The summary rows pass through one ``observe`` when an
+    ``observation`` is given: in the listing job, or on the driver path
+    in a local relation of the driver's summary rows."""
+    from pyspark import TaskContext
+
+    from s3_manifest_spark.manifest.core import (
+        MANIFEST_SCHEMA,
+        MAX_RECORDS_PER_FILE,
+        derive_manifest,
+        manifest_batch,
+        part_schema,
+        write_parts,
     )
+
+    shards, direct = discover_shards(
+        client_factory(), bucket, prefix, delimiter, target_shards, start_after
+    )
+    pages = _task_pages(client_factory, bucket, PAGE_SIZE, start_after, progress)
+    schema = part_schema(spark, MANIFEST_SCHEMA)
+    job = uuid.uuid4()
+
+    def parts(pid: int, batches, empty_part: bool = False) -> Iterator[tuple]:
+        def open_part(n: int) -> str:
+            return os.path.join(out_dir, f"part-{pid:05d}-{job}-c{n:03d}.snappy.parquet")
+
+        for path, rows, total in write_parts(
+            batches, schema, open_part, MAX_RECORDS_PER_FILE, empty_part, "Size"
+        ):
+            yield path, rows, total, os.path.getsize(path)
+
+    def write_task(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        derived = (manifest_batch(c, bucket, prefix, delimiter) for c in pages(batches))
+        for row in parts(TaskContext.get().partitionId(), derived):
+            yield pa.RecordBatch.from_arrays(
+                [[v] for v in row], schema=_ARROW_PART_SUMMARY
+            )
+
+    if os.path.isdir(out_dir):
+        shutil.rmtree(out_dir)
+    elif os.path.lexists(out_dir):
+        os.remove(out_dir)
+    os.makedirs(out_dir)
+    table = _shard_table(spark, shards, direct) if shards else None
+    try:
+        if table is not None:
+            written = table.mapInArrow(write_task, _PART_SUMMARY)
+            if observation is not None:
+                written = _observed(written, observation)
+            summaries = [tuple(r) for r in written.collect()]
+        else:
+            if progress is not None:
+                progress.accumulator.add(len(direct))
+            summaries = list(parts(0, [manifest_batch(direct, bucket, prefix, delimiter)]))
+        if not summaries:
+            summaries = list(parts(0, [], empty_part=True))
+        if table is None and observation is not None:
+            _observed(local_relation(spark, summaries, _PART_SUMMARY), observation).collect()
+        open(os.path.join(out_dir, "_SUCCESS"), "wb").close()
+    except BaseException:
+        shutil.rmtree(out_dir, ignore_errors=True)
+        raise
+    return derive_manifest(_listing(spark, table, direct, pages), bucket, prefix, delimiter)
 
 
 def manifest_from_s3(
@@ -533,13 +711,27 @@ def manifest_from_s3(
     dest_client_factory: Callable[[], object] | None = None,
 ) -> DataFrame:
     """The reference CLI's whole job (main.rs:120-292): list → derive
-    manifest → optionally write parquet.  S3 output prefers the
-    s3a:// filesystem (streaming multipart upload — fixes the
-    whole-file-in-RAM defect at main.rs:327-329); when hadoop-aws is
-    not on the JVM classpath it falls back to the executor-side boto3
-    multipart sink (:mod:`s3_manifest_spark.sources.s3_upload`), which
-    is the same per-task streaming shape without the jar — so
-    ``output="s3://…"`` works on every install.
+    manifest → optionally write parquet.  Returns the derived manifest
+    DataFrame.  Three paths write it, picked by what the call already
+    shows (no option picks one):
+
+    - **A local directory** (no scheme while Hadoop's default
+      filesystem is local, or ``file:``), the session's Parquet codec
+      snappy, and ``single_object`` False: the manifest is written
+      straight from the listing's pages by the one Arrow part writer
+      (:func:`_manifest_to_dir`).  Each listing task writes its own
+      parts, and a listing with no shard (a short refresh) is written
+      by the driver with no Spark plan.
+    - **S3 output**: the s3a:// filesystem when hadoop-aws is on the
+      JVM classpath (streaming multipart upload — fixes the
+      whole-file-in-RAM defect at main.rs:327-329), else the
+      executor-side boto3 multipart sink
+      (:mod:`s3_manifest_spark.sources.s3_upload`), the same per-task
+      streaming shape without the jar, whose tasks write through the
+      same part writer — so ``output="s3://…"`` works on every install.
+    - **Anything else** (``hdfs://``, another codec, single-object
+      mode): ``derive_manifest`` then
+      :func:`~s3_manifest_spark.manifest.core.write_manifest`.
 
     ``dest_client_factory`` binds the DESTINATION endpoint/credentials
     (the reference's separate dest client, C1, main.rs:294-319).
@@ -556,13 +748,23 @@ def manifest_from_s3(
     Pass a ``pyspark.sql.Observation`` to collect the reference's run
     stats (object count / total bytes, main.rs:231, 284-289) from the
     SAME job that writes the output — a follow-up ``count()`` would
-    re-list the entire bucket.
+    re-list the entire bucket.  With no ``output`` it is filled by the
+    first action on the returned frame.
     """
     from pyspark.sql import functions as F
 
     from s3_manifest_spark.manifest.core import derive_manifest, write_manifest
 
     bucket, prefix = parse_s3_uri(source_uri)
+    out_bucket, path = parse_output_location(output) if output is not None else (None, None)
+    if path is not None and not out_bucket and not single_object:
+        out_dir = _part_dir(spark, path)
+        if out_dir is not None:
+            return _manifest_to_dir(
+                spark, out_dir, bucket, prefix, delimiter,
+                client_factory or make_boto3_client_factory(), target_shards,
+                observation, progress, start_after,
+            )
     listing = list_objects_df(
         spark, bucket, prefix, client_factory, delimiter, target_shards,
         progress=progress, start_after=start_after,
@@ -575,7 +777,6 @@ def manifest_from_s3(
             F.coalesce(F.sum("Size"), F.lit(0)).alias("total_bytes"),
         )
     if output is not None:
-        out_bucket, path = parse_output_location(output)
         if out_bucket:
             from s3_manifest_spark.sources.s3_upload import (
                 s3a_available,

@@ -13,9 +13,11 @@ This module is the jar-free wire path, built from the same Spark-first
 shape as the s3a committer: the upload is EXECUTOR-side and
 partition-parallel.  Each task
 
-1. streams its Arrow batches through a ``pyarrow.parquet.ParquetWriter``
-   into a task-local temp file (disk-bounded, never whole-partition in
-   memory),
+1. streams its Arrow batches through the manifest's one part writer
+   (``manifest.core.write_parts``: one ``pyarrow.parquet.ParquetWriter``,
+   bounded row groups) into a task-local temp file (disk-bounded, never
+   whole-partition in memory), with the schema and footer keys Spark's
+   writer writes, timestamps at milliseconds,
 2. multipart-uploads that file via boto3's managed transfer (8 MiB
    chunks streamed from disk — memory stays O(chunk), unlike
    main.rs:327-329), and
@@ -39,6 +41,8 @@ import uuid
 from typing import Callable
 
 from pyspark.sql import DataFrame
+
+from s3_manifest_spark.manifest.core import part_schema, write_parts
 
 #: boto3 managed-transfer chunking: multipart from 8 MiB, 8 MiB parts —
 #: small enough that executor memory per concurrent upload stays tiny,
@@ -81,12 +85,10 @@ def upload_parquet_boto3(
     factory = client_factory or _default_factory
     run_id = uuid.uuid4().hex[:12]
     prefix = key.rstrip("/")
-    # Arrow schema computed on the driver so an EMPTY frame still
-    # writes a valid zero-row parquet in single-object mode (the
-    # reference writes the file unconditionally, main.rs:156-165).
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    driver_schema = to_arrow_schema(df.schema)
+    # Computed on the driver, so an EMPTY frame still writes a valid
+    # zero-row parquet in single-object mode (the reference writes the
+    # file unconditionally, main.rs:156-165).
+    schema = part_schema(df.sparkSession, df.schema)
 
     if single_object:
         df = df.coalesce(1)
@@ -96,51 +98,34 @@ def upload_parquet_boto3(
         import tempfile
 
         import pyarrow as pa
-        import pyarrow.parquet as pq
+        from boto3.s3.transfer import TransferConfig
         from pyspark import TaskContext
 
-        writer = None
-        n_rows = 0
-        fd, tmp = tempfile.mkstemp(suffix=".parquet")
-        os.close(fd)
-        try:
-            for batch in batches:
-                if writer is None:
-                    writer = pq.ParquetWriter(tmp, batch.schema)
-                writer.write_batch(batch)
-                n_rows += batch.num_rows
-            if writer is None:
-                if not single_object:
-                    return  # empty partition -> no object (s3a parity)
-                # empty frame, single-object mode: zero-row parquet
-                writer = pq.ParquetWriter(tmp, driver_schema)
-            writer.close()
-            writer = None
-            if single_object:
-                obj_key = prefix
-            else:
-                pid = TaskContext.get().partitionId()
-                obj_key = f"{prefix}/part-{pid:05d}-{run_id}.parquet"
-            size = os.path.getsize(tmp)
-            client = factory()
-            from boto3.s3.transfer import TransferConfig
-
-            client.upload_file(
-                tmp,
-                bucket,
-                obj_key,
-                Config=TransferConfig(
-                    multipart_threshold=_CHUNK_BYTES,
-                    multipart_chunksize=_CHUNK_BYTES,
-                ),
-            )
-            yield pa.RecordBatch.from_pydict(
-                {"key": [obj_key], "rows": [n_rows], "bytes": [size]}
-            )
-        finally:
-            if writer is not None:
-                writer.close()
-            os.unlink(tmp)
+        with tempfile.TemporaryDirectory() as tmp:
+            # An empty partition writes no object (s3a parity), except
+            # for the one object of single-object mode.
+            for path, rows, _ in write_parts(
+                batches, schema, lambda n: os.path.join(tmp, "part.parquet"),
+                empty_part=single_object,
+            ):
+                if single_object:
+                    obj_key = prefix
+                else:
+                    pid = TaskContext.get().partitionId()
+                    obj_key = f"{prefix}/part-{pid:05d}-{run_id}.parquet"
+                size = os.path.getsize(path)
+                factory().upload_file(
+                    path,
+                    bucket,
+                    obj_key,
+                    Config=TransferConfig(
+                        multipart_threshold=_CHUNK_BYTES,
+                        multipart_chunksize=_CHUNK_BYTES,
+                    ),
+                )
+                yield pa.RecordBatch.from_pydict(
+                    {"key": [obj_key], "rows": [rows], "bytes": [size]}
+                )
 
     if overwrite and not single_object:
         _delete_prefix(factory(), bucket, prefix + "/")

@@ -12,9 +12,11 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pyarrow as pa
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import Row
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from s3_manifest_spark.manifest.core import derive_manifest
@@ -70,12 +72,111 @@ def test_manifest_matches_reference_model(spark, listing, delim):
         [Row(key=k, size=s, last_modified=m) for k, s, m in listing],
         schema=LISTING_SCHEMA,
     )
+    # Timestamps are compared as epoch milliseconds: ``collect`` turns
+    # a TimestampType into a naive datetime in the Python process's own
+    # time zone, which the workflow also sets to UTC+12:45.
     got = [
-        (r.Bucket, r.Key, r.FileName, r.Size, r.LastModified)
-        for r in derive_manifest(df, bucket="b", delimiter=delim).collect()
+        (r.Bucket, r.Key, r.FileName, r.Size, r.ms)
+        for r in derive_manifest(df, bucket="b", delimiter=delim)
+        .withColumn("ms", F.unix_millis("LastModified"))
+        .collect()
     ]
-    want = [model_row(k, s, m, "b", delim) for k, s, m in listing]
+    ms = dt.timedelta(milliseconds=1)
+    want = [
+        (*row[:4], (row[4] - dt.datetime(1970, 1, 1)) // ms)
+        for row in (model_row(k, s, m, "b", delim) for k, s, m in listing)
+    ]
     assert sorted(got) == sorted(want)
+
+
+_UTC = dt.timezone.utc
+#: Zones of whole minutes (Chatham is UTC+12:45), and None for naive.
+_ZONES = [None, _UTC] + [
+    dt.timezone(dt.timedelta(minutes=m)) for m in (330, -480, 765, -210)
+]
+_TIMES = st.datetimes(
+    min_value=dt.datetime(1600, 1, 1), max_value=dt.datetime(2200, 1, 1),
+    timezones=st.sampled_from(_ZONES),
+)
+#: RFC 3339 text: whole seconds plus 0-9 fraction digits, then ``Z`` or
+#: an offset; or no offset (UTC).
+_TEXTS = st.builds(
+    lambda d, frac, zone: d.strftime("%Y-%m-%dT%H:%M:%S") + frac + zone,
+    _TIMES.map(lambda d: d.replace(tzinfo=None)),
+    st.sampled_from(["", ".5", ".123", ".999500", ".1234567", ".000999999"]),
+    st.sampled_from(["", "Z", "+00:00", "+05:30", "-08:00", "+12:45", "-0330"]),
+)
+_MTIMES = st.one_of(
+    st.none(),
+    st.just("not-a-date"),
+    _TIMES,
+    # around the epoch, with sub-millisecond parts: floor, not truncation
+    st.integers(-10_000_000, 10_000_000).map(
+        lambda us: dt.datetime(1970, 1, 1, tzinfo=_UTC) + dt.timedelta(microseconds=us)
+    ),
+    _TEXTS,
+)
+_DELIMITERS = ["/", ".", "|", "::", "$", "日", "a.*", "(", "//", ""]
+
+
+@st.composite
+def _listings(draw):
+    """One generated ListObjectsV2 listing: its ``Contents``, delimiter
+    and prefix.  Keys are segments joined by the delimiter, sometimes
+    ending in it, or None; the prefix fails some keys."""
+    delim = draw(st.sampled_from(_DELIMITERS))
+    segment = st.one_of(
+        st.sampled_from(["a", "dir", "日本", "x.y", "", "$", "((", "a.b"]),
+        st.text(
+            alphabet=st.characters(blacklist_categories=("Cs",), max_codepoint=0x2FFF),
+            max_size=6,
+        ),
+    )
+    key = st.one_of(
+        st.none(),
+        st.builds(
+            lambda parts, end: delim.join(parts) + (delim if end else ""),
+            st.lists(segment, max_size=4),
+            st.booleans(),
+        ),
+    )
+    entry = st.fixed_dictionaries(
+        {"Key": key, "Size": sizes, "LastModified": _MTIMES}
+    )
+    contents = draw(st.lists(entry, min_size=1, max_size=40))
+    prefix = draw(st.sampled_from(["", "a", "dir" + delim, "日"]))
+    return contents, delim, prefix
+
+
+@settings(
+    max_examples=40,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(listing=_listings())
+def test_manifest_batch_matches_derive_manifest(spark, listing):
+    """``manifest_batch`` (the Arrow derivation the listing tasks and
+    the driver write from) equals ``derive_manifest`` over the same
+    ``Contents``, listed as the connector lists them, row for row."""
+    from s3_manifest_spark.manifest.core import manifest_batch
+    from s3_manifest_spark.sources.s3_listing import LISTING_SCHEMA as LISTING
+    from s3_manifest_spark.sources.s3_listing import _page_batch
+    from s3_manifest_spark.sources.tables import local_relation
+
+    contents, delim, prefix = listing
+    listed = local_relation(
+        spark, pa.Table.from_batches([_page_batch(contents)]), LISTING
+    )
+    want = [
+        tuple(r)
+        for r in derive_manifest(listed, "b", prefix, delim)
+        .select("Bucket", "Key", "FileName", "Size", F.unix_millis("LastModified"))
+        .collect()
+    ]
+    batch = manifest_batch(contents, "b", prefix, delim)
+    cols = [batch.column(c).to_pylist() for c in ("Bucket", "Key", "FileName", "Size")]
+    got = list(zip(*cols, batch.column("LastModified").cast(pa.int64()).to_pylist()))
+    assert got == want
 
 
 def test_packed_key_injective_property(spark):

@@ -1,7 +1,9 @@
-"""``write_manifest``'s two writers: a manifest whose rows already sit on
-the driver (an Arrow local relation, as a short refresh lists it) is
-written by the driver with no Spark job; every other frame goes through
-Spark's writer.  Both must leave the same files behind."""
+"""The manifest's writers.  ``write_manifest``: a manifest whose rows
+already sit on the driver (an Arrow local relation) is written by the
+driver with no Spark job; every other frame goes through Spark's
+writer.  ``manifest_from_s3`` into a local directory: the listing tasks
+write their own parts, or the driver when there is no shard.  All of
+them must leave the same files behind."""
 
 from __future__ import annotations
 
@@ -165,3 +167,239 @@ def test_other_parquet_codec_keeps_sparks_writer(spark, tmp_path):
     parts = [n for n in os.listdir(out) if n.startswith("part-")]
     assert parts and all(n.endswith(".zstd.parquet") for n in parts)
     assert pq.read_table(out).num_rows == len(ROWS)
+
+
+# -- manifest_from_s3 into a local directory: the listing writes its own parts
+
+
+import datetime as dt  # noqa: E402
+import functools  # noqa: E402
+import io  # noqa: E402
+
+from s3_manifest_spark.manifest import core  # noqa: E402
+from s3_manifest_spark.manifest.core import write_parts  # noqa: E402
+from s3_manifest_spark.manifest.progress import ListingProgress  # noqa: E402
+from s3_manifest_spark.sources.fake_s3 import (  # noqa: E402
+    FakeS3Client,
+    custom_client_factory,
+    fake_client_factory,
+    synth_bucket,
+)
+from s3_manifest_spark.sources.s3_listing import manifest_from_s3  # noqa: E402
+
+BUCKET = synth_bucket()["fake-bucket"]  # 2,520 keys in 91 shards and 20 root objects
+REFRESH_MARKER = sorted(BUCKET)[-40]  # a 39-key tail: one probe page, no shard
+
+
+def _executions(spark) -> dict:
+    """Physical plan of every SQL execution so far, by execution id."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    ex = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return {
+        ex.apply(i).executionId(): ex.apply(i).physicalPlanDescription()
+        for i in range(ex.size())
+    }
+
+
+def _parts(out) -> list[str]:
+    return sorted(os.path.join(out, n) for n in os.listdir(out) if n.startswith("part-"))
+
+
+def _build(spark, out, **kw):
+    kw.setdefault("client_factory", fake_client_factory)
+    return manifest_from_s3(spark, "s3://fake-bucket/", output=out, **kw)
+
+
+def test_sharded_build_is_one_job_with_no_spark_write(spark, tmp_path):
+    """A build over shards runs one Spark job, the listing's, and no
+    Spark file write; a refresh whose tail fits the probe page runs
+    none.  Both write every key once and ``_SUCCESS``."""
+    for out, kw, n_jobs, keys in (
+        (str(tmp_path / "build"), {}, 1, set(BUCKET)),
+        (str(tmp_path / "refresh"), {"start_after": REFRESH_MARKER}, 0,
+         {k for k in BUCKET if k > REFRESH_MARKER}),
+    ):
+        before = _executions(spark)
+        assert len(_jobs(spark, lambda: _build(spark, out, **kw))) == n_jobs
+        plans = [p for i, p in _executions(spark).items() if i not in before]
+        assert not any("InsertIntoHadoopFsRelationCommand" in p for p in plans)
+        got = pq.read_table(out).column("Key").to_pylist()
+        assert len(got) == len(keys) and set(got) == keys
+        assert os.path.exists(os.path.join(out, "_SUCCESS"))
+
+
+def test_listing_parts_read_back_like_sparks_writer(spark, tmp_path):
+    """The parts the listing tasks write read back through
+    ``spark.read.parquet`` and ``pq.read_table`` with the rows, schema
+    and footer keys of Spark's writer over the same manifest, and each
+    part is named for its task and the run."""
+    out, ref = str(tmp_path / "m"), str(tmp_path / "ref")
+    returned = _build(spark, out)
+    returned.write.parquet(ref)
+    assert spark.read.parquet(out).schema == spark.read.parquet(ref).schema
+    assert sorted(spark.read.parquet(out).collect()) == sorted(
+        spark.read.parquet(ref).collect()
+    )
+    assert _sorted_rows(pq.read_table(out)) == _sorted_rows(pq.read_table(ref))
+    ref_meta = pq.read_metadata(_parts(ref)[0]).metadata
+    parts = _parts(out)
+    assert 1 < len(parts) <= spark.sparkContext.defaultParallelism
+    for part in parts:
+        schema = pq.read_schema(part)
+        assert [schema.field(n).type for n in schema.names] == [
+            pa.string(), pa.string(), pa.string(), pa.int64(), pa.timestamp("ms", tz="UTC")
+        ]
+        assert not any(f.nullable for f in schema)
+        for key in (b"org.apache.spark.sql.parquet.row.metadata", b"org.apache.spark.version"):
+            assert schema.metadata[key] == ref_meta[key]
+        name = os.path.basename(part)
+        assert name.startswith("part-0") and name.endswith("-c000.snappy.parquet")
+    assert len({os.path.basename(p)[11:47] for p in parts}) == 1  # one run's uuid
+
+
+def test_listing_task_starts_a_new_part_at_max_records(spark, tmp_path, monkeypatch):
+    """A task past ``MAX_RECORDS_PER_FILE`` rows goes on in its next
+    part; a rebuild into the directory leaves none of the earlier run's
+    parts behind."""
+    monkeypatch.setattr(core, "MAX_RECORDS_PER_FILE", 100)
+    out = str(tmp_path / "m")
+    _build(spark, out)
+    first = _parts(out)
+    rows = [pq.read_metadata(p).num_rows for p in first]
+    assert sum(rows) == len(BUCKET) and max(rows) == 100
+    assert any(p.endswith("-c001.snappy.parquet") for p in first)
+    monkeypatch.undo()
+    _build(spark, out)
+    again = _parts(out)
+    assert len(again) < len(first) and not set(again) & set(first)
+    assert pq.read_table(out).num_rows == len(BUCKET)
+
+
+def test_failed_listing_task_leaves_no_success_marker(spark, tmp_path):
+    """A client that fails in the middle of a shard (its second page)
+    makes the build raise, and no ``_SUCCESS`` is left."""
+
+    class FailsMidShard(FakeS3Client):
+        def list_objects_v2(self, **kw):
+            if "ContinuationToken" in kw and "Delimiter" not in kw:
+                err = RuntimeError("AccessDenied mid-shard")
+                err.response = {  # fatal: not retried
+                    "Error": {"Code": "AccessDenied"},
+                    "ResponseMetadata": {"HTTPStatusCode": 403},
+                }
+                raise err
+            return super().list_objects_v2(**kw)
+
+    t = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
+    bucket = {"deep": {f"a/b/c/d-{i:05d}": (i, t) for i in range(1500)}}
+    out = str(tmp_path / "m")
+    with pytest.raises(Exception, match="AccessDenied mid-shard"):
+        manifest_from_s3(
+            spark, "s3://deep/", output=out,
+            client_factory=functools.partial(FailsMidShard, bucket),
+        )
+    assert not os.path.exists(os.path.join(out, "_SUCCESS"))
+
+
+def test_observation_and_progress_on_both_paths(spark, tmp_path):
+    """An Observation gets the written object count and bytes, and
+    ``ListingProgress`` the listed count, on the task path and on the
+    driver path."""
+    from pyspark.sql import Observation
+
+    for name, kw in (("build", {}), ("refresh", {"start_after": REFRESH_MARKER})):
+        out = str(tmp_path / name)
+        obs = Observation(name)
+        with ListingProgress(spark, stream=io.StringIO(), interval=60) as prog:
+            _build(spark, out, observation=obs, progress=prog, **kw)
+        back = pq.read_table(out)
+        want = {k: s for k, (s, _) in BUCKET.items() if k > kw.get("start_after", "")}
+        assert back.num_rows == len(want) == prog.count
+        assert obs.get == {"objects": len(want), "total_bytes": sum(want.values())}
+
+
+def test_empty_listing_writes_one_zero_row_part(spark, tmp_path):
+    """A listing of no rows writes one 0-row part with the manifest's
+    schema, on the driver path (an empty tail) and on the task path
+    (shards whose keys are gone by the time the tasks list them)."""
+    from pyspark.sql import Observation
+
+    class EmptiedAfterDiscovery(FakeS3Client):
+        def list_objects_v2(self, **kw):
+            if kw.get("Prefix") and "Delimiter" not in kw:
+                return {"IsTruncated": False, "Contents": [], "KeyCount": 0}
+            return super().list_objects_v2(**kw)
+
+    t = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
+    deep = {"fake-bucket": {f"a/b/c/d-{i:05d}": (i, t) for i in range(1500)}}
+    for name, kw, n_jobs in (
+        ("driver", {"start_after": max(BUCKET)}, 1),  # the Observation's collect
+        ("task", {"client_factory": functools.partial(EmptiedAfterDiscovery, deep)}, 1),
+    ):
+        out = str(tmp_path / name)
+        obs = Observation(name)
+        assert len(_jobs(spark, lambda: _build(spark, out, observation=obs, **kw))) == n_jobs
+        parts = _parts(out)
+        assert len(parts) == 1 and pq.read_metadata(parts[0]).num_rows == 0
+        assert pq.read_schema(parts[0]).names == [f.name for f in core.MANIFEST_SCHEMA]
+        assert obs.get == {"objects": 0, "total_bytes": 0}
+        assert os.path.exists(os.path.join(out, "_SUCCESS"))
+
+
+def test_listing_tasks_read_naive_times_as_utc(spark, tmp_path):
+    """``LastModified`` is computed in the listing tasks: a naive
+    datetime is UTC and sub-millisecond parts are floored, pre-epoch
+    too, whatever the worker's own time zone."""
+    naive = [
+        dt.datetime(1969, 12, 31, 23, 59, 59, 999_500),
+        dt.datetime(2024, 10, 22, 12, 34, 56, 789_999),
+        dt.datetime(1901, 2, 3, 4, 5, 6, 1),
+    ]
+    keys = {f"a/b/c/d-{i:05d}": (i, naive[i % 3]) for i in range(1500)}
+    out = str(tmp_path / "m")
+    build = functools.partial(
+        manifest_from_s3, spark, "s3://deep/", output=out,
+        client_factory=custom_client_factory({"deep": keys}),
+    )
+    assert len(_jobs(spark, build)) == 1  # the task path: one shard, a/b/c/
+    back = pq.read_table(out)
+    got = dict(zip(back.column("Key").to_pylist(),
+                   back.column("LastModified").cast(pa.int64()).to_pylist()))
+    epoch = dt.datetime(1970, 1, 1)
+    assert got == {k: (t - epoch) // dt.timedelta(milliseconds=1) for k, (_, t) in keys.items()}
+
+
+def test_part_writer_caps_row_groups_and_parts(tmp_path, monkeypatch):
+    """``write_parts`` holds at most one row group: row groups of
+    ``ROW_GROUP_ROWS`` rows, a new part every ``max_records`` rows, a
+    0-row part only when asked, and a finer timestamp floored to
+    milliseconds."""
+    monkeypatch.setattr(core, "ROW_GROUP_ROWS", 40)
+    schema = pa.schema([pa.field("Size", pa.int64(), False),
+                        pa.field("t", pa.timestamp("ms", tz="UTC"))])
+    us = [-1_500, -1, 0, 1_999, None] * 50  # 250 rows in batches of 25
+    batches = [
+        pa.RecordBatch.from_arrays(
+            [pa.array(range(i, i + 25), pa.int64()),
+             pa.array(us[i:i + 25], pa.timestamp("us", tz="Pacific/Chatham"))],
+            ["Size", "t"],
+        )
+        for i in range(0, 250, 25)
+    ]
+    parts = list(write_parts(
+        batches, schema, lambda n: str(tmp_path / f"p{n}.parquet"), max_records=100,
+        tally="Size",
+    ))
+    assert [(os.path.basename(p), rows, total) for p, rows, total in parts] == [
+        ("p0.parquet", 100, sum(range(100))),
+        ("p1.parquet", 100, sum(range(100, 200))),
+        ("p2.parquet", 50, sum(range(200, 250))),
+    ]
+    metas = [pq.read_metadata(p) for p, _, _ in parts]
+    groups = [[m.row_group(g).num_rows for g in range(m.num_row_groups)] for m in metas]
+    assert groups == [[40, 40, 20], [40, 40, 20], [40, 10]]
+    t = pq.read_table(str(tmp_path)).column("t").cast(pa.int64()).to_pylist()
+    assert t == [None if v is None else v // 1000 for v in us]
+    assert list(write_parts([], schema, lambda n: str(tmp_path / "none"))) == []
+    ((empty, rows, _),) = write_parts([], schema, lambda n: str(tmp_path / "e"), empty_part=True)
+    assert rows == 0 and pq.read_table(empty).num_rows == 0

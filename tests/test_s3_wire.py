@@ -283,6 +283,46 @@ def test_wire_k2_directory_mode_overwrite_and_success_marker(
     assert got == _expected_keys()
 
 
+def test_wire_k2_parts_have_the_manifest_schema(
+    spark, factory, dest_server, dest_factory, tmp_path
+):
+    """Every object the boto3 sink uploads, in directory and in
+    single-object mode, is the reference's schema as both local
+    writers write it: five non-null columns, ``LastModified``
+    ``timestamp[ms, UTC]``, and Spark's footer keys."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    dest = dest_server["client"]
+    keys = []
+    for out_key, single in (("manifests/schema", False), ("manifests/schema.parquet", True)):
+        manifest_from_s3(
+            spark,
+            f"s3://{BUCKET}/data/",
+            output=f"s3://{DEST_BUCKET}/{out_key}",
+            client_factory=factory,
+            single_object=single,
+            dest_client_factory=dest_factory,
+        )
+        listed = dest.list_objects_v2(Bucket=DEST_BUCKET, Prefix=out_key)
+        keys += [
+            o["Key"] for o in listed["Contents"]
+            if o["Key"].endswith(".parquet") and (single or "/part-" in o["Key"])
+        ]
+    assert len(keys) >= 2, keys
+    for i, k in enumerate(keys):
+        path = tmp_path / f"part{i}.parquet"
+        dest.download_file(DEST_BUCKET, k, str(path))
+        schema = pq.read_schema(path)
+        assert schema.names == ["Bucket", "Key", "FileName", "Size", "LastModified"], k
+        assert not any(f.nullable for f in schema), k
+        assert [schema.field(n).type for n in schema.names] == [
+            pa.string(), pa.string(), pa.string(), pa.int64(),
+            pa.timestamp("ms", tz="UTC"),
+        ], k
+        assert b"org.apache.spark.sql.parquet.row.metadata" in schema.metadata, k
+
+
 def test_wire_k2_empty_manifest_still_writes_object(
     spark, factory, dest_server, dest_factory, tmp_path
 ):
