@@ -53,6 +53,7 @@ Dataflow::
                                                  #   writes _SUCCESS
             no shard: the driver derives and     # no Spark plan for the write
                       writes the direct objects
+            → returns the parts read back        # no job; lists nothing again
         → any other output:
             derive_manifest(...)                 # manifest/core.py
             → write_manifest(...)                # hdfs://, s3a://, another
@@ -72,6 +73,7 @@ from __future__ import annotations
 import os
 import queue
 import random
+import re
 import shutil
 import threading
 import time
@@ -493,17 +495,6 @@ def _task_pages(
     return pages
 
 
-def _listing(spark: SparkSession, table: DataFrame | None, direct: list[dict], pages) -> DataFrame:
-    """The listing DataFrame of one discovery: listing tasks over the
-    shard ``table``, or with no shard table the direct objects as an
-    Arrow local relation, which runs no Python task."""
-    if table is None:
-        return local_relation(
-            spark, pa.Table.from_batches([_page_batch(direct)]), LISTING_SCHEMA
-        )
-    return table.mapInArrow(lambda b: map(_page_batch, pages(b)), LISTING_SCHEMA)
-
-
 def list_objects_df(
     spark: SparkSession,
     bucket: str,
@@ -560,11 +551,14 @@ def list_objects_df(
         client_factory(), bucket, prefix, delimiter, target_shards, start_after,
         page_size,
     )
-    if not shards and progress is not None:
-        progress.accumulator.add(len(direct))
-    table = _shard_table(spark, shards, direct) if shards else None
+    if not shards:
+        if progress is not None:
+            progress.accumulator.add(len(direct))
+        return local_relation(spark, pa.table(_page_batch(direct)), LISTING_SCHEMA)
     pages = _task_pages(client_factory, bucket, page_size, start_after, progress)
-    return _listing(spark, table, direct, pages)
+    return _shard_table(spark, shards, direct).mapInArrow(
+        lambda b: map(_page_batch, pages(b)), LISTING_SCHEMA
+    )
 
 
 #: One row per manifest part written by a listing task or the driver.
@@ -635,13 +629,14 @@ def _manifest_to_dir(
     every task has returned, and a failed build removes the directory.
     The summary rows pass through one ``observe`` when an
     ``observation`` is given: in the listing job, or on the driver path
-    in a local relation of the driver's summary rows."""
+    in a local relation of the driver's summary rows.  Returns the
+    written parts read with ``MANIFEST_SCHEMA``: no inference, no job,
+    and acting on the frame reads the parts, never the bucket."""
     from pyspark import TaskContext
 
     from s3_manifest_spark.manifest.core import (
         MANIFEST_SCHEMA,
         MAX_RECORDS_PER_FILE,
-        derive_manifest,
         manifest_batch,
         part_schema,
         write_parts,
@@ -675,10 +670,9 @@ def _manifest_to_dir(
     elif os.path.lexists(out_dir):
         os.remove(out_dir)
     os.makedirs(out_dir)
-    table = _shard_table(spark, shards, direct) if shards else None
     try:
-        if table is not None:
-            written = table.mapInArrow(write_task, _PART_SUMMARY)
+        if shards:
+            written = _shard_table(spark, shards, direct).mapInArrow(write_task, _PART_SUMMARY)
             if observation is not None:
                 written = _observed(written, observation)
             summaries = [tuple(r) for r in written.collect()]
@@ -688,13 +682,15 @@ def _manifest_to_dir(
             summaries = list(parts(0, [manifest_batch(direct, bucket, prefix, delimiter)]))
         if not summaries:
             summaries = list(parts(0, [], empty_part=True))
-        if table is None and observation is not None:
+        if not shards and observation is not None:
             _observed(local_relation(spark, summaries, _PART_SUMMARY), observation).collect()
         open(os.path.join(out_dir, "_SUCCESS"), "wb").close()
     except BaseException:
         shutil.rmtree(out_dir, ignore_errors=True)
         raise
-    return derive_manifest(_listing(spark, table, direct, pages), bucket, prefix, delimiter)
+    # Spark globs a read path: escape the directory's glob characters.
+    literal = re.sub(r"([][{}*?\\])", r"\\\1", out_dir)
+    return spark.read.schema(MANIFEST_SCHEMA).parquet(f"file://{literal}")
 
 
 def manifest_from_s3(
@@ -721,7 +717,10 @@ def manifest_from_s3(
       straight from the listing's pages by the one Arrow part writer
       (:func:`_manifest_to_dir`).  Each listing task writes its own
       parts, and a listing with no shard (a short refresh) is written
-      by the driver with no Spark plan.
+      by the driver with no Spark plan.  The returned frame reads the
+      written parts, so acting on it lists nothing; its columns are
+      nullable, as Spark's file source makes them.  A later build into
+      the same directory replaces the files it reads.
     - **S3 output**: the s3a:// filesystem when hadoop-aws is on the
       JVM classpath (streaming multipart upload — fixes the
       whole-file-in-RAM defect at main.rs:327-329), else the

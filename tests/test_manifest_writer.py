@@ -11,6 +11,7 @@ import datetime as dt
 import os
 import time
 import uuid
+from urllib.parse import unquote, urlparse
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -185,7 +186,10 @@ from s3_manifest_spark.sources.fake_s3 import (  # noqa: E402
     fake_client_factory,
     synth_bucket,
 )
-from s3_manifest_spark.sources.s3_listing import manifest_from_s3  # noqa: E402
+from s3_manifest_spark.sources.s3_listing import (  # noqa: E402
+    list_objects_df,
+    manifest_from_s3,
+)
 
 BUCKET = synth_bucket()["fake-bucket"]  # 2,520 keys in 91 shards and 20 root objects
 REFRESH_MARKER = sorted(BUCKET)[-40]  # a 39-key tail: one probe page, no shard
@@ -232,10 +236,13 @@ def test_listing_parts_read_back_like_sparks_writer(spark, tmp_path):
     """The parts the listing tasks write read back through
     ``spark.read.parquet`` and ``pq.read_table`` with the rows, schema
     and footer keys of Spark's writer over the same manifest, and each
-    part is named for its task and the run."""
+    part is named for its task and the run.  The reference is derived
+    from its own listing: the build's returned frame reads these very
+    parts, with the file source's nullable columns."""
     out, ref = str(tmp_path / "m"), str(tmp_path / "ref")
-    returned = _build(spark, out)
-    returned.write.parquet(ref)
+    _build(spark, out)
+    listing = list_objects_df(spark, "fake-bucket", client_factory=fake_client_factory)
+    derive_manifest(listing, "fake-bucket").write.parquet(ref)
     assert spark.read.parquet(out).schema == spark.read.parquet(ref).schema
     assert sorted(spark.read.parquet(out).collect()) == sorted(
         spark.read.parquet(ref).collect()
@@ -255,6 +262,25 @@ def test_listing_parts_read_back_like_sparks_writer(spark, tmp_path):
         name = os.path.basename(part)
         assert name.startswith("part-0") and name.endswith("-c000.snappy.parquet")
     assert len({os.path.basename(p)[11:47] for p in parts}) == 1  # one run's uuid
+
+
+@pytest.mark.parametrize(
+    "name, kw", [("m", {}), ("m[1]{a,b}*?", {"start_after": REFRESH_MARKER})],
+    ids=["build", "refresh"],
+)
+def test_returned_frame_reads_the_written_parts(spark, tmp_path, name, kw):
+    """On the task path and the driver path, the returned frame reads
+    exactly the parts just written, with their rows, and its plan holds
+    no Python or local relation: acting on it lists nothing.  Glob
+    characters in the directory's name are read literally."""
+    out = str(tmp_path / name)
+    returned = _build(spark, out, **kw)
+    assert sorted(unquote(urlparse(f).path) for f in returned.inputFiles()) == _parts(out)
+    assert _sorted_rows(returned.toArrow()) == _sorted_rows(pq.read_table(out))
+    plans = returned._jdf.queryExecution().toString()  # every stage, physical too
+    assert not any(
+        n in plans for n in ("MapInArrow", "PythonUDF", "LocalRelation", "LocalTableScan")
+    )
 
 
 def test_listing_task_starts_a_new_part_at_max_records(spark, tmp_path, monkeypatch):
