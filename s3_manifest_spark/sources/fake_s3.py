@@ -17,25 +17,7 @@ import datetime as dt
 import functools
 from bisect import bisect_left, bisect_right
 
-
-def _succ(prefix: str) -> str | None:
-    """Smallest string strictly greater than EVERY string with this
-    prefix — the exclusive upper bound of the prefix's key range.
-
-    Increment the rightmost code point that is below U+10FFFF and
-    truncate after it (skipping into the surrogate gap is avoided for
-    hygiene, though keys here are only compared, never encoded).  A
-    ``prefix + "￿"`` sentinel is NOT a valid bound: keys with
-    astral-plane code points (≥ U+10000) after the prefix sort above
-    it, which previously made the delimiter group-skip loop forever
-    and the ``hi`` bound silently drop astral keys.  Returns None when
-    no finite bound exists (all code points are U+10FFFF)."""
-    for j in range(len(prefix) - 1, -1, -1):
-        c = ord(prefix[j])
-        if c < 0x10FFFF:
-            nxt = 0xE000 if c == 0xD7FF else c + 1
-            return prefix[:j] + chr(nxt)
-    return None
+from s3_manifest_spark.sources.s3_listing import prefix_end
 
 
 class NoSuchBucket(Exception):
@@ -77,7 +59,7 @@ class FakeS3Client:
         if start_after:
             lo = max(lo, bisect_right(keys, start_after))
         if prefix:
-            end = _succ(prefix)
+            end = prefix_end(prefix)
             hi = bisect_left(keys, end, lo) if end is not None else len(keys)
         else:
             hi = len(keys)
@@ -101,7 +83,7 @@ class FakeS3Client:
                     # Skip the whole group via the successor-prefix
                     # bound; max(·, i + 1) guarantees progress even if
                     # a bound ever degenerates.
-                    end = _succ(cp)
+                    end = prefix_end(cp)
                     skip = bisect_left(keys, end, i, hi) if end is not None else hi
                     i = max(skip, i + 1)
                     continue

@@ -3,13 +3,17 @@ C1/C2 — the reference's main.rs:86-118, 187-257, 294-319).
 
 The reference lists serially: one tokio task, 1000 keys per round trip
 (main.rs:187-257) — its throughput ceiling is ~page_size/RTT.  Here the
-keyspace is split into shards (delimiter-discovered common prefixes)
-and the shards are paged concurrently: at most ``defaultParallelism``
-Spark tasks, each paging its slice of the shards on a small thread
-pool over one client, so listing throughput scales with requests in
-flight instead of being pinned to one connection — and a task's fixed
-Python cost is paid once per slice, not once per shard (SURVEY.md §4,
-"serial listing" anti-pattern row).  The shard table is an Arrow local
+keyspace is split into shards, key ranges ``(prefix, after, upto)``
+(delimiter-discovered common prefixes, and the rest of a prefix whose
+delimiter page was truncated), and the shards are paged concurrently:
+at most ``defaultParallelism`` Spark tasks, each paging its slice of
+the shards on a small thread pool over one client, so listing
+throughput scales with requests in flight instead of being pinned to
+one connection — and a task's fixed Python cost is paid once per
+slice, not once per shard (SURVEY.md §4, "serial listing" anti-pattern
+row).  Nor is a long shard one token chain: a range whose page comes
+back truncated splits the rest at keys guessed from that page, and the
+sub-ranges page at the same time.  The shard table is an Arrow local
 relation (a ``LocalTableScan``, no Python RDD under it), so a listing
 task makes one Python pass: the paging itself.
 
@@ -22,14 +26,22 @@ Dataflow::
         └ delimiter BFS, one round trip a level  # skipped after the first level's
                                                  #   round trip when the probe
                                                  #   page is not truncated
-        → shards left to page:
+            one page per frontier prefix         # _scan; a truncated page's
+                                                 #   rest is a shard range, not
+                                                 #   paged here, unless the page
+                                                 #   holds more groups than keys
+        → shard ranges left to page:
             local_relation(shard table)          # Arrow local relation:
                                                  #   min(shards, defaultParallelism)
                                                  #   contiguous slices, no shuffle
-            → mapInArrow(_list_shards per slice) # the task's one Python pass;
+            → mapInArrow(_scan per slice)        # the task's one Python pass;
                                                  #   MAX_IN_FLIGHT requests in
                                                  #   flight; one page → one
                                                  #   Arrow batch
+                a truncated page, free slots     # the rest of its range splits
+                                                 #   at _splitters' guesses into
+                                                 #   sub-ranges ~0.9 pages wide
+                                                 #   that page at the same time
               via _paged_ahead                   # a pager thread requests the
                                                  #   next round while the task
                                                  #   writes: at most
@@ -82,6 +94,7 @@ from collections.abc import Callable, Iterable, Iterator
 from concurrent.futures import ThreadPoolExecutor
 from contextlib import closing
 from itertools import islice
+from typing import NamedTuple
 from urllib.parse import urlparse
 
 import pyarrow as pa
@@ -207,28 +220,65 @@ def _retry(fn, attempts: int = 3, base_ms: int = 100):
             time.sleep(delay)
 
 
-def _pages(client, **request) -> Iterator[dict]:
+def prefix_end(prefix: str) -> str | None:
+    """Smallest string strictly greater than EVERY string with this
+    prefix — the exclusive upper bound of the prefix's key range.
+
+    Increment the rightmost code point that is below U+10FFFF and
+    truncate after it (skipping into the surrogate gap is avoided for
+    hygiene, though keys here are only compared, never encoded).  A
+    ``prefix + "￿"`` sentinel is NOT a valid bound: keys with
+    astral-plane code points (≥ U+10000) after the prefix sort above
+    it, so a listing bounded by it would silently drop them (and skip
+    a group forever).  Returns None when no finite bound exists (all
+    code points are U+10FFFF)."""
+    for j in range(len(prefix) - 1, -1, -1):
+        c = ord(prefix[j])
+        if c < 0x10FFFF:
+            nxt = 0xE000 if c == 0xD7FF else c + 1
+            return prefix[:j] + chr(nxt)
+    return None
+
+
+class Range(NamedTuple):
+    """A shard: the keys under ``prefix`` above ``after`` and, when
+    ``upto`` is set, at or below it.  A prefix shard is ``Range(p)``."""
+
+    prefix: str
+    after: str = ""
+    upto: str | None = None
+
+
+def _pages(client, upto: str | None = None, **request) -> Iterator[dict]:
     """Every ListObjectsV2 response page of one listing, following
     continuation tokens (``StartAfter`` rides on the first request
-    only; the token already encodes the position).  A truncated page
-    must carry a new token: one with no token, or with the token it
-    was requested with, would restart or repeat the listing and
-    duplicate keys forever, so it raises instead.  Keys must strictly
-    increase across the whole listing — a page that replays or
-    reorders keys raises before it is yielded, rather than emitting
-    duplicates."""
+    only; the token already encodes the position).  With ``upto`` the
+    listing is a key range: it stops at the first key above ``upto``,
+    and the page that reaches it comes back cut there and not
+    truncated.  A truncated page must carry a new token: one with no
+    token, or with the token it was requested with, would restart or
+    repeat the listing and duplicate keys forever, so it raises
+    instead.  Keys must strictly increase from ``StartAfter`` on — a
+    page that replays or reorders keys raises before it is yielded,
+    rather than emitting duplicates."""
     kw = request
-    last = None
+    last = request.get("StartAfter")
     while True:
         resp = _retry(lambda: client.list_objects_v2(**kw))
-        for obj in resp.get("Contents", ()):
+        contents = resp.get("Contents", [])
+        for n, obj in enumerate(contents):
             key = obj["Key"]
             if last is not None and key <= last:
                 raise RuntimeError(
                     f"ListObjectsV2 {request.get('Prefix', '')!r}: key "
                     f"{key!r} does not sort after {last!r}"
                 )
+            if upto is not None and key > upto:
+                yield dict(resp, Contents=contents[:n], IsTruncated=False)
+                return
             last = key
+        if upto is not None and last is not None and last >= upto:
+            resp = dict(resp, IsTruncated=False)
         yield resp
         if not resp.get("IsTruncated"):
             return
@@ -242,43 +292,123 @@ def _pages(client, **request) -> Iterator[dict]:
         kw["ContinuationToken"] = token
 
 
-#: ListObjectsV2 requests one pager keeps in flight: discovery's driver
-#: pool and each listing task's pool.
+#: ListObjectsV2 requests one scheduler keeps in flight: discovery's
+#: driver pool and each listing task's pool.
 MAX_IN_FLIGHT = 16
 
+#: A sub-range's intended width, in pages like the one it was split from.
+SUB_RANGE_PAGES = 0.9
 
-def _rounds(
-    pagers: Iterable[tuple[str | None, Iterator[dict]]]
-) -> Iterator[tuple[str | None, dict]]:
-    """``(tag, page)`` for every page of every ``(tag, pager)``, with up
-    to :data:`MAX_IN_FLIGHT` pagers advanced concurrently on one pool.
+#: Sub-ranges a range's first split may make, its open last one
+#: included: a range of up to about 5.6 pages lists in two rounds.
+SPLIT_WAYS = 5
 
-    Each round advances every active pager by one page on a thread pool
-    and yields the round's pages in pager order before the next round
-    starts.  So at most ``MAX_IN_FLIGHT`` pages are requested and not
-    yet yielded, the output order is deterministic, a request's error
-    (or ``_pages``' own) propagates out of this generator, and closing
-    it early leaves no request running."""
-    waiting = iter(pagers)
-    active: list[tuple[str | None, Iterator[dict]]] = []
+#: Digit alphabets a splitter steps on, tried in order, each with its
+#: ``format`` code.  Each lists its digits in code-point order, so
+#: same-width runs sort as the numbers they spell.
+_RADICES = (("0123456789", "d"), ("0123456789abcdef", "x"))
+
+
+def _splitters(keys: list[str], n: int) -> list[str]:
+    """Up to ``n`` guesses at the keys 1, 2, ... x :data:`SUB_RANGE_PAGES`
+    pages past ``keys[-1]``, from a page's ``keys`` alone, so every
+    count repeats from run to run.  The page's second half gives the
+    key density: where its middle and last keys first differ, the run
+    of decimal (else hex) digits around that position is read as a
+    number and stepped on, or, with no such run, the differing code
+    point.  Over a 1,000-key page, ``part-00503…`` and ``part-01011…``
+    give ``part-01925``, ``part-02839``, ...  Guesses only: :func:`_scan`
+    keeps those that bound proper sub-ranges."""
+    m = (len(keys) - 1) // 2
+    mid, last = keys[m], keys[-1]
+    i = len(os.path.commonprefix([mid, last]))
+    if n < 1 or i == len(last):
+        return []
+    per_step = SUB_RANGE_PAGES * len(keys) / (len(keys) - 1 - m)
+    for digits, code in _RADICES:
+        j = len(last[:i].rstrip(digits))
+        lo, hi = (k[j : len(k) - len(k[j:].lstrip(digits))] for k in (mid, last))
+        if min(len(lo), len(hi)) > i - j and int(hi, len(digits)) > int(lo, len(digits)):
+            b = int(hi, len(digits))
+            step = max(1, round((b - int(lo, len(digits))) * per_step))
+            runs = (format(b + s * step, f"0{len(hi)}{code}") for s in range(1, n + 1))
+            return [last[:j] + r for r in runs if len(r) == len(hi)]
+    a = ord(mid[i]) if i < len(mid) else -1
+    b = ord(last[i])
+    step = max(1, round((b - a) * per_step))
+    points = (b + s * step for s in range(1, n + 1))
+    return [last[:i] + chr(c) for c in points if c <= 0x10FFFF and not 0xD800 <= c < 0xE000]
+
+
+def _scan(
+    client,
+    listings: Iterable[tuple[dict, Range]],
+    follow: Callable[[dict], bool] = lambda page: True,
+    splitters: Callable[[list[str], int], list[str]] = _splitters,
+) -> Iterator[tuple[int, dict]]:
+    """``(i, page)`` for the pages of every listing ``i``, a ``(request,
+    range)`` pair over one (thread-safe) client: ``request`` holds the
+    ListObjectsV2 parameters, ``range`` the prefix and key bounds
+    (``StartAfter`` is the greater of the request's and the range's).
+    A listing goes on past a truncated page only when ``follow(page)``.
+
+    Up to :data:`MAX_IN_FLIGHT` listings advance together, one page
+    each per round on one pool, and a round's pages are yielded in
+    listing order before the next round starts.  So at most
+    ``MAX_IN_FLIGHT`` requests are running or not yet yielded, the
+    order and every count repeat, a request's error (or ``_pages``')
+    propagates out of this generator, and closing it early leaves no
+    request running.
+
+    After a round, listings not yet started take the free slots first.
+    Then a listing whose page came back truncated splits the rest of its
+    range at ``splitters(keys, n)``, guesses taken from the page: only
+    guesses that each sort above the one before (the page's last key
+    first) and below ``upto`` are kept, so the sub-ranges are disjoint
+    and cover the rest exactly — a bad guess costs requests, never
+    keys.  A split makes at most as many sub-ranges as there are free
+    slots, and at most :data:`SPLIT_WAYS` for a range's first split;
+    the open last sub-range doubles that when it splits in turn.  With
+    no guess kept the listing goes on by continuation token."""
+
+    def start(i: int, request: dict, rng: Range, ways: int = SPLIT_WAYS) -> tuple:
+        kw = dict(request, Prefix=rng.prefix)
+        if after := max(rng.after, request.get("StartAfter", "")):
+            kw["StartAfter"] = after
+        return i, request, rng, ways, _pages(client, rng.upto, **kw)
+
+    def split(listing: tuple, contents: list[dict], free: int) -> list[tuple]:
+        i, request, (prefix, _, upto), ways, _ = listing
+        if not contents:
+            return [listing]
+        keys = [o["Key"] for o in contents]
+        bounds = [keys[-1]]
+        for s in splitters(keys, min(ways, free + 1) - 1):
+            if s > bounds[-1] and (upto is None or s < upto):
+                bounds.append(s)
+        if len(bounds) == 1:
+            return [listing]
+        subs = [start(i, request, Range(prefix, lo, hi)) for lo, hi in zip(bounds, bounds[1:])]
+        return subs + [start(i, request, Range(prefix, bounds[-1], upto), 2 * ways)]
+
+    waiting = (start(i, *listing) for i, listing in enumerate(listings))
+    active = list(islice(waiting, MAX_IN_FLIGHT))
     with ThreadPoolExecutor(MAX_IN_FLIGHT) as pool:
-        while True:
-            active += islice(waiting, MAX_IN_FLIGHT - len(active))
-            if not active:
-                return
-            pages = list(pool.map(lambda a: next(a[1], None), active))
-            for (tag, _), page in zip(active, pages):
-                if page is not None:
-                    yield tag, page
-            active = [a for a, page in zip(active, pages) if page is not None]
-
-
-def _list_shards(
-    client, prefixes: Iterable[str], **request
-) -> Iterator[tuple[str, dict]]:
-    """``(prefix, page)`` for every page of every prefix's listing,
-    paged by :func:`_rounds` over one (thread-safe) client."""
-    return _rounds((p, _pages(client, Prefix=p, **request)) for p in prefixes)
+        while active:
+            pages = list(pool.map(lambda a: next(a[-1]), active))
+            going = []
+            for listing, page in zip(active, pages):
+                yield listing[0], page
+                if page.get("IsTruncated") and follow(page):
+                    going.append((listing, page.get("Contents")))
+            fresh = list(islice(waiting, MAX_IN_FLIGHT - len(going)))
+            free = MAX_IN_FLIGHT - len(going) - len(fresh)
+            active = []
+            for listing, contents in going:
+                subs = split(listing, contents, free) if free else [listing]
+                free -= len(subs) - 1
+                active += subs
+            active += fresh
 
 
 def _paged_ahead(items: Iterator) -> Iterator:
@@ -286,13 +416,12 @@ def _paged_ahead(items: Iterator) -> Iterator:
     hand-off of up to :data:`MAX_IN_FLIGHT` items, so the pager keeps
     requesting while the consumer writes what it already has.
 
-    Over :func:`_list_shards` the consumer holds at most
-    2 x ``MAX_IN_FLIGHT`` pages it has not yielded: a full hand-off,
-    plus one round of ``_rounds`` that is in flight or yielded only in
-    part.  An error in the pager thread raises here, in the consumer.
-    Closing this generator stops the pager, which closes ``items`` on
-    its own thread (so ``_rounds`` leaves no request running), and
-    joins it."""
+    Over :func:`_scan` the consumer holds at most 2 x ``MAX_IN_FLIGHT``
+    pages it has not yielded: a full hand-off, plus one round of
+    ``_scan`` that is in flight or yielded only in part.  An error in
+    the pager thread raises here, in the consumer.  Closing this
+    generator stops the pager, which closes ``items`` on its own thread
+    (so ``_scan`` leaves no request running), and joins it."""
     handoff: queue.Queue = queue.Queue(MAX_IN_FLIGHT)
     stop = threading.Event()
     done = object()
@@ -332,6 +461,12 @@ def _paged_ahead(items: Iterator) -> Iterator:
 DISCOVER_MAX_ROUNDS = 3
 
 
+def _mostly_groups(page: dict) -> bool:
+    """True for a delimiter page with more groups than keys: its next
+    page is worth paging on the driver, since it is mostly shards."""
+    return len(page.get("CommonPrefixes", [])) > len(page.get("Contents", []))
+
+
 def discover_shards(
     client,
     bucket: str,
@@ -340,21 +475,32 @@ def discover_shards(
     target_shards: int = 64,
     start_after: str = "",
     page_size: int = PAGE_SIZE,
-) -> tuple[list[str], list[dict]]:
-    """Split the keyspace under ``prefix`` into disjoint shard prefixes
+) -> tuple[list[Range], list[dict]]:
+    """Split the keyspace under ``prefix`` into disjoint shard ranges
     via delimiter listings (S3 CommonPrefixes), BFS-expanding until
     ``target_shards`` is reached or nothing expands.
 
-    Each BFS level's prefixes are listed CONCURRENTLY
-    (:func:`_list_shards`; the calls are pure I/O waits) — a level with
-    N prefixes costs ~1 round-trip instead of N.  Results are
-    re-assembled in frontier order so shard discovery stays
-    deterministic.
+    Each BFS level reads the first delimiter page of every frontier
+    prefix, all of them concurrently (:func:`_scan`; the calls are pure
+    I/O waits): a level costs ~1 round trip.  A page's groups become
+    the next frontier.  A truncated page that holds more groups than
+    keys is paged on by token, a round trip a page, as a level wider
+    than one page must be: each of its groups is a shard the tasks
+    share.  The rest of any other truncated page becomes a shard range
+    for the listing tasks, never paged here.  So the driver holds one
+    page per frontier prefix, and more only where the pages are mostly
+    groups, which it keeps as shards anyway.  The rest starts
+    after the page's last entry; when that entry is a group, the group
+    joins the rest instead of the frontier, and the rest starts after
+    the entry before it (that key, or the successor of that group).
+    So no key is lost: ``StartAfter`` at the successor of the last
+    group would drop a key equal to it (``a0`` after group ``a/``).
+    Results are re-assembled in frontier order, so shard discovery
+    stays deterministic.
 
-    Returns (shard_prefixes, direct_objects): objects that live at a
-    listed level (not under any returned shard) come back as rows so
-    coverage is exact — every key is in exactly one shard or in
-    direct_objects.
+    Returns (shards, direct_objects): objects that live at a listed
+    level (not under any returned shard) come back as rows so coverage
+    is exact — every key is in exactly one shard or in direct_objects.
 
     Alongside the first level, on the same pool, goes one flat page of
     the prefix (no delimiter, ``page_size`` keys).  When that page is
@@ -378,38 +524,41 @@ def discover_shards(
         request["StartAfter"] = start_after
     flat = {k: v for k, v in request.items() if k != "Delimiter"}
     flat["MaxKeys"] = page_size
-    # The probe, tagged None: the first page of _pages, so retry and the
-    # key-order check apply to it.
-    pagers: list[tuple[str | None, Iterator[dict]]] = [
-        (None, islice(_pages(client, Prefix=prefix, **flat), 1))
-    ]
+    probe = [(flat, Range(prefix))]
     direct: list[dict] = []
+    rests: list[Range] = []
     frontier = [prefix]
     for _ in range(DISCOVER_MAX_ROUNDS):
-        pages: dict[str, list[dict]] = {p: [] for p in frontier}
-        pagers += [(p, _pages(client, Prefix=p, **request)) for p in frontier]
-        with closing(_rounds(pagers)) as level:  # a return leaves no request running
-            for p, resp in level:
-                if p is not None:
-                    pages[p].append(resp)
-                elif not resp.get("IsTruncated"):
-                    return [], resp.get("Contents", [])
-        pagers = []
+        listings = probe + [(request, Range(p)) for p in frontier]
+        pages: dict[int, list[dict]] = {}
+        # Never split: a delimiter listing started inside a group would
+        # leave that group out.
+        for i, page in _scan(client, listings, _mostly_groups, lambda keys, n: []):
+            pages.setdefault(i, []).append(page)
+        if probe and not pages[0][0].get("IsTruncated"):
+            return [], pages[0][0].get("Contents", [])
         children: list[str] = []
-        for p, resps in pages.items():  # frontier order
-            groups = [cp["Prefix"] for r in resps for cp in r.get("CommonPrefixes", [])]
+        for i, p in enumerate(frontier, len(probe)):  # frontier order
+            groups = [cp["Prefix"] for r in pages[i] for cp in r.get("CommonPrefixes", [])]
             d = -1
             if delimiter and start_after.startswith(p):
                 d = start_after.find(delimiter, len(p))
             if d >= 0 and (held := start_after[: d + len(delimiter)]) not in groups:
                 groups.insert(0, held)  # held <= marker < every returned group
+            contents = [o for r in pages[i] for o in r.get("Contents", [])]
+            if pages[i][-1].get("IsTruncated"):
+                entries = sorted([o["Key"] for o in contents] + groups)
+                if entries and entries[-1] in groups:
+                    groups.remove(entries.pop())
+                last = entries[-1] if entries else start_after
+                rests.append(Range(p, prefix_end(last) if last in groups else last))
             children += groups
-            for r in resps:
-                direct.extend(r.get("Contents", []))
+            direct += contents
+        probe = []
         frontier = children
-        if not frontier or len(frontier) >= target_shards:
+        if not frontier or len(frontier) + len(rests) >= target_shards:
             break  # else: not enough parallelism yet — expand one more level
-    return frontier, direct
+    return [Range(p) for p in frontier] + rests, direct
 
 
 #: The ListObjectsV2 ``Contents`` field behind each LISTING_SCHEMA column.
@@ -420,10 +569,11 @@ _ARROW_LISTING_SCHEMA = to_arrow_schema(LISTING_SCHEMA)
 _CONTENTS = T.StructType(
     [T.StructField(f, LISTING_SCHEMA[c].dataType) for c, f in _S3_FIELDS.items()]
 )
-#: One row per shard; the first row also carries discovery's direct objects.
-_TASK_SCHEMA = T.StructType().add("shard", T.StringType()).add(
-    "direct", T.ArrayType(_CONTENTS)
-)
+#: One row per shard range; the first row also carries discovery's
+#: direct objects.
+_TASK_SCHEMA = T.StructType(
+    [T.StructField(f, T.StringType(), f == "upto") for f in Range._fields]
+).add("direct", T.ArrayType(_CONTENTS))
 
 
 def _page_batch(contents: list[dict]) -> pa.RecordBatch:
@@ -435,8 +585,8 @@ def _page_batch(contents: list[dict]) -> pa.RecordBatch:
     return pa.RecordBatch.from_pydict(cols, schema=_ARROW_LISTING_SCHEMA)
 
 
-def _shard_table(spark: SparkSession, shards: list[str], direct: list[dict]) -> DataFrame:
-    """One row per shard as an Arrow local relation: min(rows,
+def _shard_table(spark: SparkSession, shards: list[Range], direct: list[dict]) -> DataFrame:
+    """One row per shard range as an Arrow local relation: min(rows,
     defaultParallelism) contiguous slices, no shuffle, and the task's
     pages are the only Python pass a listing task makes.  The direct
     objects ride on the first row as ``Contents`` entries, so a listing
@@ -447,7 +597,8 @@ def _shard_table(spark: SparkSession, shards: list[str], direct: list[dict]) -> 
     direct_col = pa.ListArray.from_arrays(
         pa.array([0] + [len(direct)] * len(shards), pa.int32()), entries
     )
-    table = pa.table({"shard": shards, "direct": direct_col})
+    ranges = {f: pa.array(c, pa.string()) for f, c in zip(Range._fields, zip(*shards))}
+    table = pa.table({**ranges, "direct": direct_col})
     return local_relation(spark, table, _TASK_SCHEMA)
 
 
@@ -460,8 +611,12 @@ def _task_pages(
 ) -> Callable[[Iterator[pa.RecordBatch]], Iterator[list[dict]]]:
     """``pages(batches)``: the ``Contents`` list of each page a listing
     task over shard-table ``batches`` lists.  The slice's direct objects
-    come first, then every page of its shards, through
-    :func:`_list_shards` on one pager thread (:func:`_paged_ahead`).
+    come first, then every page of its shard ranges, each starting
+    above the greater of ``start_after`` and its own ``after``, through
+    :func:`_scan` on one pager thread (:func:`_paged_ahead`): a range
+    whose listing turns out long splits into sub-ranges that page at
+    the same time, so the slice takes as many request rounds as its
+    longest sub-range chain, not its longest shard's page count.
     Each list's length goes to ``progress`` on the task's own thread.
     Both the listing task and the manifest-writing task page this way."""
     request = {"Bucket": bucket, "MaxKeys": page_size}
@@ -479,15 +634,16 @@ def _task_pages(
         return contents
 
     def pages(batches: Iterator[pa.RecordBatch]) -> Iterator[list[dict]]:
-        mine: list[str] = []
+        mine: list[Range] = []
         for b in batches:
-            mine += b.column("shard").to_pylist()
+            mine += map(Range, *(b.column(f).to_pylist() for f in Range._fields))
             direct = b.column("direct").flatten().to_pylist()
             if direct:
                 yield counted(direct)
         if mine:
             client = client_factory()  # one client per task, never pickled
-            with closing(_paged_ahead(_list_shards(client, mine, **request))) as listed:
+            listings = [(request, r) for r in mine]
+            with closing(_paged_ahead(_scan(client, listings))) as listed:
                 for _, page in listed:
                     if page.get("Contents"):
                         yield counted(page["Contents"])
@@ -509,14 +665,18 @@ def list_objects_df(
     """Listing DataFrame over ``s3://bucket/prefix``, parallel by shard.
 
     The prefix predicate is pushed into the API request itself (S2,
-    main.rs:190).  The shards run in at most ``defaultParallelism``
-    tasks with no shuffle; each task pages its shards through
-    :func:`_list_shards` on one pager thread (:func:`_paged_ahead`),
-    which keeps the next round's requests in flight while the task
-    writes the pages it already has.  So a task holds at most
-    2 x ``MAX_IN_FLIGHT`` pages (``page_size`` rows each) and the Arrow
-    batch it is emitting — the reference's bounded-buffer flush loop
-    (main.rs:236-246), which keeps paging while it writes, N-wide.
+    main.rs:190).  The shards are key ranges (:func:`discover_shards`;
+    a flat prefix is one range after discovery's one page of it) and
+    run in at most ``defaultParallelism`` tasks with no shuffle; each
+    task pages its ranges through :func:`_scan` on one pager thread
+    (:func:`_paged_ahead`), which splits a long range into sub-ranges
+    paged at the same time and keeps the next round's requests in
+    flight while the task writes the pages it already has.  So a task
+    holds at most 2 x ``MAX_IN_FLIGHT`` pages (``page_size`` rows each)
+    and the Arrow batch it is emitting — the reference's bounded-buffer
+    flush loop (main.rs:236-246), which keeps paging while it writes,
+    N-wide — and its listing takes as many request rounds as its
+    longest sub-range chain.
 
     ``progress`` (a :class:`~s3_manifest_spark.manifest.progress.
     ListingProgress`) gets its accumulator incremented by each emitted
@@ -539,8 +699,9 @@ def list_objects_df(
     layout; arbitrary inserts need the full listing + ``manifest_diff``.
 
     When discovery leaves no shard to page (a tail or bucket that fits
-    the probe page, or a bucket shallower than discovery's BFS), its
-    direct objects are the whole listing: they already sit on the
+    the probe page, or a bucket shallower than discovery's BFS whose
+    pages all fit), its direct objects are the whole listing: at most
+    one page per prefix discovery read, they already sit on the
     driver, so they become a local Arrow relation and the listing runs
     no Python task.  The driver adds their count to ``progress`` itself.
     :func:`manifest_from_s3` writes such a listing's manifest from the

@@ -302,12 +302,14 @@ def test_listing_task_starts_a_new_part_at_max_records(spark, tmp_path, monkeypa
 
 
 def test_failed_listing_task_leaves_no_success_marker(spark, tmp_path):
-    """A client that fails in the middle of a shard (its second page)
-    makes the build raise, and no ``_SUCCESS`` is left."""
+    """A client that fails in the middle of a shard (any request after
+    its first page: by token, or a sub-range's ``StartAfter``) makes the
+    build raise, and no ``_SUCCESS`` is left."""
 
     class FailsMidShard(FakeS3Client):
         def list_objects_v2(self, **kw):
-            if "ContinuationToken" in kw and "Delimiter" not in kw:
+            mid_shard = "ContinuationToken" in kw or "StartAfter" in kw
+            if mid_shard and "Delimiter" not in kw:
                 err = RuntimeError("AccessDenied mid-shard")
                 err.response = {  # fatal: not retried
                     "Error": {"Code": "AccessDenied"},

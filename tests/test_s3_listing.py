@@ -12,9 +12,12 @@ from s3_manifest_spark.sources.fake_s3 import (
 )
 from s3_manifest_spark.sources.s3_listing import (
     MAX_IN_FLIGHT,
-    _list_shards,
+    PAGE_SIZE,
+    Range,
     _paged_ahead,
     _pages,
+    _scan,
+    _splitters,
     discover_shards,
     list_objects_df,
     manifest_from_s3,
@@ -24,6 +27,16 @@ from s3_manifest_spark.sources.s3_listing import (
 from s3_manifest_spark.sources.tables import local_relation
 
 ALL_KEYS = set(synth_bucket()["fake-bucket"].keys())  # 2520 keys
+
+
+def _listings(prefixes, **request) -> list:
+    """``_scan``'s listings: one prefix range per prefix, one request."""
+    return [(request, Range(p)) for p in prefixes]
+
+
+def _no_split(keys, n):
+    """A splitter with no guess: every listing goes on by token."""
+    return []
 
 
 def test_parse_s3_uri():
@@ -244,18 +257,24 @@ class _StuckPaging(FakeS3Client):
 def test_pagination_fails_loud_on_stuck_token(drop_token):
     """A truncated page whose continuation token is missing or does
     not advance must stop the listing with an error, not restart the
-    prefix and emit duplicate keys (5,000 keys over 1,000-key pages:
-    the calls are discovery's truncated flat probe page, the delimiter
-    listing's page 1, and its page 2, the first stuck one)."""
+    prefix and emit duplicate keys.  5,000 flat keys over 1,000-key
+    pages: discovery reads the truncated flat probe page and the
+    delimiter listing's page 1, and hands the rest on as a range.  That
+    range, paged by token (no splitter guess), reads its page 1 and
+    page 2, the first stuck one, and raises."""
     import datetime as dt
 
     t = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
     client = _StuckPaging(
         {"b": {f"k{i:05d}": (1, t) for i in range(5000)}}, drop_token
     )
+    shards, direct = discover_shards(client, "b", "")
+    assert shards == [Range("", "k00999")] and len(direct) == 1000
+    assert client.calls == 2
+    listings = [({"Bucket": "b", "MaxKeys": 1000}, shards[0])]
     with pytest.raises(RuntimeError, match="does not advance"):
-        discover_shards(client, "b", "")
-    assert client.calls == 3
+        list(_scan(client, listings, splitters=_no_split))
+    assert client.calls == 4
 
 
 def _sharded_bucket(n_shards: int = 40) -> dict:
@@ -273,8 +292,20 @@ def _sharded_bucket(n_shards: int = 40) -> dict:
     }
 
 
+def _split_bucket() -> dict:
+    """:func:`_sharded_bucket` plus ``big/``, one shard of 700 keys: a
+    listing of it over 7-key pages splits."""
+    import datetime as dt
+
+    t = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
+    bucket = _sharded_bucket()
+    bucket["b"].update({f"big/k{j:05d}": (j, t) for j in range(700)})
+    return bucket
+
+
 class _Counting(FakeS3Client):
-    """Counts requests, and the most that were ever running at once."""
+    """Counts requests, and the most that were ever running at once;
+    keeps every request."""
 
     def __init__(self, buckets, delay_s: float = 0.0):
         import threading
@@ -282,6 +313,7 @@ class _Counting(FakeS3Client):
         super().__init__(buckets)
         self.delay_s = delay_s
         self.calls = self.running = self.max_running = 0
+        self.requests: list[dict] = []
         self._lock = threading.Lock()
 
     def list_objects_v2(self, **kw):
@@ -289,6 +321,7 @@ class _Counting(FakeS3Client):
 
         with self._lock:
             self.calls += 1
+            self.requests.append(kw)
             self.running += 1
             self.max_running = max(self.max_running, self.running)
         time.sleep(self.delay_s)
@@ -303,26 +336,29 @@ def test_list_shards_every_key_once_with_bounded_pages_in_flight():
     """The in-task pager returns each key of many uneven shards exactly
     once, pages concurrently, and never has more than MAX_IN_FLIGHT
     pages requested but not yet yielded (16 threads, 1 us switch
-    interval)."""
+    interval).  The same holds when the shards include ``big/``, whose
+    listing splits into sub-ranges (requests with ``StartAfter``) once
+    every shard has started."""
     import sys
 
-    bucket = _sharded_bucket()
-    client = _Counting(bucket, delay_s=0.002)
-    shards = [f"s{i:03d}/" for i in range(40)]
-    keys, yielded = [], 0
-    interval = sys.getswitchinterval()
-    sys.setswitchinterval(1e-6)
-    try:
-        for prefix, page in _list_shards(client, shards, Bucket="b", MaxKeys=7):
-            yielded += 1
-            assert client.calls - yielded <= MAX_IN_FLIGHT
-            assert all(o["Key"].startswith(prefix) for o in page["Contents"])
-            keys += [o["Key"] for o in page["Contents"]]
-    finally:
-        sys.setswitchinterval(interval)
-    assert sorted(keys) == sorted(bucket["b"])
-    assert len(keys) == len(set(keys))
-    assert 1 < client.max_running <= MAX_IN_FLIGHT
+    for bucket in (_sharded_bucket(), _split_bucket()):
+        client = _Counting(bucket, delay_s=0.002)
+        shards = sorted({k.split("/")[0] + "/" for k in bucket["b"]})
+        keys, yielded = [], 0
+        interval = sys.getswitchinterval()
+        sys.setswitchinterval(1e-6)
+        try:
+            for i, page in _scan(client, _listings(shards, Bucket="b", MaxKeys=7)):
+                yielded += 1
+                assert client.calls - yielded <= MAX_IN_FLIGHT
+                assert all(o["Key"].startswith(shards[i]) for o in page["Contents"])
+                keys += [o["Key"] for o in page["Contents"]]
+        finally:
+            sys.setswitchinterval(interval)
+        assert sorted(keys) == sorted(bucket["b"])
+        assert len(keys) == len(set(keys))
+        assert 1 < client.max_running <= MAX_IN_FLIGHT
+    assert any(kw["Prefix"] == "big/" and "StartAfter" in kw for kw in client.requests)
 
 
 def test_list_shards_stuck_shard_raises():
@@ -330,19 +366,20 @@ def test_list_shards_stuck_shard_raises():
         {"b": {f"s{i}/k{j:05d}": (1, None) for i in range(3) for j in range(50)}},
         drop_token=True,
     )
-    shards = ["s0/", "s1/", "s2/"]
+    listings = _listings(["s0/", "s1/", "s2/"], Bucket="b", MaxKeys=10)
     with pytest.raises(RuntimeError, match="does not advance"):
-        list(_list_shards(client, shards, Bucket="b", MaxKeys=10))
+        list(_scan(client, listings, splitters=_no_split))
 
 
 def test_list_shards_close_early_stops_requests():
     """A consumer that stops after one page gets control back without
-    waiting for the other shards, and no request is left running."""
+    waiting for the other shards, and no request is left running; so
+    does one that stops once a split listing's sub-ranges are paging."""
     import time
 
     client = _Counting(_sharded_bucket(), delay_s=0.01)
-    pager = _list_shards(
-        client, [f"s{i:03d}/" for i in range(40)], Bucket="b", MaxKeys=1
+    pager = _scan(
+        client, _listings([f"s{i:03d}/" for i in range(40)], Bucket="b", MaxKeys=1)
     )
     next(pager)
     t0 = time.perf_counter()
@@ -351,6 +388,17 @@ def test_list_shards_close_early_stops_requests():
     calls = client.calls
     time.sleep(0.05)
     assert client.running == 0 and client.calls == calls <= MAX_IN_FLIGHT
+
+    client = _Counting(_split_bucket(), delay_s=0.01)
+    pager = _scan(client, _listings(["big/"], Bucket="b", MaxKeys=7))
+    yielded = 0
+    while not any("StartAfter" in kw for kw in client.requests):
+        next(pager)
+        yielded += 1
+    pager.close()
+    calls = client.calls
+    time.sleep(0.05)
+    assert client.running == 0 and client.calls == calls <= yielded + MAX_IN_FLIGHT
 
 
 def test_unknown_bucket_fails_after_one_request():
@@ -365,8 +413,9 @@ def test_unknown_bucket_fails_after_one_request():
 
 
 class _Misordered(FakeS3Client):
-    """Real paging, except that page 2 replays page 1's keys (with a
-    valid, advancing token) or one page lists its keys backwards."""
+    """Real paging, except that every page after the first replays page
+    1's keys (with a valid, advancing token), or lists its keys
+    backwards."""
 
     def __init__(self, buckets, mode: str):
         super().__init__(buckets)
@@ -380,7 +429,9 @@ class _Misordered(FakeS3Client):
                 self.first = resp["Contents"]
             else:
                 resp["Contents"] = self.first
-        elif "ContinuationToken" in kw:
+        elif self.first is None:
+            self.first = resp["Contents"]
+        else:
             resp["Contents"] = resp["Contents"][::-1]
         return resp
 
@@ -394,7 +445,7 @@ def test_listing_fails_loud_on_non_increasing_keys(mode):
 
     t = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
     client = _Misordered({"b": {f"d/k{i:05d}": (1, t) for i in range(300)}}, mode)
-    pages = _list_shards(client, ["d/"], Bucket="b", MaxKeys=100)
+    pages = _scan(client, _listings(["d/"], Bucket="b", MaxKeys=100))
     with pytest.raises(RuntimeError, match="does not sort after"):
         list(pages)
 
@@ -407,18 +458,18 @@ def _pager_threads() -> list:
 
 def test_paged_ahead_yields_list_shards_pages_in_order():
     """A listing task's pages, drawn ahead on the pager thread, are
-    _list_shards' pages in _list_shards' order, and the pager thread is
-    gone once they are exhausted."""
-    bucket = _sharded_bucket()
-    shards = [f"s{i:03d}/" for i in range(40)]
+    _scan's pages in _scan's order, split listing included, and the
+    pager thread is gone once they are exhausted."""
+    bucket = _split_bucket()
+    listings = _listings(
+        sorted({k.split("/")[0] + "/" for k in bucket["b"]}), Bucket="b", MaxKeys=7
+    )
 
     def pages(it):
-        return [(p, [o["Key"] for o in page.get("Contents", [])]) for p, page in it]
+        return [(i, [o["Key"] for o in page.get("Contents", [])]) for i, page in it]
 
-    direct = pages(_list_shards(FakeS3Client(bucket), shards, Bucket="b", MaxKeys=7))
-    ahead = pages(
-        _paged_ahead(_list_shards(FakeS3Client(bucket), shards, Bucket="b", MaxKeys=7))
-    )
+    direct = pages(_scan(FakeS3Client(bucket), listings))
+    ahead = pages(_paged_ahead(_scan(FakeS3Client(bucket), listings)))
     assert ahead == direct
     assert sum(len(keys) for _, keys in ahead) == len(bucket["b"])
     assert not _pager_threads()
@@ -437,36 +488,40 @@ def test_paged_ahead_raises_pager_errors_in_the_task(mode):
             {"b": {f"s{i}/k{j:05d}": (1, t) for i in range(3) for j in range(50)}},
             drop_token=mode == "no_token",
         )
-        shards, match = ["s0/", "s1/", "s2/"], "does not advance"
+        shards, match, splitters = ["s0/", "s1/", "s2/"], "does not advance", _no_split
     else:
         client = _Misordered({"b": {f"d/k{i:05d}": (1, t) for i in range(300)}}, mode)
-        shards, match = ["d/"], "does not sort after"
+        shards, match, splitters = ["d/"], "does not sort after", _splitters
+    listings = _listings(shards, Bucket="b", MaxKeys=10)
     with pytest.raises(RuntimeError, match=match):
-        list(_paged_ahead(_list_shards(client, shards, Bucket="b", MaxKeys=10)))
+        list(_paged_ahead(_scan(client, listings, splitters=splitters)))
     assert not _pager_threads()
 
 
 def test_paged_ahead_close_early_joins_the_pager():
     """The pager requests ahead of a consumer that has taken one page,
     but never more than 2 x MAX_IN_FLIGHT pages it has not yielded; a
-    close joins the pager thread and leaves no request running."""
+    close joins the pager thread and leaves no request running.  Both
+    over 40 one-key-page shards and over one shard that splits."""
     import time
 
-    client = _Counting(_sharded_bucket(), delay_s=0.01)
-    pages = _paged_ahead(
-        _list_shards(client, [f"s{i:03d}/" for i in range(40)], Bucket="b", MaxKeys=1)
-    )
-    next(pages)
-    deadline = time.monotonic() + 30
-    while client.calls - 1 <= MAX_IN_FLIGHT and time.monotonic() < deadline:
-        time.sleep(0.01)
-    time.sleep(0.2)  # let the pager run into its bound
-    assert MAX_IN_FLIGHT < client.calls - 1 <= 2 * MAX_IN_FLIGHT
-    pages.close()
-    assert not _pager_threads()
-    calls = client.calls
-    time.sleep(0.05)
-    assert client.running == 0 and client.calls == calls <= 1 + 2 * MAX_IN_FLIGHT
+    for bucket, shards, page in (
+        (_sharded_bucket(), [f"s{i:03d}/" for i in range(40)], 1),
+        (_split_bucket(), ["big/"], 7),
+    ):
+        client = _Counting(bucket, delay_s=0.01)
+        pages = _paged_ahead(_scan(client, _listings(shards, Bucket="b", MaxKeys=page)))
+        next(pages)
+        deadline = time.monotonic() + 30
+        while client.calls - 1 <= MAX_IN_FLIGHT and time.monotonic() < deadline:
+            time.sleep(0.01)
+        time.sleep(0.2)  # let the pager run into its bound
+        assert MAX_IN_FLIGHT < client.calls - 1 <= 2 * MAX_IN_FLIGHT
+        pages.close()
+        assert not _pager_threads()
+        calls = client.calls
+        time.sleep(0.05)
+        assert client.running == 0 and client.calls == calls <= 1 + 2 * MAX_IN_FLIGHT
 
 
 def test_listing_pages_ahead_lists_every_key_once(spark):
@@ -866,6 +921,8 @@ def test_discovery_requests_only_prefixes_above_marker(marker):
             assert marker.startswith(p) or any(k.startswith(p) for k in tail), p
         direct_keys = {o["Key"] for o in direct}
         assert direct_keys <= tail
+        assert all(s == Range(s.prefix) for s in shards)
+        shards = [s.prefix for s in shards]
         assert {k for k in tail if not any(k.startswith(s) for s in shards)} == direct_keys
         for s in shards:
             assert marker.startswith(s) or any(k.startswith(s) for k in tail), s
@@ -1009,3 +1066,247 @@ def test_probe_page_with_non_increasing_keys_fails_loud(spark, tmp_path):
             start_after=sorted(ALL_KEYS)[-40],
         )
     assert not os.path.exists(out)
+
+
+# -- key-range shards ---------------------------------------------------
+
+
+def _bucket(keys) -> dict:
+    import datetime as dt
+
+    t = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
+    return {"b": {k: (len(k), t) for k in keys}}
+
+
+def _shape(name: str) -> list[str]:
+    """The keys of a flat, shallow, deep or skewed bucket."""
+    import random
+
+    rng = random.Random(18)
+    if name == "flat":  # one level: discovery's root page is truncated
+        return [f"k{i:06d}" for i in range(5000)]
+    if name == "shallow":  # 4 groups of 1,200 hex-named keys
+        return [f"g{g}/obj-{rng.getrandbits(32):08x}" for g in range(4) for _ in range(1200)]
+    if name == "deep":  # keys below discovery's last level, and at each level
+        return [f"a/b/c/d{i % 3}/f-{i:05d}" for i in range(3000)] + ["a/top", "a/b/mid", "z"]
+    return [  # skewed partitions, some names non-ASCII or astral
+        f"dt={d:02d}/src={s}/{'résumé' if j % 50 == 7 else 'part'}-{j:05d}"
+        + ("\U0001F600" if j % 97 == 3 else "")
+        for d in range(6)
+        for s in "ab"
+        for j in range(int(3000 / (1 + 2 * d + "ab".index(s)) ** 1.5))
+    ]
+
+
+def _listed(client, marker: str, page_size: int = 100, splitters=_splitters) -> list[str]:
+    """Every key discovery and the task scheduler list, in order."""
+    shards, direct = discover_shards(
+        client, "b", "", start_after=marker, page_size=page_size
+    )
+    request = {"Bucket": "b", "MaxKeys": page_size}
+    if marker:
+        request["StartAfter"] = marker
+    listings = [(request, r) for r in shards]
+    keys = [o["Key"] for o in direct]
+    for _, page in _scan(client, listings, splitters=splitters):
+        keys += [o["Key"] for o in page.get("Contents", [])]
+    return keys
+
+
+def _assert_exact(keys: list[str], want) -> None:
+    assert len(keys) == len(set(keys))  # no key twice
+    assert set(keys) == set(want)       # no key lost, none outside the tail
+
+
+@pytest.mark.parametrize("shape", ["flat", "shallow", "deep", "skewed"])
+def test_key_ranges_list_every_key_once(spark, shape):
+    """On a flat, shallow, deep and skewed bucket, with and without
+    ``start_after``: discovery's shard ranges paged by the splitting
+    scheduler, and ``list_objects_df`` on the task path, list every key
+    above the marker exactly once, and the long listings split."""
+    from s3_manifest_spark.sources.fake_s3 import custom_client_factory
+
+    keys = sorted(_shape(shape))
+    bucket = _bucket(keys)
+    for marker in ("", keys[len(keys) // 3]):
+        tail = [k for k in keys if k > marker]
+        client = _RecordingClient(FakeS3Client(bucket))
+        _assert_exact(_listed(client, marker), tail)
+        assert any(kw.get("StartAfter", "") > marker for kw in client.requests)
+        df = list_objects_df(
+            spark, "b", client_factory=custom_client_factory(bucket), page_size=100,
+            start_after=marker,
+        )
+        assert _is_task_path(df)
+        _assert_exact([r.key for r in df.collect()], tail)
+
+
+def _bad_splitters(keys: list[str]) -> dict:
+    """Splitter functions whose guesses are wrong in the ways a guess
+    can be, over a bucket of ``keys``."""
+    from bisect import bisect_right
+
+    return {
+        # ranges that hold no key, all the keys in the last
+        "empty": lambda page, n: [page[-1] + "\0" * j for j in range(1, n + 1)],
+        # all the keys in the first range, the others empty
+        "all_in_first": lambda page, n: ["\U0010FFFF" * j for j in range(1, n + 1)],
+        # guesses equal to keys of the bucket
+        "existing": lambda page, n: keys[bisect_right(keys, page[-1]) :: 37][:n],
+        "non_ascii": lambda page, n: [
+            page[-1][:-1] + c for c in ("é", "中", "\U0001F600", "\U0010FFFF")
+        ][:n],
+        # unsorted, repeated, below the page, and empty guesses
+        "disordered": lambda page, n: [page[0], page[-1] + "z", "", page[-1] + "a"] * n,
+    }
+
+
+@pytest.mark.parametrize(
+    "kind", ["empty", "all_in_first", "existing", "non_ascii", "disordered"]
+)
+def test_bad_splitters_cost_requests_never_keys(kind):
+    """Splitters are guesses: with guesses that make empty ranges, put
+    every key in one range, equal existing keys, are non-ASCII, or come
+    unsorted, every key of a flat and a skewed bucket, with and without
+    ``start_after``, is still listed exactly once."""
+    for shape in ("flat", "skewed"):
+        keys = sorted(_shape(shape))
+        splitters = _bad_splitters(keys)[kind]
+        for marker in ("", keys[len(keys) // 3]):
+            client = FakeS3Client(_bucket(keys))
+            listed = _listed(client, marker, splitters=splitters)
+            _assert_exact(listed, [k for k in keys if k > marker])
+
+
+@pytest.mark.parametrize("before", ["key", "group"])
+def test_truncated_discovery_page_keeps_the_group_successor_key(spark, before):
+    """A discovery page of mostly keys truncated right after group
+    ``a/``: the rest of the listing holds ``a/`` and the key ``a0`` (the
+    group's successor), and starts after the entry before ``a/``, a key
+    or a group.  Both paths list every key exactly once."""
+    from s3_manifest_spark.sources.fake_s3 import custom_client_factory
+
+    fill = [f"{i:04d}" for i in range(PAGE_SIZE - 1)]
+    if before == "group":
+        fill[-1] += "/x"
+    keys = sorted(fill + ["a/1", "a/2", "a0", "a1", "b/1"])
+    shards, direct = discover_shards(FakeS3Client(_bucket(keys)), "b", "", target_shards=1)
+    after = "0998" if before == "key" else "09980"  # the successor of group 0998/
+    assert Range("", after) in shards and Range("a/") not in shards
+    _assert_exact(_listed(FakeS3Client(_bucket(keys)), ""), keys)
+    df = list_objects_df(spark, "b", client_factory=custom_client_factory(_bucket(keys)))
+    assert _is_task_path(df)
+    _assert_exact([r.key for r in df.collect()], keys)
+
+
+def test_flat_bucket_discovery_holds_one_page_and_lists_in_tasks(spark):
+    """A flat 50,000-key bucket at 20 ms a request: discovery makes one
+    round of two requests (the probe and the root page, together), holds
+    one page, and hands the rest to the tasks as one range; the listing
+    runs on the task path and lists every key once."""
+    from s3_manifest_spark.sources.fake_s3 import custom_client_factory
+
+    keys = [f"k{i:06d}" for i in range(50_000)]
+    server = _Counting(_bucket(keys), delay_s=0.02)
+    shards, direct = discover_shards(server, "b", "")
+    assert server.calls == 2 and server.max_running == 2
+    assert [o["Key"] for o in direct] == keys[:PAGE_SIZE]
+    assert shards == [Range("", keys[PAGE_SIZE - 1])]
+    df = list_objects_df(spark, "b", client_factory=custom_client_factory(_bucket(keys)))
+    assert _is_task_path(df)
+    _assert_exact([r.key for r in df.collect()], keys)
+
+
+def test_wide_level_pages_its_groups_and_lists_in_several_tasks(spark):
+    """A level of 2,500 groups, wider than one delimiter page: its pages
+    hold only groups, so discovery pages it to the end and every group
+    is a shard, and the level's keys list in more than one task."""
+    from pyspark.sql import functions as F
+
+    from s3_manifest_spark.sources.fake_s3 import custom_client_factory
+
+    groups = [f"dt={d:04d}/" for d in range(2500)]
+    keys = [g + f"k{j}" for g in groups for j in range(2)]
+    server = _Counting(_bucket(keys))
+    shards, direct = discover_shards(server, "b", "")
+    assert shards == [Range(g) for g in groups] and direct == []
+    assert server.calls == 4  # the probe, and the level's three pages
+    df = list_objects_df(spark, "b", client_factory=custom_client_factory(_bucket(keys)))
+    rows = df.select("key", F.spark_partition_id().alias("task")).collect()
+    _assert_exact([r.key for r in rows], keys)
+    assert len({r.task for r in rows}) == spark.sparkContext.defaultParallelism > 1
+
+
+class _Faulty(FakeS3Client):
+    """Real paging, except that each distinct request fails its first
+    attempt with a transient error (``flaky``), or that the first two
+    requests are throttled (``throttled``)."""
+
+    def __init__(self, buckets, fault: str):
+        import threading
+
+        super().__init__(buckets)
+        self.fault = fault
+        self.seen: set = set()
+        self.calls = 0
+        self.lock = threading.Lock()
+
+    def list_objects_v2(self, **kw):
+        with self.lock:
+            self.calls += 1
+            request = tuple(sorted(kw.items()))
+            first = request not in self.seen
+            self.seen.add(request)
+            calls = self.calls
+        if self.fault == "flaky" and first:
+            raise ConnectionError("transient")
+        if self.fault == "throttled" and calls <= 2:
+            raise _client_error(503, "SlowDown")
+        return super().list_objects_v2(**kw)
+
+
+@pytest.mark.parametrize(
+    "fault", ["flaky", "throttled", "replay", "backwards", "no_token", "same_token"]
+)
+def test_faults_on_sub_ranges(fault):
+    """A listing that splits: retried sub-range requests keep it exact,
+    and keys that do not increase or a token that does not advance
+    inside a sub-range raise before any key is emitted twice.  The
+    other faults split once at a fixed guess, so the sub-ranges go on
+    by token."""
+    keys = [f"d/k{i:05d}" for i in range(300)]
+    listings = _listings(["d/"], Bucket="b", MaxKeys=10)
+    if fault in ("flaky", "throttled"):
+        client = _Faulty(_bucket(keys), fault)
+        listed = [o["Key"] for _, p in _scan(client, listings) for o in p["Contents"]]
+        _assert_exact(listed, keys)
+        assert any("StartAfter" in dict(r) for r in client.seen)
+        return
+    if fault in ("replay", "backwards"):
+        client, match = _Misordered(_bucket(keys), fault), "does not sort after"
+    else:
+        client = _StuckPaging(_bucket(keys), drop_token=fault == "no_token")
+        match = "does not advance"
+    listed = []
+    with pytest.raises(RuntimeError, match=match):
+        for _, page in _paged_ahead(
+            _scan(client, listings, splitters=lambda page, n: ["d/k00150"])
+        ):
+            listed += [o["Key"] for o in page["Contents"]]
+    assert len(listed) == len(set(listed))
+    assert not _pager_threads()
+
+
+def test_splitters_step_past_the_page():
+    """Guesses step about 0.9 pages at a time past the page's last key,
+    on the digit run where its middle and last keys differ (decimal,
+    then hex), else on the differing code point; a run that overflows
+    its width stops the guesses."""
+    values = list(range(4, 504)) + list(range(512, 1012))
+    page = [f"x/part-{v:05d}-t" for v in values]
+    assert page[499].startswith("x/part-00503") and page[-1].startswith("x/part-01011")
+    assert _splitters(page, 3) == ["x/part-01925", "x/part-02839", "x/part-03753"]
+    assert _splitters([f"h{v:03x}" for v in range(0x9f0, 0xa00)], 2) == ["ha0d", "ha1b"]
+    assert _splitters(["p/gg", "p/gh", "p/hg"], 2) == ["p/k", "p/n"]
+    assert _splitters(["k90", "k95", "k99"], 3) == []
+    assert _splitters(["only"], 3) == _splitters(["a", "b"], 0) == []
